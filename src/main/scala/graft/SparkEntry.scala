@@ -45,7 +45,7 @@ object SparkEntry {
       case LongType => expr("ts div 1000000") // nanos-as-long
       case TimestampType => unix_millis(col("ts"))
       case TimestampNTZType =>
-        // session TZ is pinned to UTC in Verify/Bench, so NTZ→TZ is exact
+        // session TZ is pinned to UTC in Verify and perfbench, so NTZ→TZ is exact
         unix_millis(col("ts").cast(TimestampType))
       case other =>
         throw new IllegalStateException(s"events.ts: unexpected type $other")

@@ -209,39 +209,6 @@ object TextHashOps {
   }
 
   /**
-   * Distinct word n-grams from a token array in ONE pass.
-   *
-   * The declarative formulation — `transform(toks, (_, i) => concat_ws(" ",
-   * slice(toks, i+1, n)))` — re-evaluates the token-array *expression* for
-   * every element inside the lambda (O(n²·len) per row, interpreted), which
-   * dominated the fuzzy-dedup wall clock. This expression walks the array
-   * once.
-   */
-  case class WordNgrams(child: Expression, n: Int) extends UnaryExpression
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "word_ngrams"
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val m = arr.numElements() - n + 1
-      if (m <= 0) return new GenericArrayData(Array.empty[Any])
-      val seen = new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String](m)
-      var i = 0
-      while (i < m) {
-        val parts = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-        var j = 0
-        while (j < n) { parts(j) = arr.getUTF8String(i + j); j += 1 }
-        seen.add(org.apache.spark.unsafe.types.UTF8String.concatWs(
-          org.apache.spark.unsafe.types.UTF8String.fromString(" "), parts: _*))
-        i += 1
-      }
-      new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /**
    * text → distinct word n-grams in ONE native pass: whitespace tokenization
    * (runs of spaces, matching `split(text, " +")` + empty-drop) fused with
    * n-gram construction. No higher-order functions anywhere — the interpreted
@@ -561,8 +528,6 @@ object TextHashOps {
   /** array<long> signature → array<long> of `bands` LSH band hashes. */
   def bandHashes(sig: Column, bands: Int): Column =
     GraftBridge.column(BandHashes(GraftBridge.expression(sig), bands))
-  def wordNgrams(tokens: Column, n: Int): Column =
-    GraftBridge.column(WordNgrams(GraftBridge.expression(tokens), n))
   def textNgramsAll(text: Column, n: Int): Column =
     GraftBridge.column(TextNgramsAll(GraftBridge.expression(text), n))
   def textNgrams(text: Column, n: Int): Column =

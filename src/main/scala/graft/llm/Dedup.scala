@@ -29,18 +29,9 @@ object Dedup {
     docs.groupBy(sha2(col(textCol), 256).as("content_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_dups"))
 
-  /** Rows surviving exact dedup (canonical representatives only). */
-  def exactSurvivors(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val canon = exact(docs, idCol, textCol).select(col("canonical_id").as(idCol))
-    docs.join(canon, idCol)
-  }
-
   /** Word n-gram shingles (n consecutive tokens joined by space), distinct per doc. */
   def shingles(text: Column, n: Int): Column =
     TextHashOps.textNgrams(text, n)
-
-  /** Default similarity feature: word 3-gram shingle set. */
-  def shingleSet(textCol: Column): Column = shingles(textCol, 3)
 
   /**
    * Exact Jaccard over SORTED-DISTINCT hashed feature arrays (the form
@@ -580,50 +571,6 @@ object Dedup {
       .withColumn("jaccard", mergeJaccard(col("feats_a"), col("feats_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
-
-  /**
-   * SPANNING-edge LSH candidates for connected-component consumers
-   * ([[clusters]] / [[clusterSurvivors]] — the common 100 TB path): per
-   * (band, bucket), every member links to the bucket's MIN id (a star) —
-   * Θ(d) edges for a d-member bucket instead of the banded self-join's
-   * full Θ(d²) clique. The candidate graph's connected components are
-   * IDENTICAL (every clique is connected by its star), so downstream CC
-   * can't tell the difference, while pair mining on a dup-heavy corpus
-   * (the case LSH buckets exist for) drops from quadratic to linear.
-   *
-   * Shape: bucket-min is a plain groupBy (one shuffle on the bucket key);
-   * the hub-edge join streams the banded rows once — no self-join, no
-   * per-bucket materialization, skew-safe (a degenerate bucket emits d
-   * rows, not d²). Output: (id_a = hub, id_b, feats_a, feats_b), same
-   * contract as [[minhashCandidates]].
-   */
-  def minhashSpanningCandidates(docs: DataFrame, k: Int, bands: Int,
-                                idCol: String = "doc_id", features: Column = null): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val r = k / bands
-    val sig = minhashSignatures(docs, k, idCol, features)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = sig.select(
-      col("id"),
-      posexplode(TextHashOps.bandHashes(col("sig"), bands))
-        .as(Seq("band", "band_hash")))
-    // window-min hub edges: one exchange, no banded⋈hubs join (see
-    // [[minhashSpanningPairs]] for the measured argument)
-    val cands = banded
-      .withColumn("id_a",
-        min(col("id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_hash")))
-      .filter(col("id") =!= col("id_a"))
-      .select(col("id_a"), col("id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val feats = sig.select(col("id"), col("feats")) // already hashed
-    val result = cands
-      .join(feats.select(col("id").as("id_a"), col("feats").as("feats_a")), "id_a")
-      .join(feats.select(col("id").as("id_b"), col("feats").as("feats_b")), "id_b")
-      .localCheckpoint(true)
-    sig.unpersist(false)
-    result
   }
 
   /**

@@ -200,38 +200,6 @@ object Similarity {
     math.max(1L, (n + targetOccupancy - 1) / targetOccupancy)
   }
 
-  /** Distinct banded candidate pairs (pre-verification), skinny — the
-   * mining-volume metric the bench logs at ×1/×10 so the linear-growth
-   * claim of [[adaptiveBits]] carries a measured number (r11 verdict #8). */
-  def bandedCandidatePairs(vectors: DataFrame, dim: Int, bands: Int = 4,
-                           bitsPerBand: Int = 6, idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame = {
-    val banded = vectors.select(col(idCol).as("id"),
-      posexplode(lshBandSignatures(col(vecCol), dim, bands, bitsPerBand))
-        .as(Seq("band", "bsig")))
-    banded.select(col("band"), col("bsig"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bsig"), col("id").as("id_b")),
-        Seq("band", "bsig"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates()
-  }
-
-  /** Distinct spanning hub-edge candidates (pre-verification), skinny —
-   * the Θ(d) counterpart of [[bandedCandidatePairs]]'s Θ(d²) cliques. */
-  def spanningHubCandidatePairs(vectors: DataFrame, dim: Int, bands: Int = 4,
-                                bitsPerBand: Int = 6, idCol: String = "vec_id",
-                                vecCol: String = "embedding"): DataFrame = {
-    val banded = vectors.select(col(idCol).as("id"),
-      posexplode(lshBandSignatures(col(vecCol), dim, bands, bitsPerBand))
-        .as(Seq("band", "bsig")))
-    banded
-      .withColumn("id_a",
-        min(col("id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "bsig")))
-      .filter(col("id") =!= col("id_a"))
-      .select(col("id_a"), col("id").as("id_b")).dropDuplicates()
-  }
-
   /**
    * Embedding-cosine near-dup pairs ≥ threshold via BANDED hyperplane LSH:
    * `bands` independent signature tables of `bitsPerBand` bits each, a pair
@@ -264,7 +232,7 @@ object Similarity {
   /**
    * SPANNING-edge banded LSH pairs for connected-component consumers, with
    * intra-bucket FALLBACK verification — the embedding twin of
-   * [[graft.llm.Dedup.minhashSpanningCandidates]], hardened against the
+   * [[graft.llm.Dedup.minhashSpanningPairs]]' spanning path, closing the
    * hub-transitivity gap: per (band, bucket) every member links to the
    * bucket's MIN id (Θ(d) hub edges instead of the Θ(d²) clique); members
    * whose hub edge FAILS exact verification are then verified against ALL

@@ -61,21 +61,6 @@ object FilterProcessor {
     get_json_object(payload, jsonPath(path))
 
   /**
-   * Numeric-aware equality: `42 == 42.0` (reference json_eq, filter.rs:292-300).
-   * If the config value is numeric, compare as doubles; else string-compare.
-   */
-  private def cmp(payload: Column, path: String, value: Any, f: (Column, Column) => Column): Column = {
-    val raw = field(payload, path)
-    value match {
-      case n: Int => f(raw.cast(DoubleType), lit(n.toDouble))
-      case n: Long => f(raw.cast(DoubleType), lit(n.toDouble))
-      case n: Double => f(raw.cast(DoubleType), lit(n))
-      case n: BigDecimal => f(raw.cast(DoubleType), lit(n.toDouble))
-      case s => f(raw, lit(s.toString))
-    }
-  }
-
-  /**
    * Compile one predicate given field-access functions for the `after` and
    * `before` payloads. `afterF`/`beforeF` map a dot-path to the extracted
    * string value — either a fresh `get_json_object` (compat path) or a
@@ -85,6 +70,8 @@ object FilterProcessor {
       p: FieldPredicate,
       afterF: String => Column,
       beforeF: String => Column): Column = {
+    // numeric-aware: `42 == 42.0` (reference json_eq, filter.rs:292-300) —
+    // a numeric config value compares as doubles, anything else as strings
     def cmpF(path: String, value: Any, f: (Column, Column) => Column): Column = {
       val raw = afterF(path)
       value match {
@@ -191,9 +178,22 @@ object FilterProcessor {
    * parse-once pass already scanned it — `keep = Seq(path -> outName)`
    * rides those fields on the SAME single parse and emits them as extra
    * string columns (value-identical to `get_json_object(after, $.path)`;
-   * spec-pinned). Callers cast/rename as needed.
+   * spec-pinned). Callers cast/rename as needed. Output names must be new:
+   * distinct from each other and from the input's columns, and outside the
+   * `__jpa`/`__jpb` staging namespace (compared case-insensitively, as
+   * Spark resolves names by default) — otherwise a kept field would
+   * silently overwrite, shadow or be dropped with a column.
    */
   def apply(cfg: Config, keep: Seq[(String, String)] = Nil)(df: DataFrame): DataFrame = {
+    val outs = keep.map(_._2.toLowerCase)
+    val dupOuts = outs.diff(outs.distinct).distinct
+    require(dupOuts.isEmpty, s"keep output names repeat: ${dupOuts.mkString(", ")}")
+    lazy val inputs = df.columns.map(_.toLowerCase).toSet
+    val clashes = keep.map(_._2).filter(o => inputs(o.toLowerCase))
+    require(clashes.isEmpty, s"keep output names collide with input columns: ${clashes.mkString(", ")}")
+    val staging = keep.map(_._2).filter(o => Seq("__jpa", "__jpb").exists(o.toLowerCase.startsWith))
+    require(staging.isEmpty, s"keep output names use the reserved __jpa/__jpb prefix: ${staging.mkString(", ")}")
+
     val opGate = if (cfg.ops.isEmpty) lit(true) else col("op").isin(cfg.ops: _*)
     val tableGate = if (cfg.tables.isEmpty) lit(true) else tablePredicate(cfg.tables)
     val pre = df.filter(opGate && tableGate)

@@ -87,15 +87,4 @@ object FlattenProcessor {
     val others = df.columns.filter(_ != colName).map(col).toIndexedSeq
     df.select(others ++ flat: _*)
   }
-
-  /**
-   * Flatten a JSON-string payload column given its declared schema
-   * (the schema-ledger path used for CDC payloads).
-   */
-  def applyJson(df: DataFrame, jsonCol: String, payloadSchema: StructType, cfg: Config = Config()): DataFrame =
-    apply(
-      // flat primitive schemas take the fused byte-level decoder
-      // (from_json-identical by spec); nested ones fall back to builtin
-      df.withColumn(jsonCol, graft.functions.JsonDecode.fusedFromJson(col(jsonCol), payloadSchema)),
-      jsonCol, cfg)
 }

@@ -26,10 +26,6 @@ object CdcSynth {
       .when(pmod(pk, lit(10)) <= 8, lit(ChangeEvent.Op.Update))
       .otherwise(lit(ChangeEvent.Op.Delete))
 
-  /** SQL (DuckDB) equivalent of [[opFor]], for oracle queries. */
-  def opForSql(pk: String): String =
-    s"CASE WHEN ($pk % 10) <= 5 THEN 'c' WHEN ($pk % 10) <= 8 THEN 'u' ELSE 'd' END"
-
   /**
    * Wrap a snapshot table as change events. `after` is the full row as JSON;
    * `before` is present for updates/deletes (the same row image — synthetic

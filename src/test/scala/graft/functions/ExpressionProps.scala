@@ -50,15 +50,6 @@ object ExpressionProps extends Properties("graft.expressions") {
       got == want
     }
 
-  property("WordNgrams on a token array equals sliding-window reference") =
-    Prop.forAll(Gen.listOf(word), Gen.choose(1, 4)) { (toks, n) =>
-      val got = WordNgrams(Literal(strArray(toks), ArrayType(StringType)), n)
-        .eval(null).asInstanceOf[ArrayData]
-        .toObjectArray(StringType).map(_.toString).toSeq
-      val want = toks.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq.distinct
-      got == want
-    }
-
   property("SimHash64 equals bit-count reference; empty input = 0") =
     Prop.forAll(hashes) { hs =>
       val got = SimHash64(Literal(new GenericArrayData(hs.toArray[Any]), ArrayType(LongType)))

@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
  *    across string/number/nested/JSON-null/missing fields;
  *  - the surviving row set is unchanged by `keep`;
  *  - no staging columns leak into the output;
- *  - keep-only (no predicates) still applies the op/table gates.
+ *  - keep-only (no predicates) still applies the op/table gates;
+ *  - output names that would overwrite an input column, repeat, or fall in
+ *    the staging namespace are rejected when the plan is built.
  */
 class FilterKeepSpec extends SparkSpec {
   import FilterProcessor._
@@ -62,5 +64,22 @@ class FilterKeepSpec extends SparkSpec {
     assert(got.count() == 3)
     assert(got.select("k_id").collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2", "4"))
     assert(!got.columns.exists(_.startsWith("__jp")))
+  }
+
+  test("keep rejects output names that collide, at plan-build time") {
+    val cfg = Config(predicates = Seq(Gt("amount", 5)))
+    val bad = Seq(
+      Seq("id" -> "op"), // would overwrite the input's op column
+      Seq("id" -> "OP"), // Spark resolves names case-insensitively
+      Seq("id" -> "k", "amount" -> "k"), // the first entry would vanish
+      Seq("id" -> "__jpa_id"), // dropped with the staging columns
+      Seq("id" -> "__jpb0"))
+    for (keep <- bad) {
+      val e = intercept[IllegalArgumentException](FilterProcessor(cfg, keep)(evs))
+      assert(e.getMessage.contains("keep output names"), s"$keep: ${e.getMessage}")
+    }
+    // the same path kept under two distinct new names is fine
+    val ok = FilterProcessor(cfg, Seq("id" -> "k1", "id" -> "k2"))(evs)
+    assert(ok.collect().forall(r => r.getAs[String]("k1") == r.getAs[String]("k2")))
   }
 }

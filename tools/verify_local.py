@@ -84,32 +84,6 @@ def main():
         if d.is_dir() and d.name not in oracles:
             n = con.execute(f"SELECT count(*) FROM '{d}/*.parquet'").fetchone()[0]
             print(f"INFO {d.name}: no oracle, {n} rows")
-    # ——— binding-artifact key-set invariant (r10 verdict #7) ———
-    # CORRECTNESS (this dump) and BENCH (bench_out.json) both enumerate
-    # SparkEntry.queries; if their key sets diverge, one binding artifact is
-    # stale and the round ships inconsistent counts. Full runs fail loudly on
-    # any drift; partial runs (explicit query filter) skip the check, as does
-    # --skip-benchcheck (for mid-round iteration before the next bench run).
-    if not only and "--skip-benchcheck" not in sys.argv:
-        bench_path = Path("/root/repo/bench_out.json")
-        if bench_path.exists():
-            try:
-                bench = json.loads(bench_path.read_text())
-                bench_keys = set(bench.get("queries", {})) | set(bench.get("failed", []))
-                verify_keys = {d.name for d in Path(outdir).iterdir() if d.is_dir()}
-                extra_v = sorted(verify_keys - bench_keys)
-                extra_b = sorted(bench_keys - verify_keys)
-                if extra_v or extra_b:
-                    print(f"KEYSET MISMATCH correctness vs bench_out.json: "
-                          f"only-in-correctness={extra_v} only-in-bench={extra_b} "
-                          f"(rerun the bench, or pass --skip-benchcheck mid-round)")
-                    n_fail += 1
-                else:
-                    print(f"keyset OK: correctness and bench_out.json both cover "
-                          f"{len(verify_keys)} queries")
-            except Exception as e:
-                print(f"KEYSET CHECK FAILED: bench_out.json unreadable: {e}")
-                n_fail += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
