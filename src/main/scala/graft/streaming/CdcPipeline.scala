@@ -3,8 +3,8 @@ package graft.streaming
 import graft.core.ChangeEvent
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -17,13 +17,18 @@ import scala.util.{Failure, Success, Try}
  *
  * Reference: crates/runner/src/coordinator.rs — batch accumulation C-1 maps
  * to Structured Streaming triggers; concurrent fan-out + per-sink deadline
- * C-3 (coordinator.rs:893-1030) to parallel Spark jobs over one persisted
+ * C-3 (coordinator.rs:893-1030) to parallel Spark jobs over one frozen
  * micro-batch; commit policy C-4 (policy_satisfied coordinator.rs:124-135);
  * per-sink checkpoints C-5 to [[SinkLedger]].
  *
- * Scale notes: the persisted batch is shared across sink jobs (the
- * reference's frozen `Arc<[Event]>`, zero-copy analog); each sink write is a
- * distributed job; the only driver-side state is the tiny ledger.
+ * Scale notes: the processed batch is frozen once (the reference's frozen
+ * `Arc<[Event]>`): ONE Spark job computes its rows, stores them
+ * partition-local at MEMORY_AND_DISK and counts rows and bytes
+ * (`GraftBridge.freeze`). Sinks receive a leaf DataFrame over the stored
+ * rows whose plan statistics carry that count and size, so no sink re-runs
+ * or re-plans the processor chain, and none needs a `count()` of its own.
+ * Each sink write is a distributed job; the stored rows are dropped when
+ * the batch ends; the only driver-side state is the tiny ledger.
  */
 object CdcPipeline {
 
@@ -56,10 +61,9 @@ object CdcPipeline {
    * (at-least-once); sinks that already committed skip on replay (ledger).
    */
   def processBatch(cfg: Config, ledger: SinkLedger)(batch0: DataFrame, batchId: Long): Unit = {
-    val batch = cfg.processors.foldLeft(batch0)((df, p) => p(df))
-    batch.persist(StorageLevel.MEMORY_AND_DISK)
+    val frozen = GraftBridge.freeze(cfg.processors.foldLeft(batch0)((df, p) => p(df)))
+    val (batch, rows) = (frozen.df, frozen.rows)
     try {
-      val rows = batch.count() // materialize once; sink jobs reuse the cached batch
       val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val futures = cfg.sinks.map { sink =>
@@ -68,15 +72,12 @@ object CdcPipeline {
           else {
             val filtered = sink.filter.map(batch.filter).getOrElse(batch)
             val t0 = System.nanoTime()
-            val ok = try { sink.write(filtered, batchId); true }
-            catch { case e: Throwable =>
-              cfg.metrics.foreach(Metrics.recordSinkBatch(_, cfg.pipelineName,
-                sink.id, rows, (System.nanoTime() - t0) / 1e9, ok = false))
-              throw e
-            }
-            cfg.metrics.foreach(Metrics.recordSinkBatch(_, cfg.pipelineName,
-              sink.id, rows, (System.nanoTime() - t0) / 1e9, ok = true))
-            ok
+            def record(ok: Boolean): Unit = cfg.metrics.foreach(Metrics.recordSinkBatch(_,
+              cfg.pipelineName, sink.id, rows, (System.nanoTime() - t0) / 1e9, ok))
+            try sink.write(filtered, batchId)
+            catch { case e: Throwable => record(ok = false); throw e }
+            record(ok = true)
+            true
           }
         }
       }
@@ -96,7 +97,7 @@ object CdcPipeline {
           s"commit policy ${cfg.commitPolicy} not satisfied for batch $batchId: acks=$acks")
       // commit only acked sinks — unacked ones will re-receive on replay
       acks.foreach { case (id, ok) => if (ok) ledger.commit(id, batchId) }
-    } finally batch.unpersist()
+    } finally frozen.release()
   }
 
   /** Launch as a Structured Streaming query. */

@@ -133,13 +133,16 @@ object Metrics {
     }
   }
 
-  /** Sink-side helpers for code that writes batches directly. */
+  /** Sink-side helpers for code that writes batches directly: an acked
+   * write counts its batch and events; a failed one counts an error. Both
+   * record the latency. */
   def recordSinkBatch(r: Registry, pipeline: String, sink: String,
                       events: Long, seconds: Double, ok: Boolean): Unit = {
     val labels = Seq("pipeline" -> pipeline, "sink" -> sink)
-    r.counter("graft_sink_batch_total", labels)
-    r.counterAdd("graft_sink_events_total", events.toDouble, labels)
     r.observe("graft_sink_latency_seconds", seconds, labels)
-    if (!ok) r.counter("graft_sink_errors_total", labels)
+    if (ok) {
+      r.counter("graft_sink_batch_total", labels)
+      r.counterAdd("graft_sink_events_total", events.toDouble, labels)
+    } else r.counter("graft_sink_errors_total", labels)
   }
 }

@@ -9,8 +9,9 @@ package graft.streaming
  * Spark mapping: the micro-batch committer closes every file at batch end,
  * so `max_age`/`idle_age` are structurally bounded by the trigger interval
  * (a file can never outlive its batch); the knobs that remain load-bearing
- * are bytes/events, applied as dynamic `maxRecordsPerFile` sizing from a
- * measured average row width — see [[ParquetLakeSink]].
+ * are bytes/events, applied as dynamic `maxRecordsPerFile` sizing from the
+ * batch's row count and average row width (its plan statistics), with one
+ * write task per rolled file — see [[ParquetLakeSink]].
  */
 object Rolling {
 

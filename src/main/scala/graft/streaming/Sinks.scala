@@ -26,29 +26,33 @@ trait EventSink extends Serializable {
  *
  * Rolling parity (reference rolling.rs:17-69 via [[Rolling]]): files roll
  * on WHICHEVER of the byte cap / event cap binds first — the event cap maps
- * directly to `maxRecordsPerFile`, the byte cap through a measured average
- * serialized row width (`spark.sessionState.executePlan.optimizedPlan`
- * stats), re-derived per batch so wide envelopes produce more, smaller
- * files. Age/idle caps are structurally satisfied: Spark's committer
- * closes every file at micro-batch end, so no file outlives its trigger
- * interval, and idle partitions simply produce no file.
+ * directly to `maxRecordsPerFile`, the byte cap through the batch's average
+ * in-memory row width, re-derived per batch so wide envelopes produce more,
+ * smaller files. Row count and width come from the batch's plan statistics:
+ * a batch frozen by [[CdcPipeline]] carries both, so sizing costs no job;
+ * only an input whose stats lack a row count (an unfrozen DataFrame, or a
+ * sink `filter` over a frozen one) pays a `count()`. The write runs
+ * `ceil(rows / recordsPerFile)` tasks (a `coalesce`, which never adds
+ * tasks), one per rolled file — the reference's one rolling writer per
+ * partition key — so a small batch writes one file per partition directory
+ * rather than one per input partition. Age/idle caps are structurally
+ * satisfied: Spark's committer closes every file at micro-batch end, so no
+ * file outlives its trigger interval, and idle partitions produce no file.
  */
 class ParquetLakeSink(val id: String, path: String,
                       rolling: Rolling.Config = Rolling.Config())
     extends EventSink {
 
-  /** Average in-memory row width from Catalyst plan statistics — no extra
-   * job; parquet compresses further, so this is a conservative estimate. */
-  private def avgRowBytes(batch: DataFrame, rows: Long): Double = {
-    val stats = batch.queryExecution.optimizedPlan.stats
-    if (rows <= 0) 1.0 else stats.sizeInBytes.toDouble / rows
-  }
-
   override def write(batch: DataFrame, batchId: Long): Unit = {
-    val rows = batch.count()
-    val perFile = Rolling.recordsPerFile(rolling, avgRowBytes(batch, rows))
+    val stats = batch.queryExecution.optimizedPlan.stats
+    val rows = stats.rowCount.map(_.toLong).getOrElse(batch.count())
+    // in-memory width; parquet compresses further, so files come out smaller
+    val avgRowBytes = if (rows <= 0) 1.0 else stats.sizeInBytes.toDouble / rows
+    val perFile = Rolling.recordsPerFile(rolling, avgRowBytes)
+    val tasks = math.max(1L, math.min((rows + perFile - 1) / perFile, Int.MaxValue.toLong))
     val ts = timestamp_millis(col("ts_ms"))
     batch
+      .coalesce(tasks.toInt)
       .withColumn("table", col("source.table"))
       .withColumn("year", year(ts))
       .withColumn("month", month(ts))

@@ -1,12 +1,20 @@
 package org.apache.spark.sql.classic
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Bridge exposing Spark's private[sql] Expression ↔ Column conversions to the
  * graft library (needed to wrap custom Catalyst expressions as user-facing
- * Columns in Spark 4's split Column/ColumnNode API).
+ * Columns in Spark 4's split Column/ColumnNode API), plus the other
+ * private[sql] pieces it needs: the micro-batch freeze ([[freeze]]) and
+ * the JSON formatters/parsers the fused codecs must match.
  */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -26,6 +34,51 @@ object GraftBridge {
    */
   def eagerExpression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
+
+  /** A batch materialized by [[freeze]]: `df` is a leaf over the stored
+   * rows whose plan statistics carry its row count and byte size;
+   * `release` drops the stored rows. */
+  final class FrozenBatch(val df: DataFrame, val rows: Long, stored: RDD[_]) {
+    def release(): Unit = stored.unpersist(blocking = false)
+  }
+
+  /**
+   * Materialize `df` ONCE, with ONE Spark job: its rows are computed,
+   * stored at MEMORY_AND_DISK, and counted (rows and summed `UnsafeRow`
+   * bytes) by the same job. The returned DataFrame is a `LogicalRDD` over
+   * the stored rows, so readers never re-plan or re-run `df`'s plan, and
+   * `optimizedPlan.stats` of it (or of any plan that keeps its row count)
+   * answers `rowCount`/`sizeInBytes` without another job. Public
+   * `localCheckpoint(eager = true)` costs the same job but returns no
+   * count and no handle to drop the stored rows.
+   */
+  def freeze(df: DataFrame): FrozenBatch = {
+    val ds = castToImpl(df)
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("freeze")) {
+      val output = qe.executedPlan.output
+      val stored = qe.toRdd.mapPartitionsWithIndex { (i, it) =>
+        lazy val proj = { val p = UnsafeProjection.create(output, output); p.initialize(i); p }
+        it.map {
+          case u: UnsafeRow => u.copy()
+          case r => proj(r).copy()
+        }
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      val counts =
+        try ds.sparkSession.sparkContext.runJob(stored, (it: Iterator[UnsafeRow]) => {
+          var rows = 0L; var bytes = 0L
+          it.foreach { r => rows += 1; bytes += r.getSizeInBytes }
+          (rows, bytes)
+        })
+        catch { case e: Throwable => stored.unpersist(blocking = false); throw e }
+      val rows = counts.map(_._1).sum
+      val bytes = counts.map(_._2).sum
+      // read-only, so the UnsafeRow RDD is safely an InternalRow one
+      val leaf = LogicalRDD(output, stored.asInstanceOf[RDD[InternalRow]])(ds.sparkSession,
+        Some(Statistics(sizeInBytes = bytes, rowCount = Some(rows)))).newInstance()
+      new FrozenBatch(Dataset.ofRows(ds.sparkSession, leaf), rows, stored)
+    }
+  }
 
   /**
    * The EXACT timestamp/date formatters `to_json` (JacksonGenerator) uses

@@ -1,11 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
 
 /**
  * r17 probe-execution pin: `changeEvents` used to size-probe its input with
@@ -25,32 +21,12 @@ class CdcSynthBuildSpec extends SparkSpec {
     import spark.implicits._
     val src = (1L to 100L).map(i => (i, s"v$i")).toDF("pk", "v")
       .repartitionByRange(4, col("pk"))
-    // The listener bus is asynchronous but delivers events in order: once
-    // a sentinel job run AFTER the build has been seen, every job the build
-    // launched has been seen too — so exactly one job must be counted.
-    val sentinel = "cdcsynth-build-sentinel"
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val sentinelSeen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(s"job ${j.jobId}")
-        jobs.add(desc)
-        if (desc == sentinel) sentinelSeen.countDown()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobsLaunchedBy {
       val ev = CdcSynth.changeEvents(src, "db", "t", "pk")
       ev.queryExecution.optimizedPlan // force full analysis/optimization
-      spark.sparkContext.setJobDescription(sentinel)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      val seen = jobs.asScala.toSeq
-      assert(seen == Seq(sentinel), s"changeEvents build launched ${seen.size - 1} job(s) " +
-        s"(${seen.mkString(", ")}) — the partition probe is executing the input's exchanges again")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs == 0, s"changeEvents build launched $jobs job(s) " +
+      "— the partition probe is executing the input's exchanges again")
   }
 
   test("non-leaf input keeps its caller-arranged partitioning (no re-spread)") {

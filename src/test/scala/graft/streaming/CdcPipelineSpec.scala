@@ -87,6 +87,47 @@ class CdcPipelineSpec extends SparkSpec {
     assert(flaky.totalRows == 2 && ledger.committed("flaky") == 0L)
   }
 
+  test("a failed sink write counts an error and its latency, not delivered events") {
+    val dir = tmp()
+    val reg = new Metrics.Registry
+    val cfg = Config(Seq(new MemorySink("flaky", failTimes = 1)), ledgerDir = dir,
+      pipelineName = "p", metrics = Some(reg))
+    val ledger = new SinkLedger(dir)
+    val labels = Seq("pipeline" -> "p", "sink" -> "flaky")
+    def latencies = """graft_sink_latency_seconds_count\{pipeline="p",sink="flaky"\} (\d+)""".r
+      .findFirstMatchIn(reg.scrape()).map(_.group(1).toInt).getOrElse(0)
+    intercept[RuntimeException](processBatch(cfg, ledger)(events(3), 0L))
+    assert(reg.counterValue("graft_sink_events_total", labels) == 0.0)
+    assert(reg.counterValue("graft_sink_batch_total", labels) == 0.0)
+    assert(reg.counterValue("graft_sink_errors_total", labels) == 1.0)
+    assert(latencies == 1)
+    processBatch(cfg, ledger)(events(3), 0L) // replay acks
+    assert(reg.counterValue("graft_sink_events_total", labels) == 3.0)
+    assert(reg.counterValue("graft_sink_batch_total", labels) == 1.0)
+    assert(reg.counterValue("graft_sink_errors_total", labels) == 1.0)
+    assert(latencies == 2)
+  }
+
+  test("processBatch materializes the batch with exactly one Spark job") {
+    val dir = tmp()
+    val batch = events(50)
+    val jobs = jobsLaunchedBy(processBatch(Config(Nil, ledgerDir = dir), new SinkLedger(dir))(batch, 0L))
+    assert(jobs == 1, s"processBatch with no sinks launched $jobs jobs")
+  }
+
+  test("the processor chain runs once per row however many sinks read the batch") {
+    val dir = tmp()
+    val evaluated = spark.sparkContext.longAccumulator("rows-processed")
+    val bump = udf { (ts: Long) => evaluated.add(1); ts }.asNondeterministic()
+    val (m1, m2) = (new MemorySink("m1"), new MemorySink("m2"))
+    val cfg = Config(Seq(m1, m2, new ParquetLakeSink("lake", s"$dir/lake")), ledgerDir = dir,
+      processors = Seq(df => df.withColumn("ts_ms", bump(col("ts_ms")))))
+    processBatch(cfg, new SinkLedger(dir))(events(40), 0L)
+    assert(evaluated.value == 40L)
+    assert(m1.totalRows == 40 && m2.totalRows == 40)
+    assert(spark.read.parquet(s"$dir/lake").count() == 40)
+  }
+
   test("tx-boundary split holds back incomplete tail transactions (C-1)") {
     import spark.implicits._
     // tx1 = seq 1..3 (end at 3), tx2 = seq 4..5 (NO tx_end yet)

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.streaming.Rolling._
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /**
  * Rolling-policy tests mirroring the reference's inline cases
@@ -53,6 +54,40 @@ class RollingSpec extends SparkSpec {
   test("event cap controls emitted file count") {
     assert(lakeWith(Config(maxEvents = 50), rows = 200) == 4)
     assert(lakeWith(Config(maxEvents = 1000000), rows = 200) == 1)
+  }
+
+  /** `rows` change events over `parts` input partitions, no shuffle. */
+  private def ordersOver(parts: Int, rows: Int) = {
+    import org.apache.spark.sql.functions._
+    graft.core.ChangeEvent.conform(spark.range(0, rows, 1, parts).select(
+      lit("""{"id":1}""").as("after"),
+      struct(lit("inventory").as("db"), lit("orders").as("table")).as("source"),
+      lit("c").as("op"),
+      lit(1700000000000L).as("ts_ms")))
+  }
+
+  private def parquetFiles(dir: String): Seq[String] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    finally s.close()
+  }
+
+  test("a frozen batch is written by one job, one file per partition directory") {
+    val dir = Files.createTempDirectory("roll").toString
+    val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(ordersOver(parts = 4, rows = 200))
+    try {
+      assert(frozen.rows == 200 && frozen.df.rdd.getNumPartitions == 4)
+      val jobs = jobsLaunchedBy(new ParquetLakeSink("lake", dir).write(frozen.df, 0L))
+      assert(jobs == 1, s"the lake write launched $jobs jobs")
+      assert(parquetFiles(dir).size == 1)
+    } finally frozen.release()
+  }
+
+  test("an unfrozen batch still honors the event cap in every file") {
+    val dir = Files.createTempDirectory("roll").toString
+    new ParquetLakeSink("lake", dir, Config(maxEvents = 50)).write(ordersOver(parts = 4, rows = 200), 0L)
+    val counts = parquetFiles(dir).map(f => spark.read.parquet(f).count())
+    assert(counts.sum == 200 && counts.forall(_ <= 50), s"rows per file: $counts")
   }
 
   test("byte cap splits wide batches into more, smaller files") {
