@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.core.Retry
 
 /**
  * Live tail → backlog bridge: drives [[MysqlWire.BinlogClient]] and spools
@@ -12,15 +11,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  * checkpoint, reconnect with backoff) composed with the existing
  * file-offset machinery instead of re-implementing it: the spool is the
  * durable replay buffer (the role Kafka plays in a Debezium deployment).
+ * The on-disk state — checkpoint, identity, committed-prefix segments,
+ * the discarded open tail — is [[SegmentSpool]]'s; the reconnect loop is
+ * [[graft.core.Retry]].
  *
- * Transaction-safe segmentation: events buffer until an XID (commit)
- * event closes a transaction AND the segment budget is reached — a
+ * MySQL protocol notes: an XID event closes a transaction, and a segment
+ * cuts only at an XID once `maxEventsPerSegment` events are buffered — a
  * segment never splits a transaction or separates a TABLE_MAP from its
  * ROWS events. Every segment is prefixed with the last-seen
- * FORMAT_DESCRIPTION event so each decodes self-contained. On a dropped
- * connection the uncommitted tail buffer is DISCARDED, not spooled — the
- * reconnect re-fetches it from the checkpointed position, so spooled
- * segments contain every transaction exactly once, whole.
+ * FORMAT_DESCRIPTION event so each decodes self-contained.
  */
 class BinlogSpooler(
     host: String, port: Int, user: String, password: String,
@@ -29,21 +28,15 @@ class BinlogSpooler(
     serverId: Long = 101L) {
 
   private val XID_EVENT = 16
-  private val statePath = Paths.get(dir, "_spool_checkpoint")
-  private val identityPath = Paths.get(dir, "_spool_identity")
-  Files.createDirectories(Paths.get(dir))
+  private var fde: Array[Byte] = Array.emptyByteArray
+  private val spool = new SegmentSpool(dir, startPos, () => Seq(fde))
 
   /** Spooled-through position: resume point for reconnects. */
-  def checkpoint(): Long =
-    if (Files.exists(statePath)) new String(Files.readAllBytes(statePath), UTF_8).trim.toLong
-    else startPos
+  def checkpoint(): Long = spool.checkpoint()
 
   /** The `server_uuid` this spool's position belongs to (first identity
    * probe), or None before the first successful connect. */
-  def identity(): Option[String] =
-    if (Files.exists(identityPath))
-      Some(new String(Files.readAllBytes(identityPath), UTF_8).trim)
-    else None
+  def identity(): Option[String] = spool.identity()
 
   /**
    * Failover guard (reference chaos failover.rs steps 5-7 +
@@ -59,105 +52,42 @@ class BinlogSpooler(
    */
   private def checkIdentity(client: MysqlWire.BinlogClient): Unit =
     client.queryScalar("SELECT @@global.server_uuid").foreach { uuid =>
-      identity() match {
-        case Some(saved) if saved != uuid && checkpoint() > startPos =>
-          throw new BinlogSpooler.FailoverException(saved, uuid, binlogFile, checkpoint())
-        case Some(saved) if saved == uuid => ()
-        case _ =>
-          val tmp = Paths.get(dir, "_spool_identity.tmp")
-          Files.write(tmp, uuid.getBytes(UTF_8))
-          Files.move(tmp, identityPath, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-      }
+      spool.guardIdentity(uuid)(saved =>
+        new BinlogSpooler.FailoverException(saved, uuid, binlogFile, checkpoint()))
     }
-
-  private def commitCheckpoint(pos: Long): Unit = {
-    val tmp = Paths.get(dir, "_spool_checkpoint.tmp")
-    Files.write(tmp, pos.toString.getBytes(UTF_8))
-    Files.move(tmp, statePath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private var fde: Array[Byte] = Array.emptyByteArray
-  private val buffer = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-  private var committedLen = 0 // buffer prefix closed by an XID — only this flushes
-  private var bufferedEvents = 0
-  private var safePos = -1L // end position of the last committed tx in buffer
-
-  private def flushSegment(): Unit = if (committedLen > 0 && safePos > 0) {
-    val body = new java.io.ByteArrayOutputStream()
-    if (fde.nonEmpty) body.write(fde)
-    // ONLY the committed prefix — events of an open transaction past the
-    // last XID must never spool (they re-arrive whole after the reconnect)
-    buffer.take(committedLen).foreach(body.write)
-    val name = f"seg-$safePos%012d.segb64"
-    val tmp = Paths.get(dir, s"$name.tmp")
-    Files.write(tmp, java.util.Base64.getEncoder.encodeToString(body.toByteArray).getBytes(UTF_8))
-    // REPLACE: a crash between segment write and checkpoint commit makes
-    // the restart re-spool the same tx range under the same name — the
-    // content is byte-identical, so overwrite instead of failing
-    Files.move(tmp, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    buffer.remove(0, committedLen)
-    committedLen = 0
-    bufferedEvents = buffer.length
-    commitCheckpoint(safePos)
-    safePos = -1L
-  }
 
   /**
    * One connection attempt: tail from the checkpoint, spool tx-whole
-   * segments, flush the closed tail on clean EOF. IOException (dropped
-   * connection) propagates after discarding the uncommitted tail.
+   * segments, flush the closed tail at the end of the stream. IOException
+   * (dropped connection) propagates after discarding the uncommitted tail.
    */
   def runOnce(): Unit = {
     val client = new MysqlWire.BinlogClient(host, port, user, password, serverId)
     checkIdentity(client) // failover guard BEFORE streaming from a checkpoint
-    try {
+    spool.connection {
       client.tail(binlogFile, checkpoint()) { (e, endPos) =>
         val typ = e(4) & 0xff
         if (typ == MysqlBinlog.FORMAT_DESCRIPTION_EVENT) fde = e
         else {
-          buffer += e
-          bufferedEvents += 1
+          spool.append(e)
           if (typ == XID_EVENT) {
-            safePos = endPos // tx closed — segment may cut here
-            committedLen = buffer.length
-            if (bufferedEvents >= maxEventsPerSegment) flushSegment()
+            spool.commit(endPos) // tx closed — segment may cut here
+            if (spool.buffered >= maxEventsPerSegment) spool.flush()
           }
         }
         true
       }
-      flushSegment() // clean EOF: spool the closed tail
-    } catch {
-      case e: java.io.IOException =>
-        // drop mid-tx: spool nothing past the last commit; the reconnect
-        // re-fetches the discarded tail from the checkpoint
-        flushSegment()
-        buffer.clear(); committedLen = 0; bufferedEvents = 0
-        throw e
     }
   }
 
   /**
-   * Pump with reconnect-backoff until a clean end of stream (the stub's
-   * EOF; a real server stream is endless — run on a maintenance thread).
-   * Returns the number of connection attempts.
+   * Pump with reconnect-backoff (`backoffMs * attempt`) until a clean end
+   * of stream (the stub's EOF; a real server stream is endless — run on a
+   * maintenance thread). Only IOExceptions retry. Returns the number of
+   * connection attempts.
    */
-  def pump(maxAttempts: Int = 5, backoffMs: Long = 50L): Int = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      try { runOnce(); done = true }
-      catch {
-        case e: java.io.IOException =>
-          if (attempts >= maxAttempts) throw e
-          Thread.sleep(backoffMs * attempts)
-      }
-    }
-    attempts
-  }
+  def pump(maxAttempts: Int = 5, backoffMs: Long = 50L): Int =
+    Retry(maxAttempts, backoffMs * _)(Retry.io) { n => runOnce(); n }
 }
 
 object BinlogSpooler {

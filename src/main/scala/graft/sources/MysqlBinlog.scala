@@ -479,19 +479,13 @@ object MysqlBinlog {
   }
 
   /**
-   * Decode one row image: null bitmap over INCLUDED columns, then values.
-   * Mirrors `build_object` (mysql_object.rs:8-52): JSON keyed by name,
-   * excluded columns absent, nulls explicit.
+   * Decode one row image: null bitmap over INCLUDED columns (`incIdx`, the
+   * include-index the caller hoists per rows EVENT), then values. Mirrors
+   * `build_object` (mysql_object.rs:8-52): JSON keyed by name, excluded
+   * columns absent, nulls explicit. Values render straight into the
+   * caller's per-segment builder (no J tuple vector, no per-field string
+   * concat).
    */
-  def decodeRowImage(r: Reader, tm: TableMapInfo, included: Array[Byte],
-                     names: IndexedSeq[String]): String =
-    decodeRowImageInto(r, tm, includedIdx(included, tm.types.length), names,
-      new java.lang.StringBuilder(128))
-
-  /** Hot-path variant: caller hoists the include-index per rows EVENT and
-   * reuses one builder per segment; values render straight into it (no J
-   * tuple vector, no per-field string concat). Output byte-identical to
-   * the public wrapper. */
   private def decodeRowImageInto(r: Reader, tm: TableMapInfo, incIdx: Array[Int],
                                  names: IndexedSeq[String],
                                  sb: java.lang.StringBuilder): String = {

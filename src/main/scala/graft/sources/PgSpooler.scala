@@ -1,22 +1,23 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.core.Retry
 
 /**
  * PG counterpart of [[BinlogSpooler]]: drives [[PgWire.ReplicationClient]]
  * and spools received pgoutput messages into [[BacklogSource]] segment
  * files as `[lsn:8 BE][len:4 BE][msg]` frames — the exact input of
  * [[PgOutput.decodeSegment]] — so the DSv2 source tails a logical
- * replication socket (reference postgres/mod.rs:74-87's stream loop).
+ * replication socket (reference postgres/mod.rs:74-87's stream loop). The
+ * on-disk state — checkpoint, identity, committed-prefix segments, the
+ * discarded open tail — is [[SegmentSpool]]'s; the reconnect loop is
+ * [[graft.core.Retry]].
  *
- * Transaction-safe segmentation: messages buffer until a Commit ('C')
- * closes the transaction AND the segment budget is met. Relation ('R')
- * messages are tracked per relation id and re-emitted at the head of
- * EVERY segment (pgoutput re-sends them per stream for the same reason),
- * so each segment decodes self-contained. On a dropped connection the
- * uncommitted tail is discarded; the reconnect resumes from the
- * checkpointed commit LSN.
+ * pgoutput protocol notes: a Commit ('C') closes a transaction, and a
+ * segment cuts only at a Commit once `maxTxPerSegment` transactions are
+ * closed. Relation ('R') messages are tracked per relation id and
+ * re-emitted at the head of EVERY segment (pgoutput re-sends them per
+ * stream for the same reason), so each segment decodes self-contained. The
+ * checkpoint is the commit's END LSN.
  */
 class PgSpooler(
     host: String, port: Int, user: String, database: String,
@@ -24,20 +25,15 @@ class PgSpooler(
     dir: String, startLsn: Long = 0L,
     maxTxPerSegment: Int = 100) {
 
-  private val statePath = Paths.get(dir, "_spool_checkpoint")
-  private val identityPath = Paths.get(dir, "_spool_identity")
-  Files.createDirectories(Paths.get(dir))
+  // latest Relation frame per relation id (BE i4 at msg offset 1)
+  private val relations = scala.collection.mutable.LinkedHashMap[Long, Array[Byte]]()
+  private val spool = new SegmentSpool(dir, startLsn, () => relations.values)
 
-  def checkpoint(): Long =
-    if (Files.exists(statePath)) new String(Files.readAllBytes(statePath), UTF_8).trim.toLong
-    else startLsn
+  def checkpoint(): Long = spool.checkpoint()
 
   /** The `system_identifier` this spool's position belongs to (first
    * IDENTIFY_SYSTEM), or None before the first successful connect. */
-  def identity(): Option[String] =
-    if (Files.exists(identityPath))
-      Some(new String(Files.readAllBytes(identityPath), UTF_8).trim)
-    else None
+  def identity(): Option[String] = spool.identity()
 
   /**
    * Failover guard (reference chaos pg_failover.rs steps 5-7, the PG twin
@@ -51,23 +47,7 @@ class PgSpooler(
   private def checkIdentity(client: PgWire.ReplicationClient): Unit = {
     val sysId = client.identifySystem().getOrElse("systemid",
       throw new java.io.IOException("pg: IDENTIFY_SYSTEM returned no systemid"))
-    identity() match {
-      case Some(saved) if saved != sysId && checkpoint() > startLsn =>
-        throw new PgSpooler.FailoverException(saved, sysId, checkpoint())
-      case Some(saved) if saved == sysId => ()
-      case _ =>
-        val tmp = Paths.get(dir, "_spool_identity.tmp")
-        Files.write(tmp, sysId.getBytes(UTF_8))
-        Files.move(tmp, identityPath, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  private def commitCheckpoint(lsn: Long): Unit = {
-    val tmp = Paths.get(dir, "_spool_checkpoint.tmp")
-    Files.write(tmp, lsn.toString.getBytes(UTF_8))
-    Files.move(tmp, statePath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    spool.guardIdentity(sysId)(saved => new PgSpooler.FailoverException(saved, sysId, checkpoint()))
   }
 
   private def be8(b: Array[Byte], off: Int): Long = {
@@ -84,39 +64,33 @@ class PgSpooler(
     out.array()
   }
 
-  // latest Relation frame per relation id (BE i4 at msg offset 1)
-  private val relations = scala.collection.mutable.LinkedHashMap[Long, Array[Byte]]()
-  private val buffer = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-  private var committedLen = 0 // buffer prefix closed by a Commit — only this flushes
-  private var closedTxs = 0
-  private var safeLsn = -1L
-
-  private def flushSegment(): Unit = if (committedLen > 0 && safeLsn > 0) {
-    val body = new java.io.ByteArrayOutputStream()
-    relations.values.foreach(body.write)
-    // ONLY the committed prefix — an uncommitted tail past the last Commit
-    // must never spool (it re-arrives whole after the reconnect)
-    buffer.take(committedLen).foreach(body.write)
-    val name = f"seg-$safeLsn%012d.segb64"
-    val tmp = Paths.get(dir, s"$name.tmp")
-    Files.write(tmp, java.util.Base64.getEncoder.encodeToString(body.toByteArray).getBytes(UTF_8))
-    // REPLACE: a crash between segment write and checkpoint commit makes
-    // the restart re-spool the same tx range under the same name — the
-    // content is byte-identical, so overwrite instead of failing
-    Files.move(tmp, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    buffer.remove(0, committedLen)
-    committedLen = 0
-    closedTxs = 0
-    commitCheckpoint(safeLsn)
-    safeLsn = -1L
-  }
-
   def runOnce(): Unit = {
     val client = new PgWire.ReplicationClient(host, port, user, database, slot, publication)
     checkIdentity(client) // failover guard BEFORE streaming from a checkpoint
     try {
-      doRunOnce(client)
+      spool.connection {
+        client.tail(checkpoint()) { (lsn, msg) =>
+          msg(0).toChar match {
+            case 'R' =>
+              val relId = ((msg(1) & 0xffL) << 24) | ((msg(2) & 0xffL) << 16) |
+                ((msg(3) & 0xffL) << 8) | (msg(4) & 0xffL)
+              relations(relId) = frame(lsn, msg)
+            case t =>
+              spool.append(frame(lsn, msg))
+              if (t == 'C') {
+                // checkpoint the commit's END LSN from the pgoutput Commit
+                // body ('C'[flags:1][commit:8][end:8][ts:8]) — resuming
+                // START_REPLICATION from the commit frame's walStart would
+                // redeliver the just-committed transaction on a real server
+                // (convention: confirm the commit's end LSN, as the
+                // reference's flushed-LSN acks do)
+                spool.commit(be8(msg, 10))
+                if (spool.commits >= maxTxPerSegment) spool.flush()
+              }
+          }
+          true
+        }
+      }
     } catch {
       // Slot-dropped guard (reference chaos slot_dropped.rs: "halts rather
       // than silently connecting to a different slot or starting from the
@@ -134,58 +108,12 @@ class PgSpooler(
     }
   }
 
-  private def doRunOnce(client: PgWire.ReplicationClient): Unit = {
-    try {
-      client.tail(checkpoint()) { (lsn, msg) =>
-        msg(0).toChar match {
-          case 'R' =>
-            val relId = ((msg(1) & 0xffL) << 24) | ((msg(2) & 0xffL) << 16) |
-              ((msg(3) & 0xffL) << 8) | (msg(4) & 0xffL)
-            relations(relId) = frame(lsn, msg)
-          case t =>
-            buffer += frame(lsn, msg)
-            if (t == 'C') {
-              // checkpoint the commit's END LSN from the pgoutput Commit
-              // body ('C'[flags:1][commit:8][end:8][ts:8]) — resuming
-              // START_REPLICATION from the commit frame's walStart would
-              // redeliver the just-committed transaction on a real server
-              // (convention: confirm the commit's end LSN, as the
-              // reference's flushed-LSN acks do)
-              safeLsn = be8(msg, 10)
-              committedLen = buffer.length
-              closedTxs += 1
-              if (closedTxs >= maxTxPerSegment) flushSegment()
-            }
-        }
-        true
-      }
-      flushSegment() // clean end of stream
-    } catch {
-      case e: java.io.IOException =>
-        flushSegment() // spool the closed txs (committed prefix only)
-        buffer.clear(); committedLen = 0; closedTxs = 0
-        throw e
-    }
-  }
-
-  /** Pump with reconnect-backoff until a clean end of stream. */
-  def pump(maxAttempts: Int = 5, backoffMs: Long = 50L): Int = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      // SlotDroppedException is NOT an IOException: it must escape the
-      // reconnect loop on the FIRST attempt — retrying a dropped slot can
-      // never succeed, and backing off just delays the operator page
-      try { runOnce(); done = true }
-      catch {
-        case e: java.io.IOException =>
-          if (attempts >= maxAttempts) throw e
-          Thread.sleep(backoffMs * attempts)
-      }
-    }
-    attempts
-  }
+  /** Pump with reconnect-backoff (`backoffMs * attempt`) until a clean end
+   * of stream. Only IOExceptions retry: SlotDroppedException and
+   * FailoverException escape on the FIRST attempt — retrying them can never
+   * succeed, and backing off just delays the operator page. */
+  def pump(maxAttempts: Int = 5, backoffMs: Long = 50L): Int =
+    Retry(maxAttempts, backoffMs * _)(Retry.io) { n => runOnce(); n }
 }
 
 object PgSpooler {

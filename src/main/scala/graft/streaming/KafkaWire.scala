@@ -48,7 +48,6 @@ object KafkaWire {
     while ((z & ~0x7fL) != 0L) { out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7 }
     out.write(z.toInt)
   }
-  def writeVarInt(out: ByteArrayOutputStream, v: Int): Unit = writeVarLong(out, v.toLong)
 
   def readVarLong(in: InputStream): Long = {
     var z = 0L; var shift = 0; var b = in.read()
@@ -173,10 +172,6 @@ object KafkaWire {
     bb.putInt(crcPos, crc.getValue.toInt)
     outArr
   }
-
-  /** The attributes word of an encoded batch (bit 4 = transactional). */
-  def batchAttributes(bytes: Array[Byte]): Short =
-    ByteBuffer.wrap(bytes).getShort(8 + 4 + 4 + 1 + 4) // offset+len+leaderEpoch+magic+crc
 
   /** Decode + CRC-verify a magic-2 batch (spec/stub side). */
   def decodeBatch(bytes: Array[Byte]): (Long, Long, Short, Int, Seq[Record]) = {

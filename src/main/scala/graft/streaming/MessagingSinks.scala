@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Retry
 import graft.operators.Routing
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -9,10 +10,12 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
 /**
- * Messaging sinks. No brokers exist in this environment, so the transport is
- * a narrow pluggable interface; everything above it — routing, keying,
- * ordering, batching, the exactly-once transactional protocol, retries — is
- * the real implementation under test.
+ * Messaging sinks: the Kafka-shaped transactional sink over a pluggable
+ * producer (the wire producer is [[KafkaWire.SocketProducer]]) and the
+ * HTTP/webhook sink. The Redis Streams and NATS sinks speak their wire
+ * protocols in [[RedisWire]] and [[NatsWire]], and ClickHouse its HTTP
+ * interface in [[ClickHouseWire]]. The HTTP, Redis and NATS sinks share
+ * one bounded retry loop, [[graft.core.Retry]].
  */
 object MessagingSinks {
 
@@ -105,8 +108,9 @@ object MessagingSinks {
 
   /**
    * HTTP/webhook sink (reference crates/sinks/src/http.rs:33-200): POST with
-   * URL template, JSON-array batch mode, bounded retries on 5xx with
-   * exponential backoff. Runs per partition with one shared client.
+   * URL template, JSON-array batch mode, bounded retries on 5xx and IO
+   * errors with exponential backoff ([[graft.core.Retry]]); a 4xx fails at
+   * once. Runs per partition with one shared client.
    */
   class HttpSink(
       val id: String,
@@ -122,31 +126,22 @@ object MessagingSinks {
       val u = url; val bm = batchMode; val mr = maxRetries; val hs = headers; val to = timeout
       payloads.foreachPartition { (rows: Iterator[Row]) =>
         val client = HttpClient.newBuilder().connectTimeout(to).build()
-        def post(body: String): Unit = {
-          var attempt = 0
-          var done = false
-          while (!done) {
-            val req = {
-              val b = HttpRequest.newBuilder(URI.create(u))
-                .timeout(to)
-                .header("Content-Type", "application/json")
-                .POST(HttpRequest.BodyPublishers.ofString(body))
-              hs.foreach { case (k, v) => b.header(k, v) }
-              b.build()
-            }
+        def post(body: String): Unit =
+          try Retry(mr + 1, n => math.min(100L << n, 2000L))(_.isInstanceOf[ServerError]) { _ =>
+            val b = HttpRequest.newBuilder(URI.create(u))
+              .timeout(to)
+              .header("Content-Type", "application/json")
+              .POST(HttpRequest.BodyPublishers.ofString(body))
+            hs.foreach { case (k, v) => b.header(k, v) }
             val status =
-              try client.send(req, HttpResponse.BodyHandlers.discarding()).statusCode()
+              try client.send(b.build(), HttpResponse.BodyHandlers.discarding()).statusCode()
               catch { case _: java.io.IOException => 599 }
-            if (status < 500) {
-              if (status >= 400) throw new RuntimeException(s"http sink $u: status $status")
-              done = true
-            } else {
-              attempt += 1
-              if (attempt > mr) throw new RuntimeException(s"http sink $u: status $status after $mr retries")
-              Thread.sleep(math.min(100L << attempt, 2000L))
-            }
+            if (status >= 500) throw new ServerError(status)
+            if (status >= 400) throw new RuntimeException(s"http sink $u: status $status")
+          } catch {
+            case e: ServerError =>
+              throw new RuntimeException(s"http sink $u: status ${e.status} after $mr retries")
           }
-        }
         if (bm) {
           val grouped = rows.map(_.getString(0)).grouped(500)
           grouped.foreach(g => post(g.mkString("[", ",", "]")))
@@ -155,25 +150,6 @@ object MessagingSinks {
     }
   }
 
-  /**
-   * Keyed-stream sink shape shared by Redis Streams / NATS JetStream
-   * (reference redis.rs XADD + idempotency_key, nats.rs Nats-Msg-Id):
-   * server-side dedup via a per-event idempotency key the transport attaches.
-   */
-  class KeyedStreamSink(
-      val id: String,
-      transport: (String, String, String) => Unit, // (stream, idempotencyKey, payload)
-      streamTemplate: Option[String] = None,
-      staticStream: String = "events") extends EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val t = transport
-      batch.select(
-        Routing.resolveTopic(streamTemplate, staticStream).as("stream"),
-        graft.core.ChangeEvent.idempotencyKey.as("ikey"),
-        to_json(struct(batch.columns.map(col).toIndexedSeq: _*)).as("payload"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => t(r.getString(0), r.getString(1), r.getString(2)))
-        }
-    }
-  }
+  /** A 5xx answer (or an IO error, as 599): the retryable HTTP outcome. */
+  private final class ServerError(val status: Int) extends Exception(s"status $status")
 }

@@ -5,8 +5,7 @@ import graft.operators.Routing
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
-import java.net.{InetSocketAddress, Socket}
+import java.io.InputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 /**
@@ -88,8 +87,9 @@ object NatsWire {
   /**
    * The sink. Per partition: INFO/CONNECT/PING handshake, then HPUB frames
    * pipelined `pipelineSize` at a time with the `+OK` acks drained per
-   * chunk. `-ERR` fails the batch (commit gate holds); IO errors retry the
-   * materialized chunk on a fresh connection — replays are deduped
+   * chunk, by [[PipelinedSocket]]. `-ERR` fails the batch (commit gate
+   * holds); IO errors — a reconnect cut short included — retry the
+   * materialized chunk on a fresh connection, and replays are deduped
    * server-side by `Nats-Msg-Id` (exactly the reference's crash-recovery
    * dedup contract, nats.rs:288-290).
    */
@@ -112,64 +112,27 @@ object NatsWire {
         coalesce(col("routing.headers"), map().cast("map<string,string>")).as("headers"),
         to_json(struct(batch.columns.map(col).toIndexedSeq: _*))
           .cast("binary").as("payload"))
-      val (h, p, ps, mr, cto, rto) =
-        (host, port, pipelineSize, maxRetries, connectTimeoutMs, readTimeoutMs)
-      val sinkId = id
+      val (sinkId, h, p, ps, mr, cto, rto) =
+        (id, host, port, pipelineSize, maxRetries, connectTimeoutMs, readTimeoutMs)
       rows.foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          var socket: Socket = null
-          var out: BufferedOutputStream = null
-          var in: BufferedInputStream = null
-          def close(): Unit = if (socket != null) { socket.close(); socket = null }
-          def connect(): Unit = {
-            close()
-            socket = new Socket()
-            socket.connect(new InetSocketAddress(h, p), cto)
-            socket.setSoTimeout(rto)
-            socket.setTcpNoDelay(true)
-            out = new BufferedOutputStream(socket.getOutputStream, 1 << 16)
-            in = new BufferedInputStream(socket.getInputStream, 1 << 16)
-            val info = readLine(in)
-            require(info.startsWith("INFO "), s"nats: expected INFO, got '${info.take(40)}'")
-            out.write(("CONNECT {\"verbose\":true,\"headers\":true," +
-              "\"name\":\"graft-" + sinkId + "\"}\r\nPING\r\n").getBytes(UTF_8))
-            out.flush()
-            var line = readLine(in) // +OK (verbose ack of CONNECT)
-            if (line == "+OK") line = readLine(in)
-            require(line == "PONG", s"nats: handshake expected PONG, got '$line'")
-          }
-          connect()
-          try {
-            it.grouped(ps).foreach { chunk =>
-              var attempt = 0
-              var sent = false
-              while (!sent) {
-                try {
-                  chunk.foreach { r =>
-                    out.write(hpubFrame(r.getString(0), r.getString(1), r.getString(2),
-                      Option(r.getMap[String, String](3)).map(_.toMap).getOrElse(Map.empty),
-                      r.getAs[Array[Byte]](4)))
-                  }
-                  out.flush() // one round trip per chunk
-                  chunk.foreach { _ =>
-                    val ack = readLine(in)
-                    if (ack.startsWith("-ERR"))
-                      throw new RuntimeException(s"nats sink $sinkId: $ack")
-                    require(ack == "+OK", s"nats sink $sinkId: unexpected ack '$ack'")
-                  }
-                  sent = true
-                } catch {
-                  case e: java.io.IOException =>
-                    attempt += 1
-                    if (attempt > mr)
-                      throw new RuntimeException(
-                        s"nats sink $sinkId: IO failure after $mr retries", e)
-                    Thread.sleep(math.min(100L << attempt, 2000L))
-                    connect()
-                }
-              }
-            }
-          } finally close()
+        PipelinedSocket.send(it, s"nats sink $sinkId", h, p, cto, rto, ps, mr) { (in, out) =>
+          val info = readLine(in)
+          require(info.startsWith("INFO "), s"nats: expected INFO, got '${info.take(40)}'")
+          out.write(("CONNECT {\"verbose\":true,\"headers\":true," +
+            "\"name\":\"graft-" + sinkId + "\"}\r\nPING\r\n").getBytes(UTF_8))
+          out.flush()
+          var line = readLine(in) // +OK (verbose ack of CONNECT)
+          if (line == "+OK") line = readLine(in)
+          require(line == "PONG", s"nats: handshake expected PONG, got '$line'")
+        } { (out, r) =>
+          out.write(hpubFrame(r.getString(0), r.getString(1), r.getString(2),
+            Option(r.getMap[String, String](3)).map(_.toMap).getOrElse(Map.empty),
+            r.getAs[Array[Byte]](4)))
+        } { in =>
+          val ack = readLine(in)
+          if (ack.startsWith("-ERR"))
+            throw new RuntimeException(s"nats sink $sinkId: $ack")
+          require(ack == "+OK", s"nats sink $sinkId: unexpected ack '$ack'")
         }
       }
     }

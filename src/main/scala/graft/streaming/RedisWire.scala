@@ -5,8 +5,7 @@ import graft.operators.Routing
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.net.{InetSocketAddress, Socket}
+import java.io.{InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /**
@@ -105,9 +104,10 @@ object RedisWire {
 
   /**
    * The sink. One socket per partition; XADDs pipelined `pipelineSize` at a
-   * time; replies drained and checked per chunk. Bounded reconnect-retries
-   * on IO errors (fresh socket), matching the reference's retry-then-fail
-   * so the coordinator's commit gate sees the failure.
+   * time and their replies checked per chunk by [[PipelinedSocket]]: bounded
+   * reconnect-retries on IO errors (fresh socket, whole chunk resent),
+   * matching the reference's retry-then-fail so the coordinator's commit
+   * gate sees the failure. A `-ERR` reply fails at once.
    */
   class RedisStreamSink(
       val id: String,
@@ -129,59 +129,18 @@ object RedisWire {
         ChangeEvent.idempotencyKey.as("ikey"),
         to_json(struct(batch.columns.map(col).toIndexedSeq: _*))
           .cast("binary").as("payload"))
-      val (h, p, ps, mr, cto, rto) =
-        (host, port, pipelineSize, maxRetries, connectTimeoutMs, readTimeoutMs)
+      val (sinkId, h, p, ps, mr, cto, rto) =
+        (id, host, port, pipelineSize, maxRetries, connectTimeoutMs, readTimeoutMs)
       rows.foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          var socket: Socket = null
-          var out: BufferedOutputStream = null
-          var in: BufferedInputStream = null
-          def close(): Unit = if (socket != null) { socket.close(); socket = null }
-          def connect(): Unit = {
-            close()
-            socket = new Socket()
-            socket.connect(new InetSocketAddress(h, p), cto)
-            socket.setSoTimeout(rto)
-            socket.setTcpNoDelay(true)
-            out = new BufferedOutputStream(socket.getOutputStream, 1 << 16)
-            in = new BufferedInputStream(socket.getInputStream, 1 << 16)
+        PipelinedSocket.send(it, s"redis sink $sinkId", h, p, cto, rto, ps, mr)(
+          (_, _) => ()) { (out, r) =>
+          Resp.encodeCommand(out, xaddArgs(r.getString(0), r.getString(1),
+            r.getString(2), r.getString(3), r.getAs[Array[Byte]](4)))
+        } { in =>
+          Resp.parseReply(in) match {
+            case Resp.Err(m) => throw new RuntimeException(s"redis sink $sinkId: -ERR $m")
+            case _ => () // XADD returns the generated stream id
           }
-          connect()
-          try {
-            // chunks are materialized Seqs, so an IO failure retries the
-            // WHOLE chunk on a fresh connection — duplicates from the resend
-            // are absorbed downstream by idempotency_key (reference
-            // at-least-once). A -ERR reply is a command error: fail the
-            // batch, let the coordinator's commit gate hold it back.
-            it.grouped(ps).foreach { chunk =>
-              var attempt = 0
-              var sent = false
-              while (!sent) {
-                try {
-                  chunk.foreach { r =>
-                    Resp.encodeCommand(out, xaddArgs(r.getString(0), r.getString(1),
-                      r.getString(2), r.getString(3), r.getAs[Array[Byte]](4)))
-                  }
-                  out.flush() // ONE round trip for the whole chunk
-                  chunk.foreach { _ =>
-                    Resp.parseReply(in) match {
-                      case Resp.Err(m) => throw new RuntimeException(s"redis sink $id: -ERR $m")
-                      case _ => () // XADD returns the generated stream id
-                    }
-                  }
-                  sent = true
-                } catch {
-                  case e: java.io.IOException =>
-                    attempt += 1
-                    if (attempt > mr)
-                      throw new RuntimeException(
-                        s"redis sink $id: IO failure after $mr retries", e)
-                    Thread.sleep(math.min(100L << attempt, 2000L))
-                    connect()
-                }
-              }
-            }
-          } finally close()
         }
       }
     }

@@ -102,11 +102,6 @@ object GraftBridge {
     (ts.format(_: Long), ntz.format(_: Long), date.format(_: Int))
   }
 
-  /** The session time zone id at plan time (what a TimeZoneAwareExpression
-   * would resolve to). */
-  def sessionTimeZone: String =
-    org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
-
   /**
    * The EXACT timestamp-string parse `from_json` (JacksonParser) applies to
    * a string token in a TimestampType field: the default-JSONOptions

@@ -130,8 +130,8 @@ class LiveWireSpec extends SparkSpec {
   /** pgoutput message stream with ascending LSNs: per row Begin + Insert +
    * Commit (the Relation message is re-sent per connection, as pgoutput
    * does). */
-  private def pgStream(pks: Seq[Long]): Seq[(Long, Array[Byte])] = {
-    var lsn = 1000L
+  private def pgStream(pks: Seq[Long], from: Long = 1000L): Seq[(Long, Array[Byte])] = {
+    var lsn = from
     val out = Seq.newBuilder[(Long, Array[Byte])]
     pks.foreach { pk =>
       out += ((lsn, PFx.begin(lsn + 2, PFx.CommitMicrosPg, 700 + pk)))
@@ -320,6 +320,28 @@ class LiveWireSpec extends SparkSpec {
         .format("parquet").option("path", s"$out/data").start()
       q.awaitTermination(60000)
       assert(spark.read.parquet(s"$out/data").count() == pks.length)
+    } finally stub.stop()
+  }
+
+  test("pg spooler: segments whose commit LSNs cross 10^12 list in commit order") {
+    // commit end LSNs 999_999_999_983 … 1_000_000_000_013 (past E8/D4A51000,
+    // ~931 GiB of WAL): a name sort that puts seg-1000000000003 before
+    // seg-999999999993 would shift the (segment, line) offsets of
+    // segments already consumed
+    val pks = Seq(1L, 2L, 3L, 4L)
+    val stub = new PgStub(pgStream(pks, from = 999999999980L))
+    val dir = Files.createTempDirectory("pg-spool-wide").toString
+    try {
+      val spooler = new PgSpooler("127.0.0.1", stub.port, "repl", "shop",
+        "graft_slot", "graft_pub", dir, maxTxPerSegment = 1) // one segment per tx
+      assert(spooler.pump() == 1)
+      assert(spooler.checkpoint() == 1000000000013L)
+      val segs = BacklogSource.segments(dir)
+      assert(segs.size == pks.length)
+      assert(segs.flatMap { p =>
+        val seg = java.util.Base64.getDecoder.decode(Files.readAllLines(p).get(0))
+        PgOutput.decodeSegment(seg).filter(_.op != null).map(r => jsonPk(r.after))
+      } == pks)
     } finally stub.stop()
   }
 }

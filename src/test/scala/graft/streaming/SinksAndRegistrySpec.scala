@@ -260,6 +260,30 @@ class SinksAndRegistrySpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("http sink retry budget: a 4xx fails after one POST, a persistent 503 after maxRetries + 1") {
+    def postsUntilFailure(status: Int): Int = {
+      val hits = new java.util.concurrent.atomic.AtomicInteger(0)
+      val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+      server.createContext("/hook", new HttpHandler {
+        def handle(ex: HttpExchange): Unit = {
+          ex.getRequestBody.readAllBytes()
+          hits.incrementAndGet()
+          ex.sendResponseHeaders(status, -1)
+          ex.close()
+        }
+      })
+      server.start()
+      try {
+        val sink = new MessagingSinks.HttpSink("h2",
+          s"http://127.0.0.1:${server.getAddress.getPort}/hook", maxRetries = 2)
+        intercept[Exception](sink.write(events(5).coalesce(1), 0L))
+        hits.get()
+      } finally server.stop(0)
+    }
+    assert(postsUntilFailure(400) == 1) // client error: never retried
+    assert(postsUntilFailure(503) == 3) // server error: 1 attempt + 2 retries
+  }
+
   test("schema registry: fingerprint versioning, get_at_sequence/timestamp") {
     val dir = Files.createTempDirectory("graft-reg").toString
     val reg = new SchemaRegistry(spark, s"$dir/ledger")

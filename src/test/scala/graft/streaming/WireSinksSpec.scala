@@ -145,7 +145,10 @@ class WireSinksSpec extends SparkSpec {
 
   // ——————————————————— NATS stub (text protocol) ———————————————————
 
-  private class NatsStub {
+  /** Records every HPUB. Outage injection: the first connection dies after
+   * `killAfter` messages; with `dropSecondBeforeInfo` the second connection
+   * is closed before the server's INFO line (a reconnect cut short). */
+  private class NatsStub(killAfter: Int = -1, dropSecondBeforeInfo: Boolean = false) {
     case class Msg(subject: String, headers: Map[String, String], payload: String)
     val received = new ConcurrentLinkedQueue[Msg]()
     val connections = new AtomicInteger(0)
@@ -157,11 +160,13 @@ class WireSinksSpec extends SparkSpec {
       while (running) {
         try {
           val sock = server.accept()
-          connections.incrementAndGet()
+          val connNo = connections.incrementAndGet()
           new Thread(() => {
             try {
+              if (connNo == 2 && dropSecondBeforeInfo) throw new java.io.EOFException("injected")
               val in = new BufferedInputStream(sock.getInputStream)
               val out = new BufferedOutputStream(sock.getOutputStream)
+              var served = 0
               out.write("INFO {\"server_id\":\"stub\",\"headers\":true}\r\n".getBytes(UTF_8))
               out.flush()
               while (true) {
@@ -184,6 +189,11 @@ class WireSinksSpec extends SparkSpec {
                     .map { h => val i = h.indexOf(": "); h.take(i) -> h.drop(i + 2) }.toMap
                   received.add(Msg(subject, headers,
                     new String(total.drop(hlen.toInt), UTF_8)))
+                  served += 1
+                  if (connNo == 1 && killAfter >= 0 && served > killAfter) {
+                    sock.close() // injected outage mid-pipeline
+                    throw new java.io.EOFException("injected")
+                  }
                   out.write("+OK\r\n".getBytes(UTF_8)); out.flush()
                 }
                 else throw new java.io.IOException(s"stub: unexpected '$line'")
@@ -252,6 +262,24 @@ class WireSinksSpec extends SparkSpec {
       assert(msgs.length == 40) // wire saw both deliveries (at-least-once)
       // JetStream's duplicate-window dedup key collapses them to exactly 20
       assert(msgs.map(_.headers("Nats-Msg-Id")).distinct.length == 20)
+    } finally stub.stop()
+  }
+
+  test("nats sink outage: connection killed mid-pipeline, reconnect dropped before INFO, third connection delivers every message once by Nats-Msg-Id") {
+    // the failed reconnect spends one retry of the budget (3) instead of
+    // failing the batch: connection #2 dies before the handshake's INFO
+    val stub = new NatsStub(killAfter = 5, dropSecondBeforeInfo = true)
+    try {
+      val sink = new NatsWire.NatsSink("n3", "127.0.0.1", stub.port,
+        staticSubject = "s", pipelineSize = 10)
+      sink.write(events(30).coalesce(1), 0L)
+      val msgs = stub.received.toArray(Array.empty[AnyRef])
+        .map(_.asInstanceOf[stub.Msg])
+      // at-least-once on the wire (the killed chunk was resent), exactly
+      // once by the JetStream dedup key: all 30 ids, no gaps
+      assert(msgs.map(_.headers("Nats-Msg-Id")).distinct.length == 30)
+      assert(msgs.length >= 30)
+      assert(stub.connections.get() == 3)
     } finally stub.stop()
   }
 }
