@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.core.ChangeEvent
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,20 +47,23 @@ object CdcSynth {
     // the narrow base row moves BEFORE the payload encode, so the wrap and
     // everything after runs at executor parallelism.
     val par = table.sparkSession.sparkContext.defaultParallelism
-    // Probe-and-spread ONLY bare relations: `table.rdd.getNumPartitions`
-    // on a plan that contains an Exchange EXECUTES that exchange under AQE
-    // (AdaptiveSparkPlanExec materializes every query stage before it can
-    // report partitioning) — the rangeSorted callers were paying a full
-    // discarded scan+shuffle of the source per query build (r17 A/B:
-    // cdc_routing ×10 task-CPU doubled when its source went from a leaf
-    // scan to repartitionByRange). For a leaf scan the probe is free (file
-    // split listing); a non-leaf input means the caller already arranged
-    // the layout.
-    val spread = table.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LeafNode =>
-        if (table.rdd.getNumPartitions < par) table.repartition(par) else table
-      case _ => table
+    // Probe-and-spread ONLY inputs whose physical plan has no exchange and
+    // no subquery: `table.rdd.getNumPartitions` on an adaptive plan
+    // EXECUTES its exchanges (AdaptiveSparkPlanExec materializes every
+    // query stage before it can report partitioning) — the rangeSorted
+    // callers were paying a full discarded scan+shuffle of the source per
+    // query build (r17 A/B: cdc_routing ×10 task-CPU doubled when its
+    // source went from a leaf scan to repartitionByRange). AQE wraps
+    // exactly the plans with an exchange or subquery; with AQE off those
+    // still run jobs when their RDD is built (range sampling, broadcast,
+    // subquery results). Any other plan — a scan under filters and
+    // projections — reports its partitions from the file split listing.
+    val probeIsFree = table.queryExecution.executedPlan match {
+      case _: AdaptiveSparkPlanExec => false
+      case p => p.find(n => n.isInstanceOf[Exchange] || n.subqueries.nonEmpty).isEmpty
     }
+    val spread =
+      if (probeIsFree && table.rdd.getNumPartitions < par) table.repartition(par) else table
     val pk = col(pkCol)
     val op = opFor(pk)
     // fused byte-level encode (to_json-identical by spec, incl. the

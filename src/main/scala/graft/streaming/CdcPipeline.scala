@@ -63,8 +63,8 @@ object CdcPipeline {
   def processBatch(cfg: Config, ledger: SinkLedger)(batch0: DataFrame, batchId: Long): Unit = {
     val frozen = GraftBridge.freeze(cfg.processors.foldLeft(batch0)((df, p) => p(df)))
     val (batch, rows) = (frozen.df, frozen.rows)
+    val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))
     try {
-      val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val futures = cfg.sinks.map { sink =>
         sink.id -> Future {
@@ -91,13 +91,17 @@ object CdcPipeline {
         val remaining = math.max(0L, deadline - System.nanoTime())
         id -> Try(Await.result(f, remaining.nanos)).getOrElse(false)
       }.toMap
-      pool.shutdown()
       if (!policySatisfied(cfg, acks))
         throw new RuntimeException(
           s"commit policy ${cfg.commitPolicy} not satisfied for batch $batchId: acks=$acks")
       // commit only acked sinks — unacked ones will re-receive on replay
       acks.foreach { case (id, ok) => if (ok) ledger.commit(id, batchId) }
-    } finally frozen.release()
+    } finally {
+      // also on an interrupted wait: the pool's threads are non-daemon, and
+      // an unshut pool keeps one parked thread per sink alive forever
+      pool.shutdown()
+      frozen.release()
+    }
   }
 
   /** Launch as a Structured Streaming query. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.NioLocalFs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ object Dlq {
     val n = bad.limit(1).count() // cheap existence probe before a write job
     if (n > 0) {
       bad.select(entry(cfg, errorKind, errorMessage).as("e")).select("e.*")
-        .write.mode("append").parquet(cfg.path)
+        .write.options(NioLocalFs.options).mode("append").parquet(cfg.path)
     }
     batch.filter(coalesce(isGood, lit(false)))
   }

@@ -4,6 +4,7 @@ import graft.core.Retry
 import graft.operators.Routing
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, MapType, StringType}
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -61,9 +62,9 @@ object MessagingSinks {
       val routed = batch.select(
         Routing.resolveTopic(topicTemplate, staticTopic).as("topic"),
         coalesce(Routing.resolveKey(keyTemplate), col("event_id")).as("key"),
-        valueColumn(batch).cast("binary").as("value"),
+        valueColumn(batch).cast(BinaryType).as("value"),
         coalesce(col("routing.headers"),
-          map().cast("map<string,string>")).as("headers"),
+          map().cast(MapType(StringType, StringType))).as("headers"),
         coalesce(col("source.sequence"), col("ts_ms"), lit(0L)).as("_seq"))
       val n = batch.sparkSession.sparkContext.defaultParallelism
       routed

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.NioLocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -38,7 +39,7 @@ class SchemaRegistry(spark: SparkSession, path: String) {
         import spark.implicits._
         Seq((table, fp, seq, atMs, schema.json))
           .toDF("table", "fingerprint", "sequence", "registered_at_ms", "schema_json")
-          .write.mode("append").parquet(path)
+          .write.options(NioLocalFs.options).mode("append").parquet(path)
         seq
     }
   }

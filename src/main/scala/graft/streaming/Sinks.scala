@@ -1,7 +1,10 @@
 package graft.streaming
 
+import graft.core.NioLocalFs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /**
  * Sink contract for the micro-batch coordinator.
@@ -38,6 +41,12 @@ trait EventSink extends Serializable {
  * rather than one per input partition. Age/idle caps are structurally
  * satisfied: Spark's committer closes every file at micro-batch end, so no
  * file outlives its trigger interval, and idle partitions produce no file.
+ *
+ * Per-batch driver cost: the partition columns are added in ONE projection
+ * (`withColumns`; each `withColumn` re-analyses the whole plan), and the
+ * write goes through [[NioLocalFs]], so a local lake sets the permissions
+ * of its directories, data files, `.crc` files and `_SUCCESS` in-process
+ * instead of spawning a `chmod` for each.
  */
 class ParquetLakeSink(val id: String, path: String,
                       rolling: Rolling.Config = Rolling.Config())
@@ -53,12 +62,14 @@ class ParquetLakeSink(val id: String, path: String,
     val ts = timestamp_millis(col("ts_ms"))
     batch
       .coalesce(tasks.toInt)
-      .withColumn("table", col("source.table"))
-      .withColumn("year", year(ts))
-      .withColumn("month", month(ts))
-      .withColumn("day", dayofmonth(ts))
-      .withColumn("_batch_id", lit(batchId))
+      .withColumns(ListMap(
+        "table" -> col("source.table"),
+        "year" -> year(ts),
+        "month" -> month(ts),
+        "day" -> dayofmonth(ts),
+        "_batch_id" -> lit(batchId)))
       .write
+      .options(NioLocalFs.options)
       .option("maxRecordsPerFile", perFile)
       .partitionBy("table", "year", "month", "day")
       .mode("append")
@@ -105,7 +116,7 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
       val t = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(table)
       graft.operators.LakeProjection(rows, schema)
         .withColumn("_batch_id", lit(batchId))
-        .write.mode("append")
+        .write.options(NioLocalFs.options).mode("append")
         .parquet(s"$path/table=$t/schema_version=$seq")
     }
 
@@ -124,7 +135,8 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
       batch
         .withColumn("__t", col("source.table"))
         .withColumn("__seq", col("schema_sequence"))
-        .write.mode("overwrite").partitionBy("__t", "__seq").parquet(staging)
+        .write.options(NioLocalFs.options).mode("overwrite")
+        .partitionBy("__t", "__seq").parquet(staging)
       try {
         // Read back via partition-column FILTERS, not interpolated paths:
         // Spark escapes special characters (`=`, `%`, space) in partition
@@ -149,7 +161,7 @@ class JsonlSink(val id: String, path: String, envelope: DataFrame => Column)
     extends EventSink {
   override def write(batch: DataFrame, batchId: Long): Unit =
     batch.select(envelope(batch).as("value"))
-      .write.mode("append").text(s"$path/batch_id=$batchId")
+      .write.options(NioLocalFs.options).mode("append").text(s"$path/batch_id=$batchId")
 }
 
 /**

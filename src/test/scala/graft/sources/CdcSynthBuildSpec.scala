@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
  * the input plan (AdaptiveSparkPlanExec materializes all query stages before
  * reporting partitioning) — each rangeSorted caller paid a full discarded
  * scan+shuffle of its source at DataFrame-BUILD time (measured: cdc_routing
- * ×10 task-CPU doubled). The probe is now gated to leaf relations, where it
- * is a free file-split listing. This spec pins both halves:
- *  - building changeEvents over a repartitioned (non-leaf) input launches
- *    ZERO Spark jobs;
- *  - the non-leaf input is NOT re-spread (its partitioning survives).
+ * ×10 task-CPU doubled). The probe is now gated to inputs whose physical
+ * plan has no exchange or subquery, where it is a free file-split listing.
+ * This spec pins all three halves:
+ *  - building changeEvents over a repartitioned input launches ZERO Spark
+ *    jobs;
+ *  - the repartitioned input is NOT re-spread (its partitioning survives);
+ *  - a scan under a filter IS probed and spread.
  */
 class CdcSynthBuildSpec extends SparkSpec {
 
@@ -39,5 +41,21 @@ class CdcSynthBuildSpec extends SparkSpec {
     // a second (round-robin `Repartition`) would be the re-spread
     val nodes = "Repartition".r.findAllIn(plan).size
     assert(nodes == 1, s"expected exactly the caller's repartition, plan:\n$plan")
+  }
+
+  test("a filter over a one-file parquet scan is spread to defaultParallelism") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-synth").toString
+    (1L to 100L).map(i => (i, s"v$i")).toDF("pk", "v")
+      .coalesce(1).write.parquet(s"$dir/t")
+    val src = spark.read.parquet(s"$dir/t").filter(col("pk") % 2 === 0)
+    assert(src.rdd.getNumPartitions == 1) // the fixture really is one task
+    val ev = CdcSynth.changeEvents(src, "db", "t", "pk")
+    val spreads = ev.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions
+    }
+    assert(spreads == Seq(spark.sparkContext.defaultParallelism),
+      s"expected one spread to defaultParallelism, plan:\n${ev.queryExecution.optimizedPlan}")
+    assert(ev.count() == 50)
   }
 }

@@ -108,6 +108,34 @@ class CdcPipelineSpec extends SparkSpec {
     assert(latencies == 2)
   }
 
+  test("an interrupted processBatch leaves no fan-out thread alive once the slow sink returns") {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val sinkThread = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    val slow = new EventSink {
+      val id = "slow"
+      def write(batch: DataFrame, batchId: Long): Unit = {
+        sinkThread.set(Thread.currentThread())
+        entered.countDown()
+        release.await()
+      }
+    }
+    val dir = tmp()
+    val caller = new Thread(() =>
+      try processBatch(Config(Seq(slow), ledgerDir = dir), new SinkLedger(dir))(events(3), 0L)
+      catch { case _: InterruptedException => () })
+    caller.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS), "sink never started")
+      caller.interrupt() // e.g. StreamingQuery.stop() during a slow sink
+      caller.join(60000)
+      assert(!caller.isAlive, "processBatch ignored the interrupt")
+    } finally release.countDown()
+    val worker = sinkThread.get
+    worker.join(10000)
+    assert(!worker.isAlive, s"fan-out thread ${worker.getName} outlived its batch")
+  }
+
   test("processBatch materializes the batch with exactly one Spark job") {
     val dir = tmp()
     val batch = events(50)
