@@ -41,12 +41,37 @@ object MessagingSinks {
 
   /**
    * Kafka-shaped sink with exactly-once semantics: one transaction per
-   * micro-batch, keyed by a stable `transactional.id` = graft-{pipeline}-{sink}
-   * (reference kafka.rs:120-160). Records are routed/keyed via the event's
-   * routing override → template → static cascade, and delivered
-   * **partition-ordered by key**: rows are repartitioned by key and sorted by
-   * source sequence within partitions, preserving the per-PK ordering
-   * guarantee (reference docs/src/guarantees.md:41-66) with full parallelism.
+   * producer task per micro-batch (reference kafka.rs:120-160). Records are
+   * routed/keyed via the event's routing override → template → static
+   * cascade, and delivered **ordered by key**: each producer task sorts its
+   * rows by key and source sequence, preserving the per-PK ordering
+   * guarantee (reference docs/src/guarantees.md:41-66).
+   *
+   * Producer tasks per batch ([[KafkaLikeSink.producerTasks]]): the row
+   * count comes from the batch's plan statistics, which a batch frozen by
+   * [[CdcPipeline]] carries, so sizing costs no job.
+   *  - 0 rows: no job and no producer (no InitProducerId, no empty
+   *    transaction).
+   *  - Up to [[KafkaLikeSink.RowsPerProducer]] rows: ONE task (a
+   *    `coalesce(1)`, no exchange), so one Spark job and one transaction,
+   *    as the reference sends a batch through one producer per sink.
+   *  - More: `ceil(rows / RowsPerProducer)` tasks, at most
+   *    `defaultParallelism`, through a hash repartition by key.
+   *  - No row count (an unfrozen input, or a sink `filter`): the hash
+   *    repartition by key at `defaultParallelism`; the sink never runs a
+   *    `count()`.
+   * The task count depends only on the batch's row count (and, above
+   * `RowsPerProducer` rows, the default parallelism), so a replayed batch
+   * sends every key from the same task slot in the same order, the
+   * precondition for the idempotent path's (pid, epoch, baseSeq) dedup.
+   *
+   * The producer factory runs once per task; a factory that derives its
+   * `transactional.id` from `TaskContext.getPartitionId()` therefore uses
+   * slot 0 only for a small batch, and the higher slots of a larger batch
+   * stay unused (a transaction left open on one of them is not fenced by
+   * the next batch and ends at the broker's transaction timeout). The
+   * reference uses one `transactional.id` per sink,
+   * `deltaforge-{pipeline}-{sink}`.
    */
   class KafkaLikeSink(
       val id: String,
@@ -59,6 +84,10 @@ object MessagingSinks {
       exactlyOnce: Boolean = true) extends EventSink {
 
     override def write(batch: DataFrame, batchId: Long): Unit = {
+      val tasks = KafkaLikeSink.producerTasks(
+        batch.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong),
+        batch.sparkSession.sparkContext.defaultParallelism)
+      if (tasks == 0) return
       val routed = batch.select(
         Routing.resolveTopic(topicTemplate, staticTopic).as("topic"),
         coalesce(Routing.resolveKey(keyTemplate), col("event_id")).as("key"),
@@ -66,9 +95,7 @@ object MessagingSinks {
         coalesce(col("routing.headers"),
           map().cast(MapType(StringType, StringType))).as("headers"),
         coalesce(col("source.sequence"), col("ts_ms"), lit(0L)).as("_seq"))
-      val n = batch.sparkSession.sparkContext.defaultParallelism
-      routed
-        .repartition(n, col("key"))
+      (if (tasks == 1) routed.coalesce(1) else routed.repartition(tasks, col("key")))
         .sortWithinPartitions(col("key"), col("_seq"))
         .foreachPartition { (rows: Iterator[Row]) =>
           val producer = producerFactory()
@@ -88,6 +115,22 @@ object MessagingSinks {
               throw e
           }
         }
+    }
+  }
+
+  object KafkaLikeSink {
+    /** Rows one producer task sends before a batch is split by key across
+     * more tasks: where one task and the shuffle tie on a 4-core host
+     * (PLANS.md "One job and no compile per sink per batch"), and above
+     * the reference's default batch of 2000 events, which it sends
+     * through one producer. */
+    private[streaming] val RowsPerProducer = 8000L
+
+    /** Producer tasks for a batch of `rows` (None: unknown) when the
+     * session's default parallelism is `parallelism`. */
+    private[streaming] def producerTasks(rows: Option[Long], parallelism: Int): Int = rows match {
+      case None => parallelism
+      case Some(r) => math.min(parallelism.toLong, (r + RowsPerProducer - 1) / RowsPerProducer).toInt
     }
   }
 

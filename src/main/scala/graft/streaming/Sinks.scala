@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.core.NioLocalFs
+import graft.functions.BatchConstant
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +47,12 @@ trait EventSink extends Serializable {
  * (`withColumns`; each `withColumn` re-analyses the whole plan), and the
  * write goes through [[NioLocalFs]], so a local lake sets the permissions
  * of its directories, data files, `.crc` files and `_SUCCESS` in-process
- * instead of spawning a `chmod` for each.
+ * instead of spawning a `chmod` for each. The `_batch_id` column (parquet
+ * `required int64`) is a [[BatchConstant]], not a `lit`: a Long literal is
+ * inlined into the generated Java, so each new batch id would be a codegen
+ * cache miss and a Janino compile inside the write task; with the constant
+ * read from the references array, every batch after the first reuses the
+ * compiled projection.
  */
 class ParquetLakeSink(val id: String, path: String,
                       rolling: Rolling.Config = Rolling.Config())
@@ -67,7 +73,7 @@ class ParquetLakeSink(val id: String, path: String,
         "year" -> year(ts),
         "month" -> month(ts),
         "day" -> dayofmonth(ts),
-        "_batch_id" -> lit(batchId)))
+        "_batch_id" -> BatchConstant.column(batchId)))
       .write
       .options(NioLocalFs.options)
       .option("maxRecordsPerFile", perFile)
@@ -99,6 +105,9 @@ class ParquetLakeSink(val id: String, path: String,
  * and one DataFrame write cannot emit per-directory schemas — a
  * union-schema write would pollute every era's files with null columns
  * from every other era, breaking the stable-flat-schema contract above.
+ *
+ * As in [[ParquetLakeSink]], `_batch_id` is a [[BatchConstant]], so the
+ * era projection compiles once, not once per batch.
  */
 class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
     extends EventSink {
@@ -115,7 +124,7 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
       // do, so partition discovery over `path` unescapes back to the table name
       val t = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(table)
       graft.operators.LakeProjection(rows, schema)
-        .withColumn("_batch_id", lit(batchId))
+        .withColumn("_batch_id", BatchConstant.column(batchId))
         .write.options(NioLocalFs.options).mode("append")
         .parquet(s"$path/table=$t/schema_version=$seq")
     }

@@ -25,12 +25,10 @@ object GraftBridge {
    * `ColumnNodeExpression` placeholder whose `resolved` is TRUE and whose
    * `dataType` is `NullType` until the analyzer swaps it out — any caller
    * that pattern-matches the tree or gates on `resolved && dataType` sees
-   * a lie (r16: `fusedJson`'s unsupported-type gate read NullType,
-   * classified every unresolved payload struct as unsupported, and
-   * silently routed the whole CDC-synth payload family to builtin
-   * `to_json`). This converts the ColumnNode immediately, yielding the
-   * real (possibly unresolved) Catalyst tree, e.g.
-   * `UnresolvedFunction(struct, ...)` for `functions.struct(...)`.
+   * a lie (a type gate reading it would see NullType and classify every
+   * unresolved struct as unsupported). This converts the ColumnNode
+   * immediately, yielding the real (possibly unresolved) Catalyst tree,
+   * e.g. `UnresolvedFunction(struct, ...)` for `functions.struct(...)`.
    */
   def eagerExpression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.core.ChangeEvent
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import java.nio.file.Files
 
@@ -263,4 +264,74 @@ class CdcPipelineSpec extends SparkSpec {
     val r = out.select("table", "year", "month", "day").head()
     assert(r.getString(0) == "t" && r.getInt(1) == 2023 && r.getInt(2) == 11 && r.getInt(3) == 14)
   }
+
+  test("steady batches compile no code: the lake, typed lake and kafka sinks reuse batch 0's") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = tmp()
+    val reg = new SchemaRegistry(spark, s"$dir/registry")
+    reg.register("t", StructType(Seq(StructField("id", LongType))), atMs = 1L)
+    CdcPipelineSpec.buffer.clear()
+    val kafka = new MessagingSinks.KafkaLikeSink("kafka",
+      () => new MessagingSinks.CollectingProducer(CdcPipelineSpec.buffer), staticTopic = "t")
+    val cfg = Config(Seq(new ParquetLakeSink("lake", s"$dir/lake"),
+      new TypedLakeSink("typed", s"$dir/typed", reg), kafka), ledgerDir = s"$dir/ledger")
+    val ledger = new SinkLedger(s"$dir/ledger")
+    def run(batchId: Long): Unit =
+      processBatch(cfg, ledger)(events(30).withColumn("schema_sequence", lit(0L)), batchId)
+    run(0L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(1L)
+    run(2L)
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(recompiled == 0, s"batches 1 and 2 compiled $recompiled generated classes")
+    assert(spark.read.parquet(s"$dir/lake").groupBy("_batch_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(0L -> 30L, 1L -> 30L, 2L -> 30L))
+    assert(spark.read.parquet(s"$dir/typed").count() == 90)
+    assert(CdcPipelineSpec.buffer.size() == 90)
+  }
+
+  test("lake sinks write the same rows and parquet schema as a literal batch id") {
+    val dir = tmp()
+    val batchId = 7L
+    val batch = events(20).withColumn("schema_sequence", lit(0L))
+    def footers(path: String): Seq[String] = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val root = new org.apache.hadoop.fs.Path(path)
+      val files = root.getFileSystem(conf).listFiles(root, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.endsWith(".parquet")).map { f =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+          try reader.getFooter.getFileMetaData.getSchema.toString finally reader.close()
+        }.toSeq.distinct
+    }
+    def assertSame(out: String, expected: String): Unit = {
+      val (got, want) = (spark.read.parquet(out), spark.read.parquet(expected))
+      assert(got.schema == want.schema)
+      assert(got.toJSON.collect().sorted.toSeq == want.toJSON.collect().sorted.toSeq)
+      assert(footers(out) == footers(expected) && footers(out).length == 1)
+      assert(footers(out).head.contains("required int64 _batch_id;"))
+    }
+
+    new ParquetLakeSink("lake", s"$dir/lake").write(batch, batchId)
+    val ts = timestamp_millis(col("ts_ms"))
+    batch.withColumn("table", col("source.table")).withColumn("year", year(ts))
+      .withColumn("month", month(ts)).withColumn("day", dayofmonth(ts))
+      .withColumn("_batch_id", lit(batchId))
+      .write.partitionBy("table", "year", "month", "day").parquet(s"$dir/lake-lit")
+    assertSame(s"$dir/lake", s"$dir/lake-lit")
+
+    val reg = new SchemaRegistry(spark, s"$dir/registry")
+    val schema = StructType(Seq(StructField("id", LongType)))
+    reg.register("t", schema, atMs = 1L)
+    new TypedLakeSink("typed", s"$dir/typed", reg).write(batch, batchId)
+    graft.operators.LakeProjection(batch, schema).withColumn("_batch_id", lit(batchId))
+      .write.parquet(s"$dir/typed-lit")
+    assertSame(s"$dir/typed/table=t/schema_version=0", s"$dir/typed-lit")
+  }
+}
+
+object CdcPipelineSpec {
+  // static buffer: foreachPartition closures must reach it after serialization
+  val buffer = new java.util.concurrent.ConcurrentLinkedQueue[MessagingSinks.WireRecord]()
 }

@@ -88,10 +88,12 @@ class EndToEndWireSpec extends SparkSpec {
     try {
       val names = Fx.ordersCols.map(_.name).toIndexedSeq
       val port = broker.port
-      // IDEMPOTENT (non-transactional) path: one stable producerId per Spark
-      // partition slot; repartition-by-key is deterministic, so a restarted
-      // attempt's partition re-sends under the SAME (pid, epoch 0, baseSeq)
-      // — the precondition for broker-side sequence dedup. (The
+      // IDEMPOTENT (non-transactional) path: one stable producerId per
+      // producer task slot. The sink's task count depends only on the frozen
+      // batch's rows (one task for these few events) and each task sends in
+      // (key, sequence) order, so a restarted attempt re-sends every record
+      // under the SAME (pid, epoch 0, baseSeq) — the precondition for
+      // broker-side sequence dedup. (The
       // transactional path — InitProducerId epoch bumps + EndTxn markers —
       // is exercised wire-level in KafkaWireSpec against KafkaBrokerStub.)
       val sink = new MessagingSinks.KafkaLikeSink("kafka",

@@ -74,6 +74,8 @@ class KafkaBrokerStub(failFirstProduce: Boolean = false,
   private val c: Cluster = if (cluster == null) new Cluster else cluster
 
   val produceRequests = new AtomicInteger(0)
+  val initProducerIdRequests = new AtomicInteger(0)
+  val addPartitionsToTxnRequests = new AtomicInteger(0)
   val endTxnRequests = new AtomicInteger(0)
   val lostAck = new AtomicBoolean(false)
 
@@ -136,6 +138,7 @@ class KafkaBrokerStub(failFirstProduce: Boolean = false,
             topics.map(t => TopicMeta(0, t, Seq(PartitionMeta(0, 0, c.leaderFor(t)))))))
         case 22 => // InitProducerId: allocate pid / bump epoch; abort open txn
           val (txnId, _) = readInitProducerIdRequestBody(d)
+          initProducerIdRequests.incrementAndGet()
           val (pid, epoch) =
             if (txnId == null) (c.pidGen.incrementAndGet(), 0.toShort)
             else c.producers.compute(txnId, (_, prev) =>
@@ -145,6 +148,7 @@ class KafkaBrokerStub(failFirstProduce: Boolean = false,
           encodeInitProducerIdResponse(InitProducerIdResponse(h.correlationId, 0, pid, epoch))
         case 24 => // AddPartitionsToTxn
           val req = readAddPartitionsToTxnRequestBody(d)
+          addPartitionsToTxnRequests.incrementAndGet()
           val state = c.producers.get(req.transactionalId)
           val err: Short =
             if (state == null || state._1 != req.producerId || state._2 != req.producerEpoch)

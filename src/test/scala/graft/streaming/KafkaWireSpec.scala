@@ -87,6 +87,25 @@ class KafkaWireSpec extends SparkSpec {
     } finally stub.stop()
   }
 
+  test("kafka sink: a small frozen batch is one transaction of one producer on the wire") {
+    val stub = new KafkaBrokerStub()
+    val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(events(40))
+    try {
+      val port = stub.port
+      val sink = new MessagingSinks.KafkaLikeSink("kw1",
+        () => new SocketProducer("127.0.0.1", port, "graft-kw1",
+          s"graft-pipe-kw1-${org.apache.spark.TaskContext.getPartitionId()}"),
+        topicTemplate = Some("cdc.${source.table}"))
+      assert(frozen.rows <= MessagingSinks.KafkaLikeSink.RowsPerProducer)
+      sink.write(frozen.df, 0L)
+      assert(stub.visible.length == 40 && stub.uncommittedCount == 0)
+      assert(stub.initProducerIdRequests.get() == 1)
+      assert(stub.addPartitionsToTxnRequests.get() == 1)
+      assert(stub.endTxnRequests.get() == 1)
+      assert(stub.visible.map(_.pid).distinct.length == 1)
+    } finally { frozen.release(); stub.stop() }
+  }
+
   test("truncated varint raises EOF instead of spinning") {
     intercept[java.io.EOFException] {
       readVarLong(new java.io.ByteArrayInputStream(Array[Byte](0x80.toByte)))
@@ -265,7 +284,7 @@ class KafkaWireSpec extends SparkSpec {
   }
 
   test("EndTxn-only failure: commit retry re-issues just EndTxn — no re-produce, no duplicates") {
-    // ADVICE finding: seqByTopic advances when Produce acks; a commit retry
+    // seqByTopic advances when Produce acks; a commit retry
     // that re-ran AddPartitionsToTxn + Produce would re-send the same
     // records under ADVANCED sequences and the broker would accept them as
     // new — the recommitted transaction would contain duplicates.
@@ -288,7 +307,7 @@ class KafkaWireSpec extends SparkSpec {
   }
 
   test("two micro-batches: fresh incarnations get bumped epochs — no triple reuse") {
-    // ADVICE finding: a fresh producer per micro-batch partition restarting
+    // A fresh producer per micro-batch partition restarting
     // at baseSequence 0 under the SAME (pid, epoch) would be deduped by an
     // idempotent broker as a retry of batch 1. InitProducerId's epoch bump
     // makes (pid, epoch, seq) unique per incarnation — the stub ENFORCES

@@ -209,20 +209,87 @@ class SinksAndRegistrySpec extends SparkSpec {
     assert(rec.getField("data").schema().getTypes.get(1).getType == Schema.Type.STRING)
   }
 
+  /** 60 change events over 5 keys (`after.k`), spread over 4 input
+   * partitions in shuffled `source.sequence` order. */
+  private def keyedEvents(): DataFrame = {
+    import spark.implicits._
+    val seqs = new scala.util.Random(7).shuffle((1 to 60).toList)
+    val rows = spark.sparkContext.parallelize(
+      seqs.map(i => ("c", s"""{"k":"k${i % 5}","id":$i}""", i.toLong)), 4)
+    ChangeEvent.conform(rows.toDF("op", "after", "seq")
+      .withColumn("ts_ms", lit(1700000000000L))
+      .withColumn("source", struct(lit("db").as("db"), lit("t").as("table"),
+        col("seq").as("sequence")))
+      .withColumn("event_id", concat(lit("e"), col("seq")))
+      .withColumn("tx_end", lit(true)))
+  }
+
+  /** Runs `sink` over `batch`; returns the delivered records and the
+   * number of producers the sink opened. */
+  private def deliver(batch: DataFrame, sink: MessagingSinks.KafkaLikeSink)
+      : (Seq[MessagingSinks.WireRecord], Int) = {
+    SinksAndRegistrySpec.buffer.clear()
+    SinksAndRegistrySpec.producers.set(0)
+    sink.write(batch, 0L)
+    (SinksAndRegistrySpec.buffer.toArray(Array.empty[MessagingSinks.WireRecord]).toSeq,
+      SinksAndRegistrySpec.producers.get())
+  }
+
+  private def countingSink(id: String, keyTemplate: Option[String] = None) =
+    new MessagingSinks.KafkaLikeSink(id, () => {
+      // the factory references the companion object so executor-side closures share it
+      SinksAndRegistrySpec.producers.incrementAndGet()
+      new MessagingSinks.CollectingProducer(SinksAndRegistrySpec.buffer)
+    }, topicTemplate = Some("cdc.${source.table}"), keyTemplate = keyTemplate)
+
   test("kafka-like sink: exactly-once txn commit, per-key ordering preserved") {
-    import MessagingSinks._
-    val q = SinksAndRegistrySpec.buffer
-    q.clear()
-    // factory references the companion object so executor-side closures share it
-    val sink = new KafkaLikeSink("k1", () => new CollectingProducer(SinksAndRegistrySpec.buffer),
-      topicTemplate = Some("cdc.${source.table}"))
-    sink.write(events(50), 0L)
-    assert(q.size() == 50)
-    val recs = q.toArray(Array.empty[WireRecord])
-    assert(recs.forall(_.topic == "cdc.t"))
-    // per-key ordering: all records for one key arrive in _seq order
-    val byKey = recs.groupBy(_.key)
-    assert(byKey.forall { case (_, rs) => rs.length == 1 }) // unique event ids as keys
+    val sink = countingSink("k1", keyTemplate = Some("${after.k}"))
+    val input = keyedEvents()
+    assert(input.rdd.getNumPartitions == 4)
+    val sequence = "\"sequence\":(\\d+)".r
+    def assertKeyOrder(recs: Seq[MessagingSinks.WireRecord]): Unit = {
+      assert(recs.length == 60)
+      assert(recs.forall(_.topic == "cdc.t"))
+      val byKey = recs.groupBy(_.key)
+      assert(byKey.keySet == (0 until 5).map(k => s"k$k").toSet)
+      byKey.foreach { case (k, rs) =>
+        val seqs = rs.map(r => sequence.findFirstMatchIn(new String(r.value)).get.group(1).toLong)
+        assert(seqs.length == 12 && seqs == seqs.sorted, s"key $k out of sequence order: $seqs")
+      }
+    }
+    // a frozen batch of a few rows: one producer task, no shuffle
+    val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(input)
+    try {
+      val (recs, producers) = deliver(frozen.df, sink)
+      assert(producers == 1)
+      assertKeyOrder(recs)
+    } finally frozen.release()
+    // no row count: the hash repartition by key, one producer per partition
+    val (recs, producers) = deliver(input, sink)
+    assert(producers == spark.sparkContext.defaultParallelism)
+    assertKeyOrder(recs)
+  }
+
+  test("kafka-like sink: an empty frozen batch opens no producer") {
+    val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(events(10).filter(lit(false)))
+    try {
+      assert(frozen.rows == 0L)
+      val (recs, producers) = deliver(frozen.df, countingSink("k0"))
+      assert(recs.isEmpty)
+      assert(producers == 0, s"an empty batch opened $producers producers")
+    } finally frozen.release()
+  }
+
+  test("kafka-like sink: producer tasks follow the frozen row count") {
+    import MessagingSinks.KafkaLikeSink.{RowsPerProducer => r, producerTasks}
+    assert(r >= 2000L) // the reference sends its default 2000-event batch through one producer
+    assert(producerTasks(Some(0L), 4) == 0)
+    assert(producerTasks(Some(1L), 4) == 1)
+    assert(producerTasks(Some(r), 4) == 1)
+    assert(producerTasks(Some(r + 1), 4) == 2)
+    assert(producerTasks(Some(3 * r), 4) == 3)
+    assert(producerTasks(Some(1000 * r), 4) == 4)
+    assert(producerTasks(None, 4) == 4)
   }
 
   test("kafka-like sink: failed send aborts the transaction — nothing delivered") {
@@ -498,4 +565,5 @@ class SinksAndRegistrySpec extends SparkSpec {
 object SinksAndRegistrySpec {
   // static buffer: foreachPartition closures must reach it after serialization
   val buffer = new ConcurrentLinkedQueue[MessagingSinks.WireRecord]()
+  val producers = new java.util.concurrent.atomic.AtomicInteger(0)
 }
