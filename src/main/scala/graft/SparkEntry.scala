@@ -53,11 +53,6 @@ object SparkEntry {
     df.withColumn("ms", ms)
   }
 
-  /** CDC-ified orders (deterministic op mix, JSON payloads). */
-  private def orderEvents(s: SparkSession, dir: String): DataFrame =
-    CdcSynth.changeEvents(t(s, dir, "orders"), "inventory", "orders", "o_orderkey",
-      tsCol = Some("o_orderdate"))
-
   private def jget(c: String, path: String): Column = get_json_object(col(c), "$." + path)
 
   /**

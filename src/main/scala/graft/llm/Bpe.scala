@@ -128,7 +128,6 @@ object Bpe {
   }
 
   private def sqlEsc(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
-  private def duckEsc(s: String): String = s.replace("'", "''")
 
   /**
    * DuckDB twin of [[trainMerges]] over table `documents`: the k

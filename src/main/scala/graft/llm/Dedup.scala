@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.functions.TextHashOps
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
@@ -471,7 +472,7 @@ object Dedup {
     // expressions. The previous trailing repartition(par, id) was a second
     // FULL exchange of (id, feats, sig) — a whole-corpus shuffle of the
     // widest frame in the pipeline — bought nothing: banded derivations
-    // re-exchange on (band, band_hash) anyway and the feats verify joins
+    // re-exchange on (band, bucket) anyway and the feats verify joins
     // broadcast the candidate side (r15 measurement: removing it is part of
     // the survivors ×10 177→65 task-CPU drop).
     docs.repartition(par)
@@ -496,28 +497,34 @@ object Dedup {
   def minhashCandidates(docs: DataFrame, k: Int, bands: Int,
                         idCol: String = "doc_id", features: Column = null): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val r = k / bands
     // checkpointed: the banding branch and both feature re-joins read `sig`;
     // without materialization each branch re-computes the whole signature
     // pipeline. Released before return — see jaccardPairs' leak note.
     val sig = minhashSignatures(docs, k, idCol, features)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // band join carries ids only (narrow shuffle); features re-join after dedup
-    val banded = sig.select(
-      col("id"),
-      posexplode(TextHashOps.bandHashes(col("sig"), bands))
-        .as(Seq("band", "band_hash")))
-    val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-    val cands = a.join(b, Seq("band", "band_hash")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val feats = sig.select(col("id"), col("feats")) // already hashed (see minhashSignatures)
-    val result = cands
+    val result = bucketPairs(minhashBands(sig, bands))
       .join(feats.select(col("id").as("id_a"), col("feats").as("feats_a")), "id_a")
       .join(feats.select(col("id").as("id_b"), col("feats").as("feats_b")), "id_b")
       .localCheckpoint(true)
     sig.unpersist(false)
     result
+  }
+
+  /** Banded rows `(id, band, bucket)` of a [[minhashSignatures]] frame: one
+   * fused walk of each signature hashes all its bands (no per-band slice). */
+  private def minhashBands(sig: DataFrame, bands: Int): DataFrame =
+    sig.select(col("id"),
+      posexplode(TextHashOps.bandHashes(col("sig"), bands)).as(Seq("band", "bucket")))
+
+  /** Every distinct pair `(id_a < id_b)` that shares a `(band, bucket)` in
+   * banded rows `(band, bucket, id)`: the LSH clique candidates. */
+  private def bucketPairs(banded: DataFrame): DataFrame = {
+    val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
+    val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
+    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
   }
 
   /**
@@ -535,7 +542,6 @@ object Dedup {
                         k: Int = 64, bands: Int = 32,
                         idCol: String = "doc_id", features: Column = null): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val r = k / bands
     def banded(docs: DataFrame, side: String): (DataFrame, DataFrame) = {
       val sig = minhashSignatures(docs, k, idCol, features)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -547,9 +553,11 @@ object Dedup {
     }
     val (ba, sigA) = banded(left, "a")
     val (bb, sigB) = banded(right, "b")
-    // benchmark buckets broadcast (eval suites are small by construction);
-    // Spark falls back to shuffle automatically if the side outgrows the
-    // broadcast threshold — the plan shape stays correct either way
+    // benchmark buckets broadcast (eval suites are small by construction).
+    // The explicit hint bypasses autoBroadcastJoinThreshold: Spark never
+    // falls back to a shuffle, it broadcasts the right side whatever its
+    // size, so an oversized benchmark corpus risks a driver or executor
+    // OOM (and fails the query past Spark's hard 8 GB broadcast limit)
     val cands = ba.join(broadcast(bb), Seq("band", "band_hash"))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val jac = mergeJaccard(col("feats_a"), col("feats_b"))
@@ -575,40 +583,12 @@ object Dedup {
 
   /**
    * CC-contract LSH pair miner, verified with exact Jaccard ≥ threshold —
-   * the pair source for [[clusters]]/[[clusterSurvivors]]. Two shapes, one
-   * output contract (connected components == the verified-clique graph's),
-   * selected by a MEASURED occupancy gate:
-   *
-   *  - **Clique path** (bounded bucket occupancy — the sparse/ordinary
-   *    corpus): one banded self-join emits every in-bucket pair, one
-   *    verification pass keeps exact J ≥ t. Fewest stages; pair volume =
-   *    Σ_buckets d(d−1)/2, which the gate just measured to be ~linear in n.
-   *  - **Spanning path** (dup-heavy buckets — LSH's raison d'être): per
-   *    bucket, every member links to the bucket-min hub (Θ(d) star), hub
-   *    edges are verified, and members whose hub edge FAILS are re-verified
-   *    against every other member of that bucket. For any in-bucket pair
-   *    (X,Y) with J ≥ t either both hub edges pass (X—hub—Y path) or the
-   *    failing side emits X—Y directly — CC equals the verified-clique
-   *    graph BY CONSTRUCTION, no transitivity assumption (the r11 ADVICE
-   *    divergence scenario). Fallback candidates whose endpoints are both
-   *    already pass-connected to a common node are pruned before
-   *    verification above `pruneGate` failures (they cannot change CC).
-   *
-   * Why gate at all (r15): hub-edge verification only SAVES work when hub
-   * edges mostly pass. On a sparse corpus most bucket cohabitants are
-   * strangers — at sf0.1, 1,836 of 2,082 hub edges fail — so nearly every
-   * bucket falls back to clique re-verification anyway and the spanning
-   * machinery (hub window + verdict persist + failed-member scoping joins)
-   * is pure overhead: the plain clique miner measured ~2.5× cheaper
-   * task-CPU on the same corpus. The gate reads the exact clique pair
-   * volume off a one-pass bucket-size aggregation (map-side-combined, rows
-   * = distinct buckets) and takes the clique path when volume ≤
-   * max(`cliqueVolumeFloor`, `cliqueVolumePerDoc`·n) — i.e. when the
-   * self-join it would schedule is provably ~linear in the corpus. A
-   * dup-heavy 100 TB corpus (template spam: buckets of thousands) blows the
-   * gate quadratically and takes the Θ(d) spanning star, exactly as before.
-   * Both paths emit only exactly-verified ≥-t pairs; CC equality between
-   * them is spec-pinned on dup-heavy, gradient and hazard fixtures.
+   * the pair source for [[clusters]]/[[clusterSurvivors]]: the MinHash
+   * buckets of [[minhashCandidates]] mined by [[bucketSpanningPairs]]
+   * (clique or spanning shape, chosen by its occupancy gate). Output:
+   * (id_a, id_b, jaccard), every pair exactly verified ≥ `threshold`,
+   * whose connected components equal those of the verified-clique graph
+   * ([[minhashPairs]]).
    */
   def minhashSpanningPairs(docs: DataFrame, threshold: Double, k: Int = 64, bands: Int = 32,
                            idCol: String = "doc_id", features: Column = null,
@@ -618,38 +598,81 @@ object Dedup {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val sig = minhashSignatures(docs, k, idCol, features)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // fused band hashing (one signature walk, no 32 slice copies per row);
-    // `banded` is a cheap NARROW derivation off the sig cache — consumers
-    // that need it twice recompute it rather than persist 32n tiny rows
-    // (r14: caching an exploded frame cost more than narrow recomputes)
-    def banded = sig.select(
-      col("id"),
-      posexplode(TextHashOps.bandHashes(col("sig"), bands))
-        .as(Seq("band", "band_hash")))
     // Exact-Jaccard verification of an explicit CANDIDATE LIST stays in
-    // the per-pair array_intersect shape on purpose: the posting-count
-    // alternative (minedPairCounts' shape) wins when the posting join IS
-    // the candidate generator, but verifying a given pair list that way
-    // costs |cands|×avg_shingles intermediate rows through 6 shuffled
-    // joins — measured 7.5 s vs 4.0 s for dedup_clusters at sf0.1 when
-    // this function briefly switched. ~tens of thousands of interpreted
-    // set-ops are cheaper than the join fan-out.
+    // the per-pair merge shape on purpose: the posting-count alternative
+    // (minedPairCounts' shape) wins when the posting join IS the candidate
+    // generator, but verifying a given pair list that way costs
+    // |cands|×avg_shingles intermediate rows through 6 shuffled joins —
+    // dearer than one merge per candidate (PLANS.md "One LSH pair miner").
     val featsA = sig.select(col("id").as("id_a"), col("feats").as("feats_a"))
     val featsB = sig.select(col("id").as("id_b"), col("feats").as("feats_b"))
-    def verified(cands: DataFrame): DataFrame = // (id_a, id_b) -> + exact J
-      cands.join(featsA, "id_a").join(featsB, "id_b")
+    // the banded rows stay a cheap NARROW derivation off the sig cache: the
+    // miner reads them more than once and recomputes them rather than
+    // persist 32n tiny rows (caching the exploded frame measured dearer)
+    val result = bucketSpanningPairs(minhashBands(sig, bands), bands,
+      _.join(featsA, "id_a").join(featsB, "id_b")
         .select(col("id_a"), col("id_b"),
-          mergeJaccard(col("feats_a"), col("feats_b")).as("jaccard"))
+          mergeJaccard(col("feats_a"), col("feats_b")).as("jaccard")),
+      threshold, "jaccard", pruneGate, cliqueVolumePerDoc, cliqueVolumeFloor)
+    sig.unpersist(false)
+    result
+  }
 
-    // ——— OCCUPANCY GATE (r15, see scaladoc): one map-side-combined pass
-    // over the banded rows yields the EXACT pair volume the clique
-    // self-join would emit (Σ d(d−1)/2 per bucket) and the corpus size
-    // (Σd = bands·n). The exchange carries only distinct buckets. ———
-    // Volume summed in decimal(38,0): a long sum wraps silently with ANSI
-    // off on exactly the dup-heavy corpora the gate exists to protect
-    // (thousands of buckets at d~1e8 exceed 2^63 pairs). A null sum means
-    // decimal overflow — treated as above-gate (spanning path).
-    val occ = banded.groupBy("band", "band_hash")
+  /**
+   * The LSH pair miner behind [[minhashSpanningPairs]] and
+   * [[Similarity.cosineSpanningPairs]]. Input: banded rows `(band, bucket,
+   * id)` over `bands` bands, and `verify`, which scores candidate pairs
+   * `(id_a, id_b)` as `(id_a, id_b, <score>)`. Output: `(id_a, id_b,
+   * <score>)` rounded to 4 places, every pair verified ≥ `threshold`, as an
+   * eager local checkpoint; its connected components equal those of the
+   * verified-clique graph (every verified in-bucket pair). The caller owns,
+   * and releases after this returns, `banded`'s cache and whatever
+   * `verify` reads; everything cached here is released here.
+   *
+   * Two shapes, one output contract, chosen by a measured occupancy gate:
+   *
+   *  - **Clique** (bounded bucket occupancy — the sparse/ordinary corpus):
+   *    one bucket self-join emits every in-bucket pair, one verification
+   *    pass keeps score ≥ t. Fewest stages; pair volume = Σ_buckets
+   *    d(d−1)/2, which the gate just measured to be ~linear in n.
+   *  - **Spanning** (dup-heavy buckets — LSH's raison d'être): per bucket,
+   *    every member links to the bucket-min hub (a Θ(d) star), hub edges
+   *    are verified, and members whose hub edge FAILS are re-verified
+   *    against every other member of that bucket. For any in-bucket pair
+   *    (X,Y) with score ≥ t either both hub edges pass (X—hub—Y path) or
+   *    the failing side emits X—Y directly, so CC equals the clique
+   *    graph's by construction, with no transitivity assumption. A
+   *    dup-heavy bucket costs ~d hub verifications; a bucket of mutual
+   *    strangers degrades to the clique cost it would have paid anyway.
+   *
+   * Why gate at all: hub-edge verification only SAVES work when hub edges
+   * mostly pass. On a sparse corpus most bucket cohabitants are strangers,
+   * nearly every bucket falls back to clique re-verification anyway, and
+   * the spanning machinery (hub window, verdict persist, failed-member
+   * scoping joins) is pure overhead. The gate reads the exact clique pair
+   * volume off a one-pass bucket-size aggregation (map-side-combined, rows
+   * = distinct buckets) and takes the clique arm when volume ≤
+   * max(`cliqueVolumeFloor`, `cliqueVolumePerDoc`·n), i.e. when the
+   * self-join it would schedule is provably ~linear in the corpus. A
+   * dup-heavy corpus (template spam: buckets of thousands) blows the gate
+   * quadratically and takes the Θ(d) star.
+   */
+  private[llm] def bucketSpanningPairs(banded: DataFrame, bands: Int,
+                                       verify: DataFrame => DataFrame,
+                                       threshold: Double, score: String,
+                                       pruneGate: Long, cliqueVolumePerDoc: Long,
+                                       cliqueVolumeFloor: Long): DataFrame = {
+    val passes = col(score) >= threshold
+    def finish(pairs: DataFrame): DataFrame =
+      pairs.select(col("id_a"), col("id_b"), round(col(score), 4).as(score))
+        .localCheckpoint(true)
+
+    // OCCUPANCY GATE: the exact clique pair volume (Σ d(d−1)/2 per bucket)
+    // and the corpus size (Σd = bands·n); the exchange carries only
+    // distinct buckets. Volume summed in decimal(38,0): a long sum wraps
+    // silently with ANSI off on exactly the dup-heavy corpora the gate
+    // exists to protect. A null sum means decimal overflow — above-gate.
+    val occ = banded.groupBy("band", "bucket")
       .agg(count(lit(1)).as("d"))
       .agg(sum(col("d").cast("decimal(38,0)") * (col("d") - lit(1))),
         sum(col("d")))
@@ -658,102 +681,79 @@ object Dedup {
     val cliqueVolume: Option[BigInt] =
       if (nBandedRows == 0L) Some(BigInt(0))
       else Option(occ.getDecimal(0)).map(d => BigInt(d.toBigInteger) / 2)
-    val nDocsApprox = nBandedRows / bands.toLong
-    val gate = BigInt(math.max(cliqueVolumeFloor, cliqueVolumePerDoc * nDocsApprox))
-    if (cliqueVolume.exists(_ <= gate)) {
-      // CLIQUE path: the measured pair volume is ~linear in n, so the
-      // direct self-join + one verification pass is both the fewest-stage
-      // and the fewest-row plan — no hub persist, no verdict persist, no
-      // fallback scoping joins.
-      val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-      val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-      val cands = a.join(b, Seq("band", "band_hash"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-      val result = verified(cands).filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-        .localCheckpoint(true)
-      sig.unpersist(false)
-      return result
-    }
-    // SPANNING path. Hub edges WITH bucket provenance (needed to scope the
-    // fallback) via a whole-partition window min: ONE exchange of the 32n
-    // banded rows. The previous groupBy+join shape paid that exchange TWICE
-    // (partial-agg exchange for the bucket mins, then the banded⋈hubs join)
-    // — measured 25-30% dearer at ×10 — and is skew-equivalent (a
-    // degenerate bucket stays d rows here, never a collected d-array).
-    // Persisted: read by the verification pass AND the fallback's
-    // failed-member scoping.
+    val gate = BigInt(math.max(cliqueVolumeFloor, cliqueVolumePerDoc * (nBandedRows / bands.toLong)))
+    if (cliqueVolume.exists(_ <= gate))
+      return finish(verify(bucketPairs(banded)).filter(passes))
+
+    // SPANNING arm. Hub edges WITH bucket provenance (needed to scope the
+    // fallback) via a whole-partition window min: ONE exchange of the
+    // banded rows, where a groupBy + join pays it twice, and skew-equivalent
+    // (a degenerate bucket stays d rows, never a collected d-array).
+    // Persisted: read by the verification pass AND the failed-member scoping.
     val hubEdges = banded
-      .withColumn("id_a",
-        min(col("id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_hash")))
+      .withColumn("id_a", min(col("id")).over(Window.partitionBy("band", "bucket")))
       .filter(col("id") =!= col("id_a"))
-      .select(col("band"), col("band_hash"), col("id_a"), col("id").as("id_b"))
+      .select(col("band"), col("bucket"), col("id_a"), col("id").as("id_b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val hubVerdicts = verified(hubEdges.select("id_a", "id_b").dropDuplicates())
+    val hubVerdicts = verify(hubEdges.select("id_a", "id_b").dropDuplicates())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val hubPass = hubVerdicts.filter(col("jaccard") >= threshold)
+    val hubPass = hubVerdicts.filter(passes)
+    val hubFail = hubVerdicts.filter(col(score) < threshold)
 
     // Driver-side gate: the fallback subtree (4 joins + a distinct) exists
-    // only to repair FAILED hub edges. On a corpus where every hub edge
-    // verifies (the common dup-heavy case), probing the persisted verdicts
-    // once (populating the cache hubPass reads anyway) skips those stages
-    // outright instead of scheduling them to produce zero rows.
-    val failedCount = hubVerdicts.filter(col("jaccard") < threshold).count()
+    // only to repair FAILED hub edges. When every hub edge verifies (the
+    // common dup-heavy case) this one probe — which fills the verdict cache
+    // hubPass reads anyway — skips those stages instead of scheduling them
+    // to produce zero rows.
+    val failedCount = hubFail.count()
+    var prunedFrom: Option[DataFrame] = None // the prune arm's checkpoint
     val combined = if (failedCount == 0L) hubPass else {
-      // members whose hub edge failed, in each bucket where it failed
-      val failedMembers = hubEdges
-        .join(hubVerdicts.filter(col("jaccard") < threshold), Seq("id_a", "id_b"))
-        .select(col("band"), col("band_hash"), col("id_b").as("fid"))
-      val fallbackCandsRaw = failedMembers
-        .join(banded, Seq("band", "band_hash"))
+      // members whose hub edge failed, paired with every other member of
+      // each bucket where it failed
+      val failedMembers = hubEdges.join(hubFail, Seq("id_a", "id_b"))
+        .select(col("band"), col("bucket"), col("id_b").as("fid"))
+      val fallbackCands = failedMembers
+        .join(banded, Seq("band", "bucket"))
         .filter(col("id") =!= col("fid"))
         .select(least(col("fid"), col("id")).as("id_a"),
           greatest(col("fid"), col("id")).as("id_b"))
         .dropDuplicates("id_a", "id_b")
         // hub edges (pass or fail) are already decided — don't re-verify
         .join(hubVerdicts.select("id_a", "id_b"), Seq("id_a", "id_b"), "left_anti")
-      // PASS-SET PRUNE (r12 verdict #6), gated by the failed-edge count
-      // (free off the persisted verdicts): a fallback pair whose endpoints
-      // BOTH carry a passing verified edge to the same node z is already
-      // in one component through z — the direct edge adds nothing to CC
-      // (the only consumer contract), so its verification can be skipped.
-      // The prune costs a checkpoint + two adjacency joins, so it engages
-      // only when the fallback volume is large enough for the saved
-      // verifications to dominate (dup-heavy buckets at scale); below the
-      // gate the r12 shape — verify everything — is strictly cheaper
-      // (r13 A/B: the ungated prune billed +4 task-CPU-s to
-      // dedup_semantic at sf0.1 to save sub-second verification; r15:
-      // with merge-based verification a fallback pair costs ~50 µs to
-      // verify, so at the ×10 probe's 19k failures the prune's fixed
-      // cost lost to direct verification in an interleaved fresh-JVM A/B
-      // — gate raised 4096 → 65536; above it the checkpoint+joins still
-      // guard the degenerate-bucket blowup a 100 TB corpus can hit).
-      val fallbackPass = if (failedCount <= pruneGate) {
-        verified(fallbackCandsRaw).filter(col("jaccard") >= threshold)
-      } else {
-        val fallbackCands = fallbackCandsRaw
-          .localCheckpoint(true) // read by the prune AND the anti below
+      // PASS-SET PRUNE: a fallback pair whose endpoints BOTH carry a passing
+      // hub edge to the same node z is already in one component through z,
+      // so its verification can be skipped (CC is the only consumer
+      // contract). The prune costs a checkpoint + two adjacency joins, so it
+      // engages only above `pruneGate` failed hub edges, where the saved
+      // verifications dominate (degenerate buckets at scale); below it,
+      // verifying every fallback pair is cheaper.
+      val toVerify = if (failedCount <= pruneGate) fallbackCands else {
+        val cands = fallbackCands.localCheckpoint(true) // read by the prune AND the anti below
+        prunedFrom = Some(cands)
         val adj = hubPass.select(col("id_a").as("_z"), col("id_b").as("_m"))
           .unionByName(hubPass.select(col("id_b").as("_z"), col("id_a").as("_m")))
-        val prunable = fallbackCands
+        val prunable = cands
           .join(adj.select(col("_z"), col("_m").as("id_a")), Seq("id_a"))
           .join(adj.select(col("_z"), col("_m").as("id_b")), Seq("id_b", "_z"))
           .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-        verified(fallbackCands.join(prunable, Seq("id_a", "id_b"), "left_anti"))
-          .filter(col("jaccard") >= threshold)
+        cands.join(prunable, Seq("id_a", "id_b"), "left_anti")
       }
-      hubPass.unionByName(fallbackPass).dropDuplicates("id_a", "id_b")
+      hubPass.unionByName(verify(toVerify).filter(passes)).dropDuplicates("id_a", "id_b")
     }
-    val result = combined
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .localCheckpoint(true)
-    sig.unpersist(false)
+    val result = finish(combined)
     hubEdges.unpersist(false)
     hubVerdicts.unpersist(false)
+    prunedFrom.foreach(releaseCheckpoint)
     result
   }
+
+  /** Drop the rows an eager `localCheckpoint` stored. `unpersist` does not
+   * reach them: they are blocks of the RDD under the checkpoint's plan,
+   * not a cache-manager entry. */
+  private def releaseCheckpoint(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical
+      .collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /**
    * Connected components over near-dup pairs → cluster ids, via iterative

@@ -88,7 +88,7 @@ object Similarity {
    * commutative double ops, so emitting (least, greatest) of the ids is safe.
    *
    * O(n²) comparisons — use for modest n or within IVF cells; at 100 TB use
-   * [[cosinePairs]] (LSH) or [[ivfAssign]] partitioning to bound the pair
+   * [[cosinePairsBanded]] (LSH) or [[ivfAssign]] partitioning to bound the pair
    * space first.
    */
   def cosinePairsExact(vectors: DataFrame, threshold: Double,
@@ -118,17 +118,21 @@ object Similarity {
   }
 
   /**
-   * Random-hyperplane LSH signature: `bits` sign bits of projections onto
-   * deterministic pseudo-random hyperplanes. Vectors with high cosine
-   * similarity collide with high probability.
-   */
-  /**
    * Deterministic "hyperplane" component signs: h[b][i] in {-1,+1} from a
    * fixed splitmix-style mix of (b,i). Public so independent implementations
    * (e.g. the DuckDB oracle SQL) can reproduce the exact bucketing.
    */
   def hyperplaneSign(b: Int, i: Int): Double = graft.functions.LshOps.hyperplaneSign(b, i)
 
+  /**
+   * Random-hyperplane LSH signature: `bits` sign bits of projections onto
+   * deterministic pseudo-random hyperplanes. Vectors with high cosine
+   * similarity collide with high probability. No miner uses this
+   * single-table form (one fixed width → 2^bits buckets TOTAL, so a bucket
+   * self-join emits Θ(n²/2^bits) candidates); it is kept as the band-0
+   * continuity reference: [[graft.functions.LshOps.HyperplaneBands]] band 0
+   * at width w == this signature at bits=w, spec-pinned.
+   */
   def lshSignature(vec: Column, dim: Int, bits: Int): Column = {
     // per-element cast (codegen'd) — a whole-array transform() is an
     // interpreted HOF evaluated per row; float→double widening is exact
@@ -137,28 +141,6 @@ object Similarity {
       val proj = (0 until dim).map(i => v(i) * lit(hyperplaneSign(b, i))).reduce(_ + _)
       shiftleft(when(proj > 0, 1L).otherwise(0L), b)
     }.reduce((x, y) => x.bitwiseOR(y))
-  }
-
-  /**
-   * LEGACY single-table variant (one fixed `bits`-wide signature → 2^bits
-   * buckets TOTAL, so the bucket self-join emits Θ(n²/2^bits) candidates — a
-   * constant-factor discount on all-pairs, not a sublinear structure).
-   * Superseded by [[cosinePairsBanded]] (bucket count scales with the corpus
-   * via [[adaptiveBits]], recall recovered by OR-ing bands); kept as the
-   * band-0 continuity reference ([[graft.functions.LshOps.HyperplaneBands]]
-   * band 0 at width w == this signature at bits=w, spec-pinned).
-   */
-  def cosinePairs(vectors: DataFrame, threshold: Double, dim: Int, bits: Int = 8,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sig = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      lshSignature(col(vecCol), dim, bits).as("sig"))
-    val a = sig.select(col("sig"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = sig.select(col("sig"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, "sig").filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(col("v_a"), col("v_b")).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos_sim"), 4).as("cos_sim"))
   }
 
   /** Banded hyperplane signatures (array<long>, one per band) — fused
@@ -230,37 +212,12 @@ object Similarity {
   }
 
   /**
-   * SPANNING-edge banded LSH pairs for connected-component consumers, with
-   * intra-bucket FALLBACK verification — the embedding twin of
-   * [[graft.llm.Dedup.minhashSpanningPairs]]' spanning path, closing the
-   * hub-transitivity gap: per (band, bucket) every member links to the
-   * bucket's MIN id (Θ(d) hub edges instead of the Θ(d²) clique); members
-   * whose hub edge FAILS exact verification are then verified against ALL
-   * other members of that bucket. That restores exact CC equality with
-   * [[cosinePairsBanded]]'s verified clique graph: for any in-bucket pair
-   * (X,Y) with cos ≥ t, either both hub edges pass (X—hub—Y path) or the
-   * failing side is re-verified against the whole bucket and the X—Y edge is
-   * emitted directly. Fallback candidates whose endpoints are both already
-   * pass-connected to a common node are pruned before verification (they
-   * cannot change CC). Every emitted edge is an exactly-verified ≥-t pair, so
-   * the edge set is a connectivity-preserving SUBSET of the clique graph's.
-   *
-   * Cost: dup-heavy buckets (the case LSH bucketing exists for) verify ~d hub
-   * edges and rarely fall back → linear; a degenerate bucket of mutually
-   * dissimilar members degrades to the clique cost it would have paid anyway.
-   *
-   * OCCUPANCY GATE (r15, the [[graft.llm.Dedup.minhashSpanningPairs]]
-   * finding ported): hub-edge verification only SAVES work when hub edges
-   * mostly pass; on a sparse corpus most bucket cohabitants fail the
-   * threshold and nearly every bucket falls back to clique re-verification
-   * anyway — the hub window + verdict persist + failed-member scoping joins
-   * are then pure overhead (ann_pairs_lsh, the clique miner over the SAME
-   * buckets, measured 21 x10 task-CPU-s where this spanning pipeline paid
-   * 63 inside dedup_semantic). One map-side-combined pass over the banded
-   * rows measures the exact clique pair volume; when it is ≤
-   * max(`cliqueVolumeFloor`, `cliqueVolumePerDoc`·n) the direct banded
-   * self-join + one verification pass runs instead. Dup-heavy corpora blow
-   * the gate quadratically and keep the Θ(d) spanning star.
+   * Embedding-cosine near-dup pairs for connected-component consumers: the
+   * banded hyperplane buckets of [[cosinePairsBanded]] mined by
+   * [[graft.llm.Dedup.bucketSpanningPairs]] (clique or spanning shape,
+   * chosen by its occupancy gate). Output: (id_a, id_b, cos_sim), every
+   * pair exactly verified ≥ `threshold`, whose connected components equal
+   * those of [[cosinePairsBanded]]'s verified clique graph.
    */
   def cosineSpanningPairs(vectors: DataFrame, threshold: Double, dim: Int,
                           bands: Int = 4, bitsPerBand: Int = 6,
@@ -270,102 +227,19 @@ object Similarity {
                           cliqueVolumeFloor: Long = 65536L): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val base = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
+    // persisted, unlike the MinHash bands: each band signature is `bits`
+    // dot products over the vector, too dear to recompute per read
     val banded = base.select(col("id"),
         posexplode(lshBandSignatures(col("v"), dim, bands, bitsPerBand))
-          .as(Seq("band", "bsig")))
+          .as(Seq("band", "bucket")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val vecsA = base.select(col("id").as("id_a"), col("v").as("v_a"))
     val vecsB = base.select(col("id").as("id_b"), col("v").as("v_b"))
-    def verified(cands: DataFrame): DataFrame = // (id_a, id_b) -> + exact cos
-      cands.join(vecsA, "id_a").join(vecsB, "id_b")
-        .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos_sim"))
-
-    // Decimal(38,0) volume sum — long wraps silently on dup-heavy corpora
-    // (the ADVICE r15 overflow class); null = decimal overflow = above-gate.
-    val occ = banded.groupBy("band", "bsig")
-      .agg(count(lit(1)).as("d"))
-      .agg(sum(col("d").cast("decimal(38,0)") * (col("d") - lit(1))),
-        sum(col("d")))
-      .head()
-    val nBandedRows = if (occ.isNullAt(1)) 0L else occ.getLong(1)
-    val cliqueVolume: Option[BigInt] =
-      if (nBandedRows == 0L) Some(BigInt(0))
-      else Option(occ.getDecimal(0)).map(d => BigInt(d.toBigInteger) / 2)
-    val nVecsApprox = nBandedRows / bands.toLong
-    val gate = BigInt(math.max(cliqueVolumeFloor, cliqueVolumePerDoc * nVecsApprox))
-    if (cliqueVolume.exists(_ <= gate)) {
-      val a = banded.select(col("band"), col("bsig"), col("id").as("id_a"))
-      val b = banded.select(col("band"), col("bsig"), col("id").as("id_b"))
-      val cands = a.join(b, Seq("band", "bsig"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-      val out = verified(cands).filter(col("cos_sim") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("cos_sim"), 4).as("cos_sim"))
-        .localCheckpoint(true)
-      banded.unpersist(false)
-      return out
-    }
-    // hub edges with their bucket provenance (needed to scope the fallback)
-    // via a whole-partition window min — ONE exchange of the banded rows
-    // where the groupBy+join shape paid it twice (the r15 minhash-miner
-    // measurement, same pattern); persisted: read by the verification pass
-    // AND the fallback's failed-member scoping
-    val hubEdges = banded
-      .withColumn("id_a",
-        min(col("id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "bsig")))
-      .filter(col("id") =!= col("id_a"))
-      .select(col("band"), col("bsig"), col("id_a"), col("id").as("id_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hubVerdicts = verified(hubEdges.select("id_a", "id_b").dropDuplicates())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hubPass = hubVerdicts.filter(col("cos_sim") >= threshold)
-
-    // Driver-side gate (same shape as Dedup.minhashSpanningPairs): skip the
-    // whole fallback subtree when no hub edge failed — the probe populates
-    // the persisted verdicts hubPass reads anyway.
-    val failedCount = hubVerdicts.filter(col("cos_sim") < threshold).count()
-    val combined = if (failedCount == 0L) hubPass else {
-      // members whose hub edge failed, in each bucket where it failed
-      val failedMembers = hubEdges
-        .join(hubVerdicts.filter(col("cos_sim") < threshold), Seq("id_a", "id_b"))
-        .select(col("band"), col("bsig"), col("id_b").as("fid"))
-      val fallbackCandsRaw = failedMembers
-        .join(banded, Seq("band", "bsig"))
-        .filter(col("id") =!= col("fid"))
-        .select(least(col("fid"), col("id")).as("id_a"),
-          greatest(col("fid"), col("id")).as("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        // hub edges (pass or fail) are already decided — don't re-verify
-        .join(hubVerdicts.select("id_a", "id_b"), Seq("id_a", "id_b"), "left_anti")
-      // PASS-SET PRUNE (r12 verdict #6, same gate + rationale as
-      // Dedup.minhashSpanningPairs): pairs whose endpoints both hold a
-      // passing edge to a common node are already CC-connected — skip
-      // their verification, but only when the fallback volume is large
-      // enough that the saved cosines beat the prune's own joins (the
-      // ungated prune billed +4 task-CPU-s to dedup_semantic at sf0.1).
-      val fallbackPass = if (failedCount <= pruneGate) {
-        verified(fallbackCandsRaw).filter(col("cos_sim") >= threshold)
-      } else {
-        val fallbackCands = fallbackCandsRaw
-          .localCheckpoint(true) // read by the prune AND the anti below
-        val adj = hubPass.select(col("id_a").as("_z"), col("id_b").as("_m"))
-          .unionByName(hubPass.select(col("id_b").as("_z"), col("id_a").as("_m")))
-        val prunable = fallbackCands
-          .join(adj.select(col("_z"), col("_m").as("id_a")), Seq("id_a"))
-          .join(adj.select(col("_z"), col("_m").as("id_b")), Seq("id_b", "_z"))
-          .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-        verified(fallbackCands.join(prunable, Seq("id_a", "id_b"), "left_anti"))
-          .filter(col("cos_sim") >= threshold)
-      }
-      hubPass.unionByName(fallbackPass).dropDuplicates("id_a", "id_b")
-    }
-    val out = combined
-      .select(col("id_a"), col("id_b"), round(col("cos_sim"), 4).as("cos_sim"))
-      .localCheckpoint(true)
+    val out = Dedup.bucketSpanningPairs(banded, bands,
+      _.join(vecsA, "id_a").join(vecsB, "id_b")
+        .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos_sim")),
+      threshold, "cos_sim", pruneGate, cliqueVolumePerDoc, cliqueVolumeFloor)
     banded.unpersist(false)
-    hubEdges.unpersist(false)
-    hubVerdicts.unpersist(false)
     out
   }
 

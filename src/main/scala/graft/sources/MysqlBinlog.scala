@@ -145,12 +145,6 @@ object MysqlBinlog {
     }
   }
 
-  def escape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 2)
-    escapeInto(s, sb)
-    sb.toString
-  }
-
   /** Render into a caller-owned builder — zero intermediate strings (the
    * recursive-concat `render` allocated ~3 strings per field and dominated
    * the decode families' ×10 task-CPU alongside the Formatter-based
@@ -275,24 +269,12 @@ object MysqlBinlog {
   }
 
   /** DATE: 3-byte LE day|month<<5|year<<9 → "YYYY-MM-DD". */
-  def decodeDate(v: Int): String = {
-    val sb = new java.lang.StringBuilder(10)
-    decodeDateInto(sb, v)
-    sb.toString
-  }
-
   def decodeDateInto(sb: java.lang.StringBuilder, v: Int): Unit = {
     val d = v & 0x1f; val m = (v >> 5) & 0x0f; val y = v >> 9
     pad4(sb, y); sb.append('-'); pad2(sb, m); sb.append('-'); pad2(sb, d)
   }
 
   /** DATETIME2: 5-byte BE packed (+0x8000000000 offset) → "YYYY-MM-DD HH:MM:SS". */
-  def decodeDatetime2(packed: Long): String = {
-    val sb = new java.lang.StringBuilder(19)
-    decodeDatetime2Into(sb, packed)
-    sb.toString
-  }
-
   def decodeDatetime2Into(sb: java.lang.StringBuilder, packed: Long): Unit = {
     val v = packed - 0x8000000000L
     val ymd = (v >> 17) & 0x3fffff // 17-bit year*13+month | 5-bit day
@@ -306,12 +288,6 @@ object MysqlBinlog {
   }
 
   /** TIME2: 3-byte BE packed (+0x800000) → "HH:MM:SS" (negative supported). */
-  def decodeTime2(packed: Long): String = {
-    val sb = new java.lang.StringBuilder(9)
-    decodeTime2Into(sb, packed)
-    sb.toString
-  }
-
   def decodeTime2Into(sb: java.lang.StringBuilder, packed: Long): Unit = {
     val v = packed - 0x800000L
     val a = math.abs(v)
@@ -508,69 +484,11 @@ object MysqlBinlog {
     sb.toString
   }
 
-  def decodeValue(r: Reader, typ: Int, meta: Int): J = typ match {
-    case T.TINY => JLong(r.i1().toLong)
-    case T.SHORT => JLong(r.u2().toShort.toLong)
-    case T.LONG => JLong(r.i4().toLong)
-    case T.INT24 => JLong(r.i3().toLong)
-    case T.LONGLONG => JLong(r.i8())
-    case T.FLOAT => JDouble(java.lang.Float.intBitsToFloat(r.i4()).toDouble)
-    case T.DOUBLE => JDouble(java.lang.Double.longBitsToDouble(r.i8()))
-    case T.YEAR => JLong(1900L + r.u1())
-    case T.DATE => JStr(decodeDate(r.u3()))
-    case T.DATETIME2 =>
-      val v = JStr(decodeDatetime2(r.beN(5)))
-      r.bytes((meta + 1) / 2) // fractional-seconds bytes (fsp in meta)
-      v
-    case T.TIMESTAMP2 =>
-      val secs = r.beN(4)
-      r.bytes((meta + 1) / 2)
-      JLong(secs * 1000000L) // micros since epoch (reference emits the number)
-    case T.TIME2 =>
-      val v = JStr(decodeTime2(r.beN(3)))
-      r.bytes((meta + 1) / 2)
-      v
-    case T.BIT =>
-      val bits = ((meta >> 8) & 0xff) * 8 + (meta & 0xff)
-      JLong(r.beN((bits + 7) / 8))
-    case T.NEWDECIMAL =>
-      val prec = (meta >> 8) & 0xff; val scale = meta & 0xff
-      JStr(decodeDecimal(r.bytes(decimalBinSize(prec, scale)), prec, scale))
-    case T.VARCHAR | T.VAR_STRING =>
-      val len = if (meta < 256) r.u1() else r.u2()
-      stringish(r.bytes(len))
-    case T.STRING =>
-      // meta = (realType << 8) | lenByte; CHAR columns wider than 255
-      // BYTES (e.g. CHAR(100) utf8mb4) steal bits 4-5 of the type byte to
-      // carry length bits 8-9: len = lenByte | (((m0 & 0x30) ^ 0x30) << 4)
-      // (public MySQL row-format metadata packing)
-      val m0 = (meta >> 8) & 0xff
-      val m1 = meta & 0xff
-      val maxLen = if (m0 != 0 && (m0 & 0x30) != 0x30) m1 | (((m0 & 0x30) ^ 0x30) << 4) else m1
-      val len = if (maxLen < 256) r.u1() else r.u2()
-      stringish(r.bytes(len))
-    case T.BLOB =>
-      val lenBytes = meta & 0xff
-      val len = r.beNLittle(lenBytes)
-      JObj(Seq("_base64" -> JStr(b64(r.bytes(len.toInt)))))
-    case T.JSON =>
-      val lenBytes = meta & 0xff
-      val len = r.beNLittle(lenBytes)
-      handleJson(r.bytes(len.toInt))
-    case other => throw new IllegalArgumentException(s"unsupported column type $other")
-  }
-
-  /** UTF-8 text or `{"_base64": …}` for non-text bytes (mysql_object.rs:42-46). */
-  private def stringish(bytes: Array[Byte]): J = utf8OrNull(bytes) match {
-    case s: String => JStr(s)
-    case _ => JObj(Seq("_base64" -> JStr(b64(bytes))))
-  }
-
-  /** Hot-path twin of [[decodeValue]]: renders the value's JSON straight
-   * into `sb` — no per-field J wrapper, no intermediate decimal/temporal
+  /** Decode one column value of a row image and render its JSON straight
+   * into `sb`: no per-field J wrapper, no intermediate decimal/temporal
    * strings, strings UTF-8-validated and decoded in place from the reader's
-   * buffer (zero byte copies on the text path). Output byte-identical to
-   * `renderInto(decodeValue(r, typ, meta), sb)`. */
+   * buffer (zero byte copies on the text path). Text that is not valid
+   * UTF-8 renders as `{"_base64": …}` (mysql_object.rs:42-46). */
   def decodeValueInto(r: Reader, typ: Int, meta: Int, sb: java.lang.StringBuilder): Unit = typ match {
     case T.TINY => sb.append(r.i1())
     case T.SHORT => sb.append(r.u2().toShort.toInt)
@@ -605,6 +523,10 @@ object MysqlBinlog {
       val len = if (meta < 256) r.u1() else r.u2()
       stringishInto(r, len, sb)
     case T.STRING =>
+      // meta = (realType << 8) | lenByte; CHAR columns wider than 255
+      // BYTES (e.g. CHAR(100) utf8mb4) steal bits 4-5 of the type byte to
+      // carry length bits 8-9: len = lenByte | (((m0 & 0x30) ^ 0x30) << 4)
+      // (public MySQL row-format metadata packing)
       val m0 = (meta >> 8) & 0xff
       val m1 = meta & 0xff
       val maxLen = if (m0 != 0 && (m0 & 0x30) != 0x30) m1 | (((m0 & 0x30) ^ 0x30) << 4) else m1
@@ -621,8 +543,8 @@ object MysqlBinlog {
     case other => throw new IllegalArgumentException(s"unsupported column type $other")
   }
 
-  /** In-place [[stringish]]: validate UTF-8 on the reader's buffer, decode
-   * the String straight from it; base64 wrapper only on invalid text. */
+  /** Validate UTF-8 on the reader's buffer and decode the String straight
+   * from it; base64 wrapper only on invalid text. */
   private def stringishInto(r: Reader, len: Int, sb: java.lang.StringBuilder): Unit = {
     if (isValidUtf8(r.buf, r.off, len)) {
       sb.append('"')

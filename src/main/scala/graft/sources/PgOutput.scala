@@ -208,7 +208,6 @@ object PgOutput {
     def u2(): Int = { val v = ((buf(off) & 0xff) << 8) | (buf(off + 1) & 0xff); off += 2; v }
     def i4(): Int = { var v = 0; var i = 0; while (i < 4) { v = (v << 8) | (buf(off + i) & 0xff); i += 1 }; off += 4; v }
     def i8(): Long = { var v = 0L; var i = 0; while (i < 8) { v = (v << 8) | (buf(off + i) & 0xffL); i += 1 }; off += 8; v }
-    def bytes(n: Int): Array[Byte] = { val a = java.util.Arrays.copyOfRange(buf, off, off + n); off += n; a }
     def cstring(): String = {
       val start = off
       while (buf(off) != 0) off += 1
@@ -221,12 +220,12 @@ object PgOutput {
 
   /** Single-pass tuple decode + row-image render, straight off the reader —
    * no PgValue wrappers, no per-value byte copies, one String per text
-   * value (the old parseTupleData → buildObjectInto pair traversed twice
-   * and allocated a wrapper + copied bytes per column; pg decode was the
-   * ×10 leaders' second wire loop in the r16 profile). Output
-   * byte-identical to `buildObjectInto(columns, parseTupleData(r), …)`;
-   * consumes exactly the tuple's wire bytes (values beyond the relation's
-   * columns are parsed and skipped, missing trailing columns render null). */
+   * value. Tuple data is a u16 column count, then marker-tagged values
+   * (postgres_object.rs:265-310 `parse_tuple_data`); the output is
+   * byte-identical to [[buildObject]] / [[buildKeyObject]] over the same
+   * values. Consumes exactly the tuple's wire bytes (values beyond the
+   * relation's columns are parsed and skipped, missing trailing columns
+   * render null). */
   private def tupleObjectInto(columns: IndexedSeq[RelationColumn], r: BeReader,
                               keysOnly: Boolean, sb: java.lang.StringBuilder): String = {
     val n = r.u2()
@@ -269,21 +268,6 @@ object PgOutput {
     }
     sb.append('}')
     sb.toString
-  }
-
-  /** Tuple data: u16 column count, then marker-tagged values
-   * (postgres_object.rs:265-310 `parse_tuple_data`). */
-  def parseTupleData(r: BeReader): IndexedSeq[PgValue] = {
-    val n = r.u2()
-    (0 until n).map { _ =>
-      r.u1().toChar match {
-        case 'n' => PgNull
-        case 'u' => PgUnchanged
-        case 't' => PgText(r.bytes(r.i4()))
-        case 'b' => PgBinary(r.bytes(r.i4()))
-        case other => throw new IllegalArgumentException(s"bad tuple marker '$other'")
-      }
-    }
   }
 
   private def columnsDiffer(a: IndexedSeq[RelationColumn], b: IndexedSeq[RelationColumn]): Boolean =

@@ -17,6 +17,44 @@ class DedupSimilaritySpec extends SparkSpec {
     ).toDF("doc_id", "text")
   }
 
+  // sliding-window word docs: distance-d windows have J = (W-d)/(W+d), so
+  // the corpus is a GRADIENT of similarities around the 0.5 threshold —
+  // buckets mix >=t neighbors with sub-t hub collisions, exercising the
+  // ADVICE r11 scenario (hub edge fails while two members still pair)
+  private lazy val gradientDocs = {
+    import spark.implicits._
+    val vocab = (0 until 40).map(i => s"w$i")
+    val W = 11
+    (0 until 28).map { i =>
+      (i.toLong, vocab.slice(i, i + W).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+  private def gradientFeats = split(col("text"), " ")
+
+  // deterministic corpus: 6 planted near-dup groups of 5 (base + small
+  // perturbations) + 30 noise vectors, so buckets mix true dups with
+  // hash-collided strangers and hub edges FAIL often enough to drive the
+  // intra-bucket fallback (the ADVICE hub-transitivity scenario)
+  private val plantedDim = 8
+  private lazy val plantedRows: Seq[(Long, Seq[Float])] = {
+    def lcg(s: Long): Long = s * 6364136223846793005L + 1442695040888963407L
+    def vec(seed: Long): Seq[Float] = {
+      var s = lcg(seed)
+      (0 until plantedDim).map { _ => s = lcg(s); ((s >>> 40).toInt % 1000) / 500f - 1f }
+    }
+    (0 until 6).flatMap { g =>
+      val base = vec(g * 1000L + 1)
+      (0 until 5).map { i =>
+        val p = vec(g * 1000L + 100 + i)
+        ((g * 10 + i).toLong, base.zip(p).map { case (b, d) => b + 0.15f * d })
+      }
+    } ++ (0 until 30).map(i => ((100 + i).toLong, vec(50000L + i * 7)))
+  }
+  private lazy val plantedEmb = {
+    import spark.implicits._
+    plantedRows.toDF("vec_id", "embedding")
+  }
+
   test("exact dedup groups identical texts, keeps min id") {
     val res = Dedup.exact(docs).orderBy("canonical_id").collect()
     assert(res.length == 4)
@@ -562,26 +600,9 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("cosineSpanningPairs: CC-identical to the banded clique graph, fallback exercised") {
-    import spark.implicits._
-    val dim = 8
-    // deterministic corpus: 6 planted near-dup groups of 5 (base + small
-    // perturbations) + 30 noise vectors, so buckets mix true dups with
-    // hash-collided strangers and hub edges FAIL often enough to drive the
-    // intra-bucket fallback (the ADVICE hub-transitivity scenario)
-    def lcg(s: Long): Long = s * 6364136223846793005L + 1442695040888963407L
-    def vec(seed: Long): Seq[Float] = {
-      var s = lcg(seed)
-      (0 until dim).map { _ => s = lcg(s); ((s >>> 40).toInt % 1000) / 500f - 1f }
-    }
-    val rows =
-      (0 until 6).flatMap { g =>
-        val base = vec(g * 1000L + 1)
-        (0 until 5).map { i =>
-          val p = vec(g * 1000L + 100 + i)
-          ((g * 10 + i).toLong, base.zip(p).map { case (b, d) => b + 0.15f * d })
-        }
-      } ++ (0 until 30).map(i => ((100 + i).toLong, vec(50000L + i * 7)))
-    val emb = rows.toDF("vec_id", "embedding")
+    val dim = plantedDim
+    val rows = plantedRows
+    val emb = plantedEmb
     val t = 0.6
     val clique = Similarity.cosinePairsBanded(emb, t, dim, bands = 2, bitsPerBand = 3)
     // force the spanning arm (the r15 occupancy gate routes this small
@@ -642,17 +663,8 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("minhashSpanningPairs: failed-hub fallback restores clique CC equality") {
-    import spark.implicits._
-    // sliding-window word docs: distance-d windows have J = (W-d)/(W+d), so
-    // the corpus is a GRADIENT of similarities around the 0.5 threshold —
-    // buckets mix >=t neighbors with sub-t hub collisions, exercising the
-    // ADVICE r11 scenario (hub edge fails while two members still pair)
-    val vocab = (0 until 40).map(i => s"w$i")
-    val W = 11
-    val docsW = (0 until 28).map { i =>
-      (i.toLong, vocab.slice(i, i + W).mkString(" "))
-    }.toDF("doc_id", "text")
-    val feats = split(col("text"), " ")
+    val docsW = gradientDocs
+    val feats = gradientFeats
     val clique = Dedup.minhashPairs(docsW, 0.5, features = feats)
     val span = Dedup.minhashSpanningPairs(docsW, 0.5, features = feats,
       cliqueVolumePerDoc = 0L, cliqueVolumeFloor = 0L)
@@ -717,17 +729,12 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("occupancy gate: default-gate miner == clique pair set, spanning above gate") {
-    import spark.implicits._
     // gradient fixture again — under the default gate its measured clique
     // volume is tiny, so the r15 occupancy gate must route it to the
     // CLIQUE path: output == minhashPairs exactly (ids AND jaccard), not
     // just CC-equal. The forced-spanning variants above pin the other arm.
-    val vocab = (0 until 40).map(i => s"w$i")
-    val W = 11
-    val docsW = (0 until 28).map { i =>
-      (i.toLong, vocab.slice(i, i + W).mkString(" "))
-    }.toDF("doc_id", "text")
-    val feats = split(col("text"), " ")
+    val docsW = gradientDocs
+    val feats = gradientFeats
     def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard"))).toSet
     val gated = pairSet(Dedup.minhashSpanningPairs(docsW, 0.5, features = feats))
@@ -742,6 +749,39 @@ class DedupSimilaritySpec extends SparkSpec {
     // dup-heavy fixture above; here the contract is subset + non-empty
     assert(span.subsetOf(clique) && span.nonEmpty,
       s"forced-spanning output not a subset: span=${span.size} clique=${clique.size}")
+  }
+
+  test("LSH pair miners: every arm leaves only the result's checkpoint cached") {
+    // each call may keep exactly one stored RDD: the eager local
+    // checkpoint under the returned plan. Any other cache, persist or
+    // checkpoint left behind leaks executor storage into later queries.
+    val sc = spark.sparkContext
+    def leavesOnlyItsCheckpoint(arm: String)(mine: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = mine
+      val added = sc.getPersistentRDDs.keySet -- before
+      val own = out.queryExecution.logical
+        .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }.toSet
+      assert(own.size == 1 && added == own,
+        s"$arm: RDDs left cached $added, the result's checkpoint $own")
+    }
+    val (docsW, feats) = (gradientDocs, gradientFeats)
+    leavesOnlyItsCheckpoint("minhash clique")(
+      Dedup.minhashSpanningPairs(docsW, 0.5, features = feats))
+    leavesOnlyItsCheckpoint("minhash spanning")(
+      Dedup.minhashSpanningPairs(docsW, 0.5, features = feats,
+        cliqueVolumePerDoc = 0L, cliqueVolumeFloor = 0L))
+    leavesOnlyItsCheckpoint("minhash prune")(
+      Dedup.minhashSpanningPairs(docsW, 0.5, features = feats,
+        pruneGate = 0L, cliqueVolumePerDoc = 0L, cliqueVolumeFloor = 0L))
+    leavesOnlyItsCheckpoint("cosine clique")(
+      Similarity.cosineSpanningPairs(plantedEmb, 0.6, plantedDim, bands = 2, bitsPerBand = 3))
+    leavesOnlyItsCheckpoint("cosine spanning")(
+      Similarity.cosineSpanningPairs(plantedEmb, 0.6, plantedDim, bands = 2, bitsPerBand = 3,
+        cliqueVolumePerDoc = 0L, cliqueVolumeFloor = 0L))
+    leavesOnlyItsCheckpoint("cosine prune")(
+      Similarity.cosineSpanningPairs(plantedEmb, 0.6, plantedDim, bands = 2, bitsPerBand = 3,
+        pruneGate = 0L, cliqueVolumePerDoc = 0L, cliqueVolumeFloor = 0L))
   }
 
   test("prefix+positional mining == brute force on a randomized overlapping corpus") {
