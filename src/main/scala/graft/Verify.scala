@@ -1,6 +1,8 @@
 package graft
+import graft.core.Json.mapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,18 +22,11 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Every output file is one JSON object written by Jackson: a quote, tab
+    // or CR in a query's SQL or error text must not make the compare's
+    // json.load fail and silently zero the run's correctness.
+    def writeJson(file: String, doc: AnyRef): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), mapper.writeValueAsString(doc))
 
     // Failures must be LOUD (r8 verdict #2): a throwing query previously
     // wrote nothing, the driver's CORRECTNESS json simply omitted the row,
@@ -76,10 +71,12 @@ object Verify {
         sc.clearJobGroup()
       }
     }
-    Files.writeString(Paths.get(s"$outDir/_errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    Files.writeString(Paths.get(s"$outDir/_summary.json"),
-      s"""{"attempted": ${selected.size}, "succeeded": ${selected.size - errors.size}, "failed": ${errors.size}, "failed_names": ${errors.keys.map(q).mkString("[", ",", "]")}}""")
+    writeJson("_errors.json", errors.asJava)
+    val summary = mapper.createObjectNode().put("attempted", selected.size)
+      .put("succeeded", selected.size - errors.size).put("failed", errors.size)
+    val failedNames = summary.putArray("failed_names")
+    errors.keys.foreach(k => failedNames.add(k))
+    writeJson("_summary.json", summary)
 
     // Schema manifest (r8 verdict #7): the driver regenerates testdata
     // between rounds and has changed column physical types before (events.ts
@@ -88,14 +85,14 @@ object Verify {
     // not a mid-round analysis failure.
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
-    val manifest = tables.map { tb =>
-      val schema =
+    val manifest = mapper.createObjectNode()
+    tables.foreach { tb =>
+      manifest.put(tb,
         try spark.read.parquet(s"$sfDir/$tb.parquet").schema
           .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")
-        catch { case e: Throwable => s"UNREADABLE: ${e.getMessage}" }
-      s"${q(tb)}: ${q(schema)}"
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_schemas.json"), manifest)
+        catch { case e: Throwable => s"UNREADABLE: ${e.getMessage}" })
+    }
+    writeJson("_schemas.json", manifest)
 
     // Oracle-coupling guard (r12 ADVICE): the dedup_semantic/ann_pairs_lsh
     // oracle SQL hardcodes bitsPerBand=6 while the Spark side computes
@@ -118,9 +115,7 @@ object Verify {
         System.err.println(s"[verify] adaptiveBits coupling check skipped: ${e.getMessage}")
     }
 
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson("oracle_sql.json", SparkEntry.oracleSql.asJava)
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"[verify] ${errors.size}/${SparkEntry.queries.size} queries FAILED: ${errors.keys.mkString(", ")}")

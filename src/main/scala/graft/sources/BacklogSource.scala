@@ -1,5 +1,8 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.node.MissingNode
+import graft.core.Json.mapper
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -74,45 +77,21 @@ object BacklogSource {
    * offsets — identity is then unverifiable and the old index check applies.
    */
   case class BacklogOffset(segment: Int, line: Long, name: String = "") extends Offset {
-    override def json(): String =
-      if (name.isEmpty) s"""{"segment":$segment,"line":$line}"""
-      else s"""{"segment":$segment,"line":$line,"name":"${BacklogSource.escapeJson(name)}"}"""
+    override def json(): String = {
+      val o = mapper.createObjectNode().put("segment", segment).put("line", line)
+      mapper.writeValueAsString(if (name.isEmpty) o else o.put("name", name))
+    }
   }
 
-  /** Minimal JSON string escape — a segment name containing a quote or
-   * backslash must not produce an unreadable checkpoint offset. */
-  private[sources] def escapeJson(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private[sources] def unescapeJson(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString()
-  }
-
+  /** Reads what [[BacklogOffset.json]] writes, bare or named, and the
+   * offsets already in older checkpoints, which escape every control
+   * character in a name in the six-character form. */
   def parseOffset(json: String): BacklogOffset = {
-    val bare = """\{"segment":(\d+),"line":(\d+)\}""".r
-    val named = """\{"segment":(\d+),"line":(\d+),"name":"((?:[^"\\]|\\.)*)"\}""".r
-    json match {
-      case bare(s, l) => BacklogOffset(s.toInt, l.toLong)
-      case named(s, l, n) => BacklogOffset(s.toInt, l.toLong, unescapeJson(n))
-      case _ => throw new IllegalArgumentException(s"bad backlog offset: $json")
-    }
+    val n = try mapper.readTree(json) catch { case _: JacksonException => MissingNode.getInstance }
+    val (segment, line, name) = (n.path("segment"), n.path("line"), n.path("name"))
+    require(segment.isInt && (line.isInt || line.isLong) && (name.isMissingNode || name.isTextual),
+      s"bad backlog offset: $json")
+    BacklogOffset(segment.intValue, line.longValue, name.asText(""))
   }
 }
 

@@ -1,10 +1,16 @@
 package graft.streaming
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode, TextNode}
+import com.fasterxml.jackson.databind.util.RawValue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.core.Json.mapper
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /**
  * Minimal REST control plane over the StreamingQueryManager.
@@ -66,163 +72,152 @@ class ControlPlane(spark: SparkSession, port: Int = 0,
 
   def boundPort: Int = server.getAddress.getPort
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def respond(ex: HttpExchange, code: Int, body: String,
+                      contentType: String = "application/json"): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      // every other control char must also be escaped or the JSON is invalid
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private def respond(ex: HttpExchange, code: Int, body: JsonNode): Unit =
+    respond(ex, code, mapper.writeValueAsString(body))
+
+  private def error(msg: String): ObjectNode = mapper.createObjectNode().put("error", msg)
+
+  /** A document that is already rendered, embedded verbatim. */
+  private def raw(doc: String): JsonNode = mapper.getNodeFactory.rawValueNode(new RawValue(doc))
+
+  private def array(nodes: Iterable[JsonNode]): ArrayNode = mapper.createArrayNode().addAll(nodes.toSeq.asJava)
 
   /** /pipelines/{p}/schemas|sensing|drift/... (reference schemas.rs + sensing.rs routes). */
   private def handleInspection(ex: HttpExchange, pipeline: String, rest: Seq[String]): Unit = {
-    if (ex.getRequestMethod != "GET") { respond(ex, 405, """{"error":"method not allowed"}"""); return }
-    def columnsJson(s: org.apache.spark.sql.types.StructType): String =
-      s.fields.zipWithIndex.map { case (f, i) =>
-        s"""{"name":"${esc(f.name)}","data_type":"${esc(f.dataType.sql.toLowerCase)}",""" +
-          s""""nullable":${f.nullable},"ordinal_position":${i + 1}}"""
-      }.mkString("[", ",", "]")
+    if (ex.getRequestMethod != "GET") { respond(ex, 405, error("method not allowed")); return }
+    def columnsJson(s: StructType): ArrayNode = array(s.fields.zipWithIndex.map { case (f, i) =>
+      mapper.createObjectNode().put("name", f.name).put("data_type", f.dataType.sql.toLowerCase)
+        .put("nullable", f.nullable).put("ordinal_position", i + 1) })
     try rest match {
       // ——— declared-schema ledger ———
       case Seq("schemas", tail @ _*) => registries.get(pipeline) match {
-        case None => respond(ex, 404, s"""{"error":"no schema registry for pipeline $pipeline"}""")
+        case None => respond(ex, 404, error(s"no schema registry for pipeline $pipeline"))
         case Some(reg) =>
           // ledger rows are tiny (one per registered version); collect once per request
           val rows = reg.ledger().collect()
             .map(r => (r.getAs[String]("table"), r.getAs[String]("fingerprint"),
               r.getAs[Long]("sequence"), r.getAs[Long]("registered_at_ms"),
               r.getAs[String]("schema_json")))
-          def structOf(json: String) = org.apache.spark.sql.types.DataType.fromJson(json)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
+          def structOf(json: String) = DataType.fromJson(json).asInstanceOf[StructType]
+          def version(table: String, v: (String, String, Long, Long, String)) =
+            mapper.createObjectNode().put("table", table).put("fingerprint", v._2).put("sequence", v._3)
           tail match {
             case Seq() => // SchemaInfo list: latest version per table
-              val latest = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (t, vs) =>
+              respond(ex, 200, array(rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (t, vs) =>
                 val v = vs.maxBy(_._3)
-                s"""{"table":"${esc(t)}","fingerprint":"${v._2}","sequence":${v._3},""" +
-                  s""""column_count":${structOf(v._5).fields.length},"registered_at_ms":${v._4}}"""
-              }
-              respond(ex, 200, latest.mkString("[", ",", "]"))
+                version(t, v).put("column_count", structOf(v._5).fields.length).put("registered_at_ms", v._4)
+              }))
             case Seq(table) =>
               rows.filter(_._1 == table).sortBy(_._3).lastOption match {
-                case None => respond(ex, 404, s"""{"error":"no schema for table $table"}""")
-                case Some(v) => respond(ex, 200,
-                  s"""{"table":"${esc(table)}","fingerprint":"${v._2}","sequence":${v._3},""" +
-                    s""""registered_at_ms":${v._4},"columns":${columnsJson(structOf(v._5))}}""")
+                case None => respond(ex, 404, error(s"no schema for table $table"))
+                case Some(v) => respond(ex, 200, version(table, v).put("registered_at_ms", v._4)
+                  .set[ObjectNode]("columns", columnsJson(structOf(v._5))))
               }
             case Seq(table, "versions") =>
-              val vs = rows.filter(_._1 == table).sortBy(_._3).map { v =>
-                s"""{"version":${v._3},"fingerprint":"${v._2}",""" +
-                  s""""column_count":${structOf(v._5).fields.length},"registered_at_ms":${v._4}}"""
-              }
-              respond(ex, 200, vs.mkString("[", ",", "]"))
+              respond(ex, 200, array(rows.filter(_._1 == table).sortBy(_._3).map { v =>
+                mapper.createObjectNode().put("version", v._3).put("fingerprint", v._2)
+                  .put("column_count", structOf(v._5).fields.length).put("registered_at_ms", v._4)
+              }))
             // the replay-correctness lookup: schema in force AT a sequence
             case Seq(table, "at", seq) =>
               seq.toLongOption match {
-                case None => respond(ex, 400,
-                  s"""{"error":"sequence must be an integer, got '${esc(seq)}'"}""")
+                case None => respond(ex, 400, error(s"sequence must be an integer, got '$seq'"))
                 case Some(seqL) =>
                   rows.filter(v => v._1 == table && v._3 <= seqL).sortBy(_._3).lastOption match {
-                    case None => respond(ex, 404,
-                      s"""{"error":"no schema for table $table at sequence $seq"}""")
+                    case None => respond(ex, 404, error(s"no schema for table $table at sequence $seq"))
                     case Some(v) => respond(ex, 200,
-                      s"""{"table":"${esc(table)}","fingerprint":"${v._2}","sequence":${v._3},""" +
-                        s""""columns":${columnsJson(structOf(v._5))}}""")
+                      version(table, v).set[ObjectNode]("columns", columnsJson(structOf(v._5))))
                   }
               }
-            case _ => respond(ex, 404, """{"error":"not found"}""")
+            case _ => respond(ex, 404, error("not found"))
           }
       }
       // ——— inferred schemas + cache stats ———
       case Seq("sensing", tail @ _*) => sensors.get(pipeline) match {
-        case None => respond(ex, 404, s"""{"error":"no sensor for pipeline $pipeline"}""")
+        case None => respond(ex, 404, error(s"no sensor for pipeline $pipeline"))
         case Some(sensor) => tail match {
           case Seq("schemas") =>
-            respond(ex, 200, sensor.tableNames.sorted
-              .flatMap(sensor.infoJson).mkString("[", ",", "]"))
+            respond(ex, 200, array(sensor.tableNames.sorted.flatMap(sensor.infoJson).map(raw)))
           case Seq("schemas", table) => sensor.detailJson(table) match {
             case Some(j) => respond(ex, 200, j)
-            case None => respond(ex, 404, s"""{"error":"table $table not sensed"}""")
+            case None => respond(ex, 404, error(s"table $table not sensed"))
           }
           case Seq("schemas", table, "json-schema") => sensor.jsonSchema(table) match {
             case Some(j) => respond(ex, 200, j)
-            case None => respond(ex, 404, s"""{"error":"table $table not sensed"}""")
+            case None => respond(ex, 404, error(s"table $table not sensed"))
           }
           case Seq("stats") => respond(ex, 200, sensor.cacheStatsJson)
           // raw classifier evidence (reference sensing.rs evidence dump):
           // HLL cardinality + SpaceSaving heavy hitters + reservoir sample
           case Seq("evidence", evTail @ _*) =>
-            def evidenceJson(table: String): Option[String] =
+            def evidenceJson(table: String): Option[ObjectNode] =
               sensor.evidence(table).map { case (nUnique, heavy, sampled) =>
-                val hh = heavy.map { case (f, n) =>
-                  s"""{"field":"${esc(f)}","count":$n}"""
-                }.mkString("[", ",", "]")
-                val sf = sampled.map(f => s""""${esc(f)}"""").mkString("[", ",", "]")
-                s"""{"table":"${esc(table)}","n_unique_fields":$nUnique,""" +
-                  s""""heavy_hitters":$hh,"sampled_fields":$sf}"""
+                mapper.createObjectNode().put("table", table).put("n_unique_fields", nUnique)
+                  .set[ObjectNode]("heavy_hitters", array(heavy.map { case (f, n) =>
+                    mapper.createObjectNode().put("field", f).put("count", n) }))
+                  .set[ObjectNode]("sampled_fields", array(sampled.map(TextNode.valueOf)))
               }
             evTail match {
-              case Seq() => respond(ex, 200,
-                sensor.evidenceTables.sorted.flatMap(evidenceJson).mkString("[", ",", "]"))
+              case Seq() => respond(ex, 200, array(sensor.evidenceTables.sorted.flatMap(evidenceJson)))
               case Seq(table) => evidenceJson(table) match {
                 case Some(j) => respond(ex, 200, j)
-                case None => respond(ex, 404, s"""{"error":"no evidence for table $table"}""")
+                case None => respond(ex, 404, error(s"no evidence for table $table"))
               }
-              case _ => respond(ex, 404, """{"error":"not found"}""")
+              case _ => respond(ex, 404, error("not found"))
             }
-          case _ => respond(ex, 404, """{"error":"not found"}""")
+          case _ => respond(ex, 404, error("not found"))
         }
       }
       // ——— drift results (pushed by the pipeline's drift stage) ———
       case Seq("drift", tail @ _*) => sensors.get(pipeline) match {
-        case None => respond(ex, 404, s"""{"error":"no sensor for pipeline $pipeline"}""")
+        case None => respond(ex, 404, error(s"no sensor for pipeline $pipeline"))
         case Some(sensor) =>
-          def driftJson(table: String): Option[String] = sensor.drift(table).map { rows =>
-            val cols = rows.map { case (c, k, e, o, n) =>
-              s"""{"column":"${esc(c)}","kind":"${esc(k)}","expected":"${esc(e)}",""" +
-                s""""observed":"${esc(o)}","n":$n}"""
-            }.mkString("[", ",", "]")
-            s"""{"table":"${esc(table)}","has_drift":${rows.nonEmpty},"columns":$cols}"""
+          def driftJson(table: String): Option[ObjectNode] = sensor.drift(table).map { rows =>
+            mapper.createObjectNode().put("table", table).put("has_drift", rows.nonEmpty)
+              .set[ObjectNode]("columns", array(rows.map { case (c, k, e, obs, n) =>
+                mapper.createObjectNode().put("column", c).put("kind", k).put("expected", e)
+                  .put("observed", obs).put("n", n) }))
           }
           tail match {
-            case Seq() => respond(ex, 200,
-              sensor.driftTables.sorted.flatMap(driftJson).mkString("[", ",", "]"))
+            case Seq() => respond(ex, 200, array(sensor.driftTables.sorted.flatMap(driftJson)))
             case Seq(table) => driftJson(table) match {
               case Some(j) => respond(ex, 200, j)
-              case None => respond(ex, 404, s"""{"error":"no drift results for table $table"}""")
+              case None => respond(ex, 404, error(s"no drift results for table $table"))
             }
-            case _ => respond(ex, 404, """{"error":"not found"}""")
+            case _ => respond(ex, 404, error("not found"))
           }
       }
-      case _ => respond(ex, 404, """{"error":"not found"}""")
+      case _ => respond(ex, 404, error("not found"))
     } catch {
-      case e: Throwable => respond(ex, 500, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+      case e: Throwable => respond(ex, 500, error(String.valueOf(e.getMessage)))
     }
   }
 
-  private def queryList(): String =
-    spark.streams.active.map { q =>
-      s"""{"id":"${q.id}","runId":"${q.runId}","name":"${Option(q.name).getOrElse("")}","isActive":${q.isActive}}"""
-    }.mkString("[", ",", "]")
+  private def queryList(): ArrayNode = array(spark.streams.active.map { q =>
+    mapper.createObjectNode().put("id", q.id.toString).put("runId", q.runId.toString)
+      .put("name", Option(q.name).getOrElse("")).put("isActive", q.isActive)
+  })
 
   def start(): ControlPlane = {
     server.createContext("/health", (ex: HttpExchange) =>
-      respond(ex, 200, """{"status":"ok"}"""))
+      respond(ex, 200, mapper.createObjectNode().put("status", "ok")))
     server.createContext("/pipelines", new HttpHandler {
       private def body(ex: HttpExchange): String =
         new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      private def attempt(ex: HttpExchange, code: Int = 200)(f: => String): Unit =
+      private def attempt(ex: HttpExchange, code: Int = 200)(f: => JsonNode): Unit =
         try respond(ex, code, f)
         catch {
-          case e: NoSuchElementException => respond(ex, 404, s"""{"error":"${esc(e.getMessage)}"}""")
-          case e: Throwable => respond(ex, 400, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+          case e: NoSuchElementException => respond(ex, 404, error(e.getMessage))
+          case e: Throwable => respond(ex, 400, error(String.valueOf(e.getMessage)))
         }
       def handle(ex: HttpExchange): Unit = {
         val path = ex.getRequestURI.getPath.stripPrefix("/pipelines").stripPrefix("/")
@@ -232,8 +227,7 @@ class ControlPlane(spark: SparkSession, port: Int = 0,
         }
         (ex.getRequestMethod, path, manager) match {
           case ("GET", "", Some(mgr)) =>
-            respond(ex, 200, mgr.list().map { case (n, m) => mgr.infoJson(n, m) }
-              .mkString("[", ",", "]"))
+            respond(ex, 200, array(mgr.list().map { case (n, m) => mgr.infoJson(n, m) }))
           case ("GET", "", None) => respond(ex, 200, queryList())
           case ("POST", "", Some(mgr)) => attempt(ex, 201) {
             val m = mgr.create(body(ex)); mgr.infoJson(m.pipeline.metadata.name, m)
@@ -241,7 +235,7 @@ class ControlPlane(spark: SparkSession, port: Int = 0,
           case ("PATCH", name, Some(mgr)) if name.nonEmpty && !name.contains("/") =>
             attempt(ex) { val m = mgr.patch(name, body(ex)); mgr.infoJson(name, m) }
           case ("DELETE", name, Some(mgr)) if name.nonEmpty && !name.contains("/") =>
-            attempt(ex) { mgr.delete(name); """{"deleted":true}""" }
+            attempt(ex) { mgr.delete(name); mapper.createObjectNode().put("deleted", true) }
           case ("POST", p, Some(mgr)) if p.endsWith("/pause") =>
             attempt(ex) { val n = p.stripSuffix("/pause"); mgr.infoJson(n, mgr.pause(n)) }
           case ("POST", p, Some(mgr)) if p.endsWith("/resume") =>
@@ -253,18 +247,17 @@ class ControlPlane(spark: SparkSession, port: Int = 0,
           case ("GET", id, _) =>
             spark.streams.active.find(q => q.id.toString == id || q.name == id) match {
               case Some(q) =>
-                val prog = Option(q.lastProgress).map(_.json).getOrElse("null")
-                respond(ex, 200,
-                  s"""{"id":"${q.id}","isActive":${q.isActive},"lastProgress":$prog}""")
-              case None => respond(ex, 404, s"""{"error":"no pipeline $id"}""")
+                respond(ex, 200, mapper.createObjectNode().put("id", q.id.toString).put("isActive", q.isActive)
+                  .set[ObjectNode]("lastProgress", raw(Option(q.lastProgress).map(_.json).getOrElse("null"))))
+              case None => respond(ex, 404, error(s"no pipeline $id"))
             }
           case ("POST", p, None) if p.endsWith("/stop") =>
             val id = p.stripSuffix("/stop")
             spark.streams.active.find(q => q.id.toString == id || q.name == id) match {
-              case Some(q) => q.stop(); respond(ex, 200, """{"stopped":true}""")
-              case None => respond(ex, 404, s"""{"error":"no pipeline $id"}""")
+              case Some(q) => q.stop(); respond(ex, 200, mapper.createObjectNode().put("stopped", true))
+              case None => respond(ex, 404, error(s"no pipeline $id"))
             }
-          case _ => respond(ex, 405, """{"error":"method not allowed"}""")
+          case _ => respond(ex, 405, error("method not allowed"))
         }
       }
     })
@@ -281,46 +274,40 @@ class ControlPlane(spark: SparkSession, port: Int = 0,
             case Array(n) => (n, "entries")
           }
           dlqQueues.get(name) match {
-            case None => respond(ex, 404, s"""{"error":"no dlq for pipeline $name"}""")
+            case None => respond(ex, 404, error(s"no dlq for pipeline $name"))
             case Some(q) => (ex.getRequestMethod, action) match {
               case ("GET", "entries") =>
                 val limit = params.getOrElse("limit", "20").toInt
-                respond(ex, 200, q.peek(limit)
-                  .map { case (seq, j) => s"""{"seq":$seq,"entry":$j}""" }.mkString("[", ",", "]"))
-              case ("GET", "count") => respond(ex, 200,
-                s"""{"count":${q.len},"evicted":${q.evictedTotal},"rejected":${q.rejectedTotal}}""")
+                respond(ex, 200, array(q.peek(limit).map { case (seq, j) =>
+                  mapper.createObjectNode().put("seq", seq).set[ObjectNode]("entry", raw(j)) }))
+              case ("GET", "count") => respond(ex, 200, mapper.createObjectNode().put("count", q.len)
+                .put("evicted", q.evictedTotal).put("rejected", q.rejectedTotal))
               case ("POST", "ack") =>
                 val upTo = params.getOrElse("upTo", "-1").toLong
-                respond(ex, 200, s"""{"acked":${q.ack(upTo)}}""")
-              case ("POST", "purge") => respond(ex, 200, s"""{"purged":${q.purge()}}""")
-              case _ => respond(ex, 405, """{"error":"method not allowed"}""")
+                respond(ex, 200, mapper.createObjectNode().put("acked", q.ack(upTo)))
+              case ("POST", "purge") => respond(ex, 200, mapper.createObjectNode().put("purged", q.purge()))
+              case _ => respond(ex, 405, error("method not allowed"))
             }
           }
           return
         }
         params.get("path") match {
-          case None => respond(ex, 400, """{"error":"path param required"}""")
+          case None => respond(ex, 400, error("path param required"))
           case Some(p) =>
             val limit = params.getOrElse("limit", "20").toInt
             try {
               val rows = spark.read.parquet(p)
                 .orderBy(org.apache.spark.sql.functions.col("timestamp").desc)
                 .limit(limit).toJSON.collect()
-              respond(ex, 200, rows.mkString("[", ",", "]"))
+              respond(ex, 200, array(rows.map(raw)))
             } catch {
-              case e: Throwable => respond(ex, 500, s"""{"error":"${esc(e.getMessage)}"}""")
+              case e: Throwable => respond(ex, 500, error(String.valueOf(e.getMessage)))
             }
         }
       }
     })
-    server.createContext("/metrics", (ex: HttpExchange) => {
-      val body = metrics.map(_.scrape()).getOrElse("")
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
+    server.createContext("/metrics", (ex: HttpExchange) =>
+      respond(ex, 200, metrics.map(_.scrape()).getOrElse(""), "text/plain; version=0.0.4"))
     server.start()
     this
   }

@@ -57,8 +57,9 @@ object Metrics {
     private def fmtLabels(labels: Labels, extra: Labels = Nil): String = {
       val all = labels ++ extra
       if (all.isEmpty) ""
-      else all.map { case (k, v) => s"""$k="${v.replace("\\", "\\\\").replace("\"", "\\\"")}"""" }
-        .mkString("{", ",", "}")
+      else all.map { case (k, v) =>
+        s"""$k="${v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")}""""
+      }.mkString("{", ",", "}")
     }
 
     private def fmtNum(d: Double): String =

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.core.ChangeEvent
+import graft.core.Json.mapper
 import graft.sources.BacklogSource
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -101,6 +103,7 @@ class PipelineManager(spark: SparkSession, baseDir: String) {
 
   /** Stop and remove checkpoints + ledger (pipeline_manager.rs:888-925). */
   def delete(name: String): Unit = {
+    PipelineSpec.requireSafeName(name)
     get(name).foreach { m => m.query.foreach(q => { q.stop(); q.awaitTermination() }) }
     pipelines.remove(name)
     val dir = java.nio.file.Paths.get(s"$baseDir/$name")
@@ -115,14 +118,13 @@ class PipelineManager(spark: SparkSession, baseDir: String) {
 
   /** Operator-facing status JSON (PipeInfo + ops shape, rest-api
    * pipelines.rs:20-43). */
-  def infoJson(name: String, m: Managed): String = {
+  def infoJson(name: String, m: Managed): ObjectNode = {
     val uptime = if (m.status == "running") (System.currentTimeMillis() - m.startedAtMs) / 1000.0 else 0.0
     val ledger = new SinkLedger(ledgerDir(name))
-    val checkpoints = m.pipeline.spec.sinks
-      .map(s => s""""${s.id}":${ledger.committed(s.id)}""").mkString("{", ",", "}")
-    val active = m.query.exists(_.isActive)
-    s"""{"name":"$name","status":"${m.status}","isActive":$active,""" +
-      s""""ops":{"uptime_seconds":$uptime,"checkpoints":$checkpoints},""" +
-      s""""spec":${PipelineSpec.toJsonString(m.node)}}"""
+    val info = mapper.createObjectNode().put("name", name).put("status", m.status)
+      .put("isActive", m.query.exists(_.isActive))
+    val checkpoints = info.putObject("ops").put("uptime_seconds", uptime).putObject("checkpoints")
+    m.pipeline.spec.sinks.foreach(s => checkpoints.put(s.id, ledger.committed(s.id)))
+    info.set[ObjectNode]("spec", m.node)
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
+import graft.core.Json
 import graft.operators.{FilterProcessor, Routing}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -58,7 +59,6 @@ object PipelineSpec {
   case class Pipeline(metadata: Metadata, spec: Spec)
 
   private val yaml = new ObjectMapper(new YAMLFactory())
-  private val json = new ObjectMapper()
 
   private val EnvVar = raw"\$$\{([A-Z_][A-Z0-9_]*)\}".r
 
@@ -69,13 +69,11 @@ object PipelineSpec {
       scala.util.matching.Regex.quoteReplacement(env(m.group(1)).getOrElse(m.matched)))
 
   def parseYaml(text: String): JsonNode = yaml.readTree(expandEnv(text))
-  def parseJson(text: String): JsonNode = json.readTree(expandEnv(text))
+  def parseJson(text: String): JsonNode = Json.mapper.readTree(expandEnv(text))
 
   /** Parse either format (REST bodies may be YAML or JSON; YAML is a
    * superset here since Jackson's YAML parser accepts flow-style JSON). */
   def parseAny(text: String): JsonNode = parseYaml(text)
-
-  def toJsonString(node: JsonNode): String = json.writeValueAsString(node)
 
   // ——— node → typed spec ———
 
@@ -92,10 +90,20 @@ object PipelineSpec {
   private def strSeq(n: JsonNode, field: String): Seq[String] =
     Option(n.get(field)).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
 
+  private val SafeName = "[A-Za-z0-9][A-Za-z0-9._-]*".r
+
+  /** A pipeline name is its directory under the manager's base dir, so it
+   * must be one plain path segment: never empty, `.`, `..` or holding a
+   * `/`, which would put or delete files outside that directory. */
+  def requireSafeName(name: String): String = {
+    require(SafeName.matches(name), s"pipeline name '$name' must match ${SafeName.regex}")
+    name
+  }
+
   def fromNode(root: JsonNode): Pipeline = {
     val md = root.get("metadata")
     require(md != null, "spec needs a metadata block")
-    val metadata = Metadata(str(md, "name"), str(md, "tenant", "default"),
+    val metadata = Metadata(requireSafeName(str(md, "name")), str(md, "tenant", "default"),
       strMap(md, "labels"), strMap(md, "annotations"))
     val sp = root.get("spec")
     require(sp != null, "spec needs a spec block")

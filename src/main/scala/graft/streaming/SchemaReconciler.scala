@@ -1,10 +1,12 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.core.Json.mapper
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 /**
  * Failover schema reconciliation: after a source identity change (failover
@@ -103,22 +105,28 @@ object SchemaReconciler {
     Reconcilable(deltas.result())
   }
 
-  private val mapper = new ObjectMapper()
-
-  private def deltaJson(d: SchemaDelta): String = d match {
-    case ColumnAdded(c) => s"""{"type":"column_added","column":{"name":"${c.name}","data_type":"${c.dataType}"}}"""
-    case ColumnDropped(n) => s"""{"type":"column_dropped","name":"$n"}"""
-    case ColumnTypeChanged(n, o, nw) => s"""{"type":"column_type_changed","name":"$n","old_type":"$o","new_type":"$nw"}"""
-    case TableDropped => """{"type":"table_dropped"}"""
+  private def deltaJson(d: SchemaDelta): ObjectNode = {
+    val o = mapper.createObjectNode()
+    d match {
+      case ColumnAdded(c) =>
+        o.put("type", "column_added").putObject("column").put("name", c.name).put("data_type", c.dataType)
+      case ColumnDropped(n) => o.put("type", "column_dropped").put("name", n)
+      case ColumnTypeChanged(n, from, to) =>
+        o.put("type", "column_type_changed").put("name", n).put("old_type", from).put("new_type", to)
+      case TableDropped => o.put("type", "table_dropped")
+    }
+    o
   }
 
-  def recordJson(r: Record): String =
-    s"""{"id":"${r.id}","source_id":"${r.sourceId}",""" +
-      s""""previous_identity":{"server_id":${r.prev.serverId},"uuid":"${r.prev.uuid}","host":"${r.prev.host}"},""" +
-      s""""new_identity":{"server_id":${r.next.serverId},"uuid":"${r.next.uuid}","host":"${r.next.host}"},""" +
-      s""""table_results":${r.results.map(t =>
-        s"""{"db":"${t.db}","table":"${t.table}","deltas":${t.deltas.map(deltaJson).mkString("[", ",", "]")}}""")
-        .mkString("[", ",", "]")},"reconciled_at_ms":${r.reconciledAtMs}}"""
+  def recordJson(r: Record): String = {
+    val o = mapper.createObjectNode().put("id", r.id).put("source_id", r.sourceId)
+    for ((key, i) <- Seq("previous_identity" -> r.prev, "new_identity" -> r.next))
+      o.putObject(key).put("server_id", i.serverId).put("uuid", i.uuid).put("host", i.host)
+    val results = o.putArray("table_results")
+    r.results.foreach(t => results.addObject().put("db", t.db).put("table", t.table)
+      .putArray("deltas").addAll(t.deltas.map(deltaJson).asJava))
+    mapper.writeValueAsString(o.put("reconciled_at_ms", r.reconciledAtMs))
+  }
 
   /** Raised under the Halt policy or on a PK hard stop. */
   class ReconcileHalt(message: String) extends RuntimeException(message)

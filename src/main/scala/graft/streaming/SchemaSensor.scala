@@ -1,9 +1,13 @@
 package graft.streaming
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import com.fasterxml.jackson.databind.node.TextNode
+import graft.core.Json.mapper
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /**
  * Per-table schema-sensing LIFECYCLE: the reference sensor's six observe
@@ -278,70 +282,64 @@ class SchemaSensor(val config: SchemaSensor.Config = SchemaSensor.Config(),
 
   // ———————————————————————— JSON (REST surface) ————————————————————————
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      // every other control char must also be escaped or the JSON is invalid
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private def strings(xs: Iterable[String]) = xs.map(TextNode.valueOf).toSeq.asJava
 
-  /** `InferredSchemaInfo` row (rest-api/src/sensing.rs:62-78). */
-  def infoJson(table: String): Option[String] = synchronized {
-    tables.get(table).map { st =>
-      s"""{"table":"${esc(table)}","fingerprint":"${st.fingerprint}","sequence":${st.sequence},""" +
-        s""""event_count":${st.eventCount},"stabilized":${st.stabilized},""" +
-        s""""first_seen_ms":${st.firstSeenMs},"last_seen_ms":${st.lastSeenMs}}"""
-    }
+  /** `InferredSchemaInfo` row (rest-api/src/sensing.rs:62-78), and with
+   * `withFields` the `InferredSchemaDetail` (rest-api/src/sensing.rs:81-118). */
+  private def summaryLocked(table: String, st: TableState, withFields: Boolean): String = {
+    val o = mapper.createObjectNode().put("table", table).put("fingerprint", st.fingerprint)
+      .put("sequence", st.sequence).put("event_count", st.eventCount).put("stabilized", st.stabilized)
+    if (withFields) o.putArray("fields").addAll(st.fields.toSeq.map { case (name, fi) =>
+      val f = mapper.createObjectNode().put("name", name)
+      f.putArray("types").addAll(strings(fi.types.toSeq.sorted))
+      f.put("nullable", fi.sawNull).put("optional", fi.presentIn < st.sensedCount)
+    }.asJava)
+    mapper.writeValueAsString(o.put("first_seen_ms", st.firstSeenMs).put("last_seen_ms", st.lastSeenMs))
   }
 
-  /** `InferredSchemaDetail` with fields (rest-api/src/sensing.rs:81-118). */
-  def detailJson(table: String): Option[String] = synchronized {
-    tables.get(table).map { st =>
-      val fields = st.fields.map { case (name, fi) =>
-        s"""{"name":"${esc(name)}","types":[${fi.types.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-          s""""nullable":${fi.sawNull},"optional":${fi.presentIn < st.sensedCount}}"""
-      }.mkString("[", ",", "]")
-      s"""{"table":"${esc(table)}","fingerprint":"${st.fingerprint}","sequence":${st.sequence},""" +
-        s""""event_count":${st.eventCount},"stabilized":${st.stabilized},"fields":$fields,""" +
-        s""""first_seen_ms":${st.firstSeenMs},"last_seen_ms":${st.lastSeenMs}}"""
-    }
-  }
+  def infoJson(table: String): Option[String] =
+    synchronized(tables.get(table).map(summaryLocked(table, _, withFields = false)))
+
+  def detailJson(table: String): Option[String] =
+    synchronized(tables.get(table).map(summaryLocked(table, _, withFields = true)))
 
   /** JSON Schema export (reference export_json_schema, json_schema.rs). */
   def jsonSchema(table: String): Option[String] = synchronized {
     tables.get(table).map { st =>
-      val props = st.fields.map { case (name, fi) =>
+      val o = mapper.createObjectNode()
+        .put("$schema", "https://json-schema.org/draft/2020-12/schema")
+        .put("type", "object").put("title", table)
+      val props = o.putObject("properties")
+      st.fields.foreach { case (name, fi) =>
         val types = fi.types.map {
           case "int" => "integer"; case "float" => "number"; case "bool" => "boolean"
           case "object" => "object"; case "array" => "array"; case _ => "string"
         }.toSeq.distinct.sorted ++ (if (fi.sawNull) Seq("null") else Nil)
-        val t = if (types.size == 1) "\"" + types.head + "\""
-                else types.map("\"" + _ + "\"").mkString("[", ",", "]")
-        s""""${esc(name)}":{"type":$t}"""
-      }.mkString("{", ",", "}")
-      val required = st.fields.collect {
-        case (name, fi) if fi.presentIn >= st.sensedCount && !fi.sawNull => "\"" + esc(name) + "\""
-      }.mkString("[", ",", "]")
-      s"""{"$$schema":"https://json-schema.org/draft/2020-12/schema","type":"object","title":"${esc(table)}","properties":$props,"required":$required}"""
+        if (types.size == 1) props.putObject(name).put("type", types.head)
+        else props.putObject(name).putArray("type").addAll(strings(types))
+      }
+      o.putArray("required").addAll(strings(st.fields.collect {
+        case (name, fi) if fi.presentIn >= st.sensedCount && !fi.sawNull => name
+      }))
+      mapper.writeValueAsString(o)
     }
   }
 
   /** `CacheStats` (rest-api/src/sensing.rs:151-177). */
   def cacheStatsJson: String = synchronized {
-    val rows = tables.map { case (t, st) =>
-      s"""{"table":"${esc(t)}","cached_structures":${st.structures.size},""" +
-        s""""max_cache_size":${config.structureCacheSize},"cache_hits":${st.cacheHits},""" +
-        s""""cache_misses":${st.cacheMisses}}"""
-    }.mkString("[", ",", "]")
+    val o = mapper.createObjectNode()
+    val rows = o.putArray("tables")
+    tables.foreach { case (t, st) =>
+      rows.addObject().put("table", t).put("cached_structures", st.structures.size)
+        .put("max_cache_size", config.structureCacheSize).put("cache_hits", st.cacheHits)
+        .put("cache_misses", st.cacheMisses)
+    }
     val (h, m) = tables.values.foldLeft((0L, 0L)) { case ((a, b), st) =>
       (a + st.cacheHits, b + st.cacheMisses)
     }
     val rate = if (h + m == 0) 0.0 else h.toDouble / (h + m)
-    // Double.toString, not f"%.4f": the f interpolator is locale-sensitive
-    // and renders "0,98" under comma-decimal locales → invalid JSON
-    val rateS = (math.rint(rate * 10000) / 10000).toString
-    s"""{"tables":$rows,"total_cache_hits":$h,"total_cache_misses":$m,"hit_rate":$rateS}"""
+    mapper.writeValueAsString(o.put("total_cache_hits", h).put("total_cache_misses", m)
+      .put("hit_rate", math.rint(rate * 10000) / 10000))
   }
 }
 

@@ -28,6 +28,20 @@ class BacklogSourceSpec extends SparkSpec {
     assert(parseOffset("""{"segment":1,"line":2}""") == BacklogOffset(1, 2L))
   }
 
+  test("offset json: the strings in existing checkpoints parse, and json() writes them byte for byte") {
+    import BacklogSource.{BacklogOffset, parseOffset}
+    val bare = """{"segment":1,"line":2}"""
+    val named = """{"segment":3,"line":42,"name":"we\"ird\\name.jsonl"}"""
+    assert(parseOffset(bare) == BacklogOffset(1, 2L) && BacklogOffset(1, 2L).json() == bare)
+    assert(parseOffset(named) == BacklogOffset(3, 42L, "we\"ird\\name.jsonl"))
+    assert(BacklogOffset(3, 42L, "we\"ird\\name.jsonl").json() == named)
+    // a control character in a name, as older offsets escaped it
+    val tab = "{\"segment\":0,\"line\":7,\"name\":\"tab" + "\\" + "u0009here\"}"
+    assert(parseOffset(tab) == BacklogOffset(0, 7L, "tab\there"))
+    for (bad <- Seq("", "{}", """{"segment":"1","line":2}""", """{"segment":1}""", "{\"segment\":1,"))
+      intercept[IllegalArgumentException](parseOffset(bad))
+  }
+
   test("reads segments in order with (segment, pos) offsets") {
     val dir = Files.createTempDirectory("backlog").toString
     writeSegment(dir, "seg-000.jsonl", (1 to 5).map(eventJson(_)))

@@ -1,11 +1,13 @@
 package graft.streaming
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-import java.net.URI
+import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 class ControlPlaneSpec extends SparkSpec {
@@ -66,5 +68,73 @@ class ControlPlaneSpec extends SparkSpec {
       assert(code == 200 && body.contains("e1") && body.contains("boom"))
       assert(get(cp.boundPort, "/dlq")._1 == 400)
     } finally cp.stop()
+  }
+
+  // A name with a quote, a backslash and two control characters: any of
+  // them pasted into JSON text unescaped makes the document unparseable.
+  private val weird = "we\"ird\\name\t\u0001"
+  private val enc = URLEncoder.encode(weird, StandardCharsets.UTF_8)
+  private val json = new ObjectMapper()
+
+  test("404 bodies name an odd path segment in JSON that parses, for every route family") {
+    val reg = new SchemaRegistry(spark, Files.createTempDirectory("cpodd").toString + "/ledger")
+    reg.register("orders", org.apache.spark.sql.types.StructType.fromDDL("id bigint"), 1000L)
+    val cp = new ControlPlane(spark).registerSchemaRegistry("p1", reg)
+      .registerSensor("p1", new SchemaSensor())
+      .registerDlq("p1", new Dlq.DlqQueue(Files.createTempDirectory("cpoddq").toString, 10))
+      .start()
+    try {
+      for ((path, code) <- Seq(
+          s"/pipelines/$enc/schemas" -> 404,
+          s"/pipelines/p1/schemas/$enc" -> 404,
+          s"/pipelines/p1/schemas/$enc/at/1" -> 404,
+          s"/pipelines/p1/schemas/orders/at/$enc" -> 400,
+          s"/pipelines/$enc/sensing/schemas" -> 404,
+          s"/pipelines/p1/sensing/schemas/$enc" -> 404,
+          s"/pipelines/p1/sensing/schemas/$enc/json-schema" -> 404,
+          s"/pipelines/p1/sensing/evidence/$enc" -> 404,
+          s"/pipelines/$enc/drift" -> 404,
+          s"/pipelines/p1/drift/$enc" -> 404,
+          s"/dlq/$enc/count" -> 404,
+          s"/pipelines/$enc" -> 404)) {
+        val (c, body) = get(cp.boundPort, path)
+        assert(c == code, s"$path: $body")
+        assert(json.readTree(body).get("error").asText.contains(weird), s"$path: $body")
+      }
+    } finally cp.stop()
+  }
+
+  test("query list, sensed tables, evidence and drift round-trip odd names through JSON") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val sensor = new SchemaSensor()
+    sensor.observe(weird, """{"k":1}""")
+    sensor.recordEvidence(weird, 1L, Seq((weird, 2L)), Seq(weird))
+    sensor.recordDrift(weird, Seq((weird, "type_mismatch", "int", weird, 3L)))
+    val cp = new ControlPlane(spark).registerSensor("p1", sensor).start()
+    val ms = MemoryStream[Int]
+    val q = ms.toDF().writeStream.queryName(weird).format("noop")
+      .option("checkpointLocation", Files.createTempDirectory("cpoddq").toString)
+      .start()
+    try {
+      val (c1, list) = get(cp.boundPort, "/pipelines")
+      assert(c1 == 200)
+      val names = json.readTree(list).elements()
+      var found = false
+      while (names.hasNext) found ||= names.next().get("name").asText == weird
+      assert(found, list)
+      val base = "/pipelines/p1"
+      def doc(path: String) = { val (c, b) = get(cp.boundPort, path); assert(c == 200, b); json.readTree(b) }
+      assert(doc(s"$base/sensing/schemas").at("/0/table").asText == weird)
+      assert(doc(s"$base/sensing/schemas/$enc").get("table").asText == weird)
+      assert(doc(s"$base/sensing/schemas/$enc/json-schema").get("title").asText == weird)
+      assert(doc(s"$base/sensing/stats").at("/tables/0/table").asText == weird)
+      val ev = doc(s"$base/sensing/evidence/$enc")
+      assert(ev.at("/heavy_hitters/0/field").asText == weird &&
+        ev.at("/sampled_fields/0").asText == weird)
+      val drift = doc(s"$base/drift/$enc")
+      assert(drift.get("table").asText == weird && drift.at("/columns/0/column").asText == weird &&
+        drift.at("/columns/0/observed").asText == weird)
+    } finally { q.stop(); cp.stop() }
   }
 }

@@ -174,7 +174,11 @@ class OpsSurfaceSpec extends SparkSpec {
     r.gauge("graft_source_lag_seconds", 1.5, Seq("pipeline" -> "p1"))
     r.observe("graft_sink_latency_seconds", 0.2, Seq("pipeline" -> "p1"))
     r.observe("graft_sink_latency_seconds", 7.0, Seq("pipeline" -> "p1"))
+    // label values come from YAML: a line feed must not split the sample line
+    r.gauge("graft_sink_up", 1.0, Seq("sink" -> "lake\nb\\\"q"))
     val text = r.scrape()
+    assert(text.contains("graft_sink_up{sink=\"lake\\nb\\\\\\\"q\"} 1\n"))
+    assert(text.split("\n").forall(_.matches("""[a-z_]+(\{.*\})? \S+""")), text)
     assert(text.contains("""graft_source_events_total{op="c",pipeline="p1"} 42"""))
     assert(text.contains("""graft_source_lag_seconds{pipeline="p1"} 1.5"""))
     assert(text.contains("""graft_sink_latency_seconds_count{pipeline="p1"} 2"""))

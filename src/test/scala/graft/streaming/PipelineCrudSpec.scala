@@ -1,10 +1,14 @@
 package graft.streaming
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
 
-import java.net.URI
+import java.io.{BufferedReader, InputStreamReader}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /**
  * Pipeline CRUD end-to-end over the REST control plane (reference
@@ -124,6 +128,69 @@ class PipelineCrudSpec extends SparkSpec {
       val (nc, _) = send("GET", s"$base/pipelines/orders-cdc")
       assert(nc == 404)
     } finally cp.stop()
+  }
+
+  /** Status code of a request sent byte for byte, so that no client
+   * normalizes an encoded dot segment away before the server sees it. */
+  private def rawStatus(port: Int, method: String, path: String): Int = {
+    val s = new Socket("127.0.0.1", port)
+    try {
+      s.setSoTimeout(30000)
+      s.getOutputStream.write((s"$method $path HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        "Content-Length: 0\r\nConnection: close\r\n\r\n").getBytes(UTF_8))
+      s.getOutputStream.flush()
+      new BufferedReader(new InputStreamReader(s.getInputStream, UTF_8)).readLine().split(" ")(1).toInt
+    } finally s.close()
+  }
+
+  test("a pipeline name is one path segment: '..' and '.' delete nothing, '../x' is refused") {
+    val root = Files.createTempDirectory("crudname")
+    val base = root.resolve("pipelines")
+    val sentinel = Files.writeString(root.resolve("sentinel"), "keep")
+    val otherPipeline = Files.writeString(
+      Files.createDirectories(base.resolve("other/checkpoint")).resolve("keep"), "keep")
+    val mgr = new PipelineManager(spark, base.toString)
+    intercept[IllegalArgumentException](mgr.delete(".."))
+    intercept[IllegalArgumentException](mgr.delete("."))
+    val cp = new ControlPlane(spark, 0, Some(mgr)).start()
+    try {
+      assert(rawStatus(cp.boundPort, "DELETE", "/pipelines/%2E%2E") == 400)
+      assert(rawStatus(cp.boundPort, "DELETE", "/pipelines/%2E") == 400)
+      val (code, body) = send("POST", s"http://127.0.0.1:${cp.boundPort}/pipelines",
+        s"""metadata: {name: ../x}
+           |spec:
+           |  source: {kind: backlog, path: $root/backlog}
+           |  sinks: [{kind: memory, id: m}]
+           |""".stripMargin)
+      assert(code == 400, body)
+    } finally cp.stop()
+    assert(Files.exists(sentinel) && Files.exists(otherPipeline))
+    assert(!Files.exists(root.resolve("x")))
+  }
+
+  test("manager info JSON round-trips a sink id with a quote, a backslash and a control char") {
+    val json = new ObjectMapper()
+    val root = Files.createTempDirectory("crudsink").toString
+    Files.createDirectories(Paths.get(s"$root/backlog"))
+    val sinkId = "we\"ird\\sink\u0001"
+    val mgr = new PipelineManager(spark, s"$root/pipelines")
+    val cp = new ControlPlane(spark, 0, Some(mgr)).start()
+    val base = s"http://127.0.0.1:${cp.boundPort}/pipelines"
+    try {
+      val (cc, created) = send("POST", base,
+        s"""metadata: {name: odd-sink}
+           |spec:
+           |  source: {kind: backlog, path: $root/backlog}
+           |  sinks: [{kind: memory, id: ${json.writeValueAsString(sinkId)}}]
+           |""".stripMargin)
+      assert(cc == 201, created)
+      val (gc, info) = send("GET", s"$base/odd-sink")
+      assert(gc == 200, info)
+      val node = json.readTree(info)
+      assert(node.at("/ops/checkpoints").properties().asScala.map(_.getKey).toSeq == Seq(sinkId))
+      assert(node.at("/spec/spec/sinks/0/id").asText == sinkId)
+      assert(json.readTree(send("GET", base)._2).at("/0/name").asText == "odd-sink")
+    } finally { mgr.delete("odd-sink"); cp.stop() }
   }
 
   test("spec loader builds flatten and outbox processors") {

@@ -106,4 +106,23 @@ class SchemaReconcilerSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/state/src1.history.jsonl"))
     assert(history.size == 2) // append-only audit trail
   }
+
+  test("a record whose host and column names hold quotes is JSON that marks the failover done") {
+    val (dir, registry) = freshSetup()
+    val rec = new Reconciler(spark, registry, s"$dir/state")
+    val oddNext = ServerIdentity(2, "uuid-replica", "db-\"b\"\\east\t")
+    val oddCol = "say \"hi\"\\now"
+    rec.run("src1", prev, oddNext,
+      Seq(ReconcileInput("sh\"op", "orders", None),
+        ReconcileInput("shop", "orders", Some(liveCols :+ col(oddCol, "string")))), Adapt)
+    assert(rec.alreadyCompleted("src1", prev, oddNext))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val record = json.readTree(Files.readString(java.nio.file.Paths.get(s"$dir/state/src1.json")))
+    assert(record.at("/new_identity/host").asText == oddNext.host)
+    assert(record.at("/table_results/0/db").asText == "sh\"op")
+    val added = record.at("/table_results/1/deltas").elements()
+    var names = Seq.empty[String]
+    while (added.hasNext) names :+= added.next().at("/column/name").asText
+    assert(names.contains(oddCol), record.toString)
+  }
 }
