@@ -1,6 +1,7 @@
 package graft
 import graft.core.Json.mapper
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.GraftBridge
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -57,8 +58,8 @@ object Verify {
       // repeating: cancelJobGroup only hits CURRENTLY ACTIVE jobs, so a
       // one-shot timer would miss a job submitted after the deadline fired
       watchdog.scheduleAtFixedRate(cancel, timeoutMs, 5000L)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try GraftBridge.writeFiles(fn(spark, sfDir).coalesce(1), "parquet", s"$outDir/$name",
+        overwrite = true)
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
         System.err.println(s"[verify] $name FAILED: $msg")

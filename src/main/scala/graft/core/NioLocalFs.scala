@@ -7,7 +7,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 /**
- * The `file:` file system every library `DataFrameWriter` writes through.
+ * The `file:` file system every library file write
+ * (`GraftBridge.writeFiles`) writes through.
  *
  * Without `libhadoop`, Hadoop's `RawLocalFileSystem.setPermission` runs
  * `chmod` as a child process, and a local write calls it for every
@@ -18,10 +19,11 @@ import java.nio.file.attribute.PosixFilePermission
  * keeps Hadoop's checksum layer, so the on-disk layout (`.crc` files
  * included) is the stock one.
  *
- * Writers pass [[options]]. The keys are scheme-specific, so a writer to
- * `hdfs://` or `s3a://` is untouched. `FileSystem.CACHE` keys instances by
- * scheme, authority and user, not by configuration, so the NIO class only
- * takes effect with the cache disabled for `file:`.
+ * `GraftBridge.writeFiles` passes [[options]]. The keys are
+ * scheme-specific, so a write to `hdfs://` or `s3a://` is untouched.
+ * `FileSystem.CACHE` keys instances by scheme, authority and user, not by
+ * configuration, so the NIO class only takes effect with the cache
+ * disabled for `file:`.
  */
 object NioLocalFs {
   val options: Map[String, String] = Map(

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 
 /**
@@ -351,9 +352,9 @@ object Similarity {
   def writeIvfIndex(vectors: DataFrame, centroids: DataFrame, path: String,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     cIdCol: String = "centroid_id", cVecCol: String = "vec"): Unit = {
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    ivfAssign(vectors, centroids, idCol, vecCol, cIdCol, cVecCol)
-      .write.mode("overwrite").partitionBy(cIdCol).parquet(s"$path/cells")
+    GraftBridge.writeFiles(centroids, "parquet", s"$path/centroids", overwrite = true)
+    GraftBridge.writeFiles(ivfAssign(vectors, centroids, idCol, vecCol, cIdCol, cVecCol),
+      "parquet", s"$path/cells", partitionBy = Seq(cIdCol), overwrite = true)
   }
 
   /** Load a persisted IVF index → (assigned cells, centroids). */

@@ -27,8 +27,9 @@ import scala.util.{Failure, Success, Try}
  * (`GraftBridge.freeze`). Sinks receive a leaf DataFrame over the stored
  * rows whose plan statistics carry that count and size, so no sink re-runs
  * or re-plans the processor chain, and none needs a `count()` of its own.
- * Each sink write is a distributed job; the stored rows are dropped when
- * the batch ends; the only driver-side state is the tiny ledger.
+ * Each sink write is a distributed job, tagged with [[sinkJobTag]]; the
+ * stored rows are dropped when the batch ends; the only driver-side state
+ * is the tiny ledger.
  */
 object CdcPipeline {
 
@@ -55,6 +56,11 @@ object CdcPipeline {
     case CommitQuorum(n) => acks.values.count(identity) >= n
   }
 
+  /** The job tag of one sink's work in [[processBatch]], `graft:<pipeline>:sink:<id>`
+   * (a job tag cannot hold a comma). */
+  def sinkJobTag(pipeline: String, sinkId: String): String =
+    s"graft:$pipeline:sink:$sinkId".replace(',', '_')
+
   /**
    * The foreachBatch body. Public so batch-mode tests can drive it directly.
    * Throws when the commit policy is not satisfied → Spark retries the batch
@@ -63,6 +69,7 @@ object CdcPipeline {
   def processBatch(cfg: Config, ledger: SinkLedger)(batch0: DataFrame, batchId: Long): Unit = {
     val frozen = GraftBridge.freeze(cfg.processors.foldLeft(batch0)((df, p) => p(df)))
     val (batch, rows) = (frozen.df, frozen.rows)
+    val sc = batch.sparkSession.sparkContext
     val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))
     try {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -74,8 +81,11 @@ object CdcPipeline {
             val t0 = System.nanoTime()
             def record(ok: Boolean): Unit = cfg.metrics.foreach(Metrics.recordSinkBatch(_,
               cfg.pipelineName, sink.id, rows, (System.nanoTime() - t0) / 1e9, ok))
+            val tag = sinkJobTag(cfg.pipelineName, sink.id)
+            sc.addJobTag(tag)
             try sink.write(filtered, batchId)
             catch { case e: Throwable => record(ok = false); throw e }
+            finally sc.removeJobTag(tag)
             record(ok = true)
             true
           }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.core.NioLocalFs
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 
 /**
@@ -48,8 +48,8 @@ object Dlq {
     val bad = batch.filter(!coalesce(isGood, lit(false)))
     val n = bad.limit(1).count() // cheap existence probe before a write job
     if (n > 0) {
-      bad.select(entry(cfg, errorKind, errorMessage).as("e")).select("e.*")
-        .write.options(NioLocalFs.options).mode("append").parquet(cfg.path)
+      GraftBridge.writeFiles(bad.select(entry(cfg, errorKind, errorMessage).as("e")).select("e.*"),
+        "parquet", cfg.path)
     }
     batch.filter(coalesce(isGood, lit(false)))
   }

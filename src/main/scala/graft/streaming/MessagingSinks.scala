@@ -3,6 +3,8 @@ package graft.streaming
 import graft.core.Retry
 import graft.operators.Routing
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, MapType, StringType}
 
@@ -54,7 +56,8 @@ object MessagingSinks {
    *    transaction).
    *  - Up to [[KafkaLikeSink.RowsPerProducer]] rows: ONE task (a
    *    `coalesce(1)`, no exchange), so one Spark job and one transaction,
-   *    as the reference sends a batch through one producer per sink.
+   *    as the reference sends a batch through one producer per sink. Over a
+   *    frozen batch its plan is a [[GraftBridge.SinkPlan]], planned once.
    *  - More: `ceil(rows / RowsPerProducer)` tasks, at most
    *    `defaultParallelism`, through a hash repartition by key.
    *  - No row count (an unfrozen input, or a sink `filter`): the hash
@@ -64,6 +67,8 @@ object MessagingSinks {
    * `RowsPerProducer` rows, the default parallelism), so a replayed batch
    * sends every key from the same task slot in the same order, the
    * precondition for the idempotent path's (pid, epoch, baseSeq) dedup.
+   * The records are sent from Spark's internal rows, with no conversion of
+   * each row to a `Row`.
    *
    * The producer factory runs once per task; a factory that derives its
    * `transactional.id` from `TaskContext.getPartitionId()` therefore uses
@@ -83,38 +88,52 @@ object MessagingSinks {
         df => to_json(struct(df.columns.map(col).toIndexedSeq: _*)),
       exactlyOnce: Boolean = true) extends EventSink {
 
+    /** The routed records, sorted by key and source sequence within each task. */
+    private def routed(batch: DataFrame): DataFrame = batch.select(
+      Routing.resolveTopic(topicTemplate, staticTopic).as("topic"),
+      coalesce(Routing.resolveKey(keyTemplate), col("event_id")).as("key"),
+      valueColumn(batch).cast(BinaryType).as("value"),
+      coalesce(col("routing.headers"),
+        map().cast(MapType(StringType, StringType))).as("headers"),
+      coalesce(col("source.sequence"), col("ts_ms"), lit(0L)).as("_seq"))
+
+    @transient private lazy val plans = new GraftBridge.SinkPlan((batch, _) =>
+      routed(batch).sortWithinPartitions(col("key"), col("_seq")))
+
     override def write(batch: DataFrame, batchId: Long): Unit = {
       val tasks = KafkaLikeSink.producerTasks(
         batch.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong),
         batch.sparkSession.sparkContext.defaultParallelism)
       if (tasks == 0) return
-      val routed = batch.select(
-        Routing.resolveTopic(topicTemplate, staticTopic).as("topic"),
-        coalesce(Routing.resolveKey(keyTemplate), col("event_id")).as("key"),
-        valueColumn(batch).cast(BinaryType).as("value"),
-        coalesce(col("routing.headers"),
-          map().cast(MapType(StringType, StringType))).as("headers"),
-        coalesce(col("source.sequence"), col("ts_ms"), lit(0L)).as("_seq"))
-      (if (tasks == 1) routed.coalesce(1) else routed.repartition(tasks, col("key")))
-        .sortWithinPartitions(col("key"), col("_seq"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val producer = producerFactory()
-          if (exactlyOnce) producer.beginTransaction()
-          try {
-            rows.foreach { r =>
-              producer.send(WireRecord(r.getString(0), r.getString(1),
-                r.getAs[Array[Byte]](2), Option(r.getMap[String, String](3))
-                  .map(_.toMap).getOrElse(Map.empty)))
+      val query =
+        if (tasks == 1) plans(batch, batchId, partitions = 1)
+        else GraftBridge.planned(routed(batch).repartition(tasks, col("key"))
+          .sortWithinPartitions(col("key"), col("_seq")))
+      val (sinkId, factory, eos) = (id, producerFactory, exactlyOnce)
+      GraftBridge.foreachPartition(query) { rows =>
+        def str(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+        val producer = factory()
+        if (eos) producer.beginTransaction()
+        try {
+          rows.foreach { r =>
+            val headers = if (r.isNullAt(3)) Map.empty[String, String] else {
+              val m = r.getMap(3)
+              val (ks, vs) = (m.keyArray(), m.valueArray())
+              (0 until m.numElements()).map(i => ks.getUTF8String(i).toString ->
+                (if (vs.isNullAt(i)) null else vs.getUTF8String(i).toString)).toMap
             }
-            if (exactlyOnce) producer.commitTransaction()
-          } catch {
-            case e: Throwable =>
-              if (exactlyOnce) producer.abortTransaction()
-              if (producer.isFenced)
-                throw new IllegalStateException(s"producer fenced for sink $id — fatal", e)
-              throw e
+            producer.send(WireRecord(str(r, 0), str(r, 1),
+              if (r.isNullAt(2)) null else r.getBinary(2), headers))
           }
+          if (eos) producer.commitTransaction()
+        } catch {
+          case e: Throwable =>
+            if (eos) producer.abortTransaction()
+            if (producer.isFenced)
+              throw new IllegalStateException(s"producer fenced for sink $sinkId — fatal", e)
+            throw e
         }
+      }
     }
   }
 

@@ -104,7 +104,8 @@ class PipelineManager(spark: SparkSession, baseDir: String) {
   /** Stop and remove checkpoints + ledger (pipeline_manager.rs:888-925). */
   def delete(name: String): Unit = {
     PipelineSpec.requireSafeName(name)
-    get(name).foreach { m => m.query.foreach(q => { q.stop(); q.awaitTermination() }) }
+    val m = get(name).getOrElse(throw new NoSuchElementException(s"no pipeline $name"))
+    m.query.foreach(q => { q.stop(); q.awaitTermination() })
     pipelines.remove(name)
     val dir = java.nio.file.Paths.get(s"$baseDir/$name")
     if (java.nio.file.Files.exists(dir)) {

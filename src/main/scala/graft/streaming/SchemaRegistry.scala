@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.core.NioLocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -37,9 +37,9 @@ class SchemaRegistry(spark: SparkSession, path: String) {
       case prev =>
         val seq = prev.map(_._1 + 1).getOrElse(0L)
         import spark.implicits._
-        Seq((table, fp, seq, atMs, schema.json))
-          .toDF("table", "fingerprint", "sequence", "registered_at_ms", "schema_json")
-          .write.options(NioLocalFs.options).mode("append").parquet(path)
+        GraftBridge.writeFiles(Seq((table, fp, seq, atMs, schema.json))
+          .toDF("table", "fingerprint", "sequence", "registered_at_ms", "schema_json"),
+          "parquet", path)
         seq
     }
   }

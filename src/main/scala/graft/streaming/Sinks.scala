@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.core.NioLocalFs
 import graft.functions.BatchConstant
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -43,20 +43,31 @@ trait EventSink extends Serializable {
  * satisfied: Spark's committer closes every file at micro-batch end, so no
  * file outlives its trigger interval, and idle partitions produce no file.
  *
- * Per-batch driver cost: the partition columns are added in ONE projection
- * (`withColumns`; each `withColumn` re-analyses the whole plan), and the
- * write goes through [[NioLocalFs]], so a local lake sets the permissions
- * of its directories, data files, `.crc` files and `_SUCCESS` in-process
- * instead of spawning a `chmod` for each. The `_batch_id` column (parquet
- * `required int64`) is a [[BatchConstant]], not a `lit`: a Long literal is
- * inlined into the generated Java, so each new batch id would be a codegen
- * cache miss and a Janino compile inside the write task; with the constant
- * read from the references array, every batch after the first reuses the
- * compiled projection.
+ * Per-batch driver cost: the write is one [[GraftBridge.writeFiles]] job, so
+ * a local lake sets the permissions of its directories, data files, `.crc`
+ * files and `_SUCCESS` in-process instead of spawning a `chmod` for each,
+ * and ships no Hadoop defaults to its task. The projection adding the
+ * partition columns is a [[GraftBridge.SinkPlan]]: over a frozen batch it
+ * is planned once, and each later batch only swaps its rows in. The
+ * `_batch_id` column (parquet `required int64`) is a [[BatchConstant]], not
+ * a `lit`: a Long literal is inlined into the generated Java, so each new
+ * batch id would be a codegen cache miss and a Janino compile inside the
+ * write task; with the constant read from the references array, every
+ * batch after the first reuses the compiled projection.
  */
 class ParquetLakeSink(val id: String, path: String,
                       rolling: Rolling.Config = Rolling.Config())
     extends EventSink {
+
+  @transient private lazy val plans = new GraftBridge.SinkPlan((batch, batchId) => {
+    val ts = timestamp_millis(col("ts_ms"))
+    GraftBridge.fileWriteQuery(batch.withColumns(ListMap(
+      "table" -> col("source.table"),
+      "year" -> year(ts),
+      "month" -> month(ts),
+      "day" -> dayofmonth(ts),
+      "_batch_id" -> BatchConstant.column(batchId))), ParquetLakeSink.PartitionBy)
+  })
 
   override def write(batch: DataFrame, batchId: Long): Unit = {
     val stats = batch.queryExecution.optimizedPlan.stats
@@ -65,22 +76,13 @@ class ParquetLakeSink(val id: String, path: String,
     val avgRowBytes = if (rows <= 0) 1.0 else stats.sizeInBytes.toDouble / rows
     val perFile = Rolling.recordsPerFile(rolling, avgRowBytes)
     val tasks = math.max(1L, math.min((rows + perFile - 1) / perFile, Int.MaxValue.toLong))
-    val ts = timestamp_millis(col("ts_ms"))
-    batch
-      .coalesce(tasks.toInt)
-      .withColumns(ListMap(
-        "table" -> col("source.table"),
-        "year" -> year(ts),
-        "month" -> month(ts),
-        "day" -> dayofmonth(ts),
-        "_batch_id" -> BatchConstant.column(batchId)))
-      .write
-      .options(NioLocalFs.options)
-      .option("maxRecordsPerFile", perFile)
-      .partitionBy("table", "year", "month", "day")
-      .mode("append")
-      .parquet(path)
+    GraftBridge.writeFiles(plans(batch, batchId, tasks.toInt), "parquet", path,
+      ParquetLakeSink.PartitionBy, Map("maxRecordsPerFile" -> perFile.toString), overwrite = false)
   }
+}
+
+object ParquetLakeSink {
+  private val PartitionBy = Seq("table", "year", "month", "day")
 }
 
 /**
@@ -123,10 +125,9 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
       // escape the directory value exactly as Spark's own partitioned writes
       // do, so partition discovery over `path` unescapes back to the table name
       val t = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(table)
-      graft.operators.LakeProjection(rows, schema)
-        .withColumn("_batch_id", BatchConstant.column(batchId))
-        .write.options(NioLocalFs.options).mode("append")
-        .parquet(s"$path/table=$t/schema_version=$seq")
+      GraftBridge.writeFiles(graft.operators.LakeProjection(rows, schema)
+        .withColumn("_batch_id", BatchConstant.column(batchId)),
+        "parquet", s"$path/table=$t/schema_version=$seq")
     }
 
     if (eras.length == 1) {
@@ -141,11 +142,10 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
       // one pass splits the batch; __t/__seq are COPIES moved into the
       // directory structure — the original source.table/schema_sequence
       // data columns survive the round-trip untouched
-      batch
+      GraftBridge.writeFiles(batch
         .withColumn("__t", col("source.table"))
-        .withColumn("__seq", col("schema_sequence"))
-        .write.options(NioLocalFs.options).mode("overwrite")
-        .partitionBy("__t", "__seq").parquet(staging)
+        .withColumn("__seq", col("schema_sequence")),
+        "parquet", staging, partitionBy = Seq("__t", "__seq"), overwrite = true)
       try {
         // Read back via partition-column FILTERS, not interpolated paths:
         // Spark escapes special characters (`=`, `%`, space) in partition
@@ -165,12 +165,16 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
   }
 }
 
-/** JSONL lake sink (reference jsonl_writer.rs): one JSON document per line. */
+/** JSONL lake sink (reference jsonl_writer.rs): one JSON document per line.
+ * Its projection is a [[GraftBridge.SinkPlan]], planned once over frozen batches. */
 class JsonlSink(val id: String, path: String, envelope: DataFrame => Column)
     extends EventSink {
+  @transient private lazy val plans =
+    new GraftBridge.SinkPlan((batch, _) => batch.select(envelope(batch).as("value")))
+
   override def write(batch: DataFrame, batchId: Long): Unit =
-    batch.select(envelope(batch).as("value"))
-      .write.options(NioLocalFs.options).mode("append").text(s"$path/batch_id=$batchId")
+    GraftBridge.writeFiles(plans(batch, batchId), "text", s"$path/batch_id=$batchId",
+      Nil, Map.empty, overwrite = false)
 }
 
 /**

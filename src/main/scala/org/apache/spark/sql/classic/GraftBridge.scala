@@ -1,20 +1,39 @@
 package org.apache.spark.sql.classic
 
+import graft.core.NioLocalFs
+import graft.functions.BatchConstant
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, DataSource, FileFormat,
+  FileFormatWriter, PartitioningUtils, V1WritesUtils, WriteFilesExec}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.SchemaUtils
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
+
+import java.util.UUID
 
 /**
  * Bridge exposing Spark's private[sql] Expression ↔ Column conversions to the
  * graft library (needed to wrap custom Catalyst expressions as user-facing
  * Columns in Spark 4's split Column/ColumnNode API), plus the other
- * private[sql] pieces it needs: the micro-batch freeze ([[freeze]]) and
- * the JSON formatters/parsers the fused codecs must match.
+ * private[sql] pieces it needs: the micro-batch freeze ([[freeze]]), a
+ * sink's projection planned once per query ([[SinkPlan]]), the one file
+ * write of the library ([[writeFiles]]) and the JSON formatters/parsers
+ * the fused codecs must match.
  */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -75,6 +94,180 @@ object GraftBridge {
       val leaf = LogicalRDD(output, stored.asInstanceOf[RDD[InternalRow]])(ds.sparkSession,
         Some(Statistics(sizeInBytes = bytes, rowCount = Some(rows)))).newInstance()
       new FrozenBatch(Dataset.ofRows(ds.sparkSession, leaf), rows, stored)
+    }
+  }
+
+  /**
+   * A sink's projection of its input, `build(input, batchId)`, ready to run.
+   *
+   * When the input is a frozen batch (the bare `LogicalRDD` leaf of
+   * [[freeze]]), the projection is planned once per input schema, over a
+   * stand-in leaf. Each batch, the first included, swaps its stored rows
+   * (coalesced to `partitions` tasks) into that physical plan and rebinds
+   * every [[BatchConstant]] to its batch id, so a steady batch does no
+   * analysis, optimization or physical planning. Any other input is planned
+   * on the call, as `build(input.coalesce(partitions), batchId)`.
+   *
+   * A plan is only reused where reuse cannot change a result: it holds no
+   * exchange, subquery or adaptive node, no nondeterministic expression
+   * and no current-time expression (the optimizer folds those into
+   * literals). Other plans are planned every batch.
+   */
+  final class SinkPlan(build: (DataFrame, Long) => DataFrame) {
+    /** The plan for one input schema: `Some((stand-in rows, query))`, or None if not reusable. */
+    @volatile private var cached: (StructType, Option[(RDD[InternalRow], QueryExecution)]) = _
+
+    /** The query to run for `input`; `partitions` 0 keeps the input's partitioning. */
+    def apply(input: DataFrame, batchId: Long, partitions: Int = 0): QueryExecution = {
+      val ds = castToImpl(input)
+      ds.logicalPlan match {
+        case leaf: LogicalRDD if !leaf.isStreaming && leaf.outputOrdering.isEmpty &&
+            leaf.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
+          val c = cached
+          (if (c != null && c._1 == leaf.schema) c else plan(ds.sparkSession, leaf, batchId))._2 match {
+            case Some((stand, query)) =>
+              val rows = if (partitions > 0) leaf.rdd.coalesce(partitions) else leaf.rdd
+              new PlannedExecution(query, query.executedPlan.transformUp {
+                case s: RDDScanExec if s.rdd eq stand => s.copy(rdd = rows)
+              }.transformAllExpressions { case _: BatchConstant => BatchConstant(batchId) })
+            case None => planNow(input, batchId, partitions)
+          }
+        case _ => planNow(input, batchId, partitions)
+      }
+    }
+
+    private def planNow(input: DataFrame, batchId: Long, partitions: Int): QueryExecution =
+      planned(build(if (partitions > 0) input.coalesce(partitions) else input, batchId))
+
+    /** Plans `build` over a stand-in for `leaf` that holds no rows, and caches the result. */
+    private def plan(session: SparkSession, leaf: LogicalRDD, batchId: Long)
+        : (StructType, Option[(RDD[InternalRow], QueryExecution)]) = {
+      val stand = session.sparkContext.emptyRDD[InternalRow]
+      val standIn = LogicalRDD(leaf.output, stand)(session, Some(leaf.stats))
+      val query = planned(build(Dataset.ofRows(session, standIn), batchId))
+      val p = query.executedPlan
+      val reusable = !query.analyzed.containsPattern(CURRENT_LIKE) &&
+        p.collect { case s: RDDScanExec if s.rdd eq stand => s }.size == 1 &&
+        !p.exists(n => n.isInstanceOf[Exchange] || n.isInstanceOf[AdaptiveSparkPlanExec] ||
+          n.subqueries.nonEmpty || n.expressions.exists(!_.deterministic))
+      cached = (leaf.schema, if (reusable) Some((stand, query)) else None)
+      cached
+    }
+  }
+
+  /** `query` with its physical plan replaced by `plan`, which runs the same projection. */
+  private final class PlannedExecution(query: QueryExecution, plan: SparkPlan)
+      extends QueryExecution(query.sparkSession, query.logical) {
+    override def executedPlan: SparkPlan = plan
+  }
+
+  /** `df`'s query as it is planned now. */
+  def planned(df: DataFrame): QueryExecution = castToImpl(df).queryExecution
+
+  /**
+   * Runs `f` on every partition of `query`'s rows, as one job of one SQL
+   * execution (a `Dataset.foreachPartition` without the conversion of each
+   * row to a `Row`).
+   */
+  def foreachPartition(query: QueryExecution)(f: Iterator[InternalRow] => Unit): Unit =
+    SQLExecution.withNewExecutionId(query, Some("foreachPartition")) {
+      query.sparkSession.sparkContext.runJob(query.executedPlan.execute(), f)
+    }
+
+  /**
+   * `df` prepared as the query of a file write partitioned by `partitionBy`,
+   * the way Spark's planned writes (`V1Writes`) prepare it: an empty string
+   * in a nullable string partition column is written as null, and each task
+   * sorts its rows by the partition columns, so it writes one file at a
+   * time. Without partition columns `df` is returned as it is.
+   */
+  def fileWriteQuery(df: DataFrame, partitionBy: Seq[String]): DataFrame =
+    if (partitionBy.isEmpty) df
+    else {
+      val ds = castToImpl(df)
+      val conf = ds.sparkSession.sessionState.conf
+      PartitioningUtils.validatePartitionColumn(ds.schema, partitionBy, conf.caseSensitiveAnalysis)
+      val query = ds.queryExecution.analyzed
+      def find(plan: LogicalPlan, name: String) = plan.output.find(a => conf.resolver(a.name, name)).get
+      val projectList = V1WritesUtils.convertEmptyToNull(query.output, partitionBy.map(find(query, _)))
+      val empty2Null = if (projectList.isEmpty) query else Project(projectList, query)
+      Dataset.ofRows(ds.sparkSession, Sort(
+        partitionBy.map(n => SortOrder(find(empty2Null, n), Ascending)), global = false, empty2Null))
+    }
+
+  /**
+   * The Hadoop configuration a file write to the qualified path `output`
+   * ships to its tasks. `full` is the session's configuration with the
+   * write's options. Hadoop's bundled `core-`, `mapred-` and
+   * `yarn-default.xml` add about 1,070 entries (113 KB) to it, and the
+   * configuration is serialized twice per write (in the job description
+   * and in the stats tracker). For a `file:` output only the entries that
+   * came from elsewhere (the session's SQL confs, `spark.hadoop.*`,
+   * `core-site.xml`, the write's options) are kept: a reader of a dropped
+   * key gets its code default instead, and `NioLocalFsSpec` checks that a
+   * local lake write still lays out the stock files, modes and parquet
+   * footers. Any other scheme gets `full`.
+   */
+  def writeConfiguration(full: Configuration, output: Path): Configuration =
+    if (output.toUri.getScheme != "file") full
+    else {
+      val kept = new Configuration(false)
+      full.iterator().forEachRemaining { e =>
+        val sources = full.getPropertySources(e.getKey)
+        if (sources == null || !sources.forall(_.endsWith("-default.xml"))) kept.set(e.getKey, e.getValue)
+      }
+      kept
+    }
+
+  /** [[writeFiles]] of `df`, prepared by [[fileWriteQuery]] and planned now. */
+  def writeFiles(df: DataFrame, format: String, path: String, partitionBy: Seq[String] = Nil,
+                 options: Map[String, String] = Map.empty, overwrite: Boolean = false): Unit =
+    writeFiles(planned(fileWriteQuery(df, partitionBy)), format, path, partitionBy, options, overwrite)
+
+  /**
+   * Writes `query`'s rows as files of the data source `format` under `path`
+   * with ONE Spark job: what `DataFrameWriter.save` runs, without planning
+   * a write command. `query` must be sorted within its partitions by the
+   * partition columns ([[fileWriteQuery]] prepares it). As the stock
+   * command does, the write uses the session's commit protocol
+   * (`_SUCCESS`, `.crc` files), honours `maxRecordsPerFile`, escapes
+   * partition directory names, reports Spark's SQL write metrics, rejects
+   * duplicate column names and refreshes cached data read from `path`;
+   * `overwrite` deletes the output first, and any other write appends.
+   *
+   * The write goes through [[NioLocalFs]], so a local output sets its
+   * permissions in-process, and ships only [[writeConfiguration]].
+   */
+  def writeFiles(query: QueryExecution, format: String, path: String, partitionBy: Seq[String],
+                 options: Map[String, String], overwrite: Boolean): Unit = {
+    val session = query.sparkSession
+    val conf = session.sessionState.conf
+    val opts = options ++ NioLocalFs.options
+    val fileFormat = DataSource.lookupDataSource(format, conf).getConstructor().newInstance() match {
+      case f: FileFormat => f
+      case v2: FileDataSourceV2 => v2.fallbackFileFormat.getConstructor().newInstance()
+      case _ => throw new IllegalArgumentException(s"$format is not a file format")
+    }
+    SQLExecution.withNewExecutionId(query, Some(s"write $format")) {
+      val plan = query.executedPlan
+      SchemaUtils.checkColumnNameDuplication(plan.output.map(_.name), conf.caseSensitiveAnalysis)
+      val partitionColumns = partitionBy.map(n => plan.output.find(a => conf.resolver(a.name, n))
+        .getOrElse(throw new IllegalArgumentException(s"partition column $n is not in ${plan.output}")))
+      val full = session.sessionState.newHadoopConfWithOptions(opts)
+      val fs = new Path(path).getFileSystem(full)
+      val output = fs.makeQualified(new Path(path))
+      val hadoopConf = writeConfiguration(full, output)
+      val committer = FileCommitProtocol.instantiate(conf.fileCommitProtocolClass,
+        jobId = UUID.randomUUID().toString, outputPath = output.toString)
+      if (overwrite && fs.exists(output) && !committer.deleteWithJob(fs, output, true))
+        throw new java.io.IOException(s"Unable to clear output directory $output prior to writing to it")
+      FileFormatWriter.write(session,
+        WriteFilesExec(plan, fileFormat, partitionColumns, None, opts, Map.empty),
+        fileFormat, committer, FileFormatWriter.OutputSpec(output.toString, Map.empty, plan.output),
+        hadoopConf, partitionColumns, None,
+        Seq(new BasicWriteJobStatsTracker(new SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics)), opts)
+      session.sharedState.cacheManager.recacheByPath(session, output, fs)
     }
   }
 

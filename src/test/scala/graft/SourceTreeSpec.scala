@@ -15,4 +15,21 @@ class SourceTreeSpec extends AnyFunSuite {
     val withNul = files.filter((p: Path) => Files.readAllBytes(p).contains(0.toByte))
     assert(files.size > 100 && withNul.isEmpty, s"NUL bytes in: ${withNul.mkString(", ")}")
   }
+
+  test("src/main writes files only through GraftBridge.writeFiles, never a DataFrame .write") {
+    val main = Paths.get("src/main/scala")
+    val sources = Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    // `.write` followed by a member call (`.write.mode(...)`, `.write\n  .options(...)`);
+    // an output stream's `.write(bytes)` takes an argument list instead
+    val dataFrameWrite = """\.write\s*\.\s*[A-Za-z]""".r
+    val callers = sources.filter { p =>
+      val code = new String(Files.readAllBytes(p), "UTF-8").linesIterator
+        .filterNot(l => l.trim.startsWith("//") || l.trim.startsWith("*")).mkString("\n")
+      dataFrameWrite.findFirstIn(code).isDefined
+    }
+    assert(sources.size > 50 && callers.isEmpty, s"DataFrame .write in: ${callers.mkString(", ")}")
+    val helper = new String(Files.readAllBytes(
+      main.resolve("org/apache/spark/sql/classic/GraftBridge.scala")), "UTF-8")
+    assert(helper.contains("def writeFiles(") && helper.contains("FileFormatWriter.write("))
+  }
 }

@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -20,7 +19,7 @@ import scala.jdk.CollectionConverters._
 /**
  * The NIO `file:` file system is a drop-in for the stock one (same
  * permission bits, same on-disk layout and rows), and every library file
- * writer resolves its output file system to it.
+ * writer writes through it, by way of `GraftBridge.writeFiles`.
  */
 class NioLocalFsSpec extends SparkSpec {
 
@@ -99,36 +98,87 @@ class NioLocalFsSpec extends SparkSpec {
       .select("event_id", "table", "year", "month", "day", "_batch_id")
       .collect().map(_.toString).sorted.toSeq
     assert(rows(nioDir) == rows(stockDir) && rows(nioDir).size == 3)
+    // the same parquet files: footer schema, key-value metadata (Spark's row
+    // metadata included), and each column chunk's codec and encodings
+    val (nioFooters, stockFooters) = (footers(nioDir), footers(stockDir))
+    assert(nioFooters.size == 3 && nioFooters == stockFooters)
+    assert(nioFooters.values.forall(_._2.contains("org.apache.spark.sql.parquet.row.metadata")))
   }
 
-  /** the output file systems the write commands launched by `body` resolved */
-  private def outputFileSystems(body: => Unit): Seq[FileSystem] = {
-    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+  /** partition directory -> (footer schema, key-value metadata, column chunks) of each data file */
+  private def footers(root: JPath): Map[String, (String, Map[String, String], Seq[String])] = {
+    val conf = new Configuration()
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f.toUri), conf))
+      try {
+        val footer = reader.getFooter
+        val meta = footer.getFileMetaData
+        val chunks = footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map { c =>
+          s"${c.getPath} ${c.getCodec} ${c.getEncodings.asScala.toSeq.map(_.toString).sorted}"
+        })
+        root.relativize(f.getParent).toString ->
+          (meta.getSchema.toString, meta.getKeyValueMetaData.asScala.toMap, chunks)
+      } finally reader.close()
+    }.toMap finally s.close()
+  }
+
+  test("a local write ships no Hadoop defaults; any other scheme ships the full configuration") {
+    import org.apache.spark.sql.classic.{GraftBridge, SparkSession => ClassicSession}
+    spark.conf.set("spark.hadoop.graft.probe", "kept")
+    try {
+      val full = spark.asInstanceOf[ClassicSession].sessionState
+        .newHadoopConfWithOptions(NioLocalFs.options)
+      def fromDefaults(k: String) =
+        Option(full.getPropertySources(k)).exists(_.forall(_.endsWith("-default.xml")))
+      val entries = full.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+      val (defaults, rest) = entries.partition { case (k, _) => fromDefaults(k) }
+      assert(defaults.size > 1000, s"only ${defaults.size} entries from *-default.xml files")
+
+      val local = GraftBridge.writeConfiguration(full, new Path("file:/tmp/lake"))
+      val kept = local.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+      assert(kept == rest)
+      assert(kept.keySet.intersect(defaults.keySet).isEmpty)
+      assert(local.get("spark.hadoop.graft.probe") == "kept")
+      assert(local.get("spark.sql.session.timeZone") == "UTC")
+      assert(local.get("fs.file.impl") == classOf[NioLocalFileSystem].getName)
+
+      assert(GraftBridge.writeConfiguration(full, new Path("hdfs://namenode:8020/lake")) eq full)
+      assert(GraftBridge.writeConfiguration(full, new Path("s3a://bucket/lake")) eq full)
+    } finally spark.conf.unset("spark.hadoop.graft.probe")
+  }
+
+  /** bytes written through the stock and through the NIO raw `file:` file system */
+  private def bytesWritten(): (Long, Long) = (
+    FileSystem.getStatistics("file", classOf[RawLocalFileSystem]).getBytesWritten,
+    FileSystem.getStatistics("file", classOf[NioRawLocalFileSystem]).getBytesWritten)
+
+  /** Runs `body` and asserts it made `writes` file writes through
+   * `GraftBridge.writeFiles`, each writing its bytes through the NIO file
+   * system and none through the stock one. */
+  private def assertNio(writes: Int)(body: => Unit): Unit = {
+    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val l = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(f -> qe)
     }
     spark.listenerManager.register(l)
     val sentinel = s"graft_sentinel_${System.nanoTime()}"
+    val (stock0, nio0) = bytesWritten()
     try {
       body
+      val (stock1, nio1) = bytesWritten()
+      assert(stock1 == stock0, s"${stock1 - stock0} bytes written through the stock file system")
+      assert(nio1 > nio0, "no byte written through the NIO file system")
       spark.range(1).as(sentinel).collect() // listener events arrive in order
       val deadline = System.nanoTime() + 60e9.toLong
-      def sentinelSeen = seen.asScala.exists(_.logical.toString.contains(sentinel))
+      def sentinelSeen = seen.asScala.exists(_._2.logical.toString.contains(sentinel))
       while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
       assert(sentinelSeen, "the listener never saw the sentinel query")
     } finally spark.listenerManager.unregister(l)
-    seen.asScala.toSeq.flatMap { qe =>
-      qe.logical.collect { case c: InsertIntoHadoopFsRelationCommand =>
-        c.outputPath.getFileSystem(qe.sparkSession.sessionState.newHadoopConfWithOptions(c.options))
-      }
-    }
-  }
-
-  private def assertNio(writes: Int)(body: => Unit): Unit = {
-    val fss = outputFileSystems(body)
-    assert(fss.size == writes, s"expected $writes write command(s), saw ${fss.size}")
-    fss.foreach(fs => assert(fs.isInstanceOf[NioLocalFileSystem], s"wrote through ${fs.getClass}"))
+    val helperWrites = seen.asScala.count(_._1.startsWith("write "))
+    assert(helperWrites == writes, s"expected $writes file write(s), saw $helperWrites")
   }
 
   test("every library file writer resolves its output file system to the NIO class") {
@@ -161,5 +211,10 @@ class NioLocalFsSpec extends SparkSpec {
     assertNio(1)(typed.write(evs.filter(col("schema_sequence") === 0L), 0L))
     assertNio(3)(typed.write(evs, 1L))
     assert(spark.read.parquet(s"$dir/typed/table=a/schema_version=0").count() == 2)
+    // the IVF index: its centroids and its partitioned cells
+    val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val centroids = Seq((0, Array(1.0f, 0.0f)), (1, Array(0.0f, 1.0f))).toDF("centroid_id", "vec")
+    assertNio(2)(graft.llm.Similarity.writeIvfIndex(vecs, centroids, s"$dir/ivf"))
+    assert(spark.read.parquet(s"$dir/ivf/cells").count() == 2)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Coordinator semantics: fan-out, commit policies, ledger replay, DLQ, tx batching. */
 class CdcPipelineSpec extends SparkSpec {
@@ -288,6 +289,72 @@ class CdcPipelineSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(0L -> 30L, 1L -> 30L, 2L -> 30L))
     assert(spark.read.parquet(s"$dir/typed").count() == 90)
     assert(CdcPipelineSpec.buffer.size() == 90)
+  }
+
+  test("steady kafka and lake batches plan nothing: each sink plans its projection once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
+    val dir = tmp()
+    // a column only this test's batches carry: a planning whose input is a
+    // LogicalRDD holding it is a sink planning over a frozen batch
+    val marker = s"plan_probe_${System.nanoTime()}"
+    val plannings = new java.util.concurrent.atomic.AtomicInteger(0)
+    val probe = new SparkStrategy {
+      override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        if (plan.collectLeaves().exists {
+          case l: LogicalRDD => l.output.exists(_.name == marker)
+          case _ => false
+        }) plannings.incrementAndGet()
+        Nil
+      }
+    }
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = s"$marker-sentinel"
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val tagListener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.description").contains(sentinel)) sentinelSeen.countDown()
+        prop("spark.job.tags").foreach(_.split(",").filter(_.startsWith("graft:")).foreach(tags.add))
+      }
+    }
+    CdcPipelineSpec.buffer.clear()
+    val lake = new ParquetLakeSink("lake", s"$dir/lake")
+    val kafka = new MessagingSinks.KafkaLikeSink("kafka",
+      () => new MessagingSinks.CollectingProducer(CdcPipelineSpec.buffer), staticTopic = "t")
+    val cfg = Config(Seq(lake, kafka), commitPolicy = CommitAll, ledgerDir = s"$dir/ledger",
+      processors = Seq(_.withColumn(marker, lit(1))), pipelineName = "plans")
+    val ledger = new SinkLedger(s"$dir/ledger")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val strategies = session.experimental.extraStrategies
+    session.experimental.extraStrategies = probe +: strategies
+    spark.sparkContext.addSparkListener(tagListener)
+    try {
+      processBatch(cfg, ledger)(events(30), 0L)
+      assert(plannings.get > 0, "the probe saw no sink planning")
+      plannings.set(0)
+      processBatch(cfg, ledger)(events(20), 1L)
+      processBatch(cfg, ledger)(events(25), 2L)
+      processBatch(cfg, ledger)(events(0), 3L) // an empty batch writes no row and sends nothing
+      assert(plannings.get == 0, s"batches 1 to 3 planned ${plannings.get} sink plan nodes")
+      // a filtered (not frozen) input is planned on the call
+      lake.write(events(5).withColumn(marker, lit(1)).filter(col("ts_ms") > 2), 4L)
+      // listener events arrive in order: a job run after the batches is seen last
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      session.experimental.extraStrategies = strategies
+      spark.sparkContext.removeSparkListener(tagListener)
+    }
+    val lakeRows = spark.read.parquet(s"$dir/lake").groupBy("_batch_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lakeRows == Map(0L -> 30L, 1L -> 20L, 2L -> 25L, 4L -> 3L))
+    assert(CdcPipelineSpec.buffer.size() == 75)
+    assert(ledger.committed("lake") == 3L && ledger.committed("kafka") == 3L)
+    assert(tags.asScala.toSet == Set(sinkJobTag("plans", "lake"), sinkJobTag("plans", "kafka")))
   }
 
   test("lake sinks write the same rows and parquet schema as a literal batch id") {

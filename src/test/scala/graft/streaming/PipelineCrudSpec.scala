@@ -193,6 +193,29 @@ class PipelineCrudSpec extends SparkSpec {
     } finally { mgr.delete("odd-sink"); cp.stop() }
   }
 
+  test("deleting a pipeline twice answers 200, then 404 like every other per-name route") {
+    val root = Files.createTempDirectory("cruddelete").toString
+    Files.createDirectories(Paths.get(s"$root/backlog"))
+    val mgr = new PipelineManager(spark, s"$root/pipelines")
+    val cp = new ControlPlane(spark, 0, Some(mgr)).start()
+    val base = s"http://127.0.0.1:${cp.boundPort}/pipelines"
+    try {
+      val (cc, created) = send("POST", base,
+        s"""metadata: {name: twice}
+           |spec:
+           |  source: {kind: backlog, path: $root/backlog}
+           |  sinks: [{kind: memory, id: m}]
+           |""".stripMargin)
+      assert(cc == 201, created)
+      val (first, deleted) = send("DELETE", s"$base/twice")
+      assert(first == 200 && deleted.contains("\"deleted\":true"), deleted)
+      val (second, missing) = send("DELETE", s"$base/twice")
+      assert(second == 404, missing)
+      assert(new ObjectMapper().readTree(missing).get("error").asText.contains("twice"), missing)
+      intercept[NoSuchElementException](mgr.delete("never-created"))
+    } finally cp.stop()
+  }
+
   test("spec loader builds flatten and outbox processors") {
     val p = PipelineSpec.load(
       """metadata: {name: p2, tenant: t}

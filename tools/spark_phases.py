@@ -22,12 +22,19 @@ For every micro-batch the tool reports, in milliseconds:
   - inside addBatch (the SQL execution that runs the foreachBatch body):
     `pre_freeze` (its start to the first nested SQL execution, which is the
     batch's freeze) and `freeze` (that execution's wall time);
-  - for each sink, i.e. each later nested execution, told apart by
-    `InsertIntoHadoopFsRelationCommand` in its physical plan (`file sink`)
-    or its absence (`other sink`): wall time, plan time (execution start to
-    its first job), the number of jobs, the AQE gap (idle time between one
-    job's end and the next job's start, where adaptive execution re-plans),
-    and the summed task run, CPU and deserialize time of its jobs.
+  - for each sink: wall time, plan time (the sink's start to its first
+    job), the number of jobs, the submit-to-launch time (each job's
+    submission to its first task's launch, summed over its jobs), the AQE
+    gap (idle time between one job's end and the next job's start, where
+    adaptive execution re-plans), and the summed task run, CPU and
+    deserialize time of its jobs.
+A sink is found by its job tag: `CdcPipeline.processBatch` runs each sink's
+work under `graft:<pipeline>:sink:<id>`, reported as `sink:<id>`; its start
+is the first of its tagged SQL executions' starts and its jobs'
+submissions. A log without such tags (an older build) falls back to
+telling each later nested execution apart by
+`InsertIntoHadoopFsRelationCommand` in its physical plan (`file sink`) or
+its absence (`other sink`), so logs of both builds can be compared.
 Each line is the median over all applications' batches, after skipping
 each application's first `--skip` (default 1, the warm-up batch).
 """
@@ -46,6 +53,7 @@ PROGRESS = "org.apache.spark.sql.streaming.StreamingQueryListener$QueryProgressE
 TRIGGER_PHASES = ("triggerExecution", "latestOffset", "walCommit", "getBatch",
                   "queryPlanning", "addBatch", "commitOffsets")
 BATCH_RE = re.compile(r"batch = (\d+)")
+SINK_TAG_RE = re.compile(r"^graft:.*:sink:(.+)$")
 
 
 def read_file(path):
@@ -70,10 +78,20 @@ def app_logs(path):
             for log in app_logs(os.path.join(path, f))]
 
 
+def sink_of(tags):
+    """The sink id of the first `graft:<pipeline>:sink:<id>` tag in `tags`, or None."""
+    for t in tags:
+        m = SINK_TAG_RE.match(t)
+        if m:
+            return m.group(1)
+    return None
+
+
 def read(lines):
-    execs = {}  # execution id -> dict(start, end, desc, plan, root)
-    jobs = {}  # job id -> dict(start, end, exec, stages)
-    stage_tasks = defaultdict(lambda: [0.0, 0.0, 0.0])  # run ms, cpu ms, deserialize ms
+    execs = {}  # execution id -> dict(start, end, desc, plan, root, sink)
+    jobs = {}  # job id -> dict(start, end, exec, stages, sink)
+    # stage id -> [run ms, cpu ms, deserialize ms, first task launch]
+    stage_tasks = defaultdict(lambda: [0.0, 0.0, 0.0, None])
     progress = {}  # batch id -> durationMs
     for line in lines:
         try:
@@ -85,7 +103,8 @@ def read(lines):
             eid = e["executionId"]
             execs[eid] = {"start": e["time"], "end": None, "desc": e.get("description") or "",
                           "plan": e.get("physicalPlanDescription") or "",
-                          "root": e.get("rootExecutionId", eid)}
+                          "root": e.get("rootExecutionId", eid),
+                          "sink": sink_of(e.get("jobTags") or [])}
         elif kind == SQL_END:
             if e["executionId"] in execs:
                 execs[e["executionId"]]["end"] = e["time"]
@@ -94,7 +113,8 @@ def read(lines):
             eid = props.get("spark.sql.execution.id")
             jobs[e["Job ID"]] = {"start": e["Submission Time"], "end": None,
                                  "exec": int(eid) if eid is not None else None,
-                                 "stages": e.get("Stage IDs", [])}
+                                 "stages": e.get("Stage IDs", []),
+                                 "sink": sink_of((props.get("spark.job.tags") or "").split(","))}
         elif kind == "SparkListenerJobEnd":
             if e["Job ID"] in jobs:
                 jobs[e["Job ID"]]["end"] = e["Completion Time"]
@@ -104,6 +124,9 @@ def read(lines):
             acc[0] += m.get("Executor Run Time", 0)
             acc[1] += m.get("Executor CPU Time", 0) / 1e6
             acc[2] += m.get("Executor Deserialize Time", 0)
+            launch = (e.get("Task Info") or {}).get("Launch Time")
+            if launch is not None and (acc[3] is None or launch < acc[3]):
+                acc[3] = launch
         elif kind == PROGRESS:
             p = e.get("progress") or {}
             if "batchId" in p:
@@ -111,21 +134,26 @@ def read(lines):
     return execs, jobs, stage_tasks, progress
 
 
-def sink_phases(children, jobs, stage_tasks):
-    """Phases of one sink: its nested executions, in start order."""
-    ids = {c for c, _ in children}
-    js = sorted((j for j in jobs.values() if j["exec"] in ids), key=lambda j: j["start"])
-    start = min(x["start"] for _, x in children)
-    end = max((x["end"] or x["start"]) for _, x in children)
+def sink_phases(children, js, stage_tasks):
+    """Phases of one sink: its executions `children` and its jobs `js`."""
+    js = sorted(js, key=lambda j: j["start"])
+    start = min([x["start"] for _, x in children] + [j["start"] for j in js])
+    end = max([(x["end"] or x["start"]) for _, x in children] +
+              [(j["end"] or j["start"]) for j in js])
     gap = sum(max(0, b["start"] - a["end"]) for a, b in zip(js, js[1:]) if a["end"] is not None)
-    run = cpu = deser = 0.0
+    run = cpu = deser = launch = 0.0
     for j in js:
+        first = None
         for s in j["stages"]:
-            r, c, d = stage_tasks.get(s, (0.0, 0.0, 0.0))
+            r, c, d, t = stage_tasks.get(s, (0.0, 0.0, 0.0, None))
             run, cpu, deser = run + r, cpu + c, deser + d
+            if t is not None and (first is None or t < first):
+                first = t
+        if first is not None:
+            launch += first - j["start"]
     return {"wall": end - start, "plan": (js[0]["start"] - start) if js else 0.0,
-            "jobs": len(js), "aqe_gap": gap, "task_run": run, "task_cpu": cpu,
-            "task_deserialize": deser}
+            "jobs": len(js), "submit_launch": launch, "aqe_gap": gap, "task_run": run,
+            "task_cpu": cpu, "task_deserialize": deser}
 
 
 def batches(execs, jobs, stage_tasks, progress):
@@ -147,12 +175,25 @@ def batches(execs, jobs, stage_tasks, progress):
                if k in TRIGGER_PHASES}
         row["addBatch.pre_freeze"] = freeze["start"] - outer["start"]
         row["addBatch.freeze"] = (freeze["end"] or freeze["start"]) - freeze["start"]
-        groups = defaultdict(list)
-        for c in sinks:
-            file_sink = "InsertIntoHadoopFsRelationCommand" in c[1]["plan"]
-            groups["file sink" if file_sink else "other sink"].append(c)
-        for name, cs in groups.items():
-            for k, v in sink_phases(cs, jobs, stage_tasks).items():
+        ids = {root} | {c for c, _ in children}
+        batch_jobs = [j for j in jobs.values() if j["exec"] in ids]
+        groups = defaultdict(lambda: ([], []))  # sink name -> (executions, jobs)
+        if any(j["sink"] for j in batch_jobs):
+            for c in sinks:
+                if c[1]["sink"]:
+                    groups[f"sink:{c[1]['sink']}"][0].append(c)
+            for j in batch_jobs:
+                if j["sink"]:
+                    groups[f"sink:{j['sink']}"][1].append(j)
+        else:
+            for c in sinks:
+                file_sink = "InsertIntoHadoopFsRelationCommand" in c[1]["plan"]
+                groups["file sink" if file_sink else "other sink"][0].append(c)
+            for cs, js in groups.values():
+                own = {c for c, _ in cs}
+                js.extend(j for j in batch_jobs if j["exec"] in own)
+        for name, (cs, js) in sorted(groups.items()):
+            for k, v in sink_phases(cs, js, stage_tasks).items():
                 row[f"{name}.{k}"] = float(v)
         out[bid] = row
     return out
