@@ -30,10 +30,6 @@ object Dedup {
     docs.groupBy(sha2(col(textCol), 256).as("content_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_dups"))
 
-  /** Word n-gram shingles (n consecutive tokens joined by space), distinct per doc. */
-  def shingles(text: Column, n: Int): Column =
-    TextHashOps.textNgrams(text, n)
-
   /**
    * Exact Jaccard over SORTED-DISTINCT hashed feature arrays (the form
    * [[minhashSignatures]] emits): `|A∩B|` from one two-pointer merge, and

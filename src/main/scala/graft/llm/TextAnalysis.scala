@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -100,24 +100,4 @@ object TextAnalysis {
    */
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(tokenSet(text))))
-
-  /** Convenience: annotate a documents DataFrame with all metrics.
-   * The five counts come from the fused one-pass scan (subexpression
-   * elimination collapses the repeated struct into a single scan per
-   * row); only max_word_len/fingerprint keep their declarative forms
-   * (they need the token ARRAY, not counts). */
-  def annotate(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    val m = metrics(t)
-    docs
-      .withColumn("n_chars_m", m.getField("n_chars"))
-      .withColumn("n_words", m.getField("n_words"))
-      .withColumn("n_punct", m.getField("n_punct"))
-      .withColumn("n_stop", m.getField("n_stop"))
-      .withColumn("n_bpe_tokens", m.getField("n_bpe"))
-      .withColumn("max_word_len", maxWordLen(t))
-      .withColumn("quality", qualityScore(t))
-      .withColumn("lang_pred", langId(t))
-      .withColumn("fingerprint", fingerprint(t))
-  }
 }

@@ -8,8 +8,7 @@ import scala.collection.mutable
  * executes USER-SUPPLIED JAVASCRIPT (crates/processors/src/js.rs:84-130 via
  * deno_core/V8) and this build environment has no JS engine to embed (no
  * GraalJS jar, Nashorn removed in Java 17) — so the contract is implemented
- * rather than delegated. On a real cluster [[ScriptHost.javascript]] can
- * target GraalJS; this engine makes the same scripts run HERE.
+ * rather than delegated: [[ScriptHost]] runs every user script on it.
  *
  * Scope — the ES subset the reference contract and its test corpus use
  * (js_processor_tests.rs): function declarations and expressions, arrow

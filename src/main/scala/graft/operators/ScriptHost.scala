@@ -1,15 +1,13 @@
 package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-
-import javax.script.{ScriptEngine, ScriptEngineManager}
+import com.fasterxml.jackson.databind.node.ArrayNode
 
 /**
- * Script-language user-processor host: runs a user script through any
- * JSR-223 engine as a [[UdfHost.Transform]], so scripted processors get the
- * same chunked-timeout, synthetic-marking, envelope-rebind machinery as
- * Scala ones.
+ * JavaScript user-processor host: runs a user script on the built-in
+ * [[MiniJs]] interpreter as a [[UdfHost.Transform]], so scripted processors
+ * get the same chunked-timeout, synthetic-marking, envelope-rebind
+ * machinery as Scala ones.
  *
  * Reference: crates/processors/src/js.rs — the JS processor contract:
  *  - the script defines `processBatch(events)` (js.rs:84-90);
@@ -23,93 +21,42 @@ import javax.script.{ScriptEngine, ScriptEngineManager}
  *    integer envelope fields are re-normalized on the way out
  *    (js.rs:205-213 — same caveat applies here via `asLong`).
  *
- * Engine-agnostic by design: the host speaks ONE wire — a JSON array in, a
- * JSON array out, via the language-specific `__graft_process(json)` entry
- * point that the per-language preamble defines. JavaScript executes for
- * real everywhere: through `graal.js` when the GraalVM JS jars are on the
- * cluster classpath, and otherwise through the built-in [[MiniJs]]
- * interpreter (this environment bundles no JS engine — Nashorn left the
- * JDK at 15 — so the contract is implemented, not delegated). The same
- * preamble source runs verbatim on both.
+ * The host speaks ONE wire — a JSON array in, a JSON array out, via the
+ * `__graft_process(json)` entry point that the preamble defines. The JVM
+ * bundles no JS engine (Nashorn left the JDK at 15), so the contract is
+ * implemented by [[MiniJs]], not delegated.
  */
 object ScriptHost {
 
-  /** Engine name selecting the built-in [[MiniJs]] interpreter. */
-  val MiniJsEngine = "graft.minijs"
-
-  /** One script language: how to bootstrap and how to invoke per chunk. */
-  case class Language(
-      engineName: String,
-      /** evaluated once per engine, before the user script */
-      preamble: String,
-      /** expression evaluating `__graft_process` on the bound `__graft_in` string */
-      invoke: String)
-
   /**
-   * JavaScript: adapts the reference `processBatch` contract. `__routing`
-   * set by `ev.route()` is surfaced as `topic`/`key`; return-shape
-   * normalization (array | single | null) mirrors js.rs:84-88.
+   * Adapts the reference `processBatch` contract. `__routing` set by
+   * `ev.route()` is surfaced as `topic`/`key`; return-shape normalization
+   * (array | single | null) mirrors js.rs:84-88.
    */
-  val javascript: Language = Language(
-    engineName = "graal.js",
-    preamble =
-      """function route(ev, opts) { ev.__routing = opts; }
-        |var __awaitFn = (typeof __await !== 'undefined') ? __await : function(x) { return x; };
-        |function __graft_process(json) {
-        |  var events = JSON.parse(json);
-        |  for (var i = 0; i < events.length; i++) {
-        |    var ev = events[i];
-        |    ev.route = function(opts) { this.__routing = opts; };
-        |  }
-        |  // async processBatch: settle the promise (built-in engine bridge;
-        |  // identity for sync scripts and external engines)
-        |  var out = __awaitFn(processBatch(events));
-        |  if (out === null || out === undefined) out = events;
-        |  if (!Array.isArray(out)) out = [out];
-        |  for (var j = 0; j < out.length; j++) {
-        |    var o = out[j];
-        |    delete o.route;
-        |    if (o.__routing) {
-        |      o.topic = o.__routing.topic; o.key = o.__routing.key;
-        |      delete o.__routing;
-        |    }
-        |  }
-        |  return JSON.stringify(out);
-        |}""".stripMargin,
-    invoke = "__graft_process(__graft_in)")
-
-  /** Is `engineName` resolvable in this JVM? ([[MiniJsEngine]] always is.) */
-  def isAvailable(engineName: String): Boolean =
-    engineName == MiniJsEngine || new ScriptEngineManager().getEngineByName(engineName) != null
-
-  def availableEngines(): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    new ScriptEngineManager().getEngineFactories.asScala.flatMap(_.getNames.asScala).toSeq
-  }
-
-  // Engines are not thread-safe; UdfHost runs one transform thread per
-  // partition, so engines are cached per (thread, engine, script).
-  // keyed by the FULL script text, not its hashCode — a 32-bit String
-  // hash collision would silently hand one processor another's engine
-  private val engineCache = new ThreadLocal[java.util.HashMap[(String, String), ScriptEngine]] {
-    override def initialValue() = new java.util.HashMap[(String, String), ScriptEngine]()
-  }
-
-  private def engineFor(lang: Language, script: String): ScriptEngine = {
-    val key = (lang.engineName, lang.preamble + script)
-    val cache = engineCache.get()
-    var e = cache.get(key)
-    if (e == null) {
-      e = new ScriptEngineManager().getEngineByName(lang.engineName)
-      require(e != null,
-        s"script engine '${lang.engineName}' not on the classpath " +
-          s"(available: ${availableEngines().mkString(", ")})")
-      if (lang.preamble.nonEmpty) e.eval(lang.preamble)
-      e.eval(script)
-      cache.put(key, e)
-    }
-    e
-  }
+  private val preamble =
+    """function route(ev, opts) { ev.__routing = opts; }
+      |var __awaitFn = (typeof __await !== 'undefined') ? __await : function(x) { return x; };
+      |function __graft_process(json) {
+      |  var events = JSON.parse(json);
+      |  for (var i = 0; i < events.length; i++) {
+      |    var ev = events[i];
+      |    ev.route = function(opts) { this.__routing = opts; };
+      |  }
+      |  // async processBatch: settle the promise (built-in engine bridge;
+      |  // identity for sync scripts and external engines)
+      |  var out = __awaitFn(processBatch(events));
+      |  if (out === null || out === undefined) out = events;
+      |  if (!Array.isArray(out)) out = [out];
+      |  for (var j = 0; j < out.length; j++) {
+      |    var o = out[j];
+      |    delete o.route;
+      |    if (o.__routing) {
+      |      o.topic = o.__routing.topic; o.key = o.__routing.key;
+      |      delete o.__routing;
+      |    }
+      |  }
+      |  return JSON.stringify(out);
+      |}""".stripMargin
 
   private val mapper = new ObjectMapper()
 
@@ -157,24 +104,25 @@ object ScriptHost {
     }
   }
 
-  // MiniJs engines are mutable (global env); cache per (thread, script) like
-  // the JSR-223 engines above.
-  private val miniCache = new ThreadLocal[java.util.HashMap[String, MiniJs.Engine]] {
+  // Engines are mutable (global env) and not thread-safe; UdfHost runs one
+  // transform thread per partition, so engines are cached per (thread,
+  // script), keyed by the FULL script text, not its hashCode — a 32-bit
+  // String hash collision would silently hand one processor another's engine
+  private val engineCache = new ThreadLocal[java.util.HashMap[String, MiniJs.Engine]] {
     override def initialValue() = new java.util.HashMap[String, MiniJs.Engine]()
   }
 
-  private def miniEngineFor(preamble: String, script: String): MiniJs.Engine = {
-    val key = preamble + "\u0000" + script
-    val cache = miniCache.get()
-    var e = cache.get(key)
+  private def engineFor(script: String): MiniJs.Engine = {
+    val cache = engineCache.get()
+    var e = cache.get(script)
     if (e == null) {
-      e = buildMiniEngine(preamble, script)
-      cache.put(key, e)
+      e = buildEngine(script)
+      cache.put(script, e)
     }
     e
   }
 
-  private def buildMiniEngine(preamble: String, script: String): MiniJs.Engine = {
+  private def buildEngine(script: String): MiniJs.Engine = {
     val e = new MiniJs.Engine()
     e.eval(preamble)
     e.eval(script) // throws JsError on invalid syntax — construction fails fast
@@ -185,49 +133,26 @@ object ScriptHost {
 
   /**
    * Build a [[UdfHost.Transform]] from a user script. Fails fast at
-   * construction on a missing engine, a syntax error, or an undefined
-   * `processBatch` (driver side — executors share the classpath). Feed the
-   * result to [[UdfHost.apply]] for the chunked 5 s timeout and synthetic
-   * marking. JavaScript runs on graal.js when present, [[MiniJs]] otherwise.
+   * construction on a syntax error or an undefined `processBatch` (driver
+   * side). Feed the result to [[UdfHost.apply]] for the chunked 5 s timeout
+   * and synthetic marking.
    */
-  def transform(script: String, lang: Language = javascript): UdfHost.Transform = {
-    val useMini = lang.engineName == MiniJsEngine ||
-      (lang.engineName == "graal.js" && !isAvailable("graal.js"))
-    require(useMini || isAvailable(lang.engineName),
-      s"script engine '${lang.engineName}' not on the classpath " +
-        s"(available: ${availableEngines().mkString(", ")}). " +
-        "For JavaScript processors add the GraalVM JS engine jars " +
-        "(org.graalvm.js:js + js-scriptengine) to the cluster classpath.")
-    val l = lang
-    val s = script
-    if (useMini) {
-      buildMiniEngine(l.preamble, s) // validate now, driver-side
-      (events: Iterator[UdfHost.UserEvent]) => {
-        val chunk = events.toSeq
-        if (chunk.isEmpty) Iterator.empty
-        else {
-          val engine = miniEngineFor(l.preamble, s)
-          engine.resetBudget()
-          val out = engine.call("__graft_process", Seq(MiniJs.VStr(toJson(chunk))))
-          fromJson(MiniJs.toStr(out)).iterator
-        }
-      }
-    } else {
-      (events: Iterator[UdfHost.UserEvent]) => {
-        val chunk = events.toSeq
-        if (chunk.isEmpty) Iterator.empty
-        else {
-          val engine = engineFor(l, s)
-          engine.put("__graft_in", toJson(chunk))
-          val out = engine.eval(l.invoke)
-          fromJson(out.toString).iterator
-        }
+  def transform(script: String): UdfHost.Transform = {
+    buildEngine(script) // validate now, driver-side
+    (events: Iterator[UdfHost.UserEvent]) => {
+      val chunk = events.toSeq
+      if (chunk.isEmpty) Iterator.empty
+      else {
+        val engine = engineFor(script)
+        engine.resetBudget()
+        val out = engine.call("__graft_process", Seq(MiniJs.VStr(toJson(chunk))))
+        fromJson(MiniJs.toStr(out)).iterator
       }
     }
   }
 
   /** Sugar: a scripted processor wired through the full UdfHost machinery. */
-  def processor(processorId: String, script: String, lang: Language = javascript,
+  def processor(processorId: String, script: String,
                 timeoutMs: Long = 5000, chunkSize: Int = 2000): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-    UdfHost(processorId, transform(script, lang), timeoutMs, chunkSize)
+    UdfHost(processorId, transform(script), timeoutMs, chunkSize)
 }

@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /**
- * Consistent-snapshot (backfill) support: partitioned reads + resume ledger +
+ * Consistent-snapshot (backfill) support: read chunking + resume ledger +
  * source-position reachability guard.
  *
  * Reference: crates/sources/src/mysql/mysql_snapshot.rs:156-331 (integer-PK
@@ -21,24 +19,6 @@ object SnapshotSupport {
   /** PK-range chunking policy (reference mysql_snapshot.rs:572-580). */
   def chunkCount(rowEstimate: Long, targetRowsPerChunk: Long = 500000L, maxChunks: Int = 4096): Int =
     math.min(maxChunks, math.max(1L, (rowEstimate + targetRowsPerChunk - 1) / targetRowsPerChunk)).toInt
-
-  /**
-   * Partitioned JDBC snapshot read. Thin, intentionally: the scan itself is
-   * Spark's built-in chunked JDBC source; this fixes the option plumbing.
-   */
-  def jdbcSnapshot(spark: SparkSession, url: String, table: String, pkCol: String,
-                   lowerBound: Long, upperBound: Long, rowEstimate: Long,
-                   props: Map[String, String] = Map.empty): DataFrame = {
-    val reader = spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("partitionColumn", pkCol)
-      .option("lowerBound", lowerBound)
-      .option("upperBound", upperBound)
-      .option("numPartitions", chunkCount(rowEstimate))
-      .option("pushDownPredicate", "true")
-    props.foldLeft(reader) { case (r, (k, v)) => r.option(k, v) }.load()
-  }
 
   /**
    * Chunk-strategy chooser (reference postgres_snapshot.rs:349-362): a single
@@ -84,19 +64,6 @@ object SnapshotSupport {
       if (endPage >= totalPages) s"ctid >= '($page,1)'::tid"
       else s"ctid >= '($page,1)'::tid AND ctid < '($endPage,1)'::tid"
     }.toArray
-  }
-
-  /**
-   * Partitioned ctid snapshot read: one Spark partition per page range via
-   * the predicate-array `jdbc` reader. `totalPages` is `pg_class.relpages`
-   * read by the caller (control-plane metadata, one row).
-   */
-  def jdbcCtidSnapshot(spark: SparkSession, url: String, table: String,
-                       totalPages: Long, chunkSizeRows: Long = 500000L,
-                       rowsPerPageEstimate: Long = 100L,
-                       props: java.util.Properties = new java.util.Properties()): DataFrame = {
-    val preds = ctidPredicates(totalPages, ctidPagesPerChunk(chunkSizeRows, rowsPerPageEstimate))
-    spark.read.jdbc(url, table, preds, props)
   }
 
   /**

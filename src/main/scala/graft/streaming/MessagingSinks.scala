@@ -42,41 +42,24 @@ object MessagingSinks {
   }
 
   /**
-   * Kafka-shaped sink with exactly-once semantics: one transaction per
-   * producer task per micro-batch (reference kafka.rs:120-160). Records are
-   * routed/keyed via the event's routing override → template → static
-   * cascade, and delivered **ordered by key**: each producer task sorts its
-   * rows by key and source sequence, preserving the per-PK ordering
-   * guarantee (reference docs/src/guarantees.md:41-66).
+   * Kafka-shaped sink with exactly-once semantics: one transaction of one
+   * producer per micro-batch, as the reference sends a batch through one
+   * producer per sink (kafka.rs:120-160, `transactional.id =
+   * deltaforge-{pipeline}-{sink}`). Records are routed/keyed via the
+   * event's routing override → template → static cascade, and delivered
+   * **ordered by key**: the one producer task sorts its rows by key and
+   * source sequence, preserving the per-PK ordering guarantee (reference
+   * docs/src/guarantees.md:41-66), and a replayed batch sends every key in
+   * the same order from the same task slot, 0.
    *
-   * Producer tasks per batch ([[KafkaLikeSink.producerTasks]]): the row
-   * count comes from the batch's plan statistics, which a batch frozen by
-   * [[CdcPipeline]] carries, so sizing costs no job.
-   *  - 0 rows: no job and no producer (no InitProducerId, no empty
-   *    transaction).
-   *  - Up to [[KafkaLikeSink.RowsPerProducer]] rows: ONE task (a
-   *    `coalesce(1)`, no exchange), so one Spark job and one transaction,
-   *    as the reference sends a batch through one producer per sink. Over a
-   *    frozen batch its plan is a [[GraftBridge.SinkPlan]], planned once.
-   *  - More: `ceil(rows / RowsPerProducer)` tasks, at most
-   *    `defaultParallelism`, through a hash repartition by key.
-   *  - No row count (an unfrozen input, or a sink `filter`): the hash
-   *    repartition by key at `defaultParallelism`; the sink never runs a
-   *    `count()`.
-   * The task count depends only on the batch's row count (and, above
-   * `RowsPerProducer` rows, the default parallelism), so a replayed batch
-   * sends every key from the same task slot in the same order, the
-   * precondition for the idempotent path's (pid, epoch, baseSeq) dedup.
-   * The records are sent from Spark's internal rows, with no conversion of
-   * each row to a `Row`.
-   *
-   * The producer factory runs once per task; a factory that derives its
-   * `transactional.id` from `TaskContext.getPartitionId()` therefore uses
-   * slot 0 only for a small batch, and the higher slots of a larger batch
-   * stay unused (a transaction left open on one of them is not fenced by
-   * the next batch and ends at the broker's transaction timeout). The
-   * reference uses one `transactional.id` per sink,
-   * `deltaforge-{pipeline}-{sink}`.
+   * A batch frozen by [[CdcPipeline]] carries its row count in its plan
+   * statistics: at 0 rows the sink runs no job. Its projection is a
+   * [[GraftBridge.SinkPlan]], planned once; any other input (a sink
+   * `filter`, an unfrozen batch) is planned on the call over a
+   * `coalesce(1)`, which adds no exchange. The task calls the producer
+   * factory and begins its transaction at its first row, so a batch that
+   * keeps no rows opens no producer. The records are sent from Spark's
+   * internal rows, with no conversion of each row to a `Row`.
    */
   class KafkaLikeSink(
       val id: String,
@@ -88,7 +71,7 @@ object MessagingSinks {
         df => to_json(struct(df.columns.map(col).toIndexedSeq: _*)),
       exactlyOnce: Boolean = true) extends EventSink {
 
-    /** The routed records, sorted by key and source sequence within each task. */
+    /** The routed records. */
     private def routed(batch: DataFrame): DataFrame = batch.select(
       Routing.resolveTopic(topicTemplate, staticTopic).as("topic"),
       coalesce(Routing.resolveKey(keyTemplate), col("event_id")).as("key"),
@@ -101,55 +84,34 @@ object MessagingSinks {
       routed(batch).sortWithinPartitions(col("key"), col("_seq")))
 
     override def write(batch: DataFrame, batchId: Long): Unit = {
-      val tasks = KafkaLikeSink.producerTasks(
-        batch.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong),
-        batch.sparkSession.sparkContext.defaultParallelism)
-      if (tasks == 0) return
-      val query =
-        if (tasks == 1) plans(batch, batchId, partitions = 1)
-        else GraftBridge.planned(routed(batch).repartition(tasks, col("key"))
-          .sortWithinPartitions(col("key"), col("_seq")))
+      if (batch.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(0))) return
       val (sinkId, factory, eos) = (id, producerFactory, exactlyOnce)
-      GraftBridge.foreachPartition(query) { rows =>
+      GraftBridge.foreachPartition(plans(batch, batchId, partitions = 1)) { rows =>
         def str(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-        val producer = factory()
-        if (eos) producer.beginTransaction()
-        try {
-          rows.foreach { r =>
-            val headers = if (r.isNullAt(3)) Map.empty[String, String] else {
-              val m = r.getMap(3)
-              val (ks, vs) = (m.keyArray(), m.valueArray())
-              (0 until m.numElements()).map(i => ks.getUTF8String(i).toString ->
-                (if (vs.isNullAt(i)) null else vs.getUTF8String(i).toString)).toMap
+        if (rows.hasNext) {
+          val producer = factory()
+          if (eos) producer.beginTransaction()
+          try {
+            rows.foreach { r =>
+              val headers = if (r.isNullAt(3)) Map.empty[String, String] else {
+                val m = r.getMap(3)
+                val (ks, vs) = (m.keyArray(), m.valueArray())
+                (0 until m.numElements()).map(i => ks.getUTF8String(i).toString ->
+                  (if (vs.isNullAt(i)) null else vs.getUTF8String(i).toString)).toMap
+              }
+              producer.send(WireRecord(str(r, 0), str(r, 1),
+                if (r.isNullAt(2)) null else r.getBinary(2), headers))
             }
-            producer.send(WireRecord(str(r, 0), str(r, 1),
-              if (r.isNullAt(2)) null else r.getBinary(2), headers))
+            if (eos) producer.commitTransaction()
+          } catch {
+            case e: Throwable =>
+              if (eos) producer.abortTransaction()
+              if (producer.isFenced)
+                throw new IllegalStateException(s"producer fenced for sink $sinkId — fatal", e)
+              throw e
           }
-          if (eos) producer.commitTransaction()
-        } catch {
-          case e: Throwable =>
-            if (eos) producer.abortTransaction()
-            if (producer.isFenced)
-              throw new IllegalStateException(s"producer fenced for sink $sinkId — fatal", e)
-            throw e
         }
       }
-    }
-  }
-
-  object KafkaLikeSink {
-    /** Rows one producer task sends before a batch is split by key across
-     * more tasks: where one task and the shuffle tie on a 4-core host
-     * (PLANS.md "One job and no compile per sink per batch"), and above
-     * the reference's default batch of 2000 events, which it sends
-     * through one producer. */
-    private[streaming] val RowsPerProducer = 8000L
-
-    /** Producer tasks for a batch of `rows` (None: unknown) when the
-     * session's default parallelism is `parallelism`. */
-    private[streaming] def producerTasks(rows: Option[Long], parallelism: Int): Int = rows match {
-      case None => parallelism
-      case Some(r) => math.min(parallelism.toLong, (r + RowsPerProducer - 1) / RowsPerProducer).toInt
     }
   }
 

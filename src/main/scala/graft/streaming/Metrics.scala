@@ -51,8 +51,6 @@ object Metrics {
 
     def counterValue(name: String, labels: Labels = Nil): Double =
       counters.get((name, labels.sorted)).map(_.sum()).getOrElse(0.0)
-    def gaugeValue(name: String, labels: Labels = Nil): Option[Double] =
-      gauges.get((name, labels.sorted)).map(_.get())
 
     private def fmtLabels(labels: Labels, extra: Labels = Nil): String = {
       val all = labels ++ extra

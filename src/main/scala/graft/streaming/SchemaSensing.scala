@@ -89,26 +89,6 @@ object SchemaSensing {
     array_except(sampledFields, stableFields)
 
   /**
-   * Classify fields stable vs dynamic (reference high_cardinality.rs:56-70
-   * thresholds: min events, stable ≥ stableFreq of events, a table with
-   * ≥ minDynamicFields rare fields is a dynamic map).
-   */
-  def classifyFields(fieldCounts: DataFrame, eventCounts: DataFrame,
-                     minEvents: Long = 100, stableFreq: Double = 0.5,
-                     minDynamicFields: Int = 5): DataFrame = {
-    val joined = fieldCounts.join(eventCounts, "table")
-      .withColumn("freq", col("n_present").cast("double") / col("n_events").cast("double"))
-      .withColumn("is_stable", col("n_events") >= minEvents && col("freq") >= stableFreq)
-    val dynCount = joined.filter(!col("is_stable"))
-      .groupBy("table").agg(count(lit(1)).as("n_dynamic"))
-    joined.join(dynCount, Seq("table"), "left")
-      .withColumn("table_is_dynamic_map",
-        coalesce(col("n_dynamic"), lit(0L)) >= minDynamicFields)
-      .select("table", "field", "n_present", "n_events", "freq", "is_stable",
-        "table_is_dynamic_map")
-  }
-
-  /**
    * Observed JSON type of a payload field (string classification — the
    * reference's per-column observed-type histogram, drift_detector.rs):
    * missing | null | int | float | bool | string | object_or_array.

@@ -236,10 +236,6 @@ class SchemaSensor(val config: SchemaSensor.Config = SchemaSensor.Config(),
   }
 
   /** Inferred Spark schema for a table (registry/evolution-ledger wiring). */
-  def inferredStructType(table: String): Option[StructType] = synchronized {
-    tables.get(table).map(inferredStructTypeLocked)
-  }
-
   private def inferredStructTypeLocked(st: TableState): StructType =
     StructType(st.fields.map { case (name, fi) =>
       val dt = fi.types match {

@@ -6,22 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Script-engine UDF host: the reference's JS-processor slot
+ * Script UDF host: the reference's JS-processor slot
  * (crates/processors/src/js.rs) with scripts written in ACTUAL JAVASCRIPT,
- * executed by the built-in [[MiniJs]] interpreter (graal.js when a cluster
- * provides it — the same preamble runs on both). The JS scripts below
+ * executed by the built-in [[MiniJs]] interpreter. The JS scripts below
  * mirror the reference's own test corpus (js_processor_tests.rs): mutate
  * in place + return null, filter with arrow functions, fan out clones via
  * JSON round-trip, single-object returns, ev.route() routing extraction.
- * The JSR-223 path (scala engine) stays covered as the pluggable-language
- * proof.
  */
 class ScriptHostSpec extends SparkSpec {
-
-  private val scalaLang = ScriptHost.Language(
-    engineName = "scala",
-    preamble = "",
-    invoke = "__graft_process(__graft_in.asInstanceOf[String])")
 
   /**
    * The reference semantics exercised in one script (js.rs:84-90):
@@ -29,31 +21,16 @@ class ScriptHostSpec extends SparkSpec {
    * synthetic (id-less) audit event per create.
    */
   private val script =
-    """import com.fasterxml.jackson.databind.ObjectMapper
-      |import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-      |def __graft_process(json: String): String = {
-      |  val m = new ObjectMapper()
-      |  val in = m.readTree(json).asInstanceOf[ArrayNode]
-      |  val out = m.createArrayNode()
-      |  (0 until in.size()).foreach { i =>
-      |    val ev = in.get(i).asInstanceOf[ObjectNode]
-      |    val op = ev.get("op").asText()
-      |    if (op != "d") {
-      |      ev.get("after").asInstanceOf[ObjectNode].put("enriched", true)
-      |      ev.put("topic", "cdc.custom")
-      |      ev.put("key", ev.get("event_id").asText())
-      |      out.add(ev)
-      |      if (op == "c") {
-      |        val s = m.createObjectNode()
-      |        s.set[com.fasterxml.jackson.databind.JsonNode]("after", ev.get("after"))
-      |        s.put("op", "c")
-      |        s.put("ts_ms", ev.get("ts_ms").asLong())
-      |        s.putNull("event_id")
-      |        out.add(s)
-      |      }
-      |    }
+    """function processBatch(events) {
+      |  const out = [];
+      |  for (const ev of events) {
+      |    if (ev.op === "d") continue;
+      |    ev.after.enriched = true;
+      |    ev.route({ topic: "cdc.custom", key: ev.event_id });
+      |    out.push(ev);
+      |    if (ev.op === "c") out.push({ after: ev.after, op: "c", ts_ms: ev.ts_ms, event_id: null });
       |  }
-      |  m.writeValueAsString(out)
+      |  return out;
       |}""".stripMargin
 
   private def events(): DataFrame = {
@@ -70,9 +47,9 @@ class ScriptHostSpec extends SparkSpec {
 
   test("scripted processor: mutate, drop, fan-out, routing through a live engine") {
     // generous deadline: this test pins TRANSFORM semantics, not the timeout
-    // (covered by the runaway-script test below); the default 5 s flakes
-    // when the full suite saturates all 32 host threads
-    val out = ScriptHost.processor("js1", script, scalaLang, timeoutMs = 60000)(events())
+    // (covered by SinksAndRegistrySpec's udf host timeout guard); the
+    // default 5 s flakes when the full suite saturates all 32 host threads
+    val out = ScriptHost.processor("js1", script, timeoutMs = 60000)(events())
       .orderBy("ts_ms", "synthetic")
       .collect()
     // c → original + synthetic fan-out; u → 1; d → dropped
@@ -92,19 +69,6 @@ class ScriptHostSpec extends SparkSpec {
     // fabricated events carry no envelope: source is null or all-null fields
     val synthSrc = cSynth.getAs[org.apache.spark.sql.Row]("source")
     assert(synthSrc == null || synthSrc.toSeq.forall(_ == null))
-  }
-
-  test("runaway script hits the chunked timeout") {
-    val slow =
-      """def __graft_process(json: String): String = {
-        |  Thread.sleep(60000); json
-        |}""".stripMargin
-    val ex = intercept[Exception] {
-      ScriptHost.processor("js2", slow, scalaLang, timeoutMs = 1500)(events()).count()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
-    assert(messages(ex).exists(m => m != null && m.contains("exceeded 1500ms")))
   }
 
   test("JS: mutate in place + return null = use mutated input (js.rs:84-88)") {
@@ -370,10 +334,8 @@ class ScriptHostSpec extends SparkSpec {
   }
 
   test("json wire: ts_ms normalized back to i64, null images survive") {
-    // engine-free check of the wire codec via a pass-through scala script
-    val passThrough =
-      """def __graft_process(json: String): String = json""".stripMargin
-    val t = ScriptHost.transform(passThrough, scalaLang)
+    // the wire codec through a pass-through script
+    val t = ScriptHost.transform("function processBatch(events) { return events; }")
     val in = Seq(UdfHost.UserEvent(before = null, after = """{"id":1}""",
       op = "c", tsMs = 1234567890123L, eventId = "e1", table = "t", db = "d"))
     val out = t(in.iterator).toSeq

@@ -89,8 +89,7 @@ class EndToEndWireSpec extends SparkSpec {
       val names = Fx.ordersCols.map(_.name).toIndexedSeq
       val port = broker.port
       // IDEMPOTENT (non-transactional) path: one stable producerId per
-      // producer task slot. The sink's task count depends only on the frozen
-      // batch's rows (one task for these few events) and each task sends in
+      // producer task slot. The sink sends every batch from one task in
       // (key, sequence) order, so a restarted attempt re-sends every record
       // under the SAME (pid, epoch 0, baseSeq) — the precondition for
       // broker-side sequence dedup. (The

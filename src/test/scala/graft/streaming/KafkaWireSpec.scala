@@ -68,9 +68,8 @@ class KafkaWireSpec extends SparkSpec {
     val stub = new KafkaBrokerStub()
     try {
       val port = stub.port
-      // transactional.id per Spark partition slot (the Kafka pattern for
-      // parallel writers): each producer incarnation InitProducerIds its own
-      // (pid, epoch) and cannot fence its siblings
+      // transactional.id per Spark partition slot: the sink sends each batch
+      // from one task, so every batch uses slot 0
       val sink = new MessagingSinks.KafkaLikeSink("kw",
         () => new SocketProducer("127.0.0.1", port, "graft-kw",
           s"graft-pipe-kw-${org.apache.spark.TaskContext.getPartitionId()}"),
@@ -96,7 +95,6 @@ class KafkaWireSpec extends SparkSpec {
         () => new SocketProducer("127.0.0.1", port, "graft-kw1",
           s"graft-pipe-kw1-${org.apache.spark.TaskContext.getPartitionId()}"),
         topicTemplate = Some("cdc.${source.table}"))
-      assert(frozen.rows <= MessagingSinks.KafkaLikeSink.RowsPerProducer)
       sink.write(frozen.df, 0L)
       assert(stub.visible.length == 40 && stub.uncommittedCount == 0)
       assert(stub.initProducerIdRequests.get() == 1)

@@ -209,11 +209,11 @@ class SinksAndRegistrySpec extends SparkSpec {
     assert(rec.getField("data").schema().getTypes.get(1).getType == Schema.Type.STRING)
   }
 
-  /** 60 change events over 5 keys (`after.k`), spread over 4 input
+  /** `n` change events over 5 keys (`after.k`), spread over 4 input
    * partitions in shuffled `source.sequence` order. */
-  private def keyedEvents(): DataFrame = {
+  private def keyedEvents(n: Int = 60): DataFrame = {
     import spark.implicits._
-    val seqs = new scala.util.Random(7).shuffle((1 to 60).toList)
+    val seqs = new scala.util.Random(7).shuffle((1 to n).toList)
     val rows = spark.sparkContext.parallelize(
       seqs.map(i => ("c", s"""{"k":"k${i % 5}","id":$i}""", i.toLong)), 4)
     ChangeEvent.conform(rows.toDF("op", "after", "seq")
@@ -230,6 +230,8 @@ class SinksAndRegistrySpec extends SparkSpec {
       : (Seq[MessagingSinks.WireRecord], Int) = {
     SinksAndRegistrySpec.buffer.clear()
     SinksAndRegistrySpec.producers.set(0)
+    SinksAndRegistrySpec.begins.set(0)
+    SinksAndRegistrySpec.commits.set(0)
     sink.write(batch, 0L)
     (SinksAndRegistrySpec.buffer.toArray(Array.empty[MessagingSinks.WireRecord]).toSeq,
       SinksAndRegistrySpec.producers.get())
@@ -239,35 +241,43 @@ class SinksAndRegistrySpec extends SparkSpec {
     new MessagingSinks.KafkaLikeSink(id, () => {
       // the factory references the companion object so executor-side closures share it
       SinksAndRegistrySpec.producers.incrementAndGet()
-      new MessagingSinks.CollectingProducer(SinksAndRegistrySpec.buffer)
+      new SinksAndRegistrySpec.CountingProducer()
     }, topicTemplate = Some("cdc.${source.table}"), keyTemplate = keyTemplate)
+
+  private val sequence = "\"sequence\":(\\d+)".r
+
+  /** Asserts `recs` are the records of `expected` source sequences, sent
+   * to topic `cdc.t` in sequence order within each key. */
+  private def assertKeyOrder(recs: Seq[MessagingSinks.WireRecord], expected: Seq[Int]): Unit = {
+    assert(recs.forall(_.topic == "cdc.t"))
+    val seqs = recs.map(r => sequence.findFirstMatchIn(new String(r.value)).get.group(1).toInt)
+    assert(seqs.sorted == expected.sorted)
+    recs.zip(seqs).groupBy(_._1.key).foreach { case (k, rs) =>
+      val s = rs.map(_._2)
+      assert(s == s.sorted, s"key $k out of sequence order: $s")
+    }
+  }
 
   test("kafka-like sink: exactly-once txn commit, per-key ordering preserved") {
     val sink = countingSink("k1", keyTemplate = Some("${after.k}"))
     val input = keyedEvents()
     assert(input.rdd.getNumPartitions == 4)
-    val sequence = "\"sequence\":(\\d+)".r
-    def assertKeyOrder(recs: Seq[MessagingSinks.WireRecord]): Unit = {
-      assert(recs.length == 60)
-      assert(recs.forall(_.topic == "cdc.t"))
-      val byKey = recs.groupBy(_.key)
-      assert(byKey.keySet == (0 until 5).map(k => s"k$k").toSet)
-      byKey.foreach { case (k, rs) =>
-        val seqs = rs.map(r => sequence.findFirstMatchIn(new String(r.value)).get.group(1).toLong)
-        assert(seqs.length == 12 && seqs == seqs.sorted, s"key $k out of sequence order: $seqs")
-      }
+    def assertAll(recs: Seq[MessagingSinks.WireRecord]): Unit = {
+      assertKeyOrder(recs, 1 to 60)
+      assert(recs.groupBy(_.key).view.mapValues(_.length).toMap ==
+        (0 until 5).map(k => s"k$k" -> 12).toMap)
     }
     // a frozen batch of a few rows: one producer task, no shuffle
     val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(input)
     try {
       val (recs, producers) = deliver(frozen.df, sink)
       assert(producers == 1)
-      assertKeyOrder(recs)
+      assertAll(recs)
     } finally frozen.release()
-    // no row count: the hash repartition by key, one producer per partition
+    // no row count: the 4 input partitions coalesce into one producer task
     val (recs, producers) = deliver(input, sink)
-    assert(producers == spark.sparkContext.defaultParallelism)
-    assertKeyOrder(recs)
+    assert(producers == 1)
+    assertAll(recs)
   }
 
   test("kafka-like sink: an empty frozen batch opens no producer") {
@@ -280,16 +290,33 @@ class SinksAndRegistrySpec extends SparkSpec {
     } finally frozen.release()
   }
 
-  test("kafka-like sink: producer tasks follow the frozen row count") {
-    import MessagingSinks.KafkaLikeSink.{RowsPerProducer => r, producerTasks}
-    assert(r >= 2000L) // the reference sends its default 2000-event batch through one producer
-    assert(producerTasks(Some(0L), 4) == 0)
-    assert(producerTasks(Some(1L), 4) == 1)
-    assert(producerTasks(Some(r), 4) == 1)
-    assert(producerTasks(Some(r + 1), 4) == 2)
-    assert(producerTasks(Some(3 * r), 4) == 3)
-    assert(producerTasks(Some(1000 * r), 4) == 4)
-    assert(producerTasks(None, 4) == 4)
+  test("kafka-like sink: a frozen batch above 8,000 rows is one transaction of one producer") {
+    val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(keyedEvents(9000))
+    try {
+      assert(frozen.rows == 9000L)
+      val (recs, producers) = deliver(frozen.df, countingSink("kbig", keyTemplate = Some("${after.k}")))
+      assert(producers == 1)
+      assert(SinksAndRegistrySpec.begins.get() == 1 && SinksAndRegistrySpec.commits.get() == 1)
+      assertKeyOrder(recs, 1 to 9000)
+    } finally frozen.release()
+  }
+
+  test("kafka-like sink: a filtered batch opens one producer, or none when no row passes") {
+    // a sink `filter` over a frozen batch, as CdcPipeline.processBatch applies it:
+    // the filtered plan carries no row count
+    val frozen = org.apache.spark.sql.classic.GraftBridge.freeze(keyedEvents())
+    try {
+      val sink = countingSink("kf", keyTemplate = Some("${after.k}"))
+      val even = frozen.df.filter(col("source.sequence") % 2 === 0)
+      assert(even.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+      val (recs, producers) = deliver(even, sink)
+      assert(producers == 1, s"a filtered batch opened $producers producers")
+      assertKeyOrder(recs, (1 to 60).filter(_ % 2 == 0))
+      val (none, opened) = deliver(frozen.df.filter(col("source.sequence") > 1000), sink)
+      assert(none.isEmpty)
+      assert(opened == 0, s"a filter that keeps no row opened $opened producers")
+      assert(SinksAndRegistrySpec.begins.get() == 0 && SinksAndRegistrySpec.commits.get() == 0)
+    } finally frozen.release()
   }
 
   test("kafka-like sink: failed send aborts the transaction — nothing delivered") {
@@ -566,4 +593,12 @@ object SinksAndRegistrySpec {
   // static buffer: foreachPartition closures must reach it after serialization
   val buffer = new ConcurrentLinkedQueue[MessagingSinks.WireRecord]()
   val producers = new java.util.concurrent.atomic.AtomicInteger(0)
+  val begins = new java.util.concurrent.atomic.AtomicInteger(0)
+  val commits = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A collecting producer that counts its transactions' begins and commits. */
+  class CountingProducer extends MessagingSinks.CollectingProducer(buffer) {
+    override def beginTransaction(): Unit = { begins.incrementAndGet(); super.beginTransaction() }
+    override def commitTransaction(): Unit = { commits.incrementAndGet(); super.commitTransaction() }
+  }
 }
