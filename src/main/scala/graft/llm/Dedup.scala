@@ -73,29 +73,22 @@ object Dedup {
    * canonical pair list itself (J ≥ 0 always holds, including zero-overlap
    * pairs the posting join would silently drop).
    *
-   * BEHAVIOR NOTE (r14, intentional): explicit `features` arrays are now
-   * `sortedDistinct`-hashed on BOTH branches, so duplicate-containing
-   * feature arrays get SET semantics everywhere. Before r14 the posting
-   * branch counted duplicates (multiset J) while the small branch did not —
-   * callers who tuned thresholds against the old large-path multiset
-   * numbers will see slightly higher J for dup-heavy features now.
+   * Explicit `features` arrays are `sortedDistinct`-hashed on both
+   * branches ([[hashedFeatures]]), so a feature array with duplicates gets
+   * set semantics: its J is the set Jaccard, never a multiset count.
    */
   def verifyPairsExact(docs: DataFrame, pairs: DataFrame, threshold: Double,
                        smallCap: Long = 8192L, idCol: String = "doc_id",
                        features: Column = null): DataFrame = {
     // no checkpoint: `pairs` is materialized by contract, so re-running
-    // the canonical projection per consumer is one tiny shuffle — an
-    // eager checkpoint here billed ~2 task-CPU-s of pure job overhead to
-    // dedup_streaming_parity (r13 A/B) to save re-shuffles of ~200 rows
+    // the canonical projection per consumer is one tiny shuffle, where an
+    // eager checkpoint costs a whole job to save re-shuffles of a few rows
     val canon = pairs
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
     if (threshold <= 0.0) return canon
-    // same fused-vs-composable split as minhashSignatures
-    val hashedFeat =
-      if (features == null) TextHashOps.textNgramsXxh64Sorted(col("text"), 3)
-      else TextHashOps.sortedDistinct(TextHashOps.xxhash64Array(features))
+    val hashedFeat = hashedFeatures(features)
     val ids = canon.select(col("id_a").as("id"))
       .unionByName(canon.select(col("id_b").as("id"))).distinct()
     if (canon.count() <= smallCap) {
@@ -258,9 +251,7 @@ object Dedup {
     // 2. persist the spine before deriving postings - otherwise
     //    projection-collapse inlines the (fused) feature expression above
     //    each Generate and re-evaluates it per exploded row.
-    val hashedFeat =
-      if (features == null) TextHashOps.textNgramsXxh64Sorted(col("text"), 3)
-      else TextHashOps.sortedDistinct(TextHashOps.xxhash64Array(features))
+    val hashedFeat = hashedFeatures(features)
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val spine = docs.repartition(par)
       .select(col(idCol).as("id"), hashedFeat.as("feats"))
@@ -434,6 +425,19 @@ object Dedup {
   }
 
   /**
+   * The hashed feature array of each doc, sorted and distinct, so that
+   * every exact-J verification counts intersections with a two-pointer
+   * merge (no per-pair hash sets). The default is the fused byte-level
+   * 3-gram hash of `text` (no string allocation: the tokenize/substring/
+   * StringBuilder chain was the dominant data-sized term of the whole
+   * minhash family); an explicit `features` column takes the composable
+   * hash + sort chain.
+   */
+  private def hashedFeatures(features: Column): Column =
+    if (features == null) TextHashOps.textNgramsXxh64Sorted(col("text"), 3)
+    else TextHashOps.sortedDistinct(TextHashOps.xxhash64Array(features))
+
+  /**
    * MinHash signatures via the fused native expression — one narrow pass,
    * no shuffle. Output: (id, feats array<long> of HASHED features, sig
    * array<long> of k mins).
@@ -444,68 +448,26 @@ object Dedup {
    * here means each doc is hashed exactly ONCE — the signature expression
    * and the feats column share the same hashing subexpression inside one
    * Project (whole-stage codegen CSE), where re-hashing at the verify
-   * joins cost 2 extra full passes over the corpus (r13: +30 task-CPU-s
-   * at x10 where docs outnumber candidate pairs). Long arrays also halve
+   * joins costs two extra full passes over the corpus (the larger term
+   * wherever docs outnumber candidate pairs). Long arrays also halve
    * the exchange bytes vs shingle strings. J over hashed sets is
    * score-exact up to xxhash64 collisions ([[jaccardPairs]] argument).
    */
   def minhashSignatures(docs: DataFrame, k: Int, idCol: String = "doc_id",
                         features: Column = null): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    // default path: the fused byte-level shingle+hash expression (zero
-    // string allocation — the tokenize/substring/StringBuilder chain was
-    // the dominant data-sized term of the whole minhash family); explicit
-    // feature columns take the composable hash+sort chain. Both emit the
-    // SORTED-DISTINCT form so every downstream exact-J verification counts
-    // intersections with a two-pointer merge (no per-pair hash sets).
-    val hashed =
-      if (features == null) TextHashOps.textNgramsXxh64Sorted(col("text"), 3)
-      else TextHashOps.sortedDistinct(TextHashOps.xxhash64Array(features))
+    val hashed = hashedFeatures(features)
     // one spread exchange of the RAW docs, signature computed narrow after
     // it; every caller persists the result immediately, and that persist is
     // the materialization barrier that stops projection-collapse from
     // inlining (and re-evaluating) `hashed` into downstream band
-    // expressions. The previous trailing repartition(par, id) was a second
-    // FULL exchange of (id, feats, sig) — a whole-corpus shuffle of the
-    // widest frame in the pipeline — bought nothing: banded derivations
-    // re-exchange on (band, bucket) anyway and the feats verify joins
-    // broadcast the candidate side (r15 measurement: removing it is part of
-    // the survivors ×10 177→65 task-CPU drop).
+    // expressions. No exchange on id after it: banded derivations
+    // re-exchange on (band, bucket) anyway, so a second full exchange of
+    // (id, feats, sig), the widest frame in the pipeline, buys nothing.
     docs.repartition(par)
       .select(col(idCol).as("id"),
         hashed.as("feats"),
         TextHashOps.minhashSignature(hashed, k).as("sig"))
-  }
-
-  /**
-   * MinHash LSH candidate pairs: band the k-wide signature into `bands`
-   * groups of k/bands rows, hash each band, bucket-join on (band, hash).
-   * With k=64, bands=32 (r=2): P(candidate | J=0.5) ≈ 0.9999, random pairs
-   * essentially never collide.
-   *
-   * `feats_a`/`feats_b` carry the 64-BIT HASHED feature sets (one
-   * xxhash64 pass per doc), not the raw shingle strings: downstream exact
-   * verification does per-pair `array_intersect`/`array_union`, and set
-   * ops over longs beat interpreted string hashing/compares ~5-10× while
-   * J stays score-exact up to xxhash64 collisions (the [[jaccardPairs]]
-   * hashing argument — ≈F²/2⁶⁵ expected collisions).
-   */
-  def minhashCandidates(docs: DataFrame, k: Int, bands: Int,
-                        idCol: String = "doc_id", features: Column = null): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    // checkpointed: the banding branch and both feature re-joins read `sig`;
-    // without materialization each branch re-computes the whole signature
-    // pipeline. Released before return — see jaccardPairs' leak note.
-    val sig = minhashSignatures(docs, k, idCol, features)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // band join carries ids only (narrow shuffle); features re-join after dedup
-    val feats = sig.select(col("id"), col("feats")) // already hashed (see minhashSignatures)
-    val result = bucketPairs(minhashBands(sig, bands))
-      .join(feats.select(col("id").as("id_a"), col("feats").as("feats_a")), "id_a")
-      .join(feats.select(col("id").as("id_b"), col("feats").as("feats_b")), "id_b")
-      .localCheckpoint(true)
-    sig.unpersist(false)
-    result
   }
 
   /** Banded rows `(id, band, bucket)` of a [[minhashSignatures]] frame: one
@@ -528,33 +490,26 @@ object Dedup {
    * ("train") doc whose Jaccard with ANY right ("benchmark") doc clears
    * the threshold. Unlike the self-join family this joins BETWEEN two
    * sets — banded MinHash buckets on both sides, candidates from the
-   * (band, hash) equi-join, exact-Jaccard verification on the candidate
+   * (band, bucket) equi-join, exact-Jaccard verification on the candidate
    * pairs only. At 100 TB the benchmark side is typically small (eval
-   * suites): its banded buckets broadcast, and the train corpus streams
-   * through map-side — one pass, no train-side self-join ever exists.
+   * suites): its banded buckets fall under Spark's broadcast threshold,
+   * and the train corpus streams through map-side — one pass, no
+   * train-side self-join ever exists.
    * Output: (id_a = left id, id_b = right id, jaccard), score-exact.
    */
   def crossMinhashPairs(left: DataFrame, right: DataFrame, threshold: Double,
                         k: Int = 64, bands: Int = 32,
                         idCol: String = "doc_id", features: Column = null): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    def banded(docs: DataFrame, side: String): (DataFrame, DataFrame) = {
-      val sig = minhashSignatures(docs, k, idCol, features)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val b = sig.select(
-        col("id").as(s"id_$side"),
-        posexplode(TextHashOps.bandHashes(col("sig"), bands))
-          .as(Seq("band", "band_hash")))
-      (b, sig)
-    }
-    val (ba, sigA) = banded(left, "a")
-    val (bb, sigB) = banded(right, "b")
-    // benchmark buckets broadcast (eval suites are small by construction).
-    // The explicit hint bypasses autoBroadcastJoinThreshold: Spark never
-    // falls back to a shuffle, it broadcasts the right side whatever its
-    // size, so an oversized benchmark corpus risks a driver or executor
-    // OOM (and fails the query past Spark's hard 8 GB broadcast limit)
-    val cands = ba.join(broadcast(bb), Seq("band", "band_hash"))
+    val sigA = minhashSignatures(left, k, idCol, features).persist(StorageLevel.MEMORY_AND_DISK)
+    val sigB = minhashSignatures(right, k, idCol, features).persist(StorageLevel.MEMORY_AND_DISK)
+    def side(sig: DataFrame, s: String): DataFrame =
+      minhashBands(sig, bands).select(col("band"), col("bucket"), col("id").as(s"id_$s"))
+    // no join hint: Spark's autoBroadcastJoinThreshold (static, then AQE's
+    // on the measured size) broadcasts the benchmark buckets when they are
+    // small, as eval suites are, and an oversized benchmark corpus gets a
+    // shuffle join instead of a broadcast that can exhaust driver memory
+    val cands = side(sigA, "a").join(side(sigB, "b"), Seq("band", "bucket"))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val jac = mergeJaccard(col("feats_a"), col("feats_b"))
     val result = cands
@@ -568,19 +523,56 @@ object Dedup {
     result
   }
 
-  /** LSH candidates verified with exact Jaccard ≥ threshold. */
-  def minhashPairs(docs: DataFrame, threshold: Double, k: Int = 64, bands: Int = 32,
-                   idCol: String = "doc_id", features: Column = null): DataFrame = {
-    minhashCandidates(docs, k, bands, idCol, features)
-      .withColumn("jaccard", mergeJaccard(col("feats_a"), col("feats_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+  /**
+   * Mines the MinHash buckets of `docs` with `mine(banded, verify)`:
+   * `banded` is [[minhashBands]] of the signatures, `verify` scores pairs
+   * `(id_a, id_b)` with their exact Jaccard as `(id_a, id_b, jaccard)`.
+   * The signatures are persisted for the call and released once `mine`
+   * has returned its checkpointed result.
+   *
+   * `verify` checks an explicit candidate list with one sorted merge per
+   * pair on purpose: the posting-count alternative ([[minedPairCounts]]'
+   * shape) wins when the posting join IS the candidate generator, but
+   * verifying a given pair list that way costs |cands|×avg_shingles
+   * intermediate rows through 6 shuffled joins (PLANS.md "One LSH pair
+   * miner"). The banded rows stay a cheap NARROW derivation off the
+   * signature cache: the miners read them more than once, and recomputing
+   * them is cheaper than persisting bands·n tiny rows.
+   */
+  private def minhashMined(docs: DataFrame, k: Int, bands: Int, idCol: String,
+                           features: Column)
+                          (mine: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    require(k % bands == 0, s"k=$k must divide into bands=$bands")
+    val sig = minhashSignatures(docs, k, idCol, features)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val featsA = sig.select(col("id").as("id_a"), col("feats").as("feats_a"))
+    val featsB = sig.select(col("id").as("id_b"), col("feats").as("feats_b"))
+    val result = mine(minhashBands(sig, bands),
+      _.join(featsA, "id_a").join(featsB, "id_b")
+        .select(col("id_a"), col("id_b"),
+          mergeJaccard(col("feats_a"), col("feats_b")).as("jaccard")))
+    sig.unpersist(false)
+    result
   }
+
+  /**
+   * MinHash LSH near-dup pairs: band the k-wide signature into `bands`
+   * groups of k/bands rows, hash each band, and verify every distinct pair
+   * that shares a (band, bucket) with exact Jaccard ≥ threshold. With
+   * k=64, bands=32 (r=2): P(candidate | J=0.5) ≈ 0.9999, random pairs
+   * essentially never collide. Output: the FULL verified pair set of the
+   * buckets (clique per bucket) as (id_a, id_b, jaccard), an eager
+   * checkpoint; CC consumers take [[minhashSpanningPairs]].
+   */
+  def minhashPairs(docs: DataFrame, threshold: Double, k: Int = 64, bands: Int = 32,
+                   idCol: String = "doc_id", features: Column = null): DataFrame =
+    minhashMined(docs, k, bands, idCol, features)(
+      bucketCliquePairs(_, _, threshold, "jaccard"))
 
   /**
    * CC-contract LSH pair miner, verified with exact Jaccard ≥ threshold —
    * the pair source for [[clusters]]/[[clusterSurvivors]]: the MinHash
-   * buckets of [[minhashCandidates]] mined by [[bucketSpanningPairs]]
+   * buckets of [[minhashPairs]] mined by [[bucketSpanningPairs]]
    * (clique or spanning shape, chosen by its occupancy gate). Output:
    * (id_a, id_b, jaccard), every pair exactly verified ≥ `threshold`,
    * whose connected components equal those of the verified-clique graph
@@ -590,29 +582,28 @@ object Dedup {
                            idCol: String = "doc_id", features: Column = null,
                            pruneGate: Long = 65536L,
                            cliqueVolumePerDoc: Long = 16L,
-                           cliqueVolumeFloor: Long = 65536L): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val sig = minhashSignatures(docs, k, idCol, features)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Exact-Jaccard verification of an explicit CANDIDATE LIST stays in
-    // the per-pair merge shape on purpose: the posting-count alternative
-    // (minedPairCounts' shape) wins when the posting join IS the candidate
-    // generator, but verifying a given pair list that way costs
-    // |cands|×avg_shingles intermediate rows through 6 shuffled joins —
-    // dearer than one merge per candidate (PLANS.md "One LSH pair miner").
-    val featsA = sig.select(col("id").as("id_a"), col("feats").as("feats_a"))
-    val featsB = sig.select(col("id").as("id_b"), col("feats").as("feats_b"))
-    // the banded rows stay a cheap NARROW derivation off the sig cache: the
-    // miner reads them more than once and recomputes them rather than
-    // persist 32n tiny rows (caching the exploded frame measured dearer)
-    val result = bucketSpanningPairs(minhashBands(sig, bands), bands,
-      _.join(featsA, "id_a").join(featsB, "id_b")
-        .select(col("id_a"), col("id_b"),
-          mergeJaccard(col("feats_a"), col("feats_b")).as("jaccard")),
-      threshold, "jaccard", pruneGate, cliqueVolumePerDoc, cliqueVolumeFloor)
-    sig.unpersist(false)
-    result
-  }
+                           cliqueVolumeFloor: Long = 65536L): DataFrame =
+    minhashMined(docs, k, bands, idCol, features)(
+      bucketSpanningPairs(_, bands, _, threshold, "jaccard",
+        pruneGate, cliqueVolumePerDoc, cliqueVolumeFloor))
+
+  /** `(id_a, id_b, <score>)` with the score rounded to 4 places, as an
+   * eager local checkpoint: the result shape of every LSH pair miner. */
+  private def finishPairs(pairs: DataFrame, score: String): DataFrame =
+    pairs.select(col("id_a"), col("id_b"), round(col(score), 4).as(score))
+      .localCheckpoint(true)
+
+  /**
+   * The LSH clique miner: every distinct pair sharing a `(band, bucket)`
+   * of `banded` (one bucket self-join, [[bucketPairs]]), scored by
+   * `verify` and kept at `score` ≥ `threshold`. Output: `(id_a, id_b,
+   * <score>)` rounded to 4 places, an eager local checkpoint. The caller
+   * owns, and releases after this returns, `banded`'s cache and whatever
+   * `verify` reads.
+   */
+  private[llm] def bucketCliquePairs(banded: DataFrame, verify: DataFrame => DataFrame,
+                                     threshold: Double, score: String): DataFrame =
+    finishPairs(verify(bucketPairs(banded)).filter(col(score) >= threshold), score)
 
   /**
    * The LSH pair miner behind [[minhashSpanningPairs]] and
@@ -628,9 +619,10 @@ object Dedup {
    * Two shapes, one output contract, chosen by a measured occupancy gate:
    *
    *  - **Clique** (bounded bucket occupancy — the sparse/ordinary corpus):
-   *    one bucket self-join emits every in-bucket pair, one verification
-   *    pass keeps score ≥ t. Fewest stages; pair volume = Σ_buckets
-   *    d(d−1)/2, which the gate just measured to be ~linear in n.
+   *    [[bucketCliquePairs]], one bucket self-join emits every in-bucket
+   *    pair, one verification pass keeps score ≥ t. Fewest stages; pair
+   *    volume = Σ_buckets d(d−1)/2, which the gate just measured to be
+   *    ~linear in n.
    *  - **Spanning** (dup-heavy buckets — LSH's raison d'être): per bucket,
    *    every member links to the bucket-min hub (a Θ(d) star), hub edges
    *    are verified, and members whose hub edge FAILS are re-verified
@@ -659,10 +651,6 @@ object Dedup {
                                        pruneGate: Long, cliqueVolumePerDoc: Long,
                                        cliqueVolumeFloor: Long): DataFrame = {
     val passes = col(score) >= threshold
-    def finish(pairs: DataFrame): DataFrame =
-      pairs.select(col("id_a"), col("id_b"), round(col(score), 4).as(score))
-        .localCheckpoint(true)
-
     // OCCUPANCY GATE: the exact clique pair volume (Σ d(d−1)/2 per bucket)
     // and the corpus size (Σd = bands·n); the exchange carries only
     // distinct buckets. Volume summed in decimal(38,0): a long sum wraps
@@ -679,7 +667,7 @@ object Dedup {
       else Option(occ.getDecimal(0)).map(d => BigInt(d.toBigInteger) / 2)
     val gate = BigInt(math.max(cliqueVolumeFloor, cliqueVolumePerDoc * (nBandedRows / bands.toLong)))
     if (cliqueVolume.exists(_ <= gate))
-      return finish(verify(bucketPairs(banded)).filter(passes))
+      return bucketCliquePairs(banded, verify, threshold, score)
 
     // SPANNING arm. Hub edges WITH bucket provenance (needed to scope the
     // fallback) via a whole-partition window min: ONE exchange of the
@@ -736,7 +724,7 @@ object Dedup {
       }
       hubPass.unionByName(verify(toVerify).filter(passes)).dropDuplicates("id_a", "id_b")
     }
-    val result = finish(combined)
+    val result = finishPairs(combined, score)
     hubEdges.unpersist(false)
     hubVerdicts.unpersist(false)
     prunedFrom.foreach(releaseCheckpoint)
@@ -983,9 +971,8 @@ object Dedup {
     val par = docs.sparkSession.sparkContext.defaultParallelism
     // one spread exchange of the raw docs; the fingerprint compute is
     // narrow after it and [[simhashPairs]] persists the result — the
-    // persist is the materialization barrier (the old trailing
-    // repartition(par, id) was a second full exchange bought for nothing,
-    // same finding as minhashSignatures r15)
+    // persist is the materialization barrier (no exchange on id after it,
+    // for the same reason as in minhashSignatures)
     docs.repartition(par).select(col(idCol).as("id"),
       TextHashOps.simhash64(
         tokenHasher(TextHashOps.textNgrams(col(textCol), 1))).as("simhash"))
@@ -997,14 +984,14 @@ object Dedup {
    * must share one exact chunk (pigeonhole). Join on (chunk, value), verify
    * with bit_count(xor).
    *
-   * FIRST-MATCH dedup (r15): a pair colliding in k chunks used to be
-   * emitted k times and canonicalized by a `.distinct()` — which shuffled
-   * the ENTIRE raw candidate stream (33M rows at the ×10 probe, where the
-   * contractual output is 4.7M pairs: dup-heavy groups collide in all 4
-   * chunks). Both fingerprints are in hand after the join, so "this is the
-   * pair's FIRST matching chunk" is a narrow filter (no earlier chunk
-   * equal) — each pair survives exactly once BY CONSTRUCTION and the plan
-   * has zero post-join exchange: join → project → filter, all pipelined.
+   * FIRST-MATCH dedup: a pair colliding in k chunks is kept only at its
+   * first matching chunk, instead of being emitted k times and
+   * canonicalized by a `.distinct()` that shuffles the ENTIRE raw
+   * candidate stream (dup-heavy groups collide in every chunk). Both
+   * fingerprints are in hand after the join, so "this is the pair's FIRST
+   * matching chunk" is a narrow filter (no earlier chunk equal) — each
+   * pair survives exactly once BY CONSTRUCTION and the plan has zero
+   * post-join exchange: join → project → filter, all pipelined.
    * Value-identical to the distinct (spec-pinned; same pigeonhole
    * completeness, hamming filtered before materialization).
    */

@@ -193,24 +193,16 @@ object Similarity {
    * 1-(1-p^r)^bands, p = 1-θ/π (vs the single table's p^bits).
    *
    * Output contract: the FULL verified pair set of the banded buckets
-   * (clique per bucket) — feed CC consumers [[cosineSpanningPairs]] instead,
-   * which mines Θ(d) spanning edges per bucket with a CC-identical result.
+   * (clique per bucket, [[graft.llm.Dedup.bucketCliquePairs]]) as (id_a,
+   * id_b, cos_sim), an eager checkpoint — feed CC consumers
+   * [[cosineSpanningPairs]] instead, which mines Θ(d) spanning edges per
+   * bucket with a CC-identical result.
    */
   def cosinePairsBanded(vectors: DataFrame, threshold: Double, dim: Int,
                         bands: Int = 4, bitsPerBand: Int = 6,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val banded = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-        posexplode(lshBandSignatures(col(vecCol), dim, bands, bitsPerBand))
-          .as(Seq("band", "bsig")))
-    val a = banded.select(col("band"), col("bsig"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = banded.select(col("band"), col("bsig"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("band", "bsig")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("v_a"), col("v_b"))
-      .dropDuplicates("id_a", "id_b") // verify each distinct pair ONCE across bands
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos_sim"), 4).as("cos_sim"))
-  }
+                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    cosineMined(vectors, dim, bands, bitsPerBand, idCol, vecCol)(
+      Dedup.bucketCliquePairs(_, _, threshold, "cos_sim"))
 
   /**
    * Embedding-cosine near-dup pairs for connected-component consumers: the
@@ -225,7 +217,18 @@ object Similarity {
                           idCol: String = "vec_id", vecCol: String = "embedding",
                           pruneGate: Long = 4096L,
                           cliqueVolumePerDoc: Long = 16L,
-                          cliqueVolumeFloor: Long = 65536L): DataFrame = {
+                          cliqueVolumeFloor: Long = 65536L): DataFrame =
+    cosineMined(vectors, dim, bands, bitsPerBand, idCol, vecCol)(
+      Dedup.bucketSpanningPairs(_, bands, _, threshold, "cos_sim",
+        pruneGate, cliqueVolumePerDoc, cliqueVolumeFloor))
+
+  /** Mines the banded hyperplane buckets of `vectors` with `mine(banded,
+   * verify)`: `banded` is the persisted `(id, band, bucket)` rows, released
+   * once `mine` has returned its checkpointed result; `verify` scores pairs
+   * `(id_a, id_b)` with one fused exact cosine as `(id_a, id_b, cos_sim)`. */
+  private def cosineMined(vectors: DataFrame, dim: Int, bands: Int, bitsPerBand: Int,
+                          idCol: String, vecCol: String)
+                         (mine: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val base = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
     // persisted, unlike the MinHash bands: each band signature is `bits`
@@ -236,10 +239,9 @@ object Similarity {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val vecsA = base.select(col("id").as("id_a"), col("v").as("v_a"))
     val vecsB = base.select(col("id").as("id_b"), col("v").as("v_b"))
-    val out = Dedup.bucketSpanningPairs(banded, bands,
+    val out = mine(banded,
       _.join(vecsA, "id_a").join(vecsB, "id_b")
-        .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos_sim")),
-      threshold, "cos_sim", pruneGate, cliqueVolumePerDoc, cliqueVolumeFloor)
+        .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos_sim")))
     banded.unpersist(false)
     out
   }

@@ -25,13 +25,11 @@ object TextAnalysis {
 
   /**
    * Quality metrics as exact integer counts (ratios are downstream divisions):
-   * chars, words, punctuation chars, stopword hits, longest-word length.
+   * chars, words, punctuation chars, stopword hits.
    */
   def nChars(text: Column): Column = length(text)
   def nWords(text: Column): Column = size(tokens(text))
   def nPunct(text: Column): Column = regexp_count(text, lit("[.,!?;:]"))
-  def maxWordLen(text: Column): Column =
-    coalesce(array_max(transform(tokens(text), t => length(t))), lit(0))
 
   val stopwords: Seq[String] = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 

@@ -53,7 +53,8 @@ class PipelineManager(spark: SparkSession, baseDir: String) {
       commitPolicy = p.spec.commitPolicy,
       ledgerDir = ledgerDir(p.metadata.name),
       sinkTimeout = p.spec.sinkDeadlineSecs.map(_.seconds: Duration).getOrElse(5.minutes),
-      processors = PipelineSpec.buildProcessors(p.spec))
+      processors = PipelineSpec.buildProcessors(p.spec),
+      pipelineName = p.metadata.name)
     CdcPipeline.start(cfg, stream, checkpointDir(p.metadata.name),
       Trigger.ProcessingTime("500 milliseconds"))
   }

@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
  * {name,tenant,labels,annotations} + spec {source, processors, sinks,
  * commit_policy, sink_batch_deadline_secs}), with Spark-native component
  * kinds: the source is a [[graft.sources.BacklogSource]] directory, sinks
- * are parquet/jsonl/memory, processors are filter/route.
+ * are parquet/jsonl/memory, processors are filter/route/flatten/outbox/js.
  *
  * Environment expansion: `${VARS_LIKE_THIS}` (uppercase env-style names
  * only) expand from the process environment, like the reference's

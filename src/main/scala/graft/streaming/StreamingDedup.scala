@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.functions.TextHashOps
-import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -27,8 +26,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *     on ≥ threshold of the k perms emits a candidate pair. Duplicates are
  *     NOT added to state (the canonical stays), so a burst of repeats
  *     costs zero state growth. The emitted stream is candidate PAIRS —
- *     the same contract as the batch `minhashCandidates` — so downstream
- *     can verify exactly (shingle Jaccard) or act directly.
+ *     the bucket candidates the batch `Dedup.minhashPairs` mines before
+ *     it verifies them — so downstream can verify exactly (shingle
+ *     Jaccard) or act directly.
  *
  * Scale shape: a doc fans out to `bands` keyed groups (narrow explode +
  * one shuffle on the bucket key — exactly the batch LSH shuffle, but
@@ -62,11 +62,10 @@ object StreamingDedup {
    * The bounded per-bucket fold core: O(maxPerBucket) memory regardless of
    * how many docs stream through the bucket — a degenerate mass-duplicated
    * bucket at 100× scale costs the task only the capped canonical buffer,
-   * never the incoming group (the r10 verdict's hot-bucket term). Each
-   * [[step]] compares ONE incoming doc against the stored canonicals,
-   * emitting at most one candidate (best estimate, tie → the EARLIEST
-   * canonical); non-duplicates join the buffer, evicting the oldest entry
-   * past `maxPerBucket`.
+   * never the incoming group. Each [[step]] compares ONE incoming doc
+   * against the stored canonicals, emitting at most one candidate (best
+   * estimate, tie → the EARLIEST canonical); non-duplicates join the
+   * buffer, evicting the oldest entry past `maxPerBucket`.
    */
   private final class BucketFold(init: Option[BucketState], threshold: Double,
                                  maxPerBucket: Int, band: Int) {
@@ -146,6 +145,24 @@ object StreamingDedup {
     (out, fin)
   }
 
+  /** One [[BandedDoc]] per (doc × band): each doc's k-perm MinHash
+   * signature over the fused byte-level 3-gram hashes of `textCol`
+   * (sorted-distinct form; the k-min is order-insensitive over the same
+   * set), banded by one fused walk of the signature. */
+  private def bandedDocs(docs: DataFrame, k: Int, bands: Int, idCol: String,
+                         textCol: String): Dataset[BandedDoc] = {
+    require(k % bands == 0, s"k=$k must divide into bands=$bands")
+    import docs.sparkSession.implicits._
+    val sig = TextHashOps.minhashSignature(
+      TextHashOps.textNgramsXxh64Sorted(col(textCol), 3), k)
+    docs
+      .select(col(idCol).cast("long").as("docId"), sig.as("sig"))
+      .select(col("docId"), col("sig"),
+        posexplode(TextHashOps.bandHashes(col("sig"), bands))
+          .as(Seq("band", "bucket")))
+      .as[BandedDoc]
+  }
+
   /**
    * Batch-parity replay of the streaming near-dup path: runs the SAME
    * per-bucket fold the streaming operator applies ([[updateBucket]]) over
@@ -173,21 +190,11 @@ object StreamingDedup {
                          threshold: Double = 0.7, maxPerBucket: Int = 64,
                          idCol: String = "doc_id", textCol: String = "text")
       : Dataset[DupCandidate] = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = k / bands
-    // fused byte-level shingle+hash (sorted-distinct form); signature
-    // values identical — the k-min is order-insensitive over the same set
-    val sig = TextHashOps.minhashSignature(
-      TextHashOps.textNgramsXxh64Sorted(col(textCol), 3), k)
-    docs
-      .repartition(spark.sparkContext.defaultParallelism) // single-file scans stay 1-task otherwise
-      .select(col(idCol).cast("long").as("docId"), sig.as("sig"))
-      .select(col("docId"), col("sig"),
-        posexplode(TextHashOps.bandHashes(col("sig"), bands))
-          .as(Seq("band", "bucket")))
-      .as[BandedDoc]
+    bandedDocs(
+      docs.repartition(spark.sparkContext.defaultParallelism), // single-file scans stay 1-task otherwise
+      k, bands, idCol, textCol)
       .repartition(col("band"), col("bucket"))
       .sortWithinPartitions("band", "bucket", "docId")
       .mapPartitions { rows =>
@@ -223,24 +230,12 @@ object StreamingDedup {
                         threshold: Double = 0.7, maxPerBucket: Int = 8,
                         idCol: String = "doc_id", textCol: String = "text",
                         stateTimeoutMs: Long = 3600000L): Dataset[DupCandidate] = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = k / bands
-    // fused byte-level shingle+hash (sorted-distinct form); signature
-    // values identical — the k-min is order-insensitive over the same set
-    val sig = TextHashOps.minhashSignature(
-      TextHashOps.textNgramsXxh64Sorted(col(textCol), 3), k)
-    val banded = docs
-      .select(col(idCol).cast("long").as("docId"), sig.as("sig"))
-      .select(col("docId"), col("sig"),
-        posexplode(TextHashOps.bandHashes(col("sig"), bands))
-          .as(Seq("band", "bucket")))
-      .as[BandedDoc]
     val timeoutConf =
       if (stateTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    banded
+    bandedDocs(docs, k, bands, idCol, textCol)
       .groupByKey(d => (d.band, d.bucket))
       .flatMapGroupsWithState[BucketState, DupCandidate](
         OutputMode.Append(), timeoutConf) {

@@ -126,7 +126,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(jacCap == jacFull, s"capped dropped the hot-only dup: $jacCap vs $jacFull")
   }
 
-  test("cross-corpus minhash pairs: only train×benchmark edges, broadcast benchmark side") {
+  test("cross-corpus minhash pairs: only train×benchmark edges, benchmark side joined by size") {
     // docs 0/1/3 are mutual near-dups; put 1 in the "benchmark" set and the
     // rest in "train": cross pairs must link 0 and 3 to benchmark doc 1 and
     // must NOT contain any train×train pair (0,3) even though it qualifies
@@ -135,9 +135,26 @@ class DedupSimilaritySpec extends SparkSpec {
     val pairs = Dedup.crossMinhashPairs(train, bench, 0.5)
     val ids = pairs.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(ids == Set((0L, 1L), (3L, 1L)), s"got $ids")
-    // (the benchmark side carries an explicit broadcast() hint in
-    // crossMinhashPairs — the result frame is checkpointed, so the join
-    // plan is asserted by reading the code, not the cut lineage)
+    // (crossMinhashPairs gives no join hint: Spark's broadcast threshold
+    // picks the join; the next test pins the shuffle join's pairs)
+  }
+
+  test("cross-corpus minhash pairs: a shuffle join finds the pairs the default join finds") {
+    val bench = docs.filter(col("doc_id") === 1L)
+    val train = docs.filter(col("doc_id") =!= 1L)
+    def pairs(): Set[(Long, Long, Double)] =
+      Dedup.crossMinhashPairs(train, bench, 0.5).collect()
+        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard"))).toSet
+    val byDefault = pairs()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // no broadcast, static or adaptive
+    val shuffled = try pairs() finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(byDefault.map(p => (p._1, p._2)) == Set((0L, 1L), (3L, 1L)), s"got $byDefault")
+    assert(shuffled == byDefault)
   }
 
   test("minhash LSH pairs == exact jaccard pairs on this corpus (recall check)") {
@@ -782,6 +799,10 @@ class DedupSimilaritySpec extends SparkSpec {
     leavesOnlyItsCheckpoint("cosine prune")(
       Similarity.cosineSpanningPairs(plantedEmb, 0.6, plantedDim, bands = 2, bitsPerBand = 3,
         pruneGate = 0L, cliqueVolumePerDoc = 0L, cliqueVolumeFloor = 0L))
+    leavesOnlyItsCheckpoint("minhash clique miner")(
+      Dedup.minhashPairs(docsW, 0.5, features = feats))
+    leavesOnlyItsCheckpoint("cosine clique miner")(
+      Similarity.cosinePairsBanded(plantedEmb, 0.6, plantedDim, bands = 2, bitsPerBand = 3))
   }
 
   test("prefix+positional mining == brute force on a randomized overlapping corpus") {

@@ -216,6 +216,40 @@ class PipelineCrudSpec extends SparkSpec {
     } finally cp.stop()
   }
 
+  test("each managed pipeline tags its sink jobs with its own name") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("crudtags").toString
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .foreach(_.split(",").filter(_.startsWith("graft:")).foreach(tags.add))
+    }
+    val names = Seq("tags-a", "tags-b")
+    val mgr = new PipelineManager(spark, s"$root/pipelines")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      names.foreach { name =>
+        Files.createDirectories(Paths.get(s"$root/$name/backlog"))
+        writeSegment(s"$root/$name/backlog", "seg-000.jsonl", 1 to 5, _ => "c")
+        // both pipelines name their sink `lake`
+        mgr.create(
+          s"""metadata: {name: $name}
+             |spec:
+             |  source: {kind: backlog, path: $root/$name/backlog}
+             |  sinks: [{kind: parquet, id: lake, path: $root/$name/lake}]
+             |""".stripMargin)
+      }
+      val expected = names.map(CdcPipeline.sinkJobTag(_, "lake")).toSet
+      assert(await()(names.forall(n => lakeOps(s"$root/$n/lake").get("c").contains(5L))))
+      assert(await()(expected.subsetOf(tags.asScala.toSet)),
+        s"sink job tags ${tags.asScala.toSet}, expected $expected")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      names.filter(mgr.get(_).isDefined).foreach(mgr.delete)
+    }
+  }
+
   test("spec loader builds flatten and outbox processors") {
     val p = PipelineSpec.load(
       """metadata: {name: p2, tenant: t}
