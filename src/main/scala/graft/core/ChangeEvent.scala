@@ -84,6 +84,10 @@ object ChangeEvent {
     StructField("tx_end", BooleanType)
   ))
 
+  /** Each row of `df` as one JSON object of all its columns, in order: the
+   * message body of the Kafka, HTTP, Redis, NATS and JSONL sinks. */
+  def json(df: DataFrame): Column = to_json(struct(df.columns.map(col).toIndexedSeq: _*))
+
   /** Fully-qualified `db.table` identity used by table-pattern filters. */
   def qualifiedTable: Column =
     concat_ws(".", col("source.db"), col("source.table"))

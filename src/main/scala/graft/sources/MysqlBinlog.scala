@@ -1,5 +1,9 @@
 package graft.sources
 
+import graft.core.ChangeEvent
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, col, concat, lit, struct}
+
 import java.nio.charset.StandardCharsets
 
 /**
@@ -808,6 +812,24 @@ object MysqlBinlog {
       r.off = evEnd
     }
     out.result()
+  }
+
+  /**
+   * Decoded [[Record]] rows → change-event envelopes: the one MySQL record →
+   * event mapping. `source.sequence` is the binlog position, `event_id` is
+   * `db.table:pos`, `tx_end` marks the XID row, and `source.name` is
+   * `sourceName`. A DDL row keeps `op = null`, carries its statement in
+   * `ddl` and the table it names (when one parses) in `source.table`.
+   */
+  def changeEvents(records: DataFrame, sourceName: String): DataFrame = {
+    val table = coalesce(col("ddlTable"), col("table"))
+    ChangeEvent.conform(records.select(col("op"), col("before"), col("after"),
+      struct(lit(sourceName).as("name"), col("db"), table.as("table"), lit("mysql").as("connector"),
+        col("gtid"), col("pos"), col("pos").as("sequence")).as("source"),
+      col("tsMs").as("ts_ms"),
+      concat(col("db"), lit("."), table, lit(":"), col("pos")).as("event_id"),
+      col("ddl"),
+      col("txEnd").as("tx_end")))
   }
 
   private final val HexLower = "0123456789abcdef"

@@ -2,7 +2,10 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
+import graft.core.ChangeEvent
 import graft.sources.MysqlBinlog.{J, JArr, JBool, JDouble, JLong, JNull, JObj, JRaw, JStr, render}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat, conv, lit, shiftleft, struct, substring_index}
 
 /**
  * PostgreSQL pgoutput logical-replication decode as PURE functions over
@@ -378,5 +381,22 @@ object PgOutput {
       top.off = msgEnd
     }
     out.result()
+  }
+
+  /**
+   * Decoded [[PgRecord]] rows → change-event envelopes: the one pgoutput
+   * record → event mapping. `source.db` is `database`, `source.name` is
+   * `sourceName`, `source.sequence` is the LSN as a number (the value of
+   * [[PgWire.parseLsn]]) and `event_id` is `schema.table:lsn`. `tx_end`
+   * stays null: the decoder drops Begin/Commit, so no row marks a boundary.
+   */
+  def changeEvents(records: DataFrame, sourceName: String, database: String): DataFrame = {
+    def half(i: Int) = conv(substring_index(col("lsn"), "/", i), 16, 10).cast("long")
+    ChangeEvent.conform(records.select(col("op"), col("before"), col("after"),
+      struct(lit(sourceName).as("name"), lit(database).as("db"), col("schema"), col("table"),
+        lit("postgres").as("connector"), col("lsn"), col("txId").as("tx_id"),
+        shiftleft(half(1), 32).bitwiseOR(half(-1)).as("sequence")).as("source"),
+      col("tsMs").as("ts_ms"),
+      concat(col("schema"), lit("."), col("table"), lit(":"), col("lsn")).as("event_id")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Retry
+import graft.core.{ChangeEvent, Retry}
 import graft.operators.Routing
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -67,8 +67,7 @@ object MessagingSinks {
       topicTemplate: Option[String] = None,
       staticTopic: String = "events",
       keyTemplate: Option[String] = None,
-      valueColumn: DataFrame => org.apache.spark.sql.Column =
-        df => to_json(struct(df.columns.map(col).toIndexedSeq: _*)),
+      valueColumn: DataFrame => org.apache.spark.sql.Column = ChangeEvent.json,
       exactlyOnce: Boolean = true) extends EventSink {
 
     /** The routed records. */
@@ -146,8 +145,7 @@ object MessagingSinks {
       timeout: Duration = Duration.ofSeconds(30)) extends EventSink {
 
     override def write(batch: DataFrame, batchId: Long): Unit = {
-      val payloads = batch.select(
-        to_json(struct(batch.columns.map(col).toIndexedSeq: _*)).as("v"))
+      val payloads = batch.select(ChangeEvent.json(batch).as("v"))
       val u = url; val bm = batchMode; val mr = maxRetries; val hs = headers; val to = timeout
       payloads.foreachPartition { (rows: Iterator[Row]) =>
         val client = HttpClient.newBuilder().connectTimeout(to).build()

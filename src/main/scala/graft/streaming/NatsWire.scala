@@ -110,8 +110,7 @@ object NatsWire {
         ChangeEvent.idempotencyKey.as("msg_id"),
         coalesce(Routing.resolveKey(None), lit("")).as("df_key"),
         coalesce(col("routing.headers"), map().cast("map<string,string>")).as("headers"),
-        to_json(struct(batch.columns.map(col).toIndexedSeq: _*))
-          .cast("binary").as("payload"))
+        ChangeEvent.json(batch).cast("binary").as("payload"))
       val (sinkId, h, p, ps, mr, cto, rto) =
         (id, host, port, pipelineSize, maxRetries, connectTimeoutMs, readTimeoutMs)
       rows.foreachPartition { (it: Iterator[Row]) =>

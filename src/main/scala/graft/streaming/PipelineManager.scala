@@ -2,19 +2,16 @@ package graft.streaming
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import graft.core.ChangeEvent
 import graft.core.Json.mapper
-import graft.sources.BacklogSource
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import scala.collection.concurrent.TrieMap
-import scala.concurrent.duration._
 
 /**
  * Pipeline lifecycle manager: spec → running streaming query, with
- * create / patch(+restart) / pause / resume / stop / delete.
+ * create / patch(+restart) / pause / resume / stop / delete. A launch is
+ * [[PipelineSpec.assemble]] + [[CdcPipeline.start]].
  *
  * Reference: crates/runner/src/pipeline_manager.rs:205-930 — `create`
  * spawns the pipeline from a `PipelineSpec`; `patch` deep-merges the JSON
@@ -39,22 +36,7 @@ class PipelineManager(spark: SparkSession, baseDir: String) {
   private def ledgerDir(name: String) = s"$baseDir/$name/ledger"
 
   private def launch(p: PipelineSpec.Pipeline): StreamingQuery = {
-    val stream = spark.readStream.format(classOf[BacklogSource].getName)
-      .option("path", p.spec.source.path)
-      .options(p.spec.source.maxLinesPerTrigger.map(n => Map("maxLinesPerTrigger" -> n.toString)).getOrElse(Map.empty))
-      .load()
-      // full envelope schema (incl. the map<string,string> routing headers)
-      // qualifies for the fused byte-level decoder since r15 — from_json-
-      // identical by spec, one pass, no Jackson
-      .select(graft.functions.JsonDecode.fusedFromJson(col("value"), ChangeEvent.schema).as("e"))
-      .select("e.*")
-    val cfg = CdcPipeline.Config(
-      sinks = PipelineSpec.buildSinks(p.spec),
-      commitPolicy = p.spec.commitPolicy,
-      ledgerDir = ledgerDir(p.metadata.name),
-      sinkTimeout = p.spec.sinkDeadlineSecs.map(_.seconds: Duration).getOrElse(5.minutes),
-      processors = PipelineSpec.buildProcessors(p.spec),
-      pipelineName = p.metadata.name)
+    val (stream, cfg) = PipelineSpec.assemble(spark, p, ledgerDir(p.metadata.name))
     CdcPipeline.start(cfg, stream, checkpointDir(p.metadata.name),
       Trigger.ProcessingTime("500 milliseconds"))
   }

@@ -3,11 +3,14 @@ package graft.streaming
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
-import graft.core.Json
+import graft.core.{ChangeEvent, Json}
+import graft.functions.JsonDecode
 import graft.operators.{FilterProcessor, Routing}
-import org.apache.spark.sql.DataFrame
+import graft.sources.{BacklogSource, MysqlBinlog, MysqlBinlogFixture, PgOutput, PgOutputFixture}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /**
@@ -17,8 +20,13 @@ import scala.jdk.CollectionConverters._
  * (reference crates/deltaforge-config/src/lib.rs:66-141: metadata
  * {name,tenant,labels,annotations} + spec {source, processors, sinks,
  * commit_policy, sink_batch_deadline_secs}), with Spark-native component
- * kinds: the source is a [[graft.sources.BacklogSource]] directory, sinks
- * are parquet/jsonl/memory, processors are filter/route/flatten/outbox/js.
+ * kinds. The source is a [[graft.sources.BacklogSource]] directory read as
+ * one of three kinds: `backlog` (JSONL change-event envelopes),
+ * `mysql_binlog` (base64 binlog segments, as [[graft.sources.BinlogSpooler]]
+ * writes them) or `pgoutput` (base64 pgoutput segments, as
+ * [[graft.sources.PgSpooler]] writes them). Sinks are parquet/jsonl/memory,
+ * processors are filter/route/flatten/outbox/js. [[assemble]] is the one
+ * place a spec becomes a stream plus its [[CdcPipeline.Config]].
  *
  * Environment expansion: `${VARS_LIKE_THIS}` (uppercase env-style names
  * only) expand from the process environment, like the reference's
@@ -37,7 +45,21 @@ object PipelineSpec {
                       labels: Map[String, String] = Map.empty,
                       annotations: Map[String, String] = Map.empty)
 
-  case class SourceCfg(kind: String, path: String, maxLinesPerTrigger: Option[Long])
+  /** A [[BacklogSource]] directory and how its lines decode. */
+  sealed trait SourceCfg {
+    def path: String
+    def maxLinesPerTrigger: Option[Long]
+  }
+  /** JSONL change-event envelopes, one per line. */
+  case class BacklogCfg(path: String, maxLinesPerTrigger: Option[Long]) extends SourceCfg
+  /** Binlog segments; `columns` names the columns of each `db.table` (the
+   * schema provider of [[MysqlBinlog.decodeSegment]]); an unlisted table's
+   * columns decode as `col<i>`. */
+  case class MysqlBinlogCfg(path: String, maxLinesPerTrigger: Option[Long],
+                            columns: Map[String, IndexedSeq[String]]) extends SourceCfg
+  /** pgoutput segments of one `database`, which becomes `source.db`. */
+  case class PgOutputCfg(path: String, maxLinesPerTrigger: Option[Long],
+                         database: String) extends SourceCfg
 
   sealed trait ProcessorCfg
   case class FilterCfg(ops: Seq[String], tables: Seq[String],
@@ -109,8 +131,16 @@ object PipelineSpec {
     require(sp != null, "spec needs a spec block")
     val src = sp.get("source")
     require(src != null, "spec.source is required")
-    val source = SourceCfg(str(src, "kind", "backlog"), str(src, "path"),
-      Option(src.get("max_lines_per_trigger")).map(_.asLong))
+    val (path, maxLines) = (str(src, "path"), Option(src.get("max_lines_per_trigger")).map(_.asLong))
+    val source = str(src, "kind", "backlog") match {
+      case "backlog" => BacklogCfg(path, maxLines)
+      case "mysql_binlog" => MysqlBinlogCfg(path, maxLines,
+        Option(src.get("columns")).map(_.properties().asScala.map(e =>
+          e.getKey -> e.getValue.elements().asScala.map(_.asText).toIndexedSeq).toMap)
+          .getOrElse(Map.empty))
+      case "pgoutput" => PgOutputCfg(path, maxLines, str(src, "database"))
+      case other => throw new IllegalArgumentException(s"unknown source kind '$other'")
+    }
     val processors = Option(sp.get("processors")).map(_.elements().asScala.toSeq).getOrElse(Nil)
       .map { p =>
         str(p, "kind") match {
@@ -122,16 +152,17 @@ object PipelineSpec {
           case "outbox" => OutboxCfg(Option(p.get("topic_template")).map(_.asText),
             str(p, "default_topic", "outbox"),
             Option(p.get("strict")).exists(_.asBoolean))
-          case "js" => JsCfg(str(p, "id", "js"),
-            { val s = str(p, "inline"); require(s != null, "js processor needs 'inline'"); s },
+          case "js" => JsCfg(str(p, "id", "js"), str(p, "inline"),
             Option(p.get("timeout_ms")).map(_.asLong).getOrElse(5000L))
           case other => throw new IllegalArgumentException(s"unknown processor kind '$other'")
         }
       }
     val sinks = Option(sp.get("sinks")).map(_.elements().asScala.toSeq).getOrElse(Nil)
       .map { s =>
-        SinkCfg(str(s, "kind"), str(s, "id"), str(s, "path", ""),
-          Option(s.get("required")).forall(_.asBoolean))
+        val kind = str(s, "kind")
+        // a file sink writes under its path from its first batch on
+        val path = if (kind == "parquet" || kind == "jsonl") str(s, "path") else str(s, "path", "")
+        SinkCfg(kind, str(s, "id"), path, Option(s.get("required")).forall(_.asBoolean))
       }
     require(sinks.nonEmpty, "spec.sinks must not be empty")
     val policy = str(sp, "commit_policy", "required") match {
@@ -147,6 +178,41 @@ object PipelineSpec {
   def load(text: String): Pipeline = fromNode(parseAny(text))
 
   // ——— spec → runnable pieces ———
+
+  /**
+   * The one path from a spec to a pipeline: the source's decoded, conformed
+   * change-event stream and the coordinator config (sinks, processors,
+   * commit policy, sink deadline, `pipelineName = metadata.name`), ready for
+   * [[CdcPipeline.start]]. A `mysql_binlog` or `pgoutput` source also
+   * names its events' `source.name` after the pipeline.
+   */
+  def assemble(spark: SparkSession, p: Pipeline, ledgerDir: String): (DataFrame, CdcPipeline.Config) = {
+    val src = p.spec.source
+    val lines = spark.readStream.format(classOf[BacklogSource].getName)
+      .option("path", src.path)
+      .options(src.maxLinesPerTrigger.map(n => Map("maxLinesPerTrigger" -> n.toString)).getOrElse(Map.empty))
+      .load()
+    val name = p.metadata.name
+    val stream = src match {
+      case _: BacklogCfg =>
+        // the full envelope schema (incl. the map<string,string> routing
+        // headers) qualifies for the fused byte-level decoder —
+        // from_json-identical by spec, one pass, no Jackson
+        lines.select(JsonDecode.fusedFromJson(col("value"), ChangeEvent.schema).as("e")).select("e.*")
+      case MysqlBinlogCfg(_, _, columns) =>
+        MysqlBinlog.changeEvents(MysqlBinlogFixture.decodeBase64Segments(lines,
+          (db: String, table: String) => columns.getOrElse(s"$db.$table", IndexedSeq.empty)), name)
+      case PgOutputCfg(_, _, database) =>
+        PgOutput.changeEvents(PgOutputFixture.decodeBase64Segments(lines), name, database)
+    }
+    (stream, CdcPipeline.Config(
+      sinks = buildSinks(p.spec),
+      commitPolicy = p.spec.commitPolicy,
+      ledgerDir = ledgerDir,
+      sinkTimeout = p.spec.sinkDeadlineSecs.map(_.seconds: Duration).getOrElse(5.minutes),
+      processors = buildProcessors(p.spec),
+      pipelineName = name))
+  }
 
   /** Processor configs → DataFrame transforms over the envelope. */
   def buildProcessors(spec: Spec): Seq[DataFrame => DataFrame] = spec.processors.map {
@@ -179,7 +245,7 @@ object PipelineSpec {
       case "parquet" => new ParquetLakeSink(s.id, s.path) {
         override def required: Boolean = s.required
       }
-      case "jsonl" => new JsonlSink(s.id, s.path, df => to_json(struct(df.columns.map(col).toIndexedSeq: _*))) {
+      case "jsonl" => new JsonlSink(s.id, s.path, ChangeEvent.json) {
         override def required: Boolean = s.required
       }
       case "memory" => new MemorySink(s.id, required = s.required)

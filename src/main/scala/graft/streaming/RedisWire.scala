@@ -127,8 +127,7 @@ object RedisWire {
         coalesce(col("event_id"), lit("")).as("event_id"),
         coalesce(Routing.resolveKey(keyTemplate), lit("")).as("key"),
         ChangeEvent.idempotencyKey.as("ikey"),
-        to_json(struct(batch.columns.map(col).toIndexedSeq: _*))
-          .cast("binary").as("payload"))
+        ChangeEvent.json(batch).cast("binary").as("payload"))
       val (sinkId, h, p, ps, mr, cto, rto) =
         (id, host, port, pipelineSize, maxRetries, connectTimeoutMs, readTimeoutMs)
       rows.foreachPartition { (it: Iterator[Row]) =>

@@ -1,19 +1,14 @@
 package graft
 
-import graft.core.ChangeEvent
-import graft.operators.FilterProcessor
-import graft.sources.BacklogSource
 import graft.streaming._
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.file.{Files, Paths}
 
 /**
- * The M1 slice end-to-end: backlog segments → DSv2 source → envelope parse →
- * filter processor → multi-sink fan-out (parquet lake + memory) with per-sink
- * ledger — the full reference pipeline shape in one streaming query.
+ * The M1 slice end-to-end from a YAML spec: backlog segments → DSv2 source →
+ * envelope parse → filter processor → multi-sink fan-out (parquet lake +
+ * memory) with per-sink ledger — the full reference pipeline shape in one
+ * streaming query, assembled by [[PipelineSpec.assemble]].
  */
 class EndToEndSpec extends SparkSpec {
 
@@ -29,22 +24,14 @@ class EndToEndSpec extends SparkSpec {
     Files.write(Paths.get(s"$dir/backlog/seg-000.jsonl"),
       events.mkString("\n").getBytes)
 
-    val stream = spark.readStream.format(classOf[BacklogSource].getName)
-      .option("path", s"$dir/backlog").load()
-      .select(from_json(col("value"), ChangeEvent.schema).as("e"))
-      .select("e.*")
-
-    val lake = new ParquetLakeSink("lake", s"$dir/lake")
     val mem = new MemorySink("mem")
-    val cfg = CdcPipeline.Config(
-      sinks = Seq(lake, mem),
-      ledgerDir = s"$dir/ledger",
-      processors = Seq(
-        (df: DataFrame) => ChangeEvent.conform(df),
-        FilterProcessor(FilterProcessor.Config(ops = Seq("c", "u"))) _))
-
-    val q = CdcPipeline.start(cfg, stream, s"$dir/chk", Trigger.AvailableNow())
-    q.awaitTermination(120000)
+    drainSpec(
+      s"""metadata: {name: e2e}
+         |spec:
+         |  source: {kind: backlog, path: $dir/backlog}
+         |  processors: [{kind: filter, ops: [c, u]}]
+         |  sinks: [{kind: parquet, id: lake, path: $dir/lake}]
+         |""".stripMargin, dir)(cfg => cfg.copy(sinks = cfg.sinks :+ mem))
 
     val expected = (1 to 40).count(i => i % 10 != 0) // deletes filtered
     assert(mem.totalRows == expected)

@@ -1,7 +1,9 @@
 package graft
 
+import graft.streaming.{CdcPipeline, PipelineSpec}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +14,26 @@ import java.util.concurrent.atomic.AtomicInteger
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
+
+  /**
+   * Runs the pipeline of the YAML `spec` until its source is drained, with
+   * `adapt` applied to its assembled config (a test sink swapped in, say);
+   * checkpoint and ledger go under `dir`. The query's failure, if it died.
+   */
+  def drainSpec(spec: String, dir: String)(
+      adapt: CdcPipeline.Config => CdcPipeline.Config): Option[Throwable] = {
+    val (stream, cfg) = PipelineSpec.assemble(spark, PipelineSpec.load(spec), s"$dir/ledger")
+    val q = CdcPipeline.start(adapt(cfg), stream, s"$dir/chk", Trigger.AvailableNow())
+    try { q.awaitTermination(60000); None }
+    catch { case e: StreamingQueryException => Some(e) }
+  }
+
+  /** A `mysql_binlog` source over `path` naming the orders fixture's columns. */
+  def ordersBinlogSource(path: String): String = {
+    val Fx = graft.sources.MysqlBinlogFixture
+    s"{kind: mysql_binlog, path: $path, " +
+      s"columns: {${Fx.OrdersDb}.${Fx.OrdersTable}: [${Fx.ordersCols.map(_.name).mkString(", ")}]}}"
+  }
 
   /**
    * The number of Spark jobs `body` launches from this thread or from

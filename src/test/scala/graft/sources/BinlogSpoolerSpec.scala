@@ -2,8 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.sources.{MysqlBinlogFixture => Fx}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.file.{Files, Paths}
 
@@ -28,17 +26,15 @@ class BinlogSpoolerSpec extends SparkSpec {
       assert(segs.size >= 2, s"expected tx-boundary cuts, got $segs") // not one blob
       assert(spooler.checkpoint() > 4L)
 
-      // stream the spool through the DSv2 source → decode → rows
-      val decoded = Fx.decodeBase64Segments(
-        spark.readStream.format(classOf[BacklogSource].getName)
-          .option("path", dir).load(),
-        Fx.ordersCols.map(_.name).toIndexedSeq)
+      // stream the spool through a `mysql_binlog` spec: DSv2 source → decode → rows
       val out = Files.createTempDirectory("spool-out").toString
-      val q = decoded.filter(col("op").isNotNull)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$out/chk")
-        .format("parquet").option("path", s"$out/data").start()
-      q.awaitTermination(60000)
+      drainSpec(
+        s"""metadata: {name: spool}
+           |spec:
+           |  source: ${ordersBinlogSource(dir)}
+           |  processors: [{kind: filter, ops: [c, u, d]}]
+           |  sinks: [{kind: parquet, id: lake, path: $out/data}]
+           |""".stripMargin, out)(identity)
       val rows = spark.read.parquet(s"$out/data")
       assert(rows.count() == pks.length)
       assert(rows.select("after").collect().map(_.getString(0))

@@ -3,13 +3,13 @@ package graft.sources
 import graft.SparkSpec
 import graft.streaming._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.file.Files
 
 /**
  * Binlog wire bytes through the STREAMING path: base64 segments in a
- * backlog dir → DSv2 [[BacklogSource]] micro-batches → real decode →
+ * backlog dir → a `mysql_binlog` spec ([[PipelineSpec.assemble]]): DSv2
+ * [[BacklogSource]] micro-batches → real decode →
  * processor chain → sink, with the DDL records feeding the schema registry
  * (the reference's binlog-stream → coordinator → schema-reload wiring,
  * mysql_event.rs:41-121, 626-721).
@@ -32,33 +32,29 @@ class BinlogStreamingSpec extends SparkSpec {
     val registry = new SchemaRegistry(spark, s"$root/registry")
     val metrics = new Metrics.Registry
     val mem = new MemorySink("mem")
-    val decoded = Fx.decodeBase64Segments(
-      spark.readStream.format(classOf[BacklogSource].getName)
-        .option("path", backlog).load(), names)
 
     val ddlSeen = new java.util.concurrent.atomic.AtomicReference[String]()
-    val cfg = CdcPipeline.Config(
-      sinks = Seq(mem), ledgerDir = s"$root/ledger",
-      pipelineName = "binlog-e2e", metrics = Some(metrics),
-      processors = Seq { df =>
-        // DDL records trigger a targeted schema re-register (reload path)
-        df.filter(col("ddl").isNotNull).select("ddl", "ddlTable", "db")
-          .collect().foreach { r =>
-            ddlSeen.set(r.getString(0))
-            registry.register(s"${r.getString(2)}.${r.getString(1)}",
-              org.apache.spark.sql.types.StructType(Fx.ordersCols.map(c =>
-                org.apache.spark.sql.types.StructField(c.name,
-                  org.apache.spark.sql.types.StringType))), 1700000000000L)
-          }
-        df.filter(col("op").isin("c", "u", "d"))
-      })
+    // DDL records trigger a targeted schema re-register (reload path)
+    val registerDdl = (df: org.apache.spark.sql.DataFrame) => {
+      df.filter(col("ddl").isNotNull).select("ddl", "source.table", "source.db")
+        .collect().foreach { r =>
+          ddlSeen.set(r.getString(0))
+          registry.register(s"${r.getString(2)}.${r.getString(1)}",
+            org.apache.spark.sql.types.StructType(Fx.ordersCols.map(c =>
+              org.apache.spark.sql.types.StructField(c.name,
+                org.apache.spark.sql.types.StringType))), 1700000000000L)
+        }
+      df
+    }
 
-    val q = CdcPipeline.start(cfg, decoded, s"$root/ckpt",
-      Trigger.ProcessingTime("300 milliseconds"))
-    try {
-      val deadline = System.currentTimeMillis() + 30000
-      while (mem.totalRows < 6 && System.currentTimeMillis() < deadline) Thread.sleep(200)
-    } finally { q.stop(); q.awaitTermination() }
+    drainSpec(
+      s"""metadata: {name: binlog-e2e}
+         |spec:
+         |  source: ${ordersBinlogSource(backlog)}
+         |  processors: [{kind: filter, ops: [c, u, d]}]
+         |  sinks: [{kind: memory, id: mem}]
+         |""".stripMargin, root)(cfg =>
+      cfg.copy(sinks = Seq(mem), metrics = Some(metrics), processors = registerDdl +: cfg.processors))
 
     assert(mem.totalRows == 6, s"expected 6 decoded DML rows, got ${mem.totalRows}")
     // DDL surfaced and registered the table (targeted reload)

@@ -1,10 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.core.ChangeEvent
 import graft.streaming.{CdcPipeline, MemorySink, SinkLedger}
 import graft.sources.{MysqlBinlog => B, MysqlBinlogFixture => Fx, PgOutputFixture => PFx}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 import java.net.ServerSocket
@@ -107,15 +106,7 @@ class LiveWireSpec extends SparkSpec {
       val nm = names // local copy — the closure must not capture the spec
       val decoded = Seq(segment).toDS().flatMap(seg =>
         B.decodeSegment(seg, (_, _) => nm)).toDF()
-      val conformed = ChangeEvent.conform(decoded
-        .filter(col("op").isNotNull)
-        .select(col("op"), col("before"), col("after"),
-          struct(lit("wire-test").as("name"), lit(Fx.OrdersDb).as("db"),
-            col("table"), lit("mysql").as("connector"), col("gtid"),
-            col("pos"), col("pos").as("sequence")).as("source"),
-          col("tsMs").as("ts_ms"),
-          concat(col("table"), lit(":"), col("pos")).as("event_id"),
-          col("txEnd").as("tx_end")))
+      val conformed = B.changeEvents(decoded, "wire-test").filter(col("op").isNotNull)
 
       val dir = Files.createTempDirectory("livewire").toString
       val sink = new MemorySink("wire")
@@ -266,15 +257,7 @@ class LiveWireSpec extends SparkSpec {
 
       import spark.implicits._
       val decoded = Seq(frames.toByteArray).toDS().flatMap(PgOutput.decodeSegment(_)).toDF()
-      val conformed = ChangeEvent.conform(decoded
-        .filter(col("op").isNotNull)
-        .select(col("op"), col("before"), col("after"),
-          struct(lit("pg-wire").as("name"), lit("shop").as("db"),
-            col("schema"), col("table"), lit("postgres").as("connector"),
-            col("lsn"), col("txId").as("tx_id")).as("source"),
-          col("tsMs").as("ts_ms"),
-          concat(col("table"), lit(":"), col("lsn")).as("event_id"),
-          lit(true).as("tx_end")))
+      val conformed = PgOutput.changeEvents(decoded, "pg-wire", "shop").filter(col("op").isNotNull)
       val dir = Files.createTempDirectory("livewire-pg").toString
       val sink = new MemorySink("pgwire")
       CdcPipeline.processBatch(
@@ -306,19 +289,15 @@ class LiveWireSpec extends SparkSpec {
       assert(perSegment.flatten.map(r =>
         """"o_orderkey":(\d+)""".r.findFirstMatchIn(r.after).get.group(1).toLong) == pks)
 
-      // and the DSv2 source streams the spool end to end
-      import spark.implicits._
-      val lines = spark.readStream.format(classOf[BacklogSource].getName)
-        .option("path", dir).load()
-      val decoded = lines.select(unbase64(col("value")).as("seg"))
-        .as[Array[Byte]](org.apache.spark.sql.Encoders.BINARY)
-        .flatMap(PgOutput.decodeSegment(_)).toDF()
+      // and a `pgoutput` spec streams the spool end to end
       val out = Files.createTempDirectory("pg-spool-out").toString
-      val q = decoded.filter(col("op").isNotNull)
-        .writeStream.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$out/chk")
-        .format("parquet").option("path", s"$out/data").start()
-      q.awaitTermination(60000)
+      drainSpec(
+        s"""metadata: {name: pg-spool}
+           |spec:
+           |  source: {kind: pgoutput, path: $dir, database: shop}
+           |  processors: [{kind: filter, ops: [c, u, d, t]}]
+           |  sinks: [{kind: parquet, id: lake, path: $out/data}]
+           |""".stripMargin, out)(identity)
       assert(spark.read.parquet(s"$out/data").count() == pks.length)
     } finally stub.stop()
   }

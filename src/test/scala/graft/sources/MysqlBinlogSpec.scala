@@ -227,6 +227,21 @@ class MysqlBinlogSpec extends SparkSpec {
     assert(recs.size == 1 && recs.head.txEnd)
   }
 
+  test("changeEvents maps DML, DDL and tx-end records to envelopes") {
+    import spark.implicits._
+    val seg = Fx.ordersSegment(Iterator((6L, 106L, "O", 16.5, 812332800000L, "2-HIGH")))
+    val rows = changeEvents(decode(seg).toDF(), "src-1")
+      .select("op", "ddl", "source.db", "source.table", "source.connector", "source.name",
+        "source.sequence", "event_id", "tx_end")
+      .as[(String, String, String, String, String, String, Option[Long], String, Boolean)]
+      .collect().toSeq
+    val ddl = "ALTER TABLE orders ADD COLUMN note VARCHAR(10)"
+    assert(rows == Seq(
+      (null, ddl, "inventory", "orders", "mysql", "src-1", Some(0L), "inventory.orders:0", false),
+      ("u", null, "inventory", "orders", "mysql", "src-1", Some(6L), "inventory.orders:6", false),
+      (null, null, null, null, "mysql", "src-1", Some(0L), null, true)))
+  }
+
   // — end-to-end over Spark —
 
   test("distributed segments decode 1:1 with the source rows") {

@@ -93,6 +93,23 @@ class PgOutputSpec extends SparkSpec {
     assert(d.before != null && d.after == null)
   }
 
+  test("changeEvents maps records to envelopes, source.sequence is the LSN as a number") {
+    import spark.implicits._
+    val lsn = (0x1AL << 32) | 0xFF00FFL
+    val seg = Fx.framed(0L, Fx.relation(Fx.RelId, Fx.Schema, Fx.Table, Fx.ordersCols)) ++
+      Fx.framed(0L, Fx.begin(lsn, Fx.CommitMicrosPg, 77L)) ++
+      Fx.framed(lsn, Fx.insert(Fx.RelId,
+        Fx.orderValues(1L, 2L, "O", 3.5, 812332800000L, "1-URGENT", toastUnchanged = false)))
+    val rows = PgOutput.changeEvents(PgOutput.decodeSegment(seg).toDF(), "pg-1", "shop")
+      .select("op", "source.db", "source.schema", "source.table", "source.connector",
+        "source.name", "source.lsn", "source.tx_id", "source.sequence", "event_id", "tx_end")
+      .as[(String, String, String, String, String, String, String, Long, Long, String, Option[Boolean])]
+      .collect().toSeq
+    assert(rows == Seq(("c", "shop", "public", "orders", "postgres", "pg-1", "1A/FF00FF", 77L,
+      lsn, "public.orders:1A/FF00FF", None)))
+    assert(PgWire.parseLsn("1A/FF00FF") == lsn)
+  }
+
   test("truncate fans out op='t' with cascade/restart flags") {
     val recs = PgOutput.decodeSegment(Fx.truncateSegment())
     assert(recs.size == 1)

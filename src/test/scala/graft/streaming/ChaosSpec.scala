@@ -36,6 +36,17 @@ import java.nio.file.{Files, Paths}
 class ChaosSpec extends SparkSpec {
   import CdcPipeline._
 
+  /** Runs a `backlog` spec over `src` to the end of its lines with `sink`
+   * swapped in (checkpoint and ledger under `out`); the query's failure,
+   * if it died. */
+  private def runBacklogSpec(src: String, out: String, sink: EventSink): Option[Throwable] =
+    drainSpec(
+      s"""metadata: {name: chaos}
+         |spec:
+         |  source: {kind: backlog, path: $src}
+         |  sinks: [{kind: memory, id: mem}]
+         |""".stripMargin, out)(_.copy(sinks = Seq(sink)))
+
   private def events(n: Int): DataFrame = {
     import spark.implicits._
     ChangeEvent.conform(
@@ -94,21 +105,8 @@ class ChaosSpec extends SparkSpec {
         .mkString("\n").concat("\n").getBytes)
 
     val sink = new MemorySink("mem", failTimes = 1) // injected crash on batch 0
-    val cfg = Config(Seq(sink), ledgerDir = s"$out/ledger")
     val ledger = new SinkLedger(s"$out/ledger")
-
-    def run(): Option[Throwable] = {
-      val stream = spark.readStream.format(classOf[BacklogSource].getName)
-        .option("path", src).load()
-        .select(from_json(col("value"), ChangeEvent.schema).as("e"))
-        .select(col("e.*"))
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$out/chk")
-        .foreachBatch((df: DataFrame, id: Long) => processBatch(cfg, ledger)(df, id))
-        .start()
-      try { q.awaitTermination(60000); None }
-      catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => Some(e) }
-    }
+    def run(): Option[Throwable] = runBacklogSpec(src, out, sink)
 
     assert(run().isDefined) // the crash happened — query died mid-batch
     assert(sink.totalRows == 0 && ledger.committed("mem") == -1L) // nothing half-done
@@ -212,20 +210,8 @@ class ChaosSpec extends SparkSpec {
         super.write(batch, batchId)
       }
     }
-    val cfg = Config(Seq(sink), ledgerDir = s"$out/ledger")
     val ledger = new SinkLedger(s"$out/ledger")
-
-    def run(): Boolean = {
-      val stream = spark.readStream.format(classOf[BacklogSource].getName)
-        .option("path", src).load()
-        .select(from_json(col("value"), ChangeEvent.schema).as("e")).select(col("e.*"))
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$out/chk")
-        .foreachBatch((df: DataFrame, id: Long) => processBatch(cfg, ledger)(df, id))
-        .start()
-      try { q.awaitTermination(60000); true }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => false }
-    }
+    def run(): Boolean = runBacklogSpec(src, out, sink).isEmpty
 
     var expected = 0L
     for (round <- 0 to 2) {

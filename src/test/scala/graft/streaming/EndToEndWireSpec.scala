@@ -1,10 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.core.ChangeEvent
-import graft.sources.{BacklogSource, MysqlBinlogFixture => Fx}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.sources.{MysqlBinlogFixture => Fx}
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 import java.net.ServerSocket
@@ -17,7 +14,8 @@ import java.util.concurrent.atomic.AtomicBoolean
  * The round's parts composed end to end, wire to wire:
  *
  *   recorded MySQL binlog BYTES (CRC32-trailed, wire format)
- *     → DSv2 [[BacklogSource]] micro-batches
+ *     → a `mysql_binlog` spec ([[PipelineSpec.assemble]]): DSv2
+ *       [[graft.sources.BacklogSource]] micro-batches
  *     → [[graft.sources.MysqlBinlog.decodeSegment]] (real decode)
  *     → ChangeEvent envelope → coordinator ([[CdcPipeline.processBatch]])
  *     → [[MessagingSinks.KafkaLikeSink]] over [[KafkaWire.SocketProducer]]
@@ -86,7 +84,6 @@ class EndToEndWireSpec extends SparkSpec {
 
     val broker = new Broker()
     try {
-      val names = Fx.ordersCols.map(_.name).toIndexedSeq
       val port = broker.port
       // IDEMPOTENT (non-transactional) path: one stable producerId per
       // producer task slot. The sink sends every batch from one task in
@@ -99,29 +96,15 @@ class EndToEndWireSpec extends SparkSpec {
         () => new SocketProducer("127.0.0.1", port, "graft-e2e", transactionalId = null,
           producerId = org.apache.spark.TaskContext.getPartitionId() + 1L),
         topicTemplate = Some("cdc.${source.db}.${source.table}"))
-      val cfg = CdcPipeline.Config(Seq(sink), ledgerDir = s"$root/ledger")
       val ledger = new SinkLedger(s"$root/ledger")
 
-      def run(): Option[Throwable] = {
-        val decoded = Fx.decodeBase64Segments(
-          spark.readStream.format(classOf[BacklogSource].getName)
-            .option("path", backlog).load(), names)
-        val conformed = ChangeEvent.conform(decoded
-          .filter(col("op").isin("c", "u", "d"))
-          .select(col("op"), col("before"), col("after"),
-            struct(col("db"), col("table"), lit("mysql").as("connector"),
-              col("gtid"), col("pos"), col("pos").as("sequence")).as("source"),
-            col("tsMs").as("ts_ms"),
-            concat(col("db"), lit("."), col("table"), lit(":"), col("pos")).as("event_id"),
-            col("txEnd").as("tx_end")))
-        val q = conformed.writeStream.trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/chk")
-          .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-            CdcPipeline.processBatch(cfg, ledger)(df, id))
-          .start()
-        try { q.awaitTermination(60000); None }
-        catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => Some(e) }
-      }
+      def run(): Option[Throwable] = drainSpec(
+        s"""metadata: {name: wire-e2e}
+           |spec:
+           |  source: ${ordersBinlogSource(backlog)}
+           |  processors: [{kind: filter, ops: [c, u, d]}]
+           |  sinks: [{kind: memory, id: kafka}]
+           |""".stripMargin, root)(_.copy(sinks = Seq(sink)))
 
       broker.lostAck.set(true) // ── the broker appends but the ack is lost
       assert(run().isDefined) // commit gate converts the lost ack into a dead query

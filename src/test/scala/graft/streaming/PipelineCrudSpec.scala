@@ -250,6 +250,83 @@ class PipelineCrudSpec extends SparkSpec {
     }
   }
 
+  test("spec loader refuses an unknown source kind and a file sink without a path; REST answers 400") {
+    def spec(source: String, sink: String) =
+      s"""metadata: {name: refused}
+         |spec:
+         |  source: $source
+         |  sinks: [$sink]
+         |""".stripMargin
+    val backlog = "{kind: backlog, path: /tmp/x}"
+    val refused = Seq(
+      spec("{kind: mysql_binlg, path: /tmp/x}", "{kind: memory, id: m}"),
+      spec(backlog, "{kind: parquet, id: lake}"),
+      spec(backlog, "{kind: jsonl, id: out}"))
+    refused.foreach(text => intercept[IllegalArgumentException](PipelineSpec.load(text)))
+    assert(PipelineSpec.load(spec(backlog, "{kind: memory, id: m}")).spec.sinks.head.path == "")
+
+    val root = Files.createTempDirectory("crudrefused").toString
+    val mgr = new PipelineManager(spark, s"$root/pipelines")
+    val cp = new ControlPlane(spark, 0, Some(mgr)).start()
+    try {
+      refused.foreach { text =>
+        val (code, body) = send("POST", s"http://127.0.0.1:${cp.boundPort}/pipelines", text)
+        assert(code == 400, body)
+      }
+      assert(mgr.list().isEmpty)
+    } finally cp.stop()
+  }
+
+  /** Creates pipeline `name` through the manager from a spec with `source`
+   * over `segments` (base64 lines, as the spoolers write them) and a parquet
+   * sink; checks the sink's ops, its ledger mark and the events' `source`
+   * block; then deletes the pipeline and checks its state is gone. */
+  private def segmentPipeline(name: String, source: String => String, segments: Seq[Array[Byte]],
+                              connectorAndDb: (String, String)): Unit = {
+    val root = Files.createTempDirectory(name).toString
+    val lake = s"$root/lake"
+    segments.zipWithIndex.foreach { case (seg, i) =>
+      graft.sources.MysqlBinlogFixture.writeBacklogSegment(s"$root/backlog", f"seg-$i%03d.segb64", seg)
+    }
+    val mgr = new PipelineManager(spark, s"$root/pipelines")
+    mgr.create(
+      s"""metadata: {name: $name}
+         |spec:
+         |  source: ${source(s"$root/backlog")}
+         |  processors: [{kind: filter, ops: [c, u, d]}]
+         |  sinks: [{kind: parquet, id: lake, path: $lake}]
+         |""".stripMargin)
+    try {
+      // pks 1 6 9 / 11 16 19: ops by pk%10 are c u d, two of each
+      val ops = Map("c" -> 2L, "u" -> 2L, "d" -> 2L)
+      assert(await()(lakeOps(lake) == ops), s"$name: ${lakeOps(lake)}")
+      assert(await()(mgr.infoJson(name, mgr.get(name).get).at("/ops/checkpoints/lake").asLong >= 0L))
+      val src = spark.read.parquet(lake).select("source.connector", "source.db", "source.name", "after")
+        .collect()
+      assert(src.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet ==
+        Set((connectorAndDb._1, connectorAndDb._2, name)))
+      assert(src.forall(r => r.isNullAt(3) || r.getString(3).contains("\"o_orderkey\":")))
+    } finally mgr.delete(name)
+    assert(!Files.exists(Paths.get(s"$root/pipelines/$name")))
+  }
+
+  private def orderRows(pks: Long*) =
+    pks.iterator.map(pk => (pk, pk + 100, "O", 10.50 + pk, 812332800000L, "2-HIGH"))
+
+  test("a mysql_binlog pipeline from YAML decodes spooled binlog segments into the lake") {
+    val Fx = graft.sources.MysqlBinlogFixture
+    segmentPipeline("binlog-crud", ordersBinlogSource,
+      Seq(Fx.ordersSegment(orderRows(1, 6, 9)), Fx.ordersSegment(orderRows(11, 16, 19))),
+      ("mysql", Fx.OrdersDb))
+  }
+
+  test("a pgoutput pipeline from YAML decodes spooled pgoutput segments into the lake") {
+    val PFx = graft.sources.PgOutputFixture
+    segmentPipeline("pg-crud", dir => s"{kind: pgoutput, path: $dir, database: shop}",
+      Seq(PFx.ordersSegment(orderRows(1, 6, 9)), PFx.ordersSegment(orderRows(11, 16, 19))),
+      ("postgres", "shop"))
+  }
+
   test("spec loader builds flatten and outbox processors") {
     val p = PipelineSpec.load(
       """metadata: {name: p2, tenant: t}
@@ -339,5 +416,26 @@ class PipelineCrudSpec extends SparkSpec {
     assert(merged.at("/spec/sinks/0/id").asText() == "a") // untouched key survives
     assert(merged.at("/spec/sinks/1/id").asText() == "b") // untouched element survives
     assert(merged.at("/spec/commit_policy").asText() == "required")
+
+    // the sources' deployment fields load, and survive a PATCH merge
+    def patched(spec: String, patch: String) = PipelineSpec.fromNode(
+      PipelineSpec.mergeSpec(PipelineSpec.parseYaml(spec), PipelineSpec.parseJson(patch))).spec.source
+    assert(patched(
+      """metadata: {name: p3}
+        |spec:
+        |  source: {kind: mysql_binlog, path: /tmp/b, columns: {shop.orders: [id, total]}}
+        |  sinks: [{kind: memory, id: m}]
+        |""".stripMargin,
+      """{"spec":{"source":{"columns":{"shop.items":["sku"]}}}}""") ==
+      PipelineSpec.MysqlBinlogCfg("/tmp/b", None,
+        Map("shop.orders" -> Vector("id", "total"), "shop.items" -> Vector("sku"))))
+    assert(patched(
+      """metadata: {name: p4}
+        |spec:
+        |  source: {kind: pgoutput, path: /tmp/p, database: shop, max_lines_per_trigger: 8}
+        |  sinks: [{kind: memory, id: m}]
+        |""".stripMargin,
+      """{"spec":{"source":{"database":"inventory"}}}""") ==
+      PipelineSpec.PgOutputCfg("/tmp/p", Some(8L), "inventory"))
   }
 }

@@ -11,12 +11,17 @@ lines and removed comments therefore never show as a change in size.
 Files are grouped by their `package` clause cut to two names (`graft.llm`,
 `graft.sources`, ...; a file directly in `graft` counts as `graft`).
 
+With several paths, each path's packages are listed apart, each followed
+by a subtotal line for that path, and the total comes last, so lines that
+move from one tree to another (a test copy turned into a library function)
+show where they went.
+
 `--rev REV` counts the files as they are at git revision REV (read through
 `git ls-tree` and `git show`, no checkout), so a parent and a change are
 counted by the same command:
 
-    python3 tools/loc.py --rev HEAD~1 src/main
-    python3 tools/loc.py src/main
+    python3 tools/loc.py --rev HEAD~1 src/main src/test
+    python3 tools/loc.py src/main src/test
 """
 import argparse
 import collections
@@ -119,17 +124,7 @@ def read_at_rev(rev, path):
                           capture_output=True, text=True).stdout
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("paths", nargs="*", default=["src/main"])
-    ap.add_argument("--rev", help="count the files at this git revision")
-    args = ap.parse_args()
-    if args.rev:
-        files = files_at_rev(args.rev, args.paths)
-        read = lambda p: read_at_rev(args.rev, p)
-    else:
-        files = list(files_on_disk(args.paths))
-        read = read_on_disk
+def count(files, read):
     lines = collections.Counter()
     nfiles = collections.Counter()
     for path in files:
@@ -137,11 +132,34 @@ def main():
         key = group(text)
         lines[key] += code_lines(text)
         nfiles[key] += 1
-    width = max([len(k) for k in lines] + [5])
-    for key in sorted(lines):
-        print(f"{key:<{width}}  {lines[key]:>7}  ({nfiles[key]} files)")
-    print(f"{'total':<{width}}  {sum(lines.values()):>7}  ({len(files)} files)")
+    return lines, nfiles
 
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("paths", nargs="*", default=["src/main"])
+    ap.add_argument("--rev", help="count the files at this git revision")
+    args = ap.parse_args()
+    if args.rev:
+        files = lambda p: files_at_rev(args.rev, [p])
+        read = lambda p: read_at_rev(args.rev, p)
+    else:
+        files = lambda p: list(files_on_disk([p]))
+        read = read_on_disk
+    rows = []
+    total_lines = total_files = 0
+    for path in args.paths:
+        lines, nfiles = count(files(path), read)
+        lead = path + "  " if len(args.paths) > 1 else ""
+        rows += [(lead + key, lines[key], nfiles[key]) for key in sorted(lines)]
+        if lead:
+            rows.append((lead + "subtotal", sum(lines.values()), sum(nfiles.values())))
+        total_lines += sum(lines.values())
+        total_files += sum(nfiles.values())
+    rows.append(("total", total_lines, total_files))
+    width = max(len(name) for name, _, _ in rows)
+    for name, n, nf in rows:
+        print(f"{name:<{width}}  {n:>7}  ({nf} files)")
 
 if __name__ == "__main__":
     sys.exit(main())
