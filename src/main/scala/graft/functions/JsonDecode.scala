@@ -11,19 +11,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Fused JSON→struct decoder — the decode twin of [[JsonEncode]] (r12's
- * fused encoder), for schemas of string / long / int / double / float /
+ * Fused JSON→struct decoder — the decode twin of the fused encoder
+ * [[JsonEncode]], for schemas of string / long / int / double / float /
  * boolean / decimal / timestamp / date leaves nested arbitrarily under
- * struct, array and string-keyed map (r15 — previously flat-only; map /
- * date / float landed later in r15, each builtin-probed on 4.1.2): one
- * hand-rolled byte-level pass over the
+ * struct, array and string-keyed map (each leaf type builtin-probed on
+ * 4.1.2): one hand-rolled byte-level pass over the
  * payload, no Jackson, no UTF8String→String conversion for clean strings,
  * no generic parser machinery per field.
  *
  * Why not `from_json`: the lake projection (`cdc_lake_project`) parses two
  * images per change event through Jackson, and that parse is the largest
- * CPU term of the cdc decode/project family at ×10 (r12 verdict #8 names
- * it). The reference decodes each image once into typed Arrow columns
+ * CPU term of the cdc decode/project family at ×10. The reference decodes
+ * each image once into typed Arrow columns
  * (crates/deltaforge-core/src/encoding/arrow_schema.rs:31-139 — incl. the
  * nested List<T> envelopes of crates/sinks/src/s3/encoder.rs:1-19); this
  * kernel restores that single-pass cost model on the Spark side.
@@ -36,8 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
  *  - a field whose VALUE doesn't convert (string in a long field, float
  *    token in a long field, long overflow) → that field null, parsing
  *    continues (Spark's enablePartialResults behavior);
- *  - NESTED failure propagation (empirically pinned against the builtin,
- *    r15): coercion failures are absorbed at the nearest enclosing STRUCT
+ *  - NESTED failure propagation (empirically pinned against the builtin):
+ *    coercion failures are absorbed at the nearest enclosing STRUCT
  *    (that field nulls, siblings keep); ARRAYS propagate — any failed
  *    element (or a wrong-token element) nulls the WHOLE array value, which
  *    then propagates to ITS nearest struct. Struct elements inside arrays
@@ -558,7 +557,7 @@ object JsonDecode {
     /** Skip one complete JSON value by FULL tokenization — a brace-depth
      * walk accepted malformed content inside skipped values (e.g.
      * `{"l":1,"x":{bogus##}}`) that the builtin's tokenizer rejects with an
-     * all-null row (r13 ADVICE). Containers recurse through the same token
+     * all-null row. Containers recurse through the same token
      * dispatch as parsed values; depth capped like Jackson's
      * StreamReadConstraints (1000, parsed + skipped levels combined). */
     private def skipValue(): Unit = cur match {

@@ -22,14 +22,19 @@ import scala.util.{Failure, Success, Try}
  * per-sink checkpoints C-5 to [[SinkLedger]].
  *
  * Scale notes: the processed batch is frozen once (the reference's frozen
- * `Arc<[Event]>`): ONE Spark job computes its rows, stores them
- * partition-local at MEMORY_AND_DISK and counts rows and bytes
- * (`GraftBridge.freeze`). Sinks receive a leaf DataFrame over the stored
- * rows whose plan statistics carry that count and size, so no sink re-runs
- * or re-plans the processor chain, and none needs a `count()` of its own.
+ * `Arc<[Event]>`): ONE Spark job computes its rows, stores each partition
+ * as one block of copied rows at MEMORY_AND_DISK and counts rows and bytes
+ * (`GraftBridge.freeze`). The processor chain is a `GraftBridge.BatchPlan`:
+ * over the leaf `foreachBatch` hands over, it is planned once per input
+ * schema, and each later batch only swaps its rows into that plan (a chain
+ * with an exchange, a nondeterministic or a current-time expression, or
+ * one that runs a job over its batch, is planned every batch). Sinks
+ * receive a leaf DataFrame over the stored rows whose plan statistics
+ * carry that count and size, so no sink re-runs or re-plans the processor
+ * chain, and none needs a `count()` of its own.
  * Each sink write is a distributed job, tagged with [[sinkJobTag]]; the
  * stored rows are dropped when the batch ends; the only driver-side state
- * is the tiny ledger.
+ * is the tiny ledger and the cached plans.
  */
 object CdcPipeline {
 
@@ -48,7 +53,11 @@ object CdcPipeline {
       sinkTimeout: Duration = 5.minutes,
       processors: Seq[DataFrame => DataFrame] = Nil,
       pipelineName: String = "pipeline",
-      metrics: Option[Metrics.Registry] = None)
+      metrics: Option[Metrics.Registry] = None) {
+    /** The processor chain, planned once per input schema (see [[processBatch]]). */
+    @transient private[streaming] lazy val chain =
+      new GraftBridge.BatchPlan((batch, _) => processors.foldLeft(batch)((df, p) => p(df)))
+  }
 
   def policySatisfied(cfg: Config, acks: Map[String, Boolean]): Boolean = cfg.commitPolicy match {
     case CommitAll => cfg.sinks.forall(s => acks.getOrElse(s.id, false))
@@ -63,11 +72,15 @@ object CdcPipeline {
 
   /**
    * The foreachBatch body. Public so batch-mode tests can drive it directly.
+   * A processor runs when the chain is planned: over a `foreachBatch` leaf,
+   * once per input schema while the plan is reused; every call when it is
+   * not (see `GraftBridge.BatchPlan`: a processor that runs a job over its
+   * batch, say) and over any other input.
    * Throws when the commit policy is not satisfied → Spark retries the batch
    * (at-least-once); sinks that already committed skip on replay (ledger).
    */
   def processBatch(cfg: Config, ledger: SinkLedger)(batch0: DataFrame, batchId: Long): Unit = {
-    val frozen = GraftBridge.freeze(cfg.processors.foldLeft(batch0)((df, p) => p(df)))
+    val frozen = GraftBridge.freeze(cfg.chain(batch0, batchId))
     val (batch, rows) = (frozen.df, frozen.rows)
     val sc = batch.sparkSession.sparkContext
     val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))

@@ -54,7 +54,7 @@ object MessagingSinks {
    *
    * A batch frozen by [[CdcPipeline]] carries its row count in its plan
    * statistics: at 0 rows the sink runs no job. Its projection is a
-   * [[GraftBridge.SinkPlan]], planned once; any other input (a sink
+   * [[GraftBridge.BatchPlan]], planned once; any other input (a sink
    * `filter`, an unfrozen batch) is planned on the call over a
    * `coalesce(1)`, which adds no exchange. The task calls the producer
    * factory and begins its transaction at its first row, so a batch that
@@ -79,7 +79,7 @@ object MessagingSinks {
         map().cast(MapType(StringType, StringType))).as("headers"),
       coalesce(col("source.sequence"), col("ts_ms"), lit(0L)).as("_seq"))
 
-    @transient private lazy val plans = new GraftBridge.SinkPlan((batch, _) =>
+    @transient private lazy val plans = new GraftBridge.BatchPlan((batch, _) =>
       routed(batch).sortWithinPartitions(col("key"), col("_seq")))
 
     override def write(batch: DataFrame, batchId: Long): Unit = {

@@ -120,16 +120,16 @@ object SchemaSensing {
    * one-groupBy-per-field union.
    */
   def typeHistogram(batch: DataFrame, payload: Column, fields: Seq[String]): DataFrame = {
-    // parse-once (r17): [[observedType]]'s when-chain references its
+    // parse-once: [[observedType]]'s when-chain references its
     // get_json_object SEVEN times, and conditional branches are excluded
-    // from codegen CSE — the old per-field inline form re-parsed the
-    // payload up to 7× per field per row (14 get_json_object nodes in the
+    // from codegen CSE — a per-field inline form re-parses the payload up
+    // to 7× per field per row (14 get_json_object nodes in the
     // sensing_types plan for 2 fields). One fused JsonPathsGenerate pass
     // extracts every field; the categorize chain then reads cheap staged
     // string columns. Value-identical: the tuple's extraction semantics
     // are spec-pinned to get_json_object (FilterKeepSpec), and a null
-    // payload extracts all-null → "missing", same as the old payload.isNull
-    // arm.
+    // payload extracts all-null → "missing", as a payload.isNull check
+    // would.
     import graft.functions.JsonPathOps.jsonPathsTuple
     val names = fields.indices.map(i => s"__st$i")
     // One semantic wrinkle vs the inline form: get_json_object NORMALIZES

@@ -47,7 +47,7 @@ trait EventSink extends Serializable {
  * a local lake sets the permissions of its directories, data files, `.crc`
  * files and `_SUCCESS` in-process instead of spawning a `chmod` for each,
  * and ships no Hadoop defaults to its task. The projection adding the
- * partition columns is a [[GraftBridge.SinkPlan]]: over a frozen batch it
+ * partition columns is a [[GraftBridge.BatchPlan]]: over a frozen batch it
  * is planned once, and each later batch only swaps its rows in. The
  * `_batch_id` column (parquet `required int64`) is a [[BatchConstant]], not
  * a `lit`: a Long literal is inlined into the generated Java, so each new
@@ -59,7 +59,7 @@ class ParquetLakeSink(val id: String, path: String,
                       rolling: Rolling.Config = Rolling.Config())
     extends EventSink {
 
-  @transient private lazy val plans = new GraftBridge.SinkPlan((batch, batchId) => {
+  @transient private lazy val plans = new GraftBridge.BatchPlan((batch, batchId) => {
     val ts = timestamp_millis(col("ts_ms"))
     GraftBridge.fileWriteQuery(batch.withColumns(ListMap(
       "table" -> col("source.table"),
@@ -166,11 +166,11 @@ class TypedLakeSink(val id: String, path: String, registry: SchemaRegistry)
 }
 
 /** JSONL lake sink (reference jsonl_writer.rs): one JSON document per line.
- * Its projection is a [[GraftBridge.SinkPlan]], planned once over frozen batches. */
+ * Its projection is a [[GraftBridge.BatchPlan]], planned once over frozen batches. */
 class JsonlSink(val id: String, path: String, envelope: DataFrame => Column)
     extends EventSink {
   @transient private lazy val plans =
-    new GraftBridge.SinkPlan((batch, _) => batch.select(envelope(batch).as("value")))
+    new GraftBridge.BatchPlan((batch, _) => batch.select(envelope(batch).as("value")))
 
   override def write(batch: DataFrame, batchId: Long): Unit =
     GraftBridge.writeFiles(plans(batch, batchId), "text", s"$path/batch_id=$batchId",

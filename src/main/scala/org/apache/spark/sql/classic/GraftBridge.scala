@@ -4,6 +4,7 @@ import graft.core.NioLocalFs
 import graft.functions.BatchConstant
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
@@ -22,7 +23,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.SchemaUtils
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{KnownSizeEstimation, SerializableConfiguration}
 
 import java.util.UUID
 
@@ -30,8 +31,9 @@ import java.util.UUID
  * Bridge exposing Spark's private[sql] Expression ↔ Column conversions to the
  * graft library (needed to wrap custom Catalyst expressions as user-facing
  * Columns in Spark 4's split Column/ColumnNode API), plus the other
- * private[sql] pieces it needs: the micro-batch freeze ([[freeze]]), a
- * sink's projection planned once per query ([[SinkPlan]]), the one file
+ * private[sql] pieces it needs: the micro-batch freeze ([[freeze]]), the
+ * processor chain and each sink's projection planned once per query
+ * ([[BatchPlan]]), the one file
  * write of the library ([[writeFiles]]) and the JSON formatters/parsers
  * the fused codecs must match.
  */
@@ -59,63 +61,91 @@ object GraftBridge {
     def release(): Unit = stored.unpersist(blocking = false)
   }
 
+  /** [[freeze]] of `df`'s query as it is planned now. */
+  def freeze(df: DataFrame): FrozenBatch = freeze(planned(df))
+
   /**
-   * Materialize `df` ONCE, with ONE Spark job: its rows are computed,
-   * stored at MEMORY_AND_DISK, and counted (rows and summed `UnsafeRow`
-   * bytes) by the same job. The returned DataFrame is a `LogicalRDD` over
-   * the stored rows, so readers never re-plan or re-run `df`'s plan, and
+   * Materialize `query` ONCE, with ONE Spark job: its rows are computed,
+   * copied into one [[FrozenRows]] block per partition, stored at
+   * MEMORY_AND_DISK, and counted (rows and summed `UnsafeRow` bytes) by the
+   * same job. The returned DataFrame is a `LogicalRDD` over the stored
+   * rows, so readers never re-plan or re-run `query`, and
    * `optimizedPlan.stats` of it (or of any plan that keeps its row count)
    * answers `rowCount`/`sizeInBytes` without another job. Public
    * `localCheckpoint(eager = true)` costs the same job but returns no
    * count and no handle to drop the stored rows.
+   *
+   * Per-batch driver cost: a block reports its own size, so the
+   * `MemoryStore` does not walk every stored row by reflection, and the
+   * job's functions are an `*Internal` RDD operation and a named function
+   * class, so Spark's `ClosureCleaner` reads no class file per batch.
    */
-  def freeze(df: DataFrame): FrozenBatch = {
-    val ds = castToImpl(df)
-    val qe = ds.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("freeze")) {
-      val output = qe.executedPlan.output
-      val stored = qe.toRdd.mapPartitionsWithIndex { (i, it) =>
+  def freeze(query: QueryExecution): FrozenBatch = {
+    val session = query.sparkSession
+    SQLExecution.withNewExecutionId(query, Some("freeze")) {
+      val output = query.executedPlan.output
+      val stored = query.toRdd.mapPartitionsWithIndexInternal { (i, it) =>
         lazy val proj = { val p = UnsafeProjection.create(output, output); p.initialize(i); p }
-        it.map {
+        Iterator.single(new FrozenRows(it.map {
           case u: UnsafeRow => u.copy()
           case r => proj(r).copy()
-        }
+        }.toArray))
       }.persist(StorageLevel.MEMORY_AND_DISK)
-      val counts =
-        try ds.sparkSession.sparkContext.runJob(stored, (it: Iterator[UnsafeRow]) => {
-          var rows = 0L; var bytes = 0L
-          it.foreach { r => rows += 1; bytes += r.getSizeInBytes }
-          (rows, bytes)
-        })
-        catch { case e: Throwable => stored.unpersist(blocking = false); throw e }
-      val rows = counts.map(_._1).sum
-      val bytes = counts.map(_._2).sum
-      // read-only, so the UnsafeRow RDD is safely an InternalRow one
-      val leaf = LogicalRDD(output, stored.asInstanceOf[RDD[InternalRow]])(ds.sparkSession,
+      var (rows, bytes) = (0L, 0L)
+      try session.sparkContext.runJob(stored, CountRows, 0 until stored.getNumPartitions,
+        (_: Int, c: (Long, Long)) => { rows += c._1; bytes += c._2 })
+      catch { case e: Throwable => stored.unpersist(blocking = false); throw e }
+      val leaf = LogicalRDD(output, stored.mapPartitionsInternal(_.flatMap(_.rows.iterator)))(session,
         Some(Statistics(sizeInBytes = bytes, rowCount = Some(rows)))).newInstance()
-      new FrozenBatch(Dataset.ofRows(ds.sparkSession, leaf), rows, stored)
+      new FrozenBatch(Dataset.ofRows(session, leaf), rows, stored)
     }
   }
 
   /**
-   * A sink's projection of its input, `build(input, batchId)`, ready to run.
+   * One partition of a frozen batch: its copied rows, stored as one block.
+   * `estimatedSize` is what the `MemoryStore` accounts for the block; it
+   * counts every row's bytes plus, per row, an `UnsafeRow` object (at most
+   * 48 bytes), its byte array's header (16) and the array slot (8), so it
+   * never under-reports the heap the block holds.
+   */
+  final class FrozenRows(val rows: Array[UnsafeRow]) extends KnownSizeEstimation with Serializable {
+    val bytes: Long = rows.foldLeft(0L)(_ + _.getSizeInBytes)
+    override def estimatedSize: Long = 32L + rows.length * 72L + bytes
+  }
+
+  /** The job function of [[freeze]]: the rows and bytes of a task's block. */
+  private object CountRows extends ((TaskContext, Iterator[FrozenRows]) => (Long, Long)) with Serializable {
+    override def apply(c: TaskContext, it: Iterator[FrozenRows]): (Long, Long) =
+      it.foldLeft((0L, 0L))((n, b) => (n._1 + b.rows.length, n._2 + b.bytes))
+  }
+
+  /**
+   * One step of a micro-batch, `build(input, batchId)`, ready to run: the
+   * processor chain that [[freeze]] materializes, and each sink's
+   * projection of the frozen batch.
    *
-   * When the input is a frozen batch (the bare `LogicalRDD` leaf of
-   * [[freeze]]), the projection is planned once per input schema, over a
-   * stand-in leaf. Each batch, the first included, swaps its stored rows
-   * (coalesced to `partitions` tasks) into that physical plan and rebinds
-   * every [[BatchConstant]] to its batch id, so a steady batch does no
-   * analysis, optimization or physical planning. Any other input is planned
-   * on the call, as `build(input.coalesce(partitions), batchId)`.
+   * When the input is a bare, unordered, non-streaming `LogicalRDD` leaf
+   * (the leaf `foreachBatch` hands over, or the frozen leaf of [[freeze]]),
+   * `build` is planned once per input schema and session, over a stand-in
+   * leaf. Each batch, the first included, swaps its rows (coalesced to
+   * `partitions` tasks) into that physical plan and rebinds every
+   * [[BatchConstant]] to its batch id, so a steady batch does no analysis,
+   * optimization or physical planning, and `build` runs once per schema,
+   * not once per batch. Any other input is planned on the call, as
+   * `build(input.coalesce(partitions), batchId)`.
    *
    * A plan is only reused where reuse cannot change a result: it holds no
    * exchange, subquery or adaptive node, no nondeterministic expression
    * and no current-time expression (the optimizer folds those into
-   * literals). Other plans are planned every batch.
+   * literals), and `build` ran no job over its input (a processor that
+   * collects from its batch, say, must see every batch). Other plans are
+   * planned every batch; for such a `build` the stand-in's empty run comes
+   * first, once per schema.
    */
-  final class SinkPlan(build: (DataFrame, Long) => DataFrame) {
-    /** The plan for one input schema: `Some((stand-in rows, query))`, or None if not reusable. */
-    @volatile private var cached: (StructType, Option[(RDD[InternalRow], QueryExecution)]) = _
+  final class BatchPlan(build: (DataFrame, Long) => DataFrame) {
+    /** The plan for one input schema and session: `Some((stand-in rows, query))`, or None
+     * if not reusable. */
+    @volatile private var cached: (StructType, SparkSession, Option[(RDD[InternalRow], QueryExecution)]) = _
 
     /** The query to run for `input`; `partitions` 0 keeps the input's partitioning. */
     def apply(input: DataFrame, batchId: Long, partitions: Int = 0): QueryExecution = {
@@ -124,7 +154,8 @@ object GraftBridge {
         case leaf: LogicalRDD if !leaf.isStreaming && leaf.outputOrdering.isEmpty &&
             leaf.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
           val c = cached
-          (if (c != null && c._1 == leaf.schema) c else plan(ds.sparkSession, leaf, batchId))._2 match {
+          val reuse = c != null && c._1 == leaf.schema && (c._2 eq ds.sparkSession)
+          (if (reuse) c else plan(ds.sparkSession, leaf, batchId))._3 match {
             case Some((stand, query)) =>
               val rows = if (partitions > 0) leaf.rdd.coalesce(partitions) else leaf.rdd
               new PlannedExecution(query, query.executedPlan.transformUp {
@@ -141,21 +172,28 @@ object GraftBridge {
 
     /** Plans `build` over a stand-in for `leaf` that holds no rows, and caches the result. */
     private def plan(session: SparkSession, leaf: LogicalRDD, batchId: Long)
-        : (StructType, Option[(RDD[InternalRow], QueryExecution)]) = {
-      val stand = session.sparkContext.emptyRDD[InternalRow]
+        : (StructType, SparkSession, Option[(RDD[InternalRow], QueryExecution)]) = {
+      val stand = new StandInRows(session.sparkContext)
       val standIn = LogicalRDD(leaf.output, stand)(session, Some(leaf.stats))
       val query = planned(build(Dataset.ofRows(session, standIn), batchId))
       val p = query.executedPlan
-      val reusable = !query.analyzed.containsPattern(CURRENT_LIKE) &&
+      val reusable = !stand.used && !query.analyzed.containsPattern(CURRENT_LIKE) &&
         p.collect { case s: RDDScanExec if s.rdd eq stand => s }.size == 1 &&
         !p.exists(n => n.isInstanceOf[Exchange] || n.isInstanceOf[AdaptiveSparkPlanExec] ||
           n.subqueries.nonEmpty || n.expressions.exists(!_.deterministic))
-      cached = (leaf.schema, if (reusable) Some((stand, query)) else None)
+      cached = (leaf.schema, session, if (reusable) Some((stand, query)) else None)
       cached
     }
   }
 
-  /** `query` with its physical plan replaced by `plan`, which runs the same projection. */
+  /** The rows of a [[BatchPlan]] stand-in leaf: none. `used` is set when a job reads them. */
+  private final class StandInRows(sc: SparkContext) extends RDD[InternalRow](sc, Nil) {
+    @volatile var used = false
+    override protected def getPartitions: Array[Partition] = { used = true; Array.empty }
+    override def compute(p: Partition, c: TaskContext): Iterator[InternalRow] = Iterator.empty
+  }
+
+  /** `query` with its physical plan replaced by `plan`, which runs the same query over other rows. */
   private final class PlannedExecution(query: QueryExecution, plan: SparkPlan)
       extends QueryExecution(query.sparkSession, query.logical) {
     override def executedPlan: SparkPlan = plan
@@ -167,12 +205,20 @@ object GraftBridge {
   /**
    * Runs `f` on every partition of `query`'s rows, as one job of one SQL
    * execution (a `Dataset.foreachPartition` without the conversion of each
-   * row to a `Row`).
+   * row to a `Row`). `f` goes to the job inside a named function class, so
+   * Spark's `ClosureCleaner` reads no class file for it.
    */
   def foreachPartition(query: QueryExecution)(f: Iterator[InternalRow] => Unit): Unit =
     SQLExecution.withNewExecutionId(query, Some("foreachPartition")) {
-      query.sparkSession.sparkContext.runJob(query.executedPlan.execute(), f)
+      val rows = query.executedPlan.execute()
+      query.sparkSession.sparkContext.runJob(rows, new EachPartition(f), 0 until rows.getNumPartitions,
+        (_: Int, _: Unit) => ())
     }
+
+  private final class EachPartition(f: Iterator[InternalRow] => Unit)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    override def apply(c: TaskContext, it: Iterator[InternalRow]): Unit = f(it)
+  }
 
   /**
    * `df` prepared as the query of a file write partitioned by `partitionBy`,

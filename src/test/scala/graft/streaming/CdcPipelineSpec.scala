@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.core.ChangeEvent
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -355,6 +356,216 @@ class CdcPipelineSpec extends SparkSpec {
     assert(CdcPipelineSpec.buffer.size() == 75)
     assert(ledger.committed("lake") == 3L && ledger.committed("kafka") == 3L)
     assert(tags.asScala.toSet == Set(sinkJobTag("plans", "lake"), sinkJobTag("plans", "kafka")))
+  }
+
+  /**
+   * Runs `body` with a planner probe installed; `count()` is the number of
+   * plannings so far whose input holds a `LogicalRDD` with a `marker`
+   * column (the chain over a `foreachBatch` or frozen leaf, or a sink over
+   * a frozen batch), and `reset()` starts it again.
+   */
+  private def withPlanProbe(marker: String)(body: java.util.concurrent.atomic.AtomicInteger => Unit): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
+    val plannings = new java.util.concurrent.atomic.AtomicInteger(0)
+    val probe = new SparkStrategy {
+      override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        if (plan.collectLeaves().exists {
+          case l: LogicalRDD => l.output.exists(_.name == marker)
+          case _ => false
+        }) plannings.incrementAndGet()
+        Nil
+      }
+    }
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val strategies = session.experimental.extraStrategies
+    session.experimental.extraStrategies = probe +: strategies
+    try body(plannings)
+    finally session.experimental.extraStrategies = strategies
+  }
+
+  /** A MemoryStream of (op, after, ts_ms) conformed to change events, with the column `marker`. */
+  private def markedStream(marker: String) = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String, Long)]
+    (ms, ChangeEvent.conform(ms.toDF().toDF("op", "after", "ts_ms")
+      .withColumn("source", struct(lit("db").as("db"), lit("t").as("table"), col("ts_ms").as("sequence")))
+      .withColumn("event_id", concat(lit("e"), col("ts_ms")))
+      .withColumn("tx_end", lit(true))).withColumn(marker, lit(1)))
+  }
+
+  private def rows(from: Int, n: Int): Seq[(String, String, Long)] =
+    (from until from + n).map(i => ("c", s"""{"id":$i}""", i.toLong))
+
+  /** The Spark jobs of each streamed batch, by batch id, once `body` has returned. */
+  private def jobsPerBatch(body: => Unit): Map[Long, Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val byBatch = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val sentinel = s"jobs-per-batch-${System.nanoTime()}"
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.description").contains(sentinel)) sentinelSeen.countDown()
+        prop("streaming.sql.batchId").foreach(b => byBatch.merge(b.toLong, 1, (a: Int, c: Int) => a + c))
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(l)
+    byBatch.asScala.toMap
+  }
+
+  test("streamed batches plan the processor chain once: steady batches plan nothing, three jobs each") {
+    val dir = tmp()
+    val marker = s"chain_probe_${System.nanoTime()}"
+    val (ms, stream) = markedStream(marker)
+    CdcPipelineSpec.buffer.clear()
+    val kafka = new MessagingSinks.KafkaLikeSink("kafka",
+      () => new MessagingSinks.CollectingProducer(CdcPipelineSpec.buffer), staticTopic = "t")
+    val cfg = Config(Seq(new ParquetLakeSink("lake", s"$dir/lake"), kafka), commitPolicy = CommitAll,
+      ledgerDir = s"$dir/ledger", processors = Seq(_.filter(col("op") =!= "d"), _.withColumn("kept", lit(true))),
+      pipelineName = "streamed")
+    val steady = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val jobs = jobsPerBatch(withPlanProbe(marker) { plannings =>
+      val q = CdcPipeline.start(cfg, stream, s"$dir/chk",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 milliseconds"))
+      try {
+        ms.addData(rows(0, 30))
+        q.processAllAvailable()
+        assert(plannings.get > 0, "the probe saw no planning of batch 0")
+        plannings.set(0)
+        ms.addData(rows(30, 20))
+        q.processAllAvailable()
+        ms.addData(rows(50, 25) :+ (("d", """{"id":0}""", 99L)))
+        q.processAllAvailable()
+        steady.set(plannings.get)
+      } finally q.stop()
+    })
+    assert(steady.get == 0, s"batches 1 and 2 planned ${steady.get} chain or sink plan nodes")
+    assert(jobs == Map(0L -> 3, 1L -> 3, 2L -> 3), s"jobs per batch: $jobs")
+    val lake = spark.read.parquet(s"$dir/lake")
+    assert(lake.groupBy("_batch_id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 30L, 1L -> 20L, 2L -> 25L))
+    assert(lake.filter(col("kept")).count() == 75)
+    assert(CdcPipelineSpec.buffer.size() == 75)
+    val ledger = new SinkLedger(s"$dir/ledger")
+    assert(ledger.committed("lake") == 2L && ledger.committed("kafka") == 2L)
+  }
+
+  test("a chain with a current-time or random column is planned every streamed batch") {
+    val chains: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "now" -> (_.withColumn("v", current_timestamp().cast("string"))),
+      "rand" -> (_.withColumn("v", rand().cast("string"))))
+    chains.foreach { case (name, processor) =>
+      val dir = tmp()
+      val marker = s"volatile_probe_${System.nanoTime()}"
+      val (ms, stream) = markedStream(marker)
+      val values = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+      val sink = new EventSink {
+        val id = "values"
+        def write(batch: DataFrame, batchId: Long): Unit =
+          values.put(batchId, batch.orderBy("ts_ms").select("v").collect().map(_.getString(0)).toSeq)
+      }
+      val perBatch = Seq.newBuilder[Int]
+      withPlanProbe(marker) { plannings =>
+        val q = CdcPipeline.start(Config(Seq(sink), ledgerDir = s"$dir/ledger", processors = Seq(processor)),
+          stream, s"$dir/chk", org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 milliseconds"))
+        try (0 until 3).foreach { b =>
+          plannings.set(0)
+          ms.addData(rows(0, 10))
+          q.processAllAvailable()
+          perBatch += plannings.get
+          Thread.sleep(5)
+        } finally q.stop()
+      }
+      assert(perBatch.result().forall(_ > 0), s"$name: plannings per batch ${perBatch.result()}")
+      assert(values.size == 3 && values.values.asScala.toSet.size == 3,
+        s"$name: a steady batch repeated another batch's values: $values")
+    }
+  }
+
+  test("a processor that runs a job over its batch sees every streamed batch") {
+    val dir = tmp()
+    val marker = s"action_probe_${System.nanoTime()}"
+    val (ms, stream) = markedStream(marker)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val counting: DataFrame => DataFrame = df => { seen.add(df.count()); df }
+    val sink = new MemorySink("mem")
+    val q = CdcPipeline.start(Config(Seq(sink), ledgerDir = s"$dir/ledger", processors = Seq(counting)),
+      stream, s"$dir/chk", org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 milliseconds"))
+    try Seq(30, 20, 25).foldLeft(0) { (from, n) =>
+      ms.addData(rows(from, n))
+      q.processAllAvailable()
+      from + n
+    } finally q.stop()
+    // the first planning of a schema runs the processor once over the empty stand-in
+    assert(seen.asScala.toSeq.filter(_ > 0) == Seq(30L, 20L, 25L), s"the processor saw $seen")
+    assert(sink.totalRows == 75)
+  }
+
+  test("a new input schema plans the chain again") {
+    val dir = tmp()
+    val marker = s"schema_probe_${System.nanoTime()}"
+    val cfg = Config(Nil, ledgerDir = dir, processors = Seq(_.withColumn("kept", lit(true))))
+    val ledger = new SinkLedger(dir)
+    withPlanProbe(marker) { plannings =>
+      def run(batchId: Long, extra: Boolean): Int = {
+        val in = events(10).withColumn(marker, lit(1))
+        val leaf = GraftBridge.freeze(if (extra) in.withColumn("extra", lit("x")) else in)
+        try {
+          plannings.set(0)
+          processBatch(cfg, ledger)(leaf.df, batchId)
+          plannings.get
+        } finally leaf.release()
+      }
+      assert(run(0L, extra = false) > 0)
+      assert(run(1L, extra = false) == 0)
+      assert(run(2L, extra = true) > 0, "a new input schema reused the old plan")
+      assert(run(3L, extra = true) == 0)
+      assert(run(4L, extra = false) > 0)
+    }
+  }
+
+  test("steady batches hand Spark's ClosureCleaner no freeze or Kafka send function") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = tmp()
+    CdcPipelineSpec.buffer.clear()
+    val kafka = new MessagingSinks.KafkaLikeSink("kafka",
+      () => new MessagingSinks.CollectingProducer(CdcPipelineSpec.buffer), staticTopic = "t")
+    val cfg = Config(Seq(new ParquetLakeSink("lake", s"$dir/lake"), kafka), ledgerDir = s"$dir/ledger")
+    val ledger = new SinkLedger(s"$dir/ledger")
+    processBatch(cfg, ledger)(events(20), 0L)
+    val cleaned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val logger = LogManager.getLogger("org.apache.spark.util.ClosureCleaner").asInstanceOf[CoreLogger]
+    val appender = new AbstractAppender("closure-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = cleaned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.DEBUG)
+    try (1L to 3L).foreach(b => processBatch(cfg, ledger)(events(20), b))
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    val lambdas = cleaned.asScala.toSeq.filter(_.startsWith("Cleaning indylambda closure"))
+    assert(lambdas.nonEmpty, "the appender saw no closure cleaning (is DEBUG on?)")
+    val ours = lambdas.filter(l => l.contains("$anonfun$freeze") || l.contains("$anonfun$write$") ||
+      l.contains("$anonfun$foreachPartition") || l.contains("$anonfun$runJob$"))
+    assert(ours.isEmpty, s"steady batches cleaned library functions: ${ours.distinct}")
+    assert(CdcPipelineSpec.buffer.size() == 80)
   }
 
   test("lake sinks write the same rows and parquet schema as a literal batch id") {

@@ -21,7 +21,10 @@ For every micro-batch the tool reports, in milliseconds:
     commitOffsets);
   - inside addBatch (the SQL execution that runs the foreachBatch body):
     `pre_freeze` (its start to the first nested SQL execution, which is the
-    batch's freeze) and `freeze` (that execution's wall time);
+    batch's freeze) and `freeze` (that execution's wall time), split into
+    `freeze.plan` (the execution's start to its job's submission),
+    `freeze.jobs`, `freeze.job_wall` (submission to completion, summed over
+    its jobs) and the summed task run, CPU and deserialize time of its jobs;
   - for each sink: wall time, plan time (the sink's start to its first
     job), the number of jobs, the submit-to-launch time (each job's
     submission to its first task's launch, summed over its jobs), the AQE
@@ -175,6 +178,11 @@ def batches(execs, jobs, stage_tasks, progress):
                if k in TRIGGER_PHASES}
         row["addBatch.pre_freeze"] = freeze["start"] - outer["start"]
         row["addBatch.freeze"] = (freeze["end"] or freeze["start"]) - freeze["start"]
+        freeze_jobs = [j for j in jobs.values() if j["exec"] == children[0][0]]
+        split = sink_phases(children[:1], freeze_jobs, stage_tasks)
+        split["job_wall"] = sum((j["end"] or j["start"]) - j["start"] for j in freeze_jobs)
+        for k in ("plan", "jobs", "job_wall", "task_run", "task_cpu", "task_deserialize"):
+            row[f"addBatch.freeze.{k}"] = float(split[k])
         ids = {root} | {c for c, _ in children}
         batch_jobs = [j for j in jobs.values() if j["exec"] in ids]
         groups = defaultdict(lambda: ([], []))  # sink name -> (executions, jobs)
