@@ -294,22 +294,10 @@ class CdcPipelineSpec extends SparkSpec {
 
   test("steady kafka and lake batches plan nothing: each sink plans its projection once") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
     val dir = tmp()
     // a column only this test's batches carry: a planning whose input is a
     // LogicalRDD holding it is a sink planning over a frozen batch
     val marker = s"plan_probe_${System.nanoTime()}"
-    val plannings = new java.util.concurrent.atomic.AtomicInteger(0)
-    val probe = new SparkStrategy {
-      override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
-        if (plan.collectLeaves().exists {
-          case l: LogicalRDD => l.output.exists(_.name == marker)
-          case _ => false
-        }) plannings.incrementAndGet()
-        Nil
-      }
-    }
     val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinel = s"$marker-sentinel"
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
@@ -327,11 +315,8 @@ class CdcPipelineSpec extends SparkSpec {
     val cfg = Config(Seq(lake, kafka), commitPolicy = CommitAll, ledgerDir = s"$dir/ledger",
       processors = Seq(_.withColumn(marker, lit(1))), pipelineName = "plans")
     val ledger = new SinkLedger(s"$dir/ledger")
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val strategies = session.experimental.extraStrategies
-    session.experimental.extraStrategies = probe +: strategies
     spark.sparkContext.addSparkListener(tagListener)
-    try {
+    try withPlanProbe(marker) { plannings =>
       processBatch(cfg, ledger)(events(30), 0L)
       assert(plannings.get > 0, "the probe saw no sink planning")
       plannings.set(0)
@@ -346,10 +331,7 @@ class CdcPipelineSpec extends SparkSpec {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      session.experimental.extraStrategies = strategies
-      spark.sparkContext.removeSparkListener(tagListener)
-    }
+    } finally spark.sparkContext.removeSparkListener(tagListener)
     val lakeRows = spark.read.parquet(s"$dir/lake").groupBy("_batch_id").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lakeRows == Map(0L -> 30L, 1L -> 20L, 2L -> 25L, 4L -> 3L))
@@ -359,10 +341,10 @@ class CdcPipelineSpec extends SparkSpec {
   }
 
   /**
-   * Runs `body` with a planner probe installed; `count()` is the number of
-   * plannings so far whose input holds a `LogicalRDD` with a `marker`
-   * column (the chain over a `foreachBatch` or frozen leaf, or a sink over
-   * a frozen batch), and `reset()` starts it again.
+   * Runs `body` with a planner probe installed. The counter handed to
+   * `body` counts the plannings whose input holds a `LogicalRDD` with a
+   * `marker` column: the chain over a `foreachBatch` or frozen leaf, or a
+   * sink over a frozen batch.
    */
   private def withPlanProbe(marker: String)(body: java.util.concurrent.atomic.AtomicInteger => Unit): Unit = {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
