@@ -54,8 +54,8 @@ object JsonEncode {
     // dataType=NullType, which (a) defeated the CreateNamedStruct template
     // match and (b) made knownUnsupported classify EVERY unresolved struct
     // as unsupported — silently routing the whole CdcSynth payload family
-    // to builtin to_json (caught r16 by plan audit: the benched
-    // cdc_lake_project encode was StructsToJsonEvaluator, not fused).
+    // to builtin to_json (a plan audit shows it: the encode then runs as
+    // StructsToJsonEvaluator, not fused).
     val e = GraftBridge.eagerExpression(struct)
     fromExpression(e) match {
       case null => org.apache.spark.sql.functions.to_json(struct)
@@ -102,8 +102,8 @@ object JsonEncode {
         case uf: UnresolvedFunction if isStructFn(uf) =>
           toNamed(uf, schema) match {
             // None = declared schema contradicts an argument's own alias
-            // (r16 ADVICE: a renamed alias silently emitted stale field
-            // names) or an arity mismatch — builtin to_json keeps the
+            // (a renamed alias would silently emit stale field names) or
+            // an arity mismatch — builtin to_json keeps the
             // caller's own names, loudly consistent either way
             case None => org.apache.spark.sql.functions.to_json(struct)
             case Some(named) => fromExpression(named) match {
@@ -124,8 +124,8 @@ object JsonEncode {
   /** An argument that carries its own name (Alias / attribute) must AGREE
    * with the declared schema field name — otherwise the fused encoder
    * would emit field names the caller's own expression does not claim
-   * (r16 ADVICE #2: only arity was checked; a renamed alias silently
-   * emitted stale names, and differently from the to_json fallback). */
+   * (checking arity alone lets a renamed alias silently emit stale names,
+   * and differently from the to_json fallback). */
   private def declaredNameMismatch(arg: Expression, declared: String): Boolean =
     arg match {
       case a: Alias => a.name != declared
@@ -137,11 +137,10 @@ object JsonEncode {
   /**
    * Recursively rebuild NAMED constructors from the declared schema so the
    * zero-materialization template reaches nested `struct(...)` and
-   * `array(...)` constructors (r17: nested constructors used to become
-   * boxed struct/array LEAVES — codegen materialized a GenericArrayData of
-   * rows per input row, the attributed cause of the r16 cdc_nested_decode
-   * 2× ×10 regression). None = a declared name contradicts the argument's
-   * alias, or an arity/type shape mismatch — caller falls back to builtin.
+   * `array(...)` constructors (as boxed struct/array LEAVES they made
+   * codegen materialize a GenericArrayData of rows per input row). None =
+   * a declared name contradicts the argument's alias, or an arity/type
+   * shape mismatch — caller falls back to builtin.
    */
   private def toNamed(e: Expression, dt: DataType): Option[Expression] = e match {
     case a: Alias => toNamed(a.child, dt)
@@ -171,7 +170,7 @@ object JsonEncode {
   /** Unwrap nested CreateNamedStruct / CreateArray constructor trees into a
    * template whose leaves are arbitrary non-constructor expressions.
    * Returns None when any field NAME is non-literal (cannot template).
-   * Array constructors template as [[SArr]] (r17): their elements render
+   * Array constructors template as [[SArr]]: their elements render
    * straight from codegen leaf values instead of materializing a
    * GenericArrayData (of rows, for array<struct>) per input row. */
   private def templateOf(c: CreateNamedStruct)
@@ -559,10 +558,8 @@ object JsonEncode {
         // breaks on values that stringify with a leading '-' (null
         // literals default to -1L) — Janino parses `(java.lang.Long) -1L`
         // as BINARY MINUS off a class name and fails compile, which
-        // silently dropped the whole projection to interpreter mode
-        // (r16: the entire "fused encode regresses the drain 30%" A/B
-        // signal was 96 of these per drain). Reference types need no cast
-        // to assign into Object[].
+        // silently dropped the whole projection to interpreter mode.
+        // Reference types need no cast to assign into Object[].
         val cg = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
         val assign =
           if (cg.isPrimitiveType(children(i).dataType))

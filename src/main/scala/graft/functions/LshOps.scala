@@ -1,14 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.classic.GraftBridge
 
 /**
- * Banded random-hyperplane LSH signatures as ONE fused codegen'd pass.
+ * Banded random-hyperplane LSH signatures as ONE fused pass.
  *
  * The declarative form (a `bits × dim` tree of `element_at · lit-sign`
  * multiply-adds per signature bit) is what [[graft.llm.Similarity.lshSignature]]
@@ -16,7 +17,8 @@ import org.apache.spark.sql.classic.GraftBridge
  * `bands × bitsPerBand × dim` terms (4 × 12 × 64 ≈ 3k multiply-adds), which
  * blows past Janino's method limits and falls out of whole-stage codegen.
  * This expression computes every band signature in a single primitive loop
- * over the vector with the sign matrix held as a reference object.
+ * over the vector (the [[bandSignatures]] kernel, which `eval` and the
+ * generated code both call) with the sign matrix held as a reference object.
  *
  * Hyperplane indexing uses a FIXED stride of [[LshOps.BandStride]] hyperplanes
  * per band (`hyperplane(band, j) = band * 32 + j`), so growing `bitsPerBand`
@@ -64,6 +66,34 @@ object LshOps {
     out
   }
 
+  /** Signature bit j of band b = sign of the projection of `v`'s first
+   * `min(dim, |v|)` components onto row `b*bitsPerBand + j` of `signs` (1
+   * when positive): the [[HyperplaneBands]] kernel. */
+  def bandSignatures(v: ArrayData, isFloat: Boolean, signs: Array[Double],
+                     dim: Int, bands: Int, bitsPerBand: Int): Array[Long] = {
+    val n = math.min(dim, v.numElements())
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var sig = 0L
+      var j = 0
+      while (j < bitsPerBand) {
+        val base = (b * bitsPerBand + j) * dim
+        var p = 0.0
+        var i = 0
+        while (i < n) {
+          p += VectorOps.element(v, i, isFloat) * signs(base + i)
+          i += 1
+        }
+        if (p > 0.0) sig |= (1L << j)
+        j += 1
+      }
+      out(b) = sig
+      b += 1
+    }
+    out
+  }
+
   /** array<long> of `bands` signatures; signature bit j of band b = sign of
    * the projection onto hyperplane b*32+j (1 when positive). */
   case class HyperplaneBands(child: Expression, dim: Int, bands: Int, bitsPerBand: Int)
@@ -73,73 +103,19 @@ object LshOps {
     override def prettyName: String = "lsh_hyperplane_bands"
     override def nullIntolerant: Boolean = true
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"lsh_hyperplane_bands requires array<float|double>, got $other")
-      }
-    private def isFloat: Boolean =
-      child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    override def checkInputDataTypes(): TypeCheckResult =
+      VectorOps.checkRealArrays(prettyName, child)
+    @transient private lazy val isFloat = VectorOps.isFloatArray(child)
     @transient private lazy val signs: Array[Double] = signMatrix(dim, bands, bitsPerBand)
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val fl = isFloat
-      val n = math.min(dim, v.numElements())
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var sig = 0L
-        var j = 0
-        while (j < bitsPerBand) {
-          val base = (b * bitsPerBand + j) * dim
-          var p = 0.0
-          var i = 0
-          while (i < n) {
-            val x = if (fl) v.getFloat(i).toDouble else v.getDouble(i)
-            p += x * signs(base + i)
-            i += 1
-          }
-          if (p > 0.0) sig |= (1L << j)
-          j += 1
-        }
-        out(b) = sig
-        b += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
+    override protected def nullSafeEval(input: Any): Any = new GenericArrayData(
+      bandSignatures(input.asInstanceOf[ArrayData], isFloat, signs, dim, bands, bitsPerBand))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val signsRef = ctx.addReferenceObj("lshSigns", signs, "double[]")
-      val getX =
-        if (isFloat) (arr: String, i: String) => s"(double) $arr.getFloat($i)"
-        else (arr: String, i: String) => s"$arr.getDouble($i)"
-      nullSafeCodeGen(ctx, ev, v => {
-        val out = ctx.freshName("out"); val n = ctx.freshName("n")
-        val b = ctx.freshName("b"); val j = ctx.freshName("j")
-        val sig = ctx.freshName("sig"); val base = ctx.freshName("base")
-        val p = ctx.freshName("p"); val i = ctx.freshName("i")
-        s"""
-           |long[] $out = new long[$bands];
-           |int $n = java.lang.Math.min($dim, $v.numElements());
-           |for (int $b = 0; $b < $bands; $b++) {
-           |  long $sig = 0L;
-           |  for (int $j = 0; $j < $bitsPerBand; $j++) {
-           |    int $base = ($b * $bitsPerBand + $j) * $dim;
-           |    double $p = 0.0;
-           |    for (int $i = 0; $i < $n; $i++) {
-           |      $p += ${getX(v, i)} * $signsRef[$base + $i];
-           |    }
-           |    if ($p > 0.0) $sig |= (1L << $j);
-           |  }
-           |  $out[$b] = $sig;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, v =>
+        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+          s"graft.functions.LshOps.bandSignatures($v, $isFloat, $signsRef, $dim, $bands, $bitsPerBand));")
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }

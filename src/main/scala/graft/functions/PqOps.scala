@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.classic.GraftBridge
 
@@ -20,9 +21,10 @@ import org.apache.spark.sql.classic.GraftBridge
  * Candidates from ADC are exact-re-ranked on the float originals — same
  * shortlist contract as [[VectorQuant]] int8.
  *
- * One fused codegen'd pass per row: all M argmins + the table lookups in a
- * single loop nest over the raw array (no per-subspace `slice` allocation,
- * no higher-order functions). Math is double, summing in element order, so
+ * One fused pass per row: all M argmins + the table lookups in a single
+ * loop nest over the raw array (no per-subspace `slice` allocation, no
+ * higher-order functions), written once as a kernel that `eval` and the
+ * generated code both call. Math is double, summing in element order, so
  * a sequential oracle implementation (DuckDB `list_sum` is left-to-right
  * sequential, probed v1.0.0) reproduces it bit-for-bit. Ties in the
  * argmin go to the LOWER code index (strict `<`), matching a
@@ -30,9 +32,53 @@ import org.apache.spark.sql.classic.GraftBridge
  *
  * In production the codes are computed once at ingest and stored; here
  * the testdata holds raw floats, so codes are derived inline — the
- * derivation is the same fused loop that an ingest job would run.
+ * derivation is the same kernel that an ingest job would run.
  */
 object PqOps {
+
+  /** Code of subspace `mm`: the index j of the centroid c_{mm,j} nearest to
+   * the sub-vector v[mm*dsub, (mm+1)*dsub), by squared distance; ties go to
+   * the lower j. The one argmin of [[adcDistance]] and [[subspaceCodes]]. */
+  private def nearestCentroid(v: ArrayData, isFloat: Boolean, cb: Array[Double],
+                              mm: Int, ksub: Int, dsub: Int): Int = {
+    var best = Double.PositiveInfinity
+    var bestJ = 0
+    var j = 0
+    while (j < ksub) {
+      var s = 0.0
+      val base = (mm * ksub + j) * dsub
+      var i = 0
+      while (i < dsub) {
+        val d = VectorOps.element(v, mm * dsub + i, isFloat) - cb(base + i)
+        s += d * d
+        i += 1
+      }
+      if (s < best) { best = s; bestJ = j }
+      j += 1
+    }
+    bestJ
+  }
+
+  /** Σ_m qtable[m*ksub + code_m]: the ADC distance of `v` (the [[PqAdc]] kernel). */
+  def adcDistance(v: ArrayData, isFloat: Boolean, cb: Array[Double], qtable: Array[Double],
+                  m: Int, ksub: Int, dsub: Int): Double = {
+    var acc = 0.0
+    var mm = 0
+    while (mm < m) {
+      acc += qtable(mm * ksub + nearestCentroid(v, isFloat, cb, mm, ksub, dsub))
+      mm += 1
+    }
+    acc
+  }
+
+  /** The m subspace codes of `v` (the [[PqCodes]] kernel). */
+  def subspaceCodes(v: ArrayData, isFloat: Boolean, cb: Array[Double],
+                    m: Int, ksub: Int, dsub: Int): Array[Int] = {
+    val out = new Array[Int](m)
+    var mm = 0
+    while (mm < m) { out(mm) = nearestCentroid(v, isFloat, cb, mm, ksub, dsub); mm += 1 }
+    out
+  }
 
   /**
    * ADC distance of `vec` to the implicit query behind `qtable`.
@@ -47,160 +93,43 @@ object PqOps {
     override def prettyName: String = "pq_adc"
     override def nullIntolerant: Boolean = true
     override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"pq_adc requires array<float|double>, got $other")
-      }
-    private def isFloat: Boolean =
-      child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    override def checkInputDataTypes(): TypeCheckResult =
+      VectorOps.checkRealArrays(prettyName, child)
+    @transient private lazy val isFloat = VectorOps.isFloatArray(child)
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val fl = isFloat
-      var acc = 0.0
-      var mm = 0
-      while (mm < m) {
-        var best = Double.PositiveInfinity
-        var bestJ = 0
-        var j = 0
-        while (j < ksub) {
-          var s = 0.0
-          val base = (mm * ksub + j) * dsub
-          var i = 0
-          while (i < dsub) {
-            val idx = mm * dsub + i
-            val x = if (fl) v.getFloat(idx).toDouble else v.getDouble(idx)
-            val d = x - cb(base + i)
-            s += d * d
-            i += 1
-          }
-          if (s < best) { best = s; bestJ = j }
-          j += 1
-        }
-        acc += qtable(mm * ksub + bestJ)
-        mm += 1
-      }
-      acc
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      adcDistance(input.asInstanceOf[ArrayData], isFloat, cb, qtable, m, ksub, dsub)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cbRef = ctx.addReferenceObj("pqCb", cb, "double[]")
       val qtRef = ctx.addReferenceObj("pqQt", qtable, "double[]")
-      val getX =
-        if (isFloat) (arr: String, i: String) => s"(double) $arr.getFloat($i)"
-        else (arr: String, i: String) => s"$arr.getDouble($i)"
-      nullSafeCodeGen(ctx, ev, v => {
-        val acc = ctx.freshName("acc"); val mm = ctx.freshName("mm")
-        val best = ctx.freshName("best"); val bestJ = ctx.freshName("bestJ")
-        val j = ctx.freshName("j"); val s = ctx.freshName("s")
-        val base = ctx.freshName("base"); val i = ctx.freshName("i")
-        val d = ctx.freshName("d")
-        s"""
-           |double $acc = 0.0;
-           |for (int $mm = 0; $mm < $m; $mm++) {
-           |  double $best = Double.POSITIVE_INFINITY;
-           |  int $bestJ = 0;
-           |  for (int $j = 0; $j < $ksub; $j++) {
-           |    double $s = 0.0;
-           |    int $base = ($mm * $ksub + $j) * $dsub;
-           |    for (int $i = 0; $i < $dsub; $i++) {
-           |      double $d = ${getX(v, s"$mm * $dsub + $i")} - $cbRef[$base + $i];
-           |      $s += $d * $d;
-           |    }
-           |    if ($s < $best) { $best = $s; $bestJ = $j; }
-           |  }
-           |  $acc += $qtRef[$mm * $ksub + $bestJ];
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.PqOps.adcDistance(" +
+        s"$v, $isFloat, $cbRef, $qtRef, $m, $ksub, $dsub);")
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
   /** The per-subspace code assignments (array<int>, length m) — the value
    * an ingest job would persist alongside (or instead of) the floats. Same
-   * loop and tie semantics as [[PqAdc]]. */
+   * argmin and tie semantics as [[PqAdc]]. */
   case class PqCodes(child: Expression, cb: Array[Double],
                      m: Int, ksub: Int, dsub: Int) extends UnaryExpression {
     require(cb.length == m * ksub * dsub)
     override def prettyName: String = "pq_codes"
     override def nullIntolerant: Boolean = true
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"pq_codes requires array<float|double>, got $other")
-      }
-    private def isFloat: Boolean =
-      child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    override def checkInputDataTypes(): TypeCheckResult =
+      VectorOps.checkRealArrays(prettyName, child)
+    @transient private lazy val isFloat = VectorOps.isFloatArray(child)
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val fl = isFloat
-      val out = new Array[Int](m)
-      var mm = 0
-      while (mm < m) {
-        var best = Double.PositiveInfinity
-        var bestJ = 0
-        var j = 0
-        while (j < ksub) {
-          var s = 0.0
-          val base = (mm * ksub + j) * dsub
-          var i = 0
-          while (i < dsub) {
-            val idx = mm * dsub + i
-            val x = if (fl) v.getFloat(idx).toDouble else v.getDouble(idx)
-            val d = x - cb(base + i)
-            s += d * d
-            i += 1
-          }
-          if (s < best) { best = s; bestJ = j }
-          j += 1
-        }
-        out(mm) = bestJ
-        mm += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      new GenericArrayData(subspaceCodes(input.asInstanceOf[ArrayData], isFloat, cb, m, ksub, dsub))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cbRef = ctx.addReferenceObj("pqCb", cb, "double[]")
-      val getX =
-        if (isFloat) (arr: String, i: String) => s"(double) $arr.getFloat($i)"
-        else (arr: String, i: String) => s"$arr.getDouble($i)"
-      nullSafeCodeGen(ctx, ev, v => {
-        val out = ctx.freshName("out"); val mm = ctx.freshName("mm")
-        val best = ctx.freshName("best"); val bestJ = ctx.freshName("bestJ")
-        val j = ctx.freshName("j"); val s = ctx.freshName("s")
-        val base = ctx.freshName("base"); val i = ctx.freshName("i")
-        val d = ctx.freshName("d")
-        s"""
-           |int[] $out = new int[$m];
-           |for (int $mm = 0; $mm < $m; $mm++) {
-           |  double $best = Double.POSITIVE_INFINITY;
-           |  int $bestJ = 0;
-           |  for (int $j = 0; $j < $ksub; $j++) {
-           |    double $s = 0.0;
-           |    int $base = ($mm * $ksub + $j) * $dsub;
-           |    for (int $i = 0; $i < $dsub; $i++) {
-           |      double $d = ${getX(v, s"$mm * $dsub + $i")} - $cbRef[$base + $i];
-           |      $s += $d * $d;
-           |    }
-           |    if ($s < $best) { $best = $s; $bestJ = $j; }
-           |  }
-           |  $out[$mm] = $bestJ;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, v =>
+        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+          s"graft.functions.PqOps.subspaceCodes($v, $isFloat, $cbRef, $m, $ksub, $dsub));")
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }

@@ -29,42 +29,11 @@ object TextHashOps {
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash64"
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val counts = new Array[Int](64)
-      var i = 0
-      while (i < arr.numElements()) {
-        val h = arr.getLong(i)
-        var j = 0
-        while (j < 64) {
-          if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-          j += 1
-        }
-        i += 1
-      }
-      var out = 0L
-      var j = 0
-      while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
-      out
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      TextHashHelpers.simhash64(input.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val counts = ctx.freshName("counts"); val i = ctx.freshName("i")
-        val j = ctx.freshName("j"); val h = ctx.freshName("h"); val out = ctx.freshName("out")
-        s"""
-           |int[] $counts = new int[64];
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  long $h = $a.getLong($i);
-           |  for (int $j = 0; $j < 64; $j++) {
-           |    if ((($h >>> $j) & 1L) == 1L) $counts[$j]++; else $counts[$j]--;
-           |  }
-           |}
-           |long $out = 0L;
-           |for (int $j = 0; $j < 64; $j++) if ($counts[$j] > 0) $out |= (1L << $j);
-           |${ev.value} = $out;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.TextHashHelpers.simhash64($a);")
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
@@ -88,7 +57,6 @@ object TextHashOps {
    * h_i(x) = (a_i·x + b_i) mod p. One fused loop per row.
    */
   case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
-    import MinHashSignature.P
     override def nullIntolerant: Boolean = true
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_signature"
@@ -96,54 +64,15 @@ object TextHashOps {
     private lazy val as: Array[Long] = Array.tabulate(k)(i => coef(i, 0xA5A5L))
     private lazy val bs: Array[Long] = Array.tabulate(k)(i => coef(i, 0x5A5AL))
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val mins = Array.fill(k)(Long.MaxValue)
-      var i = 0
-      while (i < arr.numElements()) {
-        val x = java.lang.Math.floorMod(arr.getLong(i), P)
-        var j = 0
-        while (j < k) {
-          // (a·x+b) mod P by Mersenne folding (P = 2³¹−1, y < 2⁶²):
-          // y ≡ (y>>>31)+(y&P), two folds land in [0, P+1] — VALUE-IDENTICAL
-          // to floorMod but division-free (the 64 divisions per feature were
-          // the dominant term of the whole minhash family's signature cost)
-          val y = as(j) * x + bs(j)
-          var v = (y >>> 31) + (y & P)
-          v = (v >>> 31) + (v & P)
-          if (v >= P) v -= P
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(mins)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      new GenericArrayData(TextHashHelpers.minhash(input.asInstanceOf[ArrayData], as, bs))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val asRef = ctx.addReferenceObj("minhashA", as, "long[]")
       val bsRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val mins = ctx.freshName("mins"); val i = ctx.freshName("i")
-        val j = ctx.freshName("j"); val x = ctx.freshName("x"); val v = ctx.freshName("v")
-        val y = ctx.freshName("y")
-        // Mersenne folding (see nullSafeEval) — division-free, value-identical
-        s"""
-           |long[] $mins = new long[$k];
-           |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  long $x = java.lang.Math.floorMod($a.getLong($i), ${P}L);
-           |  for (int $j = 0; $j < $k; $j++) {
-           |    long $y = $asRef[$j] * $x + $bsRef[$j];
-           |    long $v = ($y >>> 31) + ($y & ${P}L);
-           |    $v = ($v >>> 31) + ($v & ${P}L);
-           |    if ($v >= ${P}L) $v -= ${P}L;
-           |    if ($v < $mins[$j]) $mins[$j] = $v;
-           |  }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+          s"graft.functions.TextHashHelpers.minhash($a, $asRef, $bsRef));")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -163,47 +92,13 @@ object TextHashOps {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "band_hashes"
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val k = arr.numElements()
-      val r = k / bands
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var h = 42L
-        var j = b * r
-        val end = j + r
-        while (j < end) {
-          h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(arr.getLong(j), h)
-          j += 1
-        }
-        // the band index is an Int literal in the composed chain → hashInt
-        out(b) = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, h)
-        b += 1
-      }
-      new GenericArrayData(out)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      new GenericArrayData(TextHashHelpers.bandHashes(input.asInstanceOf[ArrayData], bands))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val out = ctx.freshName("out"); val b = ctx.freshName("b")
-        val h = ctx.freshName("h"); val j = ctx.freshName("j")
-        val r = ctx.freshName("r"); val end = ctx.freshName("end")
-        val xxh = "org.apache.spark.sql.catalyst.expressions.XXH64"
-        s"""
-           |long[] $out = new long[$bands];
-           |int $r = $a.numElements() / $bands;
-           |for (int $b = 0; $b < $bands; $b++) {
-           |  long $h = 42L;
-           |  int $end = $b * $r + $r;
-           |  for (int $j = $b * $r; $j < $end; $j++) {
-           |    $h = $xxh.hashLong($a.getLong($j), $h);
-           |  }
-           |  $out[$b] = $xxh.hashInt($b, $h);
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+          s"graft.functions.TextHashHelpers.bandHashes($a, $bands));")
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
@@ -311,28 +206,15 @@ object TextHashOps {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = s"hash_string_array_$algo"
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val out = new Array[Long](n)
-      var i = 0
-      if (algo == "xxh64") while (i < n) { out(i) = TextHashHelpers.xxh64(arr.getUTF8String(i)); i += 1 }
-      else while (i < n) { out(i) = TextHashHelpers.md5h60(arr.getUTF8String(i)); i += 1 }
-      new GenericArrayData(out)
-    }
+    private def useMd5: Boolean = algo == "md5h60"
+
+    override protected def nullSafeEval(input: Any): Any =
+      new GenericArrayData(TextHashHelpers.hashStrings(input.asInstanceOf[ArrayData], useMd5))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i"); val out = ctx.freshName("out")
-        val fn = if (algo == "xxh64") "xxh64" else "md5h60"
-        s"""
-           |int $n = $a.numElements();
-           |long[] $out = new long[$n];
-           |for (int $i = 0; $i < $n; $i++)
-           |  $out[$i] = graft.functions.TextHashHelpers.$fn($a.getUTF8String($i));
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+          s"graft.functions.TextHashHelpers.hashStrings($a, $useMd5));")
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
@@ -568,6 +450,87 @@ object TextHashHelpers {
 
   def xxh64(s: UTF8String): Long =
     org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(s, StringType, 42L)
+
+  /** SimHash of a token-hash array: bit j set when more hashes have bit j
+   * set than clear (the [[TextHashOps.SimHash64]] kernel; empty input = 0). */
+  def simhash64(arr: ArrayData): Long = {
+    val counts = new Array[Int](64)
+    var i = 0
+    while (i < arr.numElements()) {
+      val h = arr.getLong(i)
+      var j = 0
+      while (j < 64) {
+        if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
+        j += 1
+      }
+      i += 1
+    }
+    var out = 0L
+    var j = 0
+    while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
+    out
+  }
+
+  /** MinHash signature: mins(j) = min over the hashes x of (as(j)·x + bs(j))
+   * mod P, with x reduced mod P first (the [[TextHashOps.MinHashSignature]]
+   * kernel; Long.MaxValue for an empty input). */
+  def minhash(arr: ArrayData, as: Array[Long], bs: Array[Long]): Array[Long] = {
+    val P = TextHashOps.MinHashSignature.P
+    val k = as.length
+    val mins = new Array[Long](k)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    var i = 0
+    while (i < arr.numElements()) {
+      val x = java.lang.Math.floorMod(arr.getLong(i), P)
+      var j = 0
+      while (j < k) {
+        // (a·x+b) mod P by Mersenne folding (P = 2³¹−1, y < 2⁶²):
+        // y ≡ (y>>>31)+(y&P), two folds land in [0, P+1] — VALUE-IDENTICAL
+        // to floorMod but division-free (the 64 divisions per feature were
+        // the dominant term of the whole minhash family's signature cost)
+        val y = as(j) * x + bs(j)
+        var v = (y >>> 31) + (y & P)
+        v = (v >>> 31) + (v & P)
+        if (v >= P) v -= P
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    mins
+  }
+
+  /** out(b) = XXH64 of signature slice [b·r, b·r + r) from seed 42, then of
+   * the band index, r = |sig| / bands (the [[TextHashOps.BandHashes]] kernel). */
+  def bandHashes(sig: ArrayData, bands: Int): Array[Long] = {
+    val r = sig.numElements() / bands
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var j = b * r
+      val end = j + r
+      while (j < end) {
+        h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(sig.getLong(j), h)
+        j += 1
+      }
+      // the band index is an Int literal in the composed chain → hashInt
+      out(b) = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, h)
+      b += 1
+    }
+    out
+  }
+
+  /** Each string of `arr` hashed by [[md5h60]] when `useMd5`, else by
+   * [[xxh64]] (the [[TextHashOps.HashStringArray]] kernel). */
+  def hashStrings(arr: ArrayData, useMd5: Boolean): Array[Long] = {
+    val n = arr.numElements()
+    val out = new Array[Long](n)
+    var i = 0
+    if (useMd5) while (i < n) { out(i) = md5h60(arr.getUTF8String(i)); i += 1 }
+    else while (i < n) { out(i) = xxh64(arr.getUTF8String(i)); i += 1 }
+    out
+  }
 
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

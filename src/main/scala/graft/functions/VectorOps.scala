@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -13,8 +14,10 @@ import org.apache.spark.sql.classic.GraftBridge
  * Spark's higher-order functions (`zip_with` + `aggregate`) express a dot
  * product declaratively but are interpreted per row (no codegen) and allocate
  * an intermediate array — catastrophic inside an all-pairs similarity join.
- * These expressions run a single fused primitive loop (dot, |a|, |b| in one
- * pass) and participate in whole-stage codegen, which is the
+ * Each expression here runs one fused primitive loop (dot, |a|, |b| in one
+ * pass), written once as a kernel over `ArrayData` that returns a primitive:
+ * `eval` calls it, and the generated code is a single static call to the same
+ * method, so the children stay inside whole-stage codegen. This is the
  * custom-`Expression` escape hatch the build plan reserves for exactly this
  * case (SURVEY.md §7.3).
  *
@@ -23,88 +26,73 @@ import org.apache.spark.sql.classic.GraftBridge
  */
 object VectorOps {
 
-  private def toDouble(arr: ArrayData, i: Int, isFloat: Boolean): Double =
+  /** The one input check of the vector kernels: every input is `array<float|double>`. */
+  private[functions] def checkRealArrays(name: String, inputs: Expression*): TypeCheckResult =
+    if (inputs.forall(_.dataType match {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+      case _ => false
+    })) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name requires array<float|double> inputs, got ${inputs.map(_.dataType).mkString(", ")}")
+
+  /** True for an `array<float>` input (the kernels read it as double). */
+  private[functions] def isFloatArray(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  /** Element `i` of an `array<float|double>` as a double. */
+  private[functions] def element(arr: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+
+  /** Σ a_i b_i over the shorter length. */
+  def dotProduct(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { s += element(a, i, aFloat) * element(b, i, bFloat); i += 1 }
+    s
+  }
+
+  /** Σab / (√Σa² √Σb²) in one pass over the shorter length; 0.0 when a norm is zero. */
+  def cosineSimilarity(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = element(a, i, aFloat); val y = element(b, i, bFloat)
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) 0.0 else dot / denom
+  }
 
   abstract class VectorBinary extends BinaryExpression {
     override def nullIntolerant: Boolean = true
     override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      def ok(dt: DataType) = dt match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-        case _ => false
-      }
-      if (ok(left.dataType) && ok(right.dataType))
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float|double> inputs, got ${left.dataType}, ${right.dataType}")
-    }
-    protected def leftIsFloat: Boolean =
-      left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    protected def rightIsFloat: Boolean =
-      right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    /** codegen helper: per-element double accessor */
-    protected def getter(isFloat: Boolean, arr: String, i: String): String =
-      if (isFloat) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
+    override def checkInputDataTypes(): TypeCheckResult = checkRealArrays(prettyName, left, right)
+    @transient protected lazy val leftFloat: Boolean = isFloatArray(left)
+    @transient protected lazy val rightFloat: Boolean = isFloatArray(right)
+    /** The generated code: one call of the `VectorOps` kernel `eval` runs. */
+    protected def callKernel(ctx: CodegenContext, ev: ExprCode, kernel: String): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = graft.functions.VectorOps.$kernel($a, $leftFloat, $b, $rightFloat);")
   }
 
-  /** Σ a_i b_i — fused primitive loop, codegen'd. */
+  /** Σ a_i b_i — the [[dotProduct]] kernel. */
   case class DotProduct(left: Expression, right: Expression) extends VectorBinary {
     override def prettyName: String = "vector_dot"
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val n = math.min(x.numElements(), y.numElements())
-      var s = 0.0; var i = 0
-      while (i < n) { s += toDouble(x, i, leftIsFloat) * toDouble(y, i, rightIsFloat); i += 1 }
-      s
-    }
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      dotProduct(a.asInstanceOf[ArrayData], leftFloat, b.asInstanceOf[ArrayData], rightFloat)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i"); val s = ctx.freshName("s")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $s += ${getter(leftIsFloat, a, i)} * ${getter(rightIsFloat, b, i)};
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+      callKernel(ctx, ev, "dotProduct")
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
 
-  /** cos(a,b) = Σab / (√Σa² √Σb²) — one fused loop; 0.0 when a norm is zero. */
+  /** cos(a,b) — the [[cosineSimilarity]] kernel; 0.0 when a norm is zero. */
   case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinary {
     override def prettyName: String = "vector_cosine"
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val n = math.min(x.numElements(), y.numElements())
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val xv = toDouble(x, i, leftIsFloat); val yv = toDouble(y, i, rightIsFloat)
-        dot += xv * yv; na += xv * xv; nb += yv * yv; i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      cosineSimilarity(a.asInstanceOf[ArrayData], leftFloat, b.asInstanceOf[ArrayData], rightFloat)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv"); val d = ctx.freshName("d")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $xv = ${getter(leftIsFloat, a, i)};
-           |  double $yv = ${getter(rightIsFloat, b, i)};
-           |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-           |}
-           |double $d = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-           |${ev.value} = ($d == 0.0) ? 0.0 : $dot / $d;
-         """.stripMargin
-      })
+      callKernel(ctx, ev, "cosineSimilarity")
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }

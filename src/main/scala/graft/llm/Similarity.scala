@@ -403,8 +403,9 @@ object Similarity {
    * exchanges the WHOLE corpus on `idCol` to rank k rows per vector; this
    * is a narrow map with k fused-cosine evals per row — at 100 TB × several
    * k-means iterations that's the difference between zero and 5 full-corpus
-   * shuffles. For coarse-IVF k (≤ a few hundred) the expression tree stays
-   * codegen-friendly; larger k → use [[ivfAssign]].
+   * shuffles. Each cosine generates one kernel call, so coarse-IVF k stays
+   * in one whole-stage codegen'd projection (k = 200 at dim 8 is pinned by
+   * `KernelCodegenSpec`); larger k → use [[ivfAssign]].
    */
   def ivfAssignLiteral(vectors: DataFrame, centroids: Seq[(Long, Seq[Double])],
                        idCol: String = "vec_id", vecCol: String = "embedding",

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.ChangeEvent
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
@@ -95,8 +96,10 @@ object UdfHost {
           table = if (src == null || src.isNullAt(iTable)) null else src.getString(iTable),
           db = if (src == null || src.isNullAt(iDb)) null else src.getString(iDb))
       }
+      // one shutdown path: the task's end, whether it drained, stopped early or threw
       val pool = Executors.newSingleThreadExecutor()
-      val guarded = rows.grouped(chunkSize).flatMap { chunk =>
+      TaskContext.get().addTaskCompletionListener[Unit](_ => pool.shutdownNow())
+      rows.grouped(chunkSize).flatMap { chunk =>
         val byId = new java.util.HashMap[String, Row]()
         val views = chunk.map { r =>
           val u = view(r)
@@ -122,10 +125,6 @@ object UdfHost {
               "violated; treating as synthetic")
           Row(env, u.before, u.after, u.op, u.tsMs, u.eventId, u.topic, u.key, u.synthetic)
         }
-      }
-      new Iterator[Row] {
-        def hasNext: Boolean = { val h = guarded.hasNext; if (!h) pool.shutdown(); h }
-        def next(): Row = guarded.next()
       }
     }(Encoders.row(outSchema))
 

@@ -32,4 +32,12 @@ class SourceTreeSpec extends AnyFunSuite {
       main.resolve("org/apache/spark/sql/classic/GraftBridge.scala")), "UTF-8")
     assert(helper.contains("def writeFiles(") && helper.contains("FileFormatWriter.write("))
   }
+
+  test("no src/main expression generates a Java loop: doGenCode calls the kernel eval runs") {
+    val main = Paths.get("src/main/scala")
+    val sources = Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    // a loop written as a Java string is a second copy of a kernel that eval runs in Scala
+    val loops = sources.filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("for (int"))
+    assert(sources.size > 50 && loops.isEmpty, s"generated Java loops in: ${loops.mkString(", ")}")
+  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
 
 /** Avro wire format, Kafka txn protocol, HTTP sink e2e, schema registry, CH DDL. */
 class SinksAndRegistrySpec extends SparkSpec {
@@ -587,6 +588,25 @@ class SinksAndRegistrySpec extends SparkSpec {
       UdfHost("slow", slow, timeoutMs = 200)(events(3)).collect()
     }
   }
+
+  test("udf host: a timed-out transform leaves none of its pool threads alive") {
+    import graft.operators.UdfHost
+    val threads = SinksAndRegistrySpec.udfThreads
+    threads.clear()
+    val slow: UdfHost.Transform = evs => {
+      SinksAndRegistrySpec.udfThreads.add(Thread.currentThread())
+      Thread.sleep(10000); evs
+    }
+    val input = events(8)
+    assert(input.rdd.getNumPartitions == 4)
+    intercept[Exception](UdfHost("slow4", slow, timeoutMs = 200)(input).collect())
+    // the job's other tasks end after its first failure: give them a moment
+    def alive = threads.asScala.filter(_.isAlive)
+    val deadline = System.nanoTime() + 5000000000L
+    while (alive.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(threads.size >= 1 && alive.isEmpty,
+      s"${alive.size} of ${threads.size} udf pool threads still alive: ${alive.map(_.getName)}")
+  }
 }
 
 object SinksAndRegistrySpec {
@@ -595,6 +615,8 @@ object SinksAndRegistrySpec {
   val producers = new java.util.concurrent.atomic.AtomicInteger(0)
   val begins = new java.util.concurrent.atomic.AtomicInteger(0)
   val commits = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The threads a UDF transform ran on (the host's per-partition pools). */
+  val udfThreads: java.util.Set[Thread] = ConcurrentHashMap.newKeySet[Thread]()
 
   /** A collecting producer that counts its transactions' begins and commits. */
   class CountingProducer extends MessagingSinks.CollectingProducer(buffer) {
